@@ -10,17 +10,17 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Cluster-deploy builder: master/deploy config comes from spark-submit;
-    * this applies the same semantic + performance settings as `local`.
-    * `shufflePartitions` should track total executor cores (2-3×); at
-    * 100 TB also size `spark.sql.files.maxPartitionBytes` (default 128 MB
-    * is right for ~1 GB executors-per-core memory). */
-  def cluster(shufflePartitions: Int = 2000): SparkSession = {
-    val s = SparkSession.builder()
+  /** The builder `local` and `cluster` share: the extensions plus the
+    * semantic + performance SQL settings. `shufflePartitions` should
+    * track total cores (2-3× on a cluster). */
+  private def base(shufflePartitions: Int): SparkSession.Builder =
+    SparkSession.builder()
       .appName("graft")
       .withExtensions(new plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
+      // AQE: runtime partition coalescing + skew-join splitting; at cluster
+      // scale this is what keeps post-shuffle partitions memory-sized.
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -37,10 +37,18 @@ object GraftSession {
       // >100 codegen units — churns the cache and recompiles the same
       // sources every run (r19, guide §1.2 per-task work)
       .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
+
+  private def start(b: SparkSession.Builder): SparkSession = {
+    val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Cluster-deploy builder: master/deploy config comes from spark-submit.
+    * At 100 TB also size `spark.sql.files.maxPartitionBytes` (default
+    * 128 MB is right for ~1 GB executors-per-core memory). */
+  def cluster(shufflePartitions: Int = 2000): SparkSession =
+    start(base(shufflePartitions))
 
   /** Shuffle/broadcast/spill scratch for the single-JVM local session
     * (r20): with no spark.local.dir Spark writes shuffle files to /tmp
@@ -58,32 +66,12 @@ object GraftSession {
     .orElse(Some("/dev/shm").filter(p => new java.io.File(p).canWrite))
     .getOrElse(sys.props("java.io.tmpdir"))
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors.min(32)): SparkSession = {
-    val s = SparkSession.builder()
+  def local(cores: Int = Runtime.getRuntime.availableProcessors.min(32)): SparkSession =
+    start(base(cores)
       .master(s"local[$cores]")
-      .appName("graft")
-      .withExtensions(new plans.GraftExtensions)
       .config("spark.local.dir", localScratch)
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // Managed-table warehouse (MessageStore keyspaces) out of the cwd.
       .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-warehouse")
-      // AQE: runtime partition coalescing + skew-join splitting; at cluster
-      // scale this is what keeps post-shuffle partitions memory-sized.
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.parquet.filterPushdown", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      // see `cluster`: subset-of-join-keys bucket reuse for co-located joins
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // see `cluster`: codegen class-cache sized for a many-query workload
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+        s"${sys.props("java.io.tmpdir")}/graft-warehouse"))
 }

@@ -179,7 +179,9 @@ final class MessageStore(spark: SparkSession, keyspace: String) {
     * single primary-key shuffle Cassandra compaction performs. One atomic
     * job: pin the current version, resolve LWW over exactly that snapshot,
     * and publish the resolved rows while RETIRING exactly the snapshot's
-    * files (the connector's append+replaceFiles primitive — NOT a blanket
+    * files (the connector's one rewrite primitive, which declares the
+    * pinned version so a vector delete landing mid-flight conflicts the
+    * flip and the compaction re-runs from the fresh snapshot — NOT a blanket
     * overwrite, whose truncate-at-flip would drop an insert that commits
     * while the compaction runs; the same lost-update class the r11 review
     * caught in TokenRangeOps.compact). A racing insert's files rebase into
@@ -189,37 +191,27 @@ final class MessageStore(spark: SparkSession, keyspace: String) {
   def compactUsers(): Unit = {
     import graft.sources.connector.{TokenRangeOps, TokenRangeSource}
     val dir = s"$root/users"
-    TokenRangeOps.withConflictRetry("compactUsers") {
-      val pinned = TokenRangeSource.currentVersion(dir)
+    TokenRangeOps.rewrite(spark, dir, "compactUsers") { pinned =>
       val snapshotRel = TokenRangeSource.visibleRelFiles(dir, pinned).map(_._2)
-      TokenRangeOps.onSnapshotPinned()
-      if (snapshotRel.nonEmpty) { // empty table: nothing to compact
-        val snapshot = spark.read.format(provider)
-          .option("pk", "username")
-          .options(pinned.map(v => "version" -> v.toString).toMap)
-          .load(dir)
-        // the rn=1 winner KEEPS its own write_seq (it IS the snapshot's
-        // max per username) — re-stamping with a fresh nextSeq() was the
-        // r12 lost-update: an insert that drew its seq before the
-        // snapshot pin but committed after it would rebase into the flip
-        // and then LOSE read-time LWW to a re-stamped stale row. With the
-        // original seq preserved, every racing insert resolves exactly as
-        // it would have against the uncompacted table.
-        snapshot
+      if (snapshotRel.isEmpty) None // empty table: nothing to compact
+      // the rn=1 winner KEEPS its own write_seq (it IS the snapshot's max
+      // per username) — re-stamping with a fresh nextSeq() was the r12
+      // lost-update: an insert that drew its seq before the snapshot pin
+      // but committed after it would rebase into the flip and then LOSE
+      // read-time LWW to a re-stamped stale row. With the original seq
+      // preserved, every racing insert resolves exactly as it would have
+      // against the uncompacted table. `compact` in Cassandra's sense:
+      // content-preserving UNDER the table's LWW read semantics (the fold
+      // every reader applies by write_seq) — a CDC tail that serves every
+      // appended mutation and folds LWW itself sees identical content,
+      // so it skips this.
+      else Some(TokenRangeOps.Replace(
+        spark.read.format(provider).option("pk", "username")
+          .options(pinned.map(v => "version" -> v.toString).toMap).load(dir)
           .withColumn("rn", row_number().over(usersPk))
           .filter(col("rn") === 1)
-          .drop("rn")
-          .select("user_id", "username", "email", "password", "write_seq")
-          .write.format(provider)
-          .option("pk", "username")
-          // `compact` in Cassandra's sense: content-preserving UNDER the
-          // table's LWW read semantics (the fold every reader applies by
-          // write_seq) — a CDC tail that serves every appended mutation
-          // and folds LWW itself sees identical content, so it skips this
-          .option("opKind", "compact")
-          .option("replaceFiles", snapshotRel.mkString("\n"))
-          .mode("append").save(dir)
-      }
+          .select("user_id", "username", "email", "password", "write_seq"),
+        snapshotRel, "username", "compact"))
     }
   }
 }

@@ -154,35 +154,31 @@ private[connector] final class TokenRangeDeltaBatchWrite(path: String,
       if (tombRows == 0) Nil
       else tombs.select(TokenRangeSource.FileCol).distinct()
         .collect().map(_.getString(0)).toSeq.sorted
+    // CHANGE DATA FEED: pre-images are the tombstoned positions' rows
+    // read VECTOR-MERGED at the pinned version from exactly the touched
+    // files; staged rows classify as post-images (identity also removed)
+    // or inserts — the same classification every other op records
+    val changes = () => TokenRangeOps.deltaDmlChanges(spark, path, pinned,
+      touchedRel, staged.toSeq, tombs)
     try {
       if (tombRows > TokenRangeSource.recordedMorFallbackRows(path)) {
         // COPY-ON-WRITE FALLBACK: same statement, group rewrite — the
         // touched files' survivors (old vectors merged, this statement's
         // tombstoned positions dropped) plus the staged images republish
         // while the touched files retire, in one conflict-validated flip
-        val cdfRel =
-          if (!TokenRangeSource.changeFeedEnabled(path)) None
-          else Some(TokenRangeOps.stageDeltaDmlSidecar(spark, path, pinned,
-            touchedRel, staged.toSeq, tombs))
         TokenRangeOps.morFallbackRewrite(spark, path, pinned, touchedRel,
-          staged.toSeq, tombs, kind, cdfRel)
+          staged.toSeq, tombs, kind, changes)
       } else {
-        // CHANGE DATA FEED: pre-images are the tombstoned positions'
-        // rows read VECTOR-MERGED at the pinned version from exactly the
-        // touched files; staged rows classify as post-images (identity
-        // also removed) or inserts — the same classification every other
-        // op records
         val cdfRel =
           if (!TokenRangeSource.changeFeedEnabled(path)) None
-          else Some(TokenRangeOps.stageDeltaDmlSidecar(spark, path, pinned,
-            touchedRel, staged.toSeq, tombs))
+          else Some(TokenRangeOps.writeCdfSidecar(path, changes()))
         // the vector: the task tomb parquets move VERBATIM into one
         // `_dv/<uuid>/` sidecar dir (they already hold exactly the
         // (file, ordinal) rows) — no re-write, no driver-side rows
         val dvRel: Option[String] =
           if (tombRows == 0) None
           else {
-            val rel = s"_dv/${java.util.UUID.randomUUID().toString.take(12)}"
+            val rel = TokenRangeOps.newDvRel()
             val dir = new java.io.File(path, rel)
             dir.mkdirs()
             tombFiles.foreach { tf =>
@@ -194,16 +190,8 @@ private[connector] final class TokenRangeDeltaBatchWrite(path: String,
             Some(rel)
           }
         TokenRangeSource.withCommitLock(path) {
-          val placedRel = staged.map { f =>
-            val file = new java.io.File(f)
-            val bucketName = file.getParentFile.getName
-            val dst = new java.io.File(new java.io.File(path, bucketName), file.getName)
-            dst.getParentFile.mkdirs()
-            java.nio.file.Files.move(file.toPath, dst.toPath,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            s"$bucketName/${file.getName}"
-          }.toSeq
-          TokenRangeSource.publishManifest(path, placedRel, truncate = false,
+          TokenRangeSource.publishManifest(path,
+            TokenRangeSource.placeStaged(path, staged.toSeq), truncate = false,
             opKind = kind, cdfRel = cdfRel,
             dvBind = dvRel.map(dv => touchedRel.map(_ -> dv)).getOrElse(Nil),
             dvSeenVersion = pinned)

@@ -406,7 +406,7 @@ object TokenRangeSource {
       manifestIO.read(p).split('\n').toSeq.filter(_.nonEmpty))
   }
 
-  private def bucketOfRel(rel: String): Int =
+  private[connector] def bucketOfRel(rel: String): Int =
     rel.takeWhile(_ != '/').stripPrefix("tb=").toInt
 
   /** The table's recorded partition key (comma-joined for composite) —
@@ -1376,6 +1376,25 @@ object TokenRangeSource {
     }
     published
   }
+
+  /** Pin a manifest-less (legacy) table's physical listing as its first
+    * version, so files moved in later stay invisible until their flip.
+    * Caller holds the commit lock. */
+  private[connector] def pinLegacyListing(path: String): Unit =
+    if (currentVersion(path).isEmpty) publishManifest(path, Nil, truncate = false)
+
+  /** Move staged files into their `tb=<k>/` dirs under the table root
+    * (caller holds the commit lock); returns their table-relative names. */
+  private[connector] def placeStaged(path: String, staged: Seq[String]): Seq[String] =
+    staged.map { f =>
+      val file = new java.io.File(f)
+      val bucketName = file.getParentFile.getName // tb=<k>
+      val dst = new java.io.File(new java.io.File(path, bucketName), file.getName)
+      dst.getParentFile.mkdirs()
+      java.nio.file.Files.move(file.toPath, dst.toPath,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      s"$bucketName/${file.getName}"
+    }
 
   private[connector] def stagingDir(path: String, writeId: String) =
     new java.io.File(new java.io.File(path, "_staging"), writeId)
@@ -3571,45 +3590,33 @@ private[connector] final class TokenRangeBatchWrite(path: String,
         // task readers' memory; this staging dir publishes nothing (the
         // rewrite re-writes the batch's rows). Racing maintenance
         // conflicts re-resolve from the fresh snapshot and retry.
+        val spark = org.apache.spark.sql.SparkSession.active
+        // a lost race re-resolves the plan from the fresh snapshot
+        def reResolve(p: TokenRangeOps.InsertUpsertCowPlan)
+            : TokenRangeOps.InsertUpsertCowPlan =
+          TokenRangeOps.insertUpsertBind(spark, path, staged.toSeq) match {
+            case Some(c: TokenRangeOps.InsertUpsertCowPlan) => c
+            case Some(_: TokenRangeOps.InsertUpsertBindPlan) =>
+              // unreachable for a fixed batch: the cow decision keys on
+              // the batch's distinct-key count alone
+              throw new IllegalStateException(
+                s"insert-upsert at $path: cow plan re-resolved to a vector " +
+                  "plan mid-retry — the key census changed for an " +
+                  "immutable staged batch")
+            case None =>
+              // no pre-existing file owns any key anymore and the batch
+              // is duplicate-free at this grain: the cow write degrades to
+              // a plain APPEND of the batch, recording no change rows — a
+              // pure append is feed-servable by insert synthesis, exact
+              p.copy(affectedRel = Nil, changes = None,
+                pinned = TokenRangeSource.currentVersion(path))
+          }
         try {
-          var p = cow0
-          var attempts = 0
-          var committed = false
-          while (!committed) {
-            try {
-              TokenRangeOps.insertUpsertCowRewrite(
-                org.apache.spark.sql.SparkSession.active, path, p)
-              committed = true
-            } catch {
-              // the conflict surfaces from the NESTED Spark write wrapped
-              // in SparkException layers — match via the cause chain, the
-              // same way every other nested-rewrite retry in this file
-              // does (a bare type match would never fire here)
-              case e: Exception
-                  if TokenRangeOps.isConflict(e) && attempts < 5 =>
-                attempts += 1
-                TokenRangeOps.insertUpsertBind(
-                    org.apache.spark.sql.SparkSession.active, path,
-                    staged.toSeq) match {
-                  case Some(c: TokenRangeOps.InsertUpsertCowPlan) => p = c
-                  case Some(_: TokenRangeOps.InsertUpsertBindPlan) =>
-                    // unreachable for a fixed batch: the cow decision
-                    // keys on the batch's distinct-key count alone
-                    throw new IllegalStateException(
-                      s"insert-upsert at $path: cow plan re-resolved to " +
-                        "a vector plan mid-retry — the key census " +
-                        "changed for an immutable staged batch")
-                  case None =>
-                    // no pre-existing file owns any key anymore and the
-                    // batch is duplicate-free at this grain: the cow
-                    // write degrades to a plain APPEND of the batch —
-                    // and the stale sidecar (preimages of rows a racer
-                    // already removed) is DROPPED: a pure append is
-                    // feed-servable by insert synthesis, which is exact
-                    p = p.copy(affectedRel = Nil, cdfRel = None,
-                      pinned = TokenRangeSource.currentVersion(path))
-                }
-            }
+          var next = () => cow0
+          TokenRangeOps.withConflictRetry("insert-upsert") {
+            val p = next()
+            next = () => reResolve(p)
+            TokenRangeOps.insertUpsertCowRewrite(spark, path, p)
           }
         } finally
           TokenRangeSource.deleteRecursively(
@@ -3635,8 +3642,7 @@ private[connector] final class TokenRangeBatchWrite(path: String,
         // leave it visible forever). Pin the current legacy listing as
         // manifest v1 BEFORE the first move — from then on readers resolve
         // manifests and the moves are invisible until the flip.
-        if (TokenRangeSource.currentVersion(path).isEmpty)
-          TokenRangeSource.publishManifest(path, Nil, truncate = false)
+        TokenRangeSource.pinLegacyListing(path)
         // record the bucketing key once (first committer wins) so the
         // keyed rewrite ops can validate callers against it — and validate
         // THIS writer against an already-recorded key under the same lock
@@ -3679,15 +3685,7 @@ private[connector] final class TokenRangeBatchWrite(path: String,
         // commit — a table created without one still becomes physically
         // clustered the day a writer declares it (r14 review)
         ckNorm.foreach(ck => TokenRangeSource.recordCk(path, ck))
-        val placedRel = staged.map { f =>
-          val file = new java.io.File(f)
-          val bucketName = file.getParentFile.getName // tb=<k>
-          val dst = new java.io.File(new java.io.File(path, bucketName), file.getName)
-          dst.getParentFile.mkdirs()
-          java.nio.file.Files.move(file.toPath, dst.toPath,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          s"$bucketName/${file.getName}"
-        }.toSeq
+        val placedRel = TokenRangeSource.placeStaged(path, staged.toSeq)
         // CAS publish: rebases on the visible set it observes; the lock
         // only reduces contention (see publishManifest). replaceRel retires
         // the files a copy-on-write rewrite (DELETE/compaction) supersedes
@@ -3723,7 +3721,7 @@ private[connector] final class TokenRangeBatchWrite(path: String,
             finalBind = bind
           } catch {
             case _: ManifestConflictException
-                if insertUpsert && attempts < 5 =>
+                if insertUpsert && attempts < TokenRangeOps.MaxRewriteAttempts =>
               attempts += 1
               val prevBind = bind
               val placedAbs = placedRel.map(rel =>
@@ -3997,8 +3995,8 @@ private[connector] final class TokenRangeDataWriter(path: String,
   * concurrency loop of the lakehouse designs, now validated rather than
   * delegated to the caller. */
 object TokenRangeOps {
-  import org.apache.spark.sql.{DataFrame, SparkSession}
-  import org.apache.spark.sql.functions.{col, not}
+  import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+  import org.apache.spark.sql.functions.{col, lit, not}
 
   private def fmt = classOf[TokenRangeSource].getName
 
@@ -4011,7 +4009,7 @@ object TokenRangeOps {
     case other => isConflict(other.getCause)
   }
 
-  private val MaxRewriteAttempts = 5
+  private[connector] val MaxRewriteAttempts = 5
 
   /** Test seam: invoked once per attempt AFTER the rewrite pins its
     * snapshot and BEFORE it publishes — a spec installs a racing commit
@@ -4022,7 +4020,7 @@ object TokenRangeOps {
   /** Optimistic-concurrency loop around one copy-on-write rewrite: re-run
     * `body` (which re-pins the CURRENT snapshot each attempt) until its
     * publish lands without a [[ManifestConflictException]]. */
-  private[sources] def withConflictRetry[T](what: String)(body: => T): T = {
+  private[connector] def withConflictRetry[T](what: String)(body: => T): T = {
     var attempt = 1
     var out: Option[T] = None
     while (out.isEmpty) {
@@ -4037,6 +4035,183 @@ object TokenRangeOps {
       }
     }
     out.get
+  }
+
+  // ---- the ONE rewrite primitive every row-level verb plans against -------
+
+  /** A verb's planned change at its pinned version, turned into ONE
+    * manifest flip by [[flip]]. `retire` files leave the manifest in that
+    * flip; `changes` (the rows the change removes or images, with
+    * `_change_type`) becomes the change-feed sidecar when the table's
+    * feed is on, and is never built otherwise. */
+  private[sources] sealed trait Flip {
+    def retire: Seq[String]
+    def opKind: String
+    def changes: Option[() => DataFrame]
+  }
+
+  /** Copy-on-write: `rows` replace the `retire` files, written through the
+    * sink keyed on `pk` — ring-repartitioned first when `repartition`
+    * (one output file per bucket), rolled every `rollRows` rows if set. */
+  private[sources] final case class Replace(rows: DataFrame,
+      retire: Seq[String], pk: String, opKind: String,
+      changes: Option[() => DataFrame] = None, repartition: Boolean = false,
+      rollRows: Option[Long] = None) extends Flip
+
+  /** Merge-on-read: one deletion vector (`vector`: key rows, or `_file` +
+    * `_pos` rows) bound to `targets`; `append` rows (and the sink key they
+    * route on) are written in the same flip. */
+  private[sources] final case class Bind(vector: DataFrame,
+      targets: Seq[String], opKind: String, changes: Option[() => DataFrame],
+      retire: Seq[String] = Nil,
+      append: Option[(DataFrame, String)] = None) extends Flip
+
+  /** Metadata only: the `retire` files leave the manifest unread. */
+  private[sources] final case class Retire(retire: Seq[String],
+      opKind: String, changes: Option[() => DataFrame]) extends Flip
+
+  /** The one place a planned change becomes a commit. Every flip declares
+    * the version its rows were read at (`dvSeenVersion`), so a vector
+    * bound after the pin conflicts the publish instead of being dropped. */
+  private def flip(path: String, pinned: Option[Int], f: Flip): Unit = {
+    val cdfRel = f.changes.filter(_ => TokenRangeSource.changeFeedEnabled(path))
+      .map(c => writeCdfSidecar(path, c()))
+    val (rows, bind, rollRows) = f match {
+      case r: Replace =>
+        val out =
+          if (!r.repartition) r.rows
+          else r.rows.repartition(TokenLayout.Buckets,
+            ringOf(r.pk.split(',').map(_.trim).toSeq, r.rows.schema))
+        (Some(out -> r.pk), Nil, r.rollRows)
+      case b: Bind =>
+        val dvRel = newDvRel()
+        b.vector.coalesce(1).write.mode("error")
+          .parquet(new java.io.File(path, dvRel).getAbsolutePath)
+        (b.append, b.targets.map(_ -> dvRel), None)
+      case _: Retire => (None, Nil, None)
+    }
+    rows match {
+      case Some((df, pk)) =>
+        df.write.format(fmt).option("pk", pk).option("opKind", f.opKind)
+          .options(cdfRel.map("cdfRel" -> _).toMap)
+          .options(pinned.map(v => "dvSeenVersion" -> v.toString).toMap)
+          .options(rollRows.map("rollRows" -> _.toString).toMap)
+          .option("replaceFiles", f.retire.mkString("\n"))
+          .option("dvBind", bind.map { case (d, v) => s"$d $v" }.mkString("\n"))
+          .mode("append").save(path)
+      case None =>
+        TokenRangeSource.withCommitLock(path) {
+          TokenRangeSource.publishManifest(path, Nil, truncate = false,
+            removeRel = f.retire.toSet, opKind = f.opKind, cdfRel = cdfRel,
+            dvBind = bind, dvSeenVersion = pinned)
+        }
+    }
+  }
+
+  /** The optimistic rewrite loop every verb shares: pin a legacy table's
+    * listing as its first version, then per attempt pin the CURRENT
+    * version, let the verb `plan` its change at that pin (None: nothing
+    * to do) and [[flip]] it; a flip that loses a race re-runs the whole
+    * attempt from the fresh snapshot ([[withConflictRetry]]). A published
+    * vector triggers the binding-bound [[vectorSweep]]. Returns the
+    * committed change. */
+  private[sources] def rewrite(spark: SparkSession, path: String,
+      what: String)(plan: Option[Int] => Option[Flip]): Option[Flip] = {
+    // from here on everything is manifest-resolved and the rewrite is
+    // invisible until its flip
+    if (TokenRangeSource.currentVersion(path).isEmpty)
+      TokenRangeSource.withCommitLock(path)(TokenRangeSource.pinLegacyListing(path))
+    val done = withConflictRetry(what) {
+      val pinned = TokenRangeSource.currentVersion(path)
+      onSnapshotPinned()
+      val f = plan(pinned)
+      f.foreach(flip(path, pinned, _))
+      f
+    }
+    if (done.exists(_.isInstanceOf[Bind])) vectorSweep(spark, path)
+    done
+  }
+
+  /** A fresh deletion-vector sidecar name (`_dv/<uuid>`). */
+  private[connector] def newDvRel(): String =
+    s"_dv/${java.util.UUID.randomUUID().toString.take(12)}"
+
+  private def recordedPkOf(path: String, what: String): String =
+    TokenRangeSource.recordedPk(path).getOrElse(throw new IllegalStateException(
+      s"token-range $what at $path requires a recorded pk"))
+
+  /** The token-ring bucket of a (single or composite) key — the same
+    * expression the task writers route by. */
+  private def ringOf(pks: Seq[String], schema: StructType): Column =
+    if (pks.size == 1) TokenLayout.bucketOfColumn(col(pks.head), schema(pks.head).dataType)
+    else TokenLayout.bucketOfComposite(pks.map(col))
+
+  private def deleted(rows: DataFrame): DataFrame =
+    rows.withColumn(TokenRangeSource.ChangeTypeCol, lit("delete"))
+
+  /** The upsert change classification (the CQL/Delta one): `old` rows
+    * whose key `written` re-binds are preimages, `written` rows whose key
+    * was stored are postimages, the rest inserts. */
+  private def upsertChanges(old: DataFrame, written: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    val cols = written.columns.map(col).toSeq
+    val ct = TokenRangeSource.ChangeTypeCol
+    val oldKeys = old.select(keys.map(col): _*).distinct()
+    old.join(written.select(keys.map(col): _*).distinct(), keys, "left_semi")
+      .select(cols: _*).withColumn(ct, lit("update_preimage"))
+      .unionByName(written.join(oldKeys, keys, "left_semi")
+        .select(cols: _*).withColumn(ct, lit("update_postimage")))
+      .unionByName(written.join(oldKeys, keys, "left_anti")
+        .select(cols: _*).withColumn(ct, lit("insert")))
+  }
+
+  /** What a footer-classified delete (range tombstone, TTL) does to one
+    * file: keep it by reference, retire it unread, or split it. */
+  private sealed trait Fate
+  private case object KeepFile extends Fate
+  private case object RetireFile extends Fate
+  private case object SplitFile extends Fate
+
+  /** (retired, split) files of `rels` by `fate` over each file's parquet
+    * row groups; a file without row groups holds nothing to keep. */
+  private def footerFates(path: String, rels: Seq[String])(
+      fate: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData] => Fate)
+      : (Seq[String], Seq[String]) = {
+    val fates = rels.map { rel =>
+      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(new java.io.File(path, rel).getAbsolutePath),
+        new Configuration()))
+      try {
+        val blocks = rd.getFooter.getBlocks.asScala.toSeq
+        rel -> (if (blocks.isEmpty) RetireFile else fate(blocks))
+      } finally rd.close()
+    }
+    (fates.collect { case (rel, RetireFile) => rel },
+      fates.collect { case (rel, SplitFile) => rel })
+  }
+
+  /** The plan the footer-classified deletes share: `retired` files leave
+    * unread (metadata-only when nothing splits — sound with vectors too:
+    * suppressed rows are already deleted, the rest provably match),
+    * `split` files lose exactly their `matches` rows — a POSITION vector
+    * in dv mode (survivors never rewritten; rows an earlier vector
+    * deleted never re-tombstone), a survivor rewrite otherwise — and the
+    * feed records every matching row of both (reading is the only way to
+    * record a retired file's rows: the fast path yields to the feed). */
+  private def sliceFlip(spark: SparkSession, path: String, pk: String,
+      pinned: Option[Int], retired: Seq[String], split: Seq[String],
+      dv: Boolean, opKind: String,
+      matches: (String => Column) => Column): Option[Flip] = {
+    val changes = Some(() =>
+      deleted(readRels(spark, path, retired ++ split, pinned).filter(matches(col))))
+    if (retired.isEmpty && split.isEmpty) None // nothing matches
+    else if (split.isEmpty) Some(Retire(retired, opKind, changes))
+    else if (dv)
+      Some(Bind(positionsWhere(spark, path, split, pinned, matches), split,
+        opKind, changes, retire = retired))
+    else
+      Some(Replace(readRels(spark, path, split, pinned).filter(not(matches(col))),
+        retired ++ split, pk, opKind, changes))
   }
 
   private def bucketOfKey(v: Any): Int = v match {
@@ -4094,13 +4269,6 @@ object TokenRangeOps {
     require(Set("auto", "cow", "dv")(mode),
       s"token-range DELETE mode must be auto|cow|dv, got '$mode'")
     requirePkMatches(path, pk, "DELETE", singleOnly = true)
-    // legacy (manifest-less) tables pin their listing as v1 first, the
-    // same move the write path makes — from here on everything is
-    // manifest-resolved and the rewrite is invisible until the flip
-    TokenRangeSource.withCommitLock(path) {
-      if (TokenRangeSource.currentVersion(path).isEmpty)
-        TokenRangeSource.publishManifest(path, Nil, truncate = false)
-    }
     // the vector path NEEDS the recorded pk (readers resolve the merge
     // key through it): on a legacy table that never recorded one, a
     // published vector would make every read — including the compaction
@@ -4113,73 +4281,39 @@ object TokenRangeOps {
     val useDv = pkRecorded &&
       (mode == "dv" || (mode == "auto" && keys.size <= DvAutoMaxKeys))
     val buckets = keys.map(bucketOfKey).toSet
-    withConflictRetry("DELETE") {
-      val pinned = TokenRangeSource.currentVersion(path)
+    val keyLits = keys.map {
+      case u: UTF8String => u.toString
+      case v => v
+    }
+    val matches = col(pk).isin(keyLits: _*)
+    rewrite(spark, path, "DELETE") { pinned =>
       val affectedRel = TokenRangeSource.visibleRelFiles(path, pinned)
         .collect { case (k, rel) if buckets(k) => rel }
-      onSnapshotPinned()
-      if (affectedRel.nonEmpty) { // keys owning no visible files: no-op
-        val affectedAbs = affectedRel
-          .map(rel => new java.io.File(path, rel).getAbsolutePath)
-        val keyLits = keys.map {
-          case u: UTF8String => u.toString
-          case v => v
-        }
-        // CHANGE DATA FEED: record the deleted rows BEFORE the flip —
-        // vector-merged at the pin, so rows an EARLIER vector already
-        // deleted never re-record
-        def cdfFor(): Option[String] =
-          if (!TokenRangeSource.changeFeedEnabled(path)) None
-          else Some(writeCdfSidecar(path,
-            readFilesAligned(spark, path, affectedAbs, pinned)
-              .filter(col(pk).isin(keyLits: _*))
-              .withColumn(TokenRangeSource.ChangeTypeCol,
-                org.apache.spark.sql.functions.lit("delete"))))
-        if (useDv) {
-          // MERGE-ON-READ: no data file is read or written — publish a
-          // key sidecar bound to every file currently owning the keys'
-          // buckets; readers suppress, compaction applies. A racing
-          // rewrite that retires a bound file conflicts the publish and
-          // this whole attempt re-runs from the new snapshot.
-          val pkField = TokenRangeSource.storedSchema(path)
-            .flatMap(_.fields.find(_.name.equalsIgnoreCase(pk)))
-            .getOrElse(throw new IllegalArgumentException(
-              s"token-range DELETE: no column '$pk' in the stored schema"))
-          val rows = keyLits.distinct.map(v => org.apache.spark.sql.Row(
-            (v, pkField.dataType) match {
-              case (n: java.lang.Number, LongType) => n.longValue
-              case (n: java.lang.Number, IntegerType) => n.intValue
-              case (other, _) => other
-            }))
-          val dvDf = spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1),
-            StructType(Array(StructField(pkField.name, pkField.dataType))))
-          val cdfRel = cdfFor()
-          val dvRel = s"_dv/${java.util.UUID.randomUUID().toString.take(12)}"
-          dvDf.coalesce(1).write.mode("error")
-            .parquet(new java.io.File(path, dvRel).getAbsolutePath)
-          TokenRangeSource.withCommitLock(path) {
-            TokenRangeSource.publishManifest(path, Nil, truncate = false,
-              opKind = "delete", cdfRel = cdfRel,
-              dvBind = affectedRel.map(_ -> dvRel),
-              dvSeenVersion = pinned)
-          }
-          ()
-        } else {
-          val affected = readFilesAligned(spark, path, affectedAbs, pinned)
-          val matches = col(pk).isin(keyLits: _*)
-          val cdfRel = cdfFor()
-          affected.filter(not(matches)).write.format(fmt)
-            .option("pk", pk)
-            .option("opKind", "delete")
-            .options(cdfRel.map("cdfRel" -> _).toMap)
-            .options(pinned.map(v => "dvSeenVersion" -> v.toString).toMap)
-            .option("replaceFiles", affectedRel.mkString("\n"))
-            .mode("append").save(path)
-        }
-      }
+      // vector-merged at the pin, so rows an EARLIER vector already
+      // deleted never re-record in the feed
+      lazy val affected = readRels(spark, path, affectedRel, pinned)
+      val changes = Some(() => deleted(affected.filter(matches)))
+      if (affectedRel.isEmpty) None // keys owning no visible files: no-op
+      else if (useDv) {
+        // MERGE-ON-READ: no data file is read or written — a key sidecar
+        // bound to every file currently owning the keys' buckets; readers
+        // suppress, compaction applies
+        val pkField = TokenRangeSource.storedSchema(path)
+          .flatMap(_.fields.find(_.name.equalsIgnoreCase(pk)))
+          .getOrElse(throw new IllegalArgumentException(
+            s"token-range DELETE: no column '$pk' in the stored schema"))
+        val rows = keyLits.distinct.map(v => org.apache.spark.sql.Row(
+          (v, pkField.dataType) match {
+            case (n: java.lang.Number, LongType) => n.longValue
+            case (n: java.lang.Number, IntegerType) => n.intValue
+            case (other, _) => other
+          }))
+        Some(Bind(spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+            StructType(Array(StructField(pkField.name, pkField.dataType)))),
+          affectedRel, "delete", changes))
+      } else
+        Some(Replace(affected.filter(not(matches)), affectedRel, pk, "delete", changes))
     }
-    if (useDv) vectorSweep(spark, path)
   }
 
   /** Row-level DELETE by COMPOSITE partition key (r13 — closes the
@@ -4199,10 +4333,6 @@ object TokenRangeOps {
     require(Set("auto", "cow", "dv")(mode),
       s"token-range DELETE mode must be auto|cow|dv, got '$mode'")
     requirePkMatches(path, pks.mkString(","), "DELETE")
-    TokenRangeSource.withCommitLock(path) {
-      if (TokenRangeSource.currentVersion(path).isEmpty)
-        TokenRangeSource.publishManifest(path, Nil, truncate = false)
-    }
     // an EMPTY table deletes nothing — and has no footer to read the
     // component dtypes from (r13 review: the schemaless load below would
     // error where deleteKeys no-ops)
@@ -4235,53 +4365,21 @@ object TokenRangeOps {
       s"token-range DELETE mode=dv at $path requires a recorded pk")
     val useDv = pkRecorded &&
       (mode == "dv" || (mode == "auto" && keys.size <= DvAutoMaxKeys))
-    withConflictRetry("DELETE") {
-      val pinned = TokenRangeSource.currentVersion(path)
+    val joinCols = pkFields.map(_.name).toSeq
+    rewrite(spark, path, "DELETE") { pinned =>
       val affectedRel = TokenRangeSource.visibleRelFiles(path, pinned)
         .collect { case (k, rel) if buckets(k) => rel }
-      onSnapshotPinned()
-      if (affectedRel.nonEmpty) {
-        val affectedAbs = affectedRel
-          .map(rel => new java.io.File(path, rel).getAbsolutePath)
-        val joinCols = pkFields.map(_.name).toSeq
-        def cdfFor(): Option[String] =
-          if (!TokenRangeSource.changeFeedEnabled(path)) None
-          else Some(writeCdfSidecar(path,
-            readFilesAligned(spark, path, affectedAbs, pinned)
-              .join(org.apache.spark.sql.functions.broadcast(keyDf),
-                joinCols, "left_semi")
-              .withColumn(TokenRangeSource.ChangeTypeCol,
-                org.apache.spark.sql.functions.lit("delete"))))
-        if (useDv) {
-          // merge-on-read, composite grain: the vector holds the tuples
-          // (all pk components, table dtypes) — see deleteKeys
-          val cdfRel = cdfFor()
-          val dvRel = s"_dv/${java.util.UUID.randomUUID().toString.take(12)}"
-          keyDf.distinct().coalesce(1).write.mode("error")
-            .parquet(new java.io.File(path, dvRel).getAbsolutePath)
-          TokenRangeSource.withCommitLock(path) {
-            TokenRangeSource.publishManifest(path, Nil, truncate = false,
-              opKind = "delete", cdfRel = cdfRel,
-              dvBind = affectedRel.map(_ -> dvRel),
-              dvSeenVersion = pinned)
-          }
-          ()
-        } else {
-          val survivors = readFilesAligned(spark, path, affectedAbs, pinned)
-            .join(org.apache.spark.sql.functions.broadcast(keyDf),
-              joinCols, "left_anti")
-          val cdfRel = cdfFor()
-          survivors.write.format(fmt)
-            .option("pk", pks.mkString(","))
-            .option("opKind", "delete")
-            .options(cdfRel.map("cdfRel" -> _).toMap)
-            .options(pinned.map(v => "dvSeenVersion" -> v.toString).toMap)
-            .option("replaceFiles", affectedRel.mkString("\n"))
-            .mode("append").save(path)
-        }
-      }
+      lazy val affected = readRels(spark, path, affectedRel, pinned)
+      def keyed(how: String) = affected.join(
+        org.apache.spark.sql.functions.broadcast(keyDf), joinCols, how)
+      val changes = Some(() => deleted(keyed("left_semi")))
+      if (affectedRel.isEmpty) None
+      // merge-on-read, composite grain: the vector holds the tuples (all
+      // pk components, table dtypes) — see deleteKeys
+      else if (useDv) Some(Bind(keyDf.distinct(), affectedRel, "delete", changes))
+      else Some(Replace(keyed("left_anti"), affectedRel, pks.mkString(","),
+        "delete", changes))
     }
-    if (useDv) vectorSweep(spark, path)
   }
 
   /** Clustering-range DELETE — CQL's range tombstone, `DELETE FROM t
@@ -4330,29 +4428,23 @@ object TokenRangeOps {
     // column or an unclustered table is invalid at analysis time even
     // when it matches zero rows.
     if (ckLo >= ckHi) return
-    TokenRangeSource.withCommitLock(path) {
-      if (TokenRangeSource.currentVersion(path).isEmpty)
-        TokenRangeSource.publishManifest(path, Nil, truncate = false)
-    }
     val keyLong: Option[Long] = key match {
       case l: Long => Some(l)
       case i: Int => Some(i.toLong)
       case _ => None
     }
     val bucket = bucketOfKey(key)
-    // per-file classification from footer stats (block-conjunctive: Keep
-    // needs EVERY row group provably matchless, Retire EVERY row group
-    // provably all-match)
-    sealed trait Cls
-    case object Keep extends Cls; case object Retire extends Cls
-    case object Straddle extends Cls
-    def classify(rel: String): Cls = {
-      val abs = new java.io.File(path, rel).getAbsolutePath
-      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(abs), new Configuration()))
-      try {
-        val blocks = rd.getFooter.getBlocks.asScala
-        if (blocks.isEmpty) return Retire // zero row groups: no rows to keep
+    val keyV: Any = key match {
+      case u: UTF8String => u.toString
+      case v => v
+    }
+    rewrite(spark, path, "DELETE") { pinned =>
+      // per-file fate from footer stats (block-conjunctive: Keep needs
+      // EVERY row group provably matchless, Retire EVERY row group
+      // provably all-match)
+      val (retired, straddling) = footerFates(path,
+          TokenRangeSource.visibleRelFiles(path, pinned)
+            .collect { case (k, rel) if k == bucket => rel }) { blocks =>
         val per = blocks.map { b =>
           // shared extractor (r15). All-null groups report the empty
           // interval: a pk group can't be all-null (sink refuses null
@@ -4376,101 +4468,21 @@ object TokenRangeOps {
                 cmn >= ckLo && cmx < ckHi && cnulls == 0
             case _ => false
           }
-          if (pkExcludes || ckDisjoint) Keep
-          else if (allMatch) Retire
-          else Straddle
+          if (pkExcludes || ckDisjoint) KeepFile
+          else if (allMatch) RetireFile
+          else SplitFile
         }
-        if (per.forall(_ == Keep)) Keep
-        else if (per.forall(_ == Retire)) Retire
-        else Straddle
-      } finally rd.close()
-    }
-    withConflictRetry("DELETE") {
-      val pinned = TokenRangeSource.currentVersion(path)
-      val bucketRel = TokenRangeSource.visibleRelFiles(path, pinned)
-        .collect { case (k, rel) if k == bucket => rel }
-      onSnapshotPinned()
-      val classed = bucketRel.map(rel => rel -> classify(rel))
-      val retired = classed.collect { case (rel, Retire) => rel }
-      val straddling = classed.collect { case (rel, Straddle) => rel }
-      val keyV: Any = key match {
-        case u: UTF8String => u.toString
-        case v => v
+        if (per.forall(_ == KeepFile)) KeepFile
+        else if (per.forall(_ == RetireFile)) RetireFile
+        else SplitFile
       }
-      val ckc = col(ckCol)
-      val matches = col(pk) === org.apache.spark.sql.functions.lit(keyV) &&
-        ckc.isNotNull && ckc >= ckLo && ckc < ckHi
-      // CHANGE DATA FEED: the deleted rows are (retired ∪ straddling)
-      // rows matching the tombstone — retired files are provably
-      // all-match, so one read + filter over both classes is exact. The
-      // retire-unread fast path yields to the feed (reading is the only
-      // way to record the rows), the documented CDF write-time trade.
-      def cdfRel(): Option[String] =
-        if (!TokenRangeSource.changeFeedEnabled(path)) None
-        else Some(writeCdfSidecar(path,
-          readFilesAligned(spark, path, (retired ++ straddling)
-            .map(rel => new java.io.File(path, rel).getAbsolutePath), pinned)
-            .filter(matches)
-            .withColumn(TokenRangeSource.ChangeTypeCol,
-              org.apache.spark.sql.functions.lit("delete"))))
-      if (retired.isEmpty && straddling.isEmpty) () // nothing matches
-      else if (straddling.isEmpty) {
-        // metadata-only range tombstone: every affected slab dies wholesale
-        // (sound with deletion vectors too: suppressed rows are already
-        // deleted, the remainder provably all-match)
-        val cdf = cdfRel()
-        TokenRangeSource.withCommitLock(path) {
-          TokenRangeSource.publishManifest(path, Nil, truncate = false,
-            removeRel = retired.toSet, opKind = "delete", cdfRel = cdf,
-            dvSeenVersion = pinned)
-        }
-      } else if (mode == "dv") {
-        // MERGE-ON-READ range tombstone (r17): retire-class files still
-        // die wholesale (metadata-only), straddlers get a POSITION
-        // vector of exactly their matching rows — survivors are never
-        // rewritten. Matching positions read vector-merged at the pin,
-        // so rows an earlier vector already deleted never re-tombstone.
-        val cdf = cdfRel()
-        val straddAbs =
-          straddling.map(rel => new java.io.File(path, rel).getAbsolutePath)
-        val lin = dvMergeLineaged(spark, path,
-          withFileLineage(spark, straddAbs), straddAbs, pinned)
-        def lc(n: String) = col(lin.schema.fields
-          .find(_.name.equalsIgnoreCase(n)).map(_.name).getOrElse(n))
-        val tombs = lin.filter(
-            lc(pk) === org.apache.spark.sql.functions.lit(keyV) &&
-              lc(ckCol).isNotNull && lc(ckCol) >= ckLo && lc(ckCol) < ckHi)
-          .select(col(DvRelLin).as(TokenRangeSource.FileCol),
-            col(DvPosLin).cast("long").as(TokenRangeSource.PosCol))
-        val dvRel = s"_dv/${java.util.UUID.randomUUID().toString.take(12)}"
-        tombs.coalesce(1).write.mode("error")
-          .parquet(new java.io.File(path, dvRel).getAbsolutePath)
-        TokenRangeSource.withCommitLock(path) {
-          TokenRangeSource.publishManifest(path, Nil, truncate = false,
-            removeRel = retired.toSet, opKind = "delete", cdfRel = cdf,
-            dvBind = straddling.map(_ -> dvRel),
-            dvSeenVersion = pinned)
-        }
-        ()
-      } else {
-        val cdf = cdfRel()
-        // ckc.isNotNull keeps the predicate two-valued: a NULL-ck row
-        // never matches a range (CQL/SQL agree), and without the guard
-        // not(NULL) = NULL would silently DROP it from the rewrite
-        val survivors = readFilesAligned(spark, path,
-            straddling.map(rel => new java.io.File(path, rel).getAbsolutePath),
-            pinned)
-          .filter(not(matches))
-        survivors.write.format(fmt)
-          .option("pk", pk)
-          .option("opKind", "delete")
-          .options(cdf.map("cdfRel" -> _).toMap)
-          .options(pinned.map(v => "dvSeenVersion" -> v.toString).toMap)
-          .option("replaceFiles", (retired ++ straddling).mkString("\n"))
-          .mode("append").save(path)
-      }
+      // ck.isNotNull keeps the predicate two-valued: a NULL-ck row never
+      // matches a range (CQL/SQL agree), and without the guard not(NULL)
+      // = NULL would silently DROP it from the rewrite
+      sliceFlip(spark, path, pk, pinned, retired, straddling, mode == "dv",
+        "delete", c => c(pk) === lit(keyV) &&
+          c(ckCol).isNotNull && c(ckCol) >= ckLo && c(ckCol) < ckHi)
     }
-    if (mode == "dv") vectorSweep(spark, path)
   }
 
   /** Per-CELL upsert — CQL's actual UPDATE semantic (VERDICT r14
@@ -4544,10 +4556,6 @@ object TokenRangeOps {
       col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
     val pkSet = pks.map(_.toLowerCase).toSet
     val cellCols = boundFields.map(_.name).filterNot(n => pkSet(n.toLowerCase))
-    val bucketCol =
-      if (pks.size == 1)
-        TokenLayout.bucketOfColumn(col(pks.head), ts(pks.head).dataType)
-      else TokenLayout.bucketOfComposite(pks.map(col))
     // ONE job over the incoming frame computes BOTH the owning-bucket set
     // (≤ ring width, never data-sized) and the duplicate-key guard:
     // duplicate incoming keys would FAN OUT the full-outer join and write
@@ -4561,7 +4569,7 @@ object TokenRangeOps {
       .groupBy(pks.map(col): _*)
       .agg(org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("__n"))
-      .groupBy(bucketCol.as("tb"))
+      .groupBy(ringOf(pks, ts).as("tb"))
       .agg(org.apache.spark.sql.functions.max(col("__n")).as("__mx"))
       .collect()
     require(perBucket.forall(_.getLong(1) == 1L),
@@ -4576,17 +4584,10 @@ object TokenRangeOps {
     val inRenamed = aligned.select(
       (pks.map(col) ++ cellCols.map(c => col(c).as(s"__in_$c"))
         :+ org.apache.spark.sql.functions.lit(true).as("__in_present")).toSeq: _*)
-    withConflictRetry("upsertCells") {
-      val pinned = TokenRangeSource.currentVersion(path)
+    rewrite(spark, path, "upsertCells") { pinned =>
       val affectedRel = TokenRangeSource.visibleRelFiles(path, pinned)
         .collect { case (k, rel) if buckets(k) => rel }
-      onSnapshotPinned()
-      val old =
-        if (affectedRel.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ts)
-        else readFilesAligned(spark, path, affectedRel
-          .map(rel => new java.io.File(path, rel).getAbsolutePath), pinned)
+      val old = readRels(spark, path, affectedRel, pinned, ts)
       val cellSet = cellCols.map(_.toLowerCase).toSet
       // writetime mode: which cell each _wt_ shadow belongs to, and the
       // per-cell WIN predicate (bound by the frame AND strictly newer
@@ -4627,33 +4628,12 @@ object TokenRangeOps {
               .otherwise(col(f.name)).as(f.name)
           else col(f.name)
         }.toSeq: _*)
-      val cdfRel =
-        if (TokenRangeSource.changeFeedEnabled(path)) {
-          // cell-grain classification: a bound existing key is a pre/post
-          // pair (postimage = the MERGED row — what a reader now sees),
-          // an unseen key materializes as an insert
-          val liter = org.apache.spark.sql.functions.lit _
-          val ct = TokenRangeSource.ChangeTypeCol
-          val inKeys = inRenamed.select(pks.map(col): _*).distinct()
-          val oldKeys = old.select(pks.map(col): _*).distinct()
-          val tcols = ts.fields.map(f => col(f.name)).toSeq
-          val pre = old.join(inKeys, pks, "left_semi")
-            .select(tcols: _*).withColumn(ct, liter("update_preimage"))
-          val post = merged.join(inKeys, pks, "left_semi")
-            .join(oldKeys, pks, "left_semi")
-            .select(tcols: _*).withColumn(ct, liter("update_postimage"))
-          val ins = merged.join(inKeys, pks, "left_semi")
-            .join(oldKeys, pks, "left_anti")
-            .select(tcols: _*).withColumn(ct, liter("insert"))
-          Some(writeCdfSidecar(path, pre.unionByName(post).unionByName(ins)))
-        } else None
-      merged.write.format(fmt)
-        .option("pk", pk)
-        .option("opKind", "upsert")
-        .options(cdfRel.map("cdfRel" -> _).toMap)
-        .options(pinned.map(v => "dvSeenVersion" -> v.toString).toMap)
-        .option("replaceFiles", affectedRel.mkString("\n"))
-        .mode("append").save(path)
+      // cell-grain classification: a bound existing key is a pre/post
+      // pair (postimage = the MERGED row — what a reader now sees), an
+      // unseen key materializes as an insert
+      Some(Replace(merged, affectedRel, pk, "upsert", Some(() => upsertChanges(
+        old, merged.join(inRenamed.select(pks.map(col): _*).distinct(), pks,
+          "left_semi"), pks))))
     }
   }
 
@@ -4675,42 +4655,26 @@ object TokenRangeOps {
   def compact(spark: SparkSession, path: String, pk: String,
       rollRows: Option[Long] = None): Unit = {
     requirePkMatches(path, pk, "compact")
-    withConflictRetry("compact") {
-      val pinned = TokenRangeSource.currentVersion(path)
+    rewrite(spark, path, "compact") { pinned =>
       val snapshotRel = TokenRangeSource.visibleRelFiles(path, pinned).map(_._2)
-      onSnapshotPinned()
-      if (snapshotRel.nonEmpty) { // empty table: nothing to compact
-        // align the pinned read to the CURRENT logical view: the pin now
-        // serves the version's OWN schema (r15), and compaction's contract
-        // is to rewrite into the current one (post-DROP compaction is how
-        // dropped bytes physically leave the files)
-        val t = alignToStored(path,
+      if (snapshotRel.isEmpty) None // empty table: nothing to compact
+      // align the pinned read to the CURRENT logical view: the pin now
+      // serves the version's OWN schema (r15), and compaction's contract
+      // is to rewrite into the current one (post-DROP compaction is how
+      // dropped bytes physically leave the files). The ring repartition
+      // puts each bucket's rows in one task → one output file per bucket
+      // (TokenRangeCompositeSpec asserts the expression/twin agreement
+      // through exactly this path); on a ck-recorded table the sink's
+      // declared ordering adds the within-bucket ck sort on top, so
+      // compaction REBUILDS clustering order (and, with `rollRows`,
+      // splits each bucket into disjoint ck slabs — the
+      // time-window-compaction layout the slice prune selects within).
+      // Content-preserving, so the CDC tail SKIPS `#op compact` versions
+      // (Cassandra's CDC never re-emits compaction either).
+      else Some(Replace(alignToStored(path,
           spark.read.format(fmt).option("pk", pk)
-            .options(pinned.map(v => "version" -> v.toString).toMap)
-            .load(path))
-        // composite keys repartition on the TUPLE ring expression — the
-        // same chained xxhash64 the task writers route by, so each
-        // bucket's rows land in one task → one output file per bucket
-        // (TokenRangeCompositeSpec asserts the expression/twin agreement
-        // through exactly this path). On a ck-recorded table the sink's
-        // declared ordering adds the within-bucket ck sort on top of this
-        // repartition, so compaction REBUILDS clustering order (and, with
-        // `rollRows`, splits each bucket into disjoint ck slabs — the
-        // time-window-compaction layout the slice prune selects within).
-        val pks = pk.split(',').map(_.trim).toSeq
-        val bucketExpr =
-          if (pks.size == 1) TokenLayout.bucketOfColumn(col(pk), t.schema(pk).dataType)
-          else TokenLayout.bucketOfComposite(pks.map(col))
-        t.repartition(TokenLayout.Buckets, bucketExpr)
-          .write.format(fmt).option("pk", pk)
-          .options(rollRows.map(n => "rollRows" -> n.toString).toMap)
-          // content-preserving rewrite: the CDC tail SKIPS `#op compact`
-          // versions (Cassandra's CDC never re-emits compaction either)
-          .option("opKind", "compact")
-          .options(pinned.map(v => "dvSeenVersion" -> v.toString).toMap)
-          .option("replaceFiles", snapshotRel.mkString("\n"))
-          .mode("append").save(path)
-      }
+            .options(pinned.map(v => "version" -> v.toString).toMap).load(path)),
+        snapshotRel, pk, "compact", repartition = true, rollRows = rollRows))
     }
   }
 
@@ -4834,6 +4798,31 @@ object TokenRangeOps {
       dvMergeLineaged(spark, path, withFileLineage(spark, absFiles),
         absFiles, dvAt).drop(DvRelLin, DvPosLin))
 
+  private def absOf(path: String, rels: Seq[String]): Seq[String] =
+    rels.map(rel => new java.io.File(path, rel).getAbsolutePath)
+
+  /** [[readFilesAligned]] of the table-relative `rels` at `pinned`; an
+    * empty frame of schema `empty` when there are none. */
+  private def readRels(spark: SparkSession, path: String, rels: Seq[String],
+      pinned: Option[Int], empty: => StructType = new StructType()): DataFrame =
+    if (rels.isEmpty)
+      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), empty)
+    else readFilesAligned(spark, path, absOf(path, rels), pinned)
+
+  /** Position-vector rows (`_file`, `_pos`) of the rows of `rels`,
+    * vector-merged at `pinned`, that match `pred` — which resolves
+    * column names case-insensitively against the raw footers. */
+  private def positionsWhere(spark: SparkSession, path: String,
+      rels: Seq[String], pinned: Option[Int],
+      pred: (String => Column) => Column): DataFrame = {
+    val abs = absOf(path, rels)
+    val lin = dvMergeLineaged(spark, path, withFileLineage(spark, abs), abs, pinned)
+    def lc(n: String) = col(lin.schema.fields
+      .find(_.name.equalsIgnoreCase(n)).map(_.name).getOrElse(n))
+    lin.filter(pred(lc)).select(col(DvRelLin).as(TokenRangeSource.FileCol),
+      col(DvPosLin).cast("long").as(TokenRangeSource.PosCol))
+  }
+
   /** Apply the deletion vectors bound to `absFiles` at version `dvAt`
     * (current when None) to a lineage-carrying frame: key-grain vectors
     * anti-join on (pk, file), position-grain vectors (r17) on the
@@ -4949,28 +4938,19 @@ object TokenRangeOps {
     * plus the staged row images republish while the touched files
     * retire, in one conflict-validated flip — exactly the plan the
     * group-based path would have produced, reached from the delta
-    * commit. The change-feed sidecar was staged by the caller from the
-    * same tombstone frame, so the feed is identical either way. */
+    * commit. `changes` images the statement from the same tombstone
+    * frame the vector path records, so the feed is identical either way. */
   private[connector] def morFallbackRewrite(spark: SparkSession,
       path: String, pinned: Option[Int], touchedRel: Seq[String],
       stagedAbs: Seq[String], tombs: DataFrame, opKind: String,
-      cdfRel: Option[String]): Unit = {
-    val touchedAbs =
-      touchedRel.map(rel => new java.io.File(path, rel).getAbsolutePath)
-    val survivors = readTouchedVsTombs(spark, path, touchedAbs, pinned,
-      tombs, keep = false)
+      changes: () => DataFrame): Unit = {
+    val survivors = readTouchedVsTombs(spark, path, absOf(path, touchedRel),
+      pinned, tombs, keep = false)
     val out =
       if (stagedAbs.isEmpty) survivors
       else survivors.unionByName(readFilesAligned(spark, path, stagedAbs, pinned))
-    val pk = TokenRangeSource.recordedPk(path)
-      .getOrElse(throw new IllegalStateException(
-        s"token-range merge-on-read fallback at $path requires a recorded pk"))
-    out.write.format(fmt).option("pk", pk)
-      .option("opKind", opKind)
-      .options(cdfRel.map("cdfRel" -> _).toMap)
-      .options(pinned.map(v => "dvSeenVersion" -> v.toString).toMap)
-      .option("replaceFiles", touchedRel.mkString("\n"))
-      .mode("append").save(path)
+    flip(path, pinned, Replace(out, touchedRel,
+      recordedPkOf(path, "merge-on-read fallback"), opKind, Some(changes)))
   }
 
   /** INSERT-IS-UPSERT commit support (r17, clustered + intra-batch LWW
@@ -5011,8 +4991,8 @@ object TokenRangeOps {
       pinned: Option[Int]) extends InsertUpsertPlan
   private[connector] final case class InsertUpsertCowPlan(
       affectedRel: Seq[String], pinned: Option[Int],
-      cdfRel: Option[String], keyCols: Seq[String], keysDf: DataFrame,
-      deduped: DataFrame) extends InsertUpsertPlan
+      changes: Option[() => DataFrame], keyCols: Seq[String],
+      keysDf: DataFrame, deduped: DataFrame) extends InsertUpsertPlan
 
   private[connector] def insertUpsertBind(spark: SparkSession, path: String,
       stagedAbs: Seq[String])
@@ -5082,11 +5062,8 @@ object TokenRangeOps {
           org.apache.spark.sql.functions.lit(1)).as("_iu_n"),
           winCol.as("_iu_w"))
       val keysDf = keyAgg.select(keyCols.map(col): _*)
-      val bucketCol =
-        if (pkCols.size == 1) TokenLayout.bucketOfColumn(
-          col(pkCols.head), incoming.schema(pkCols.head).dataType)
-        else TokenLayout.bucketOfComposite(pkCols.map(col))
-      val bucketRows = keyAgg.select(bucketCol.as("tb"), col("_iu_n"))
+      val bucketRows = keyAgg
+        .select(ringOf(pkCols, incoming.schema).as("tb"), col("_iu_n"))
         .groupBy("tb")
         .agg(org.apache.spark.sql.functions.max("_iu_n").as("mx"),
           org.apache.spark.sql.functions.count(
@@ -5146,39 +5123,22 @@ object TokenRangeOps {
       }
       if (affectedRel.isEmpty && !hasDups) None
       else {
-        val liter = org.apache.spark.sql.functions.lit _
-        val ct = TokenRangeSource.ChangeTypeCol
-        val cols = incoming.schema.fieldNames.map(col).toSeq
+        // the upsert classification, vector-merged at the pin and imaged
+        // from the DEDUPED batch (a loser row never becomes visible, so
+        // it never reaches the feed)
+        val changes = () => upsertChanges(
+          readRels(spark, path, affectedRel, pinned, incoming.schema),
+          deduped, keyCols)
         // STATEMENT-SIZE fallback (r18, the mor-DML trade at the INSERT
         // path): past `dml.fallback_rows` distinct keys, complete
         // copy-on-write — see [[InsertUpsertPlan]]
-        val cow = nKeys > TokenRangeSource.recordedMorFallbackRows(path)
+        if (nKeys > TokenRangeSource.recordedMorFallbackRows(path))
+          Some(InsertUpsertCowPlan(affectedRel, pinned, Some(changes),
+            keyCols, keysDf, deduped))
+        else {
         val cdfRel =
           if (!TokenRangeSource.changeFeedEnabled(path)) None
-          else {
-            // the upsert classification (same as [[upsert]] dv-mode):
-            // stored rows whose key is re-bound are pre/post image
-            // pairs, unseen keys are inserts — vector-merged at the pin,
-            // and imaged from the DEDUPED batch (a loser row never
-            // becomes visible, so it never reaches the feed)
-            val old =
-              if (affectedRel.isEmpty)
-                spark.createDataFrame(new java.util.ArrayList[
-                  org.apache.spark.sql.Row](), incoming.schema)
-              else readFilesAligned(spark, path, affectedRel
-                .map(rel => new java.io.File(path, rel).getAbsolutePath), pinned)
-            val oldKeys = old.select(keyCols.map(col): _*).distinct()
-            val pre = old.join(keysDf, keyCols, "left_semi")
-              .select(cols: _*).withColumn(ct, liter("update_preimage"))
-            val post = deduped.join(oldKeys, keyCols, "left_semi")
-              .select(cols: _*).withColumn(ct, liter("update_postimage"))
-            val ins = deduped.join(oldKeys, keyCols, "left_anti")
-              .select(cols: _*).withColumn(ct, liter("insert"))
-            Some(writeCdfSidecar(path, pre.unionByName(post).unionByName(ins)))
-          }
-        if (cow) Some(InsertUpsertCowPlan(affectedRel, pinned, cdfRel,
-          keyCols, keysDf, deduped))
-        else {
+          else Some(writeCdfSidecar(path, changes()))
         // pre-existing generations: one KEY vector binding every
         // affected old file. SIDECAR CONVENTION: timestamp key columns
         // store as LONG µs (`unix_micros`) — the sink stores timestamps
@@ -5189,7 +5149,7 @@ object TokenRangeOps {
         val oldBind: Seq[(String, String)] =
           if (affectedRel.isEmpty) Nil
           else {
-            val dvRel = s"_dv/${java.util.UUID.randomUUID().toString.take(12)}"
+            val dvRel = newDvRel()
             keysDf.select(keyCols.map { n =>
               if (incoming.schema(n).dataType == TimestampType)
                 org.apache.spark.sql.functions.unix_micros(col(n)).as(n)
@@ -5203,7 +5163,7 @@ object TokenRangeOps {
         val stagedBind: Seq[(String, String)] =
           if (!hasDups) Nil
           else {
-            val dvRel = s"_dv/${java.util.UUID.randomUUID().toString.take(12)}"
+            val dvRel = newDvRel()
             val rows = losers.persist()
             try {
               val rels = rows.select(TokenRangeSource.FileCol).distinct()
@@ -5232,23 +5192,13 @@ object TokenRangeOps {
     * re-writes the batch's rows); its staging dir is reaped after. */
   private[connector] def insertUpsertCowRewrite(spark: SparkSession,
       path: String, plan: InsertUpsertCowPlan): Unit = {
-    val pk = TokenRangeSource.recordedPk(path)
-      .getOrElse(throw new IllegalStateException(
-        s"insert-upsert cow completion at $path requires a recorded pk"))
     val out =
       if (plan.affectedRel.isEmpty) plan.deduped
-      else readFilesAligned(spark, path,
-          plan.affectedRel.map(rel =>
-            new java.io.File(path, rel).getAbsolutePath), plan.pinned)
+      else readRels(spark, path, plan.affectedRel, plan.pinned)
         .join(plan.keysDf, plan.keyCols, "left_anti")
         .unionByName(plan.deduped)
-    out.write.format(fmt).option("pk", pk)
-      .options(TokenRangeSource.recordedCk(path).map("ck" -> _).toMap)
-      .option("opKind", "upsert")
-      .options(plan.cdfRel.map("cdfRel" -> _).toMap)
-      .options(plan.pinned.map(v => "dvSeenVersion" -> v.toString).toMap)
-      .option("replaceFiles", plan.affectedRel.mkString("\n"))
-      .mode("append").save(path)
+    flip(path, plan.pinned, Replace(out, plan.affectedRel,
+      recordedPkOf(path, "insert-upsert cow completion"), "upsert", plan.changes))
   }
 
   // ---- deletion-vector COMPACTION policy (r17, VERDICT r16 #2) ------------
@@ -5300,31 +5250,15 @@ object TokenRangeOps {
   def compactVectors(spark: SparkSession, path: String,
       threshold: Int = 1): Int = {
     require(threshold >= 1, s"compactVectors threshold must be >= 1")
-    val pk = TokenRangeSource.recordedPk(path)
-      .getOrElse(throw new IllegalStateException(
-        s"token-range vector compaction at $path requires a recorded pk"))
-    withConflictRetry("vector-compact") {
-      val pinned = TokenRangeSource.currentVersion(path)
+    val pk = recordedPkOf(path, "vector compaction")
+    rewrite(spark, path, "vector-compact") { pinned =>
       val victims = TokenRangeSource.dvBindings(path, pinned)
         .groupBy(_._1).collect {
           case (rel, bs) if bs.size >= threshold => rel
         }.toSeq.sorted
-      onSnapshotPinned()
-      if (victims.isEmpty) 0
-      else {
-        val abs = victims.map(rel => new java.io.File(path, rel).getAbsolutePath)
-        readFilesAligned(spark, path, abs, pinned)
-          .write.format(fmt).option("pk", pk)
-          // clustered tables keep their physical slab sort through the
-          // rewrite (the ck-slice prune's bite on compacted files, r18)
-          .options(TokenRangeSource.recordedCk(path).map("ck" -> _).toMap)
-          .option("opKind", "compact")
-          .options(pinned.map(v => "dvSeenVersion" -> v.toString).toMap)
-          .option("replaceFiles", victims.mkString("\n"))
-          .mode("append").save(path)
-        victims.size
-      }
-    }
+      if (victims.isEmpty) None
+      else Some(Replace(readRels(spark, path, victims, pinned), victims, pk, "compact"))
+    }.fold(0)(_.retire.size)
   }
 
   /** The post-commit vector sweep hook (the policy's WHEN): every
@@ -5386,40 +5320,20 @@ object TokenRangeOps {
   def compactFragmented(spark: SparkSession, path: String,
       threshold: Int): Int = {
     require(threshold >= 2, s"compactFragmented threshold must be >= 2")
-    val pk = TokenRangeSource.recordedPk(path)
-      .getOrElse(throw new IllegalStateException(
-        s"token-range fragmentation compaction at $path requires a recorded pk"))
-    withConflictRetry("fragment-compact") {
-      val pinned = TokenRangeSource.currentVersion(path)
-      val byBucket = TokenRangeSource.visibleRelFiles(path, pinned)
-        .groupBy(_._1)
-      val victims = byBucket.collect {
-        case (_, files) if files.size >= threshold => files.map(_._2)
-      }.flatten.toSeq.sorted
-      onSnapshotPinned()
-      if (victims.isEmpty) 0
-      else {
-        val abs = victims.map(rel => new java.io.File(path, rel).getAbsolutePath)
-        val t = readFilesAligned(spark, path, abs, pinned)
-        // route each hot bucket's rows to ONE task → one output file per
-        // bucket (the same ring repartition [[compact]] folds by) — a
-        // straight rewrite would re-emit one file per input partition and
-        // never reduce the count it exists to reduce
-        val pks = pk.split(',').map(_.trim).toSeq
-        val bucketExpr =
-          if (pks.size == 1) TokenLayout.bucketOfColumn(
-            col(pks.head), t.schema(pks.head).dataType)
-          else TokenLayout.bucketOfComposite(pks.map(col))
-        t.repartition(TokenLayout.Buckets, bucketExpr)
-          .write.format(fmt).option("pk", pk)
-          .options(TokenRangeSource.recordedCk(path).map("ck" -> _).toMap)
-          .option("opKind", "compact")
-          .options(pinned.map(v => "dvSeenVersion" -> v.toString).toMap)
-          .option("replaceFiles", victims.mkString("\n"))
-          .mode("append").save(path)
-        byBucket.count(_._2.size >= threshold)
-      }
-    }
+    val pk = recordedPkOf(path, "fragmentation compaction")
+    rewrite(spark, path, "fragment-compact") { pinned =>
+      val victims = TokenRangeSource.visibleRelFiles(path, pinned)
+        .groupBy(_._1).collect {
+          case (_, files) if files.size >= threshold => files.map(_._2)
+        }.flatten.toSeq.sorted
+      // each hot bucket's rows route to ONE task → one output file per
+      // bucket (the ring repartition [[compact]] folds by) — a straight
+      // rewrite would re-emit one file per input partition and never
+      // reduce the count it exists to reduce
+      if (victims.isEmpty) None
+      else Some(Replace(readRels(spark, path, victims, pinned), victims, pk,
+        "compact", repartition = true))
+    }.fold(0)(_.retire.map(TokenRangeSource.bucketOfRel).distinct.size)
   }
 
   /** The post-append fragmentation sweep hook — best-effort, opt-in
@@ -5477,10 +5391,6 @@ object TokenRangeOps {
     require(mode != "dv" || TokenRangeSource.recordedPk(path).isDefined,
       s"token-range upsert mode=dv at $path requires a recorded pk " +
         "(readers resolve the vector merge key through it)")
-    TokenRangeSource.withCommitLock(path) {
-      if (TokenRangeSource.currentVersion(path).isEmpty)
-        TokenRangeSource.publishManifest(path, Nil, truncate = false)
-    }
     // single OR composite key (r13): the bucket expression and the
     // replace-by-key anti-join both generalize column-for-column — a
     // composite upsert replaces at TUPLE grain, exactly CQL's
@@ -5519,102 +5429,33 @@ object TokenRangeOps {
           col(f.name).cast(f.dataType)).toSeq: _*)
       case None => incoming // fresh/empty table: incoming defines the schema
     }
-    val bucketCol =
-      if (pks.size == 1)
-        TokenLayout.bucketOfColumn(col(pk), aligned.schema(pk).dataType)
-      else TokenLayout.bucketOfComposite(pks.map(col))
     // owning buckets of the incoming keys: a ≤ Buckets-row distinct
     // aggregate (bounded by the ring width, never by data volume)
-    val buckets = aligned
-      .select(bucketCol.as("tb"))
+    val buckets = aligned.select(ringOf(pks, aligned.schema).as("tb"))
       .distinct().collect().map(_.getInt(0)).toSet
-    withConflictRetry("upsert") {
-      val pinned = TokenRangeSource.currentVersion(path)
+    rewrite(spark, path, "upsert") { pinned =>
       val affectedRel = TokenRangeSource.visibleRelFiles(path, pinned)
         .collect { case (k, rel) if buckets(k) => rel }
-      onSnapshotPinned()
-      val cols = aligned.schema.fieldNames.map(col)
-      val ct = TokenRangeSource.ChangeTypeCol
-      val liter = org.apache.spark.sql.functions.lit _
-      if (mode == "dv" && affectedRel.nonEmpty) {
+      lazy val old = readRels(spark, path, affectedRel, pinned, aligned.schema)
+      val changes = Some(() => upsertChanges(old, aligned, pks))
+      if (mode == "dv" && affectedRel.nonEmpty)
         // MERGE-ON-READ upsert: the incoming rows APPEND, and a deletion
         // vector bound to the pre-existing owning-bucket files suppresses
         // the replaced keys' old rows in the same flip — Cassandra's
         // actual write path (blind write, newest wins, older generations
         // tombstoned at read, purged at compaction). Without the change
-        // feed NO existing data is read at all; with it, one pass over
-        // the affected files records the pre/post images, same trade as
-        // copy-on-write.
-        val cdfRel =
-          if (!TokenRangeSource.changeFeedEnabled(path)) None
-          else {
-            val old = readFilesAligned(spark, path, affectedRel
-              .map(rel => new java.io.File(path, rel).getAbsolutePath), pinned)
-            val inKeys = aligned.select(pks.map(col): _*).distinct()
-            val oldKeys = old.select(pks.map(col): _*).distinct()
-            val pre = old.join(inKeys, pks, "left_semi")
-              .select(cols.toSeq: _*).withColumn(ct, liter("update_preimage"))
-            val post = aligned.join(oldKeys, pks, "left_semi")
-              .select(cols.toSeq: _*).withColumn(ct, liter("update_postimage"))
-            val ins = aligned.join(oldKeys, pks, "left_anti")
-              .select(cols.toSeq: _*).withColumn(ct, liter("insert"))
-            Some(writeCdfSidecar(path, pre.unionByName(post).unionByName(ins)))
-          }
-        val dvRel = s"_dv/${java.util.UUID.randomUUID().toString.take(12)}"
-        aligned.select(pks.map(col): _*).distinct().coalesce(1)
-          .write.mode("error")
-          .parquet(new java.io.File(path, dvRel).getAbsolutePath)
-        aligned.select(cols.toSeq: _*).write.format(fmt)
-          .option("pk", pk)
-          .option("opKind", "upsert")
-          .options(cdfRel.map("cdfRel" -> _).toMap)
-          .option("dvBind",
-            affectedRel.map(rel => s"$rel $dvRel").mkString("\n"))
-          .options(pinned.map(v => "dvSeenVersion" -> v.toString).toMap)
-          .mode("append").save(path)
-      } else {
-      val (merged, cdfRel) =
-        if (affectedRel.isEmpty) {
-          // no stored rows in the owning buckets: every incoming is new
-          val rel =
-            if (TokenRangeSource.changeFeedEnabled(path))
-              Some(writeCdfSidecar(path, aligned.select(cols: _*)
-                .withColumn(ct, liter("insert"))))
-            else None
-          (aligned.select(cols: _*), rel)
-        } else {
-          val old = readFilesAligned(spark, path, affectedRel
-            .map(rel => new java.io.File(path, rel).getAbsolutePath), pinned)
-          val inKeys = aligned.select(pks.map(col): _*).distinct()
-          val rel =
-            if (TokenRangeSource.changeFeedEnabled(path)) {
-              // the CQL/Delta change classification: stored rows whose
-              // key is re-bound are pre/post image pairs, unseen keys
-              // are inserts — computed from the SAME pinned snapshot
-              // the rewrite replaces
-              val oldKeys = old.select(pks.map(col): _*).distinct()
-              val pre = old.join(inKeys, pks, "left_semi")
-                .select(cols: _*).withColumn(ct, liter("update_preimage"))
-              val post = aligned.join(oldKeys, pks, "left_semi")
-                .select(cols: _*).withColumn(ct, liter("update_postimage"))
-              val ins = aligned.join(oldKeys, pks, "left_anti")
-                .select(cols: _*).withColumn(ct, liter("insert"))
-              Some(writeCdfSidecar(path, pre.unionByName(post).unionByName(ins)))
-            } else None
-          (old.join(inKeys, pks, "left_anti")
-            .select(cols: _*)
-            .unionByName(aligned.select(cols: _*)), rel)
-        }
-      merged.write.format(fmt)
-        .option("pk", pk)
-        .option("opKind", "upsert")
-        .options(cdfRel.map("cdfRel" -> _).toMap)
-        .options(pinned.map(v => "dvSeenVersion" -> v.toString).toMap)
-        .option("replaceFiles", affectedRel.mkString("\n"))
-        .mode("append").save(path)
+        // feed NO existing data is read at all.
+        Some(Bind(aligned.select(pks.map(col): _*).distinct(), affectedRel,
+          "upsert", changes, append = Some(aligned -> pk)))
+      else {
+        // no stored rows in the owning buckets: every incoming is new
+        val merged =
+          if (affectedRel.isEmpty) aligned
+          else old.join(aligned.select(pks.map(col): _*).distinct(), pks, "left_anti")
+            .select(aligned.columns.map(col).toSeq: _*).unionByName(aligned)
+        Some(Replace(merged, affectedRel, pk, "upsert", changes))
       }
     }
-    if (mode == "dv") vectorSweep(spark, path)
   }
 
   /** TTL expiry (CQL's `USING TTL` read-time semantics made physical —
@@ -5636,114 +5477,32 @@ object TokenRangeOps {
     require(Set("auto", "cow", "dv")(mode),
       s"token-range expire mode must be auto|cow|dv, got '$mode'")
     requirePkMatches(path, pk, "expire") // composite ok: pk just passes through to the sink
-    TokenRangeSource.withCommitLock(path) {
-      if (TokenRangeSource.currentVersion(path).isEmpty)
-        TokenRangeSource.publishManifest(path, Nil, truncate = false)
-    }
-    withConflictRetry("expire") {
-    val pinned = TokenRangeSource.currentVersion(path)
-    val files = TokenRangeSource.visibleRelFiles(path, pinned).map(_._2)
-    onSnapshotPinned()
-    // per-file (min, max, nNulls) of the ts column, or None when any row
-    // group lacks usable stats (→ straddle conservatively). NULL-ts rows
-    // NEVER expire (CQL: no writetime → no TTL), and parquet min/max
-    // ignore nulls — so a file is only wholly-expired if its stats also
-    // prove it holds NO null (r11 review: the first cut dropped null rows
-    // unread when their file's non-null max fell under the cutoff).
-    sealed trait Cls
-    case object Retire extends Cls; case object Keep extends Cls
-    case object Straddle extends Cls
-    def classify(rel: String): Cls = {
-      val abs = new java.io.File(path, rel).getAbsolutePath
-      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(abs), new Configuration()))
-      try {
-        val blocks = rd.getFooter.getBlocks.asScala
-        if (blocks.isEmpty) return Retire // zero row groups: no rows to keep
-        // shared extractor (r15): an all-null row group reports the empty
-        // interval — expires nothing, straddles nothing, nulls counted
-        val stats = blocks.flatMap(b => TokenRangeSource.footerLongStats(b, tsCol))
-        if (stats.size != blocks.size) return Straddle // stats gap: be safe
-        val mn = stats.map(_._1).min; val mx = stats.map(_._2).max
-        val nulls = stats.map(_._3).sum
-        if (mx <= cutoffMicros && nulls == 0) Retire
-        else if (mn > cutoffMicros) Keep // null rows survive with it
-        else Straddle
-      } finally rd.close()
-    }
-    val classed = files.map(rel => rel -> classify(rel))
-    val retired = classed.collect { case (rel, Retire) => rel }
-    val straddling = classed.collect { case (rel, Straddle) => rel }
-    val tsc = col(tsCol)
     val cutoffTs = org.apache.spark.sql.functions
       .timestamp_micros(org.apache.spark.sql.functions.lit(cutoffMicros))
-    // CHANGE DATA FEED: expired rows = non-null ts at/below the cutoff
-    // over (retired ∪ straddling) — retired files are provably all-expired
-    // (zero nulls), so the shared filter is exact for both classes
-    def cdfRel(): Option[String] =
-      if (!TokenRangeSource.changeFeedEnabled(path)) None
-      else Some(writeCdfSidecar(path,
-        readFilesAligned(spark, path, (retired ++ straddling)
-          .map(rel => new java.io.File(path, rel).getAbsolutePath), pinned)
-          .filter(tsc.isNotNull && tsc <= cutoffTs)
-          .withColumn(TokenRangeSource.ChangeTypeCol,
-            org.apache.spark.sql.functions.lit("delete"))))
-    if (retired.isEmpty && straddling.isEmpty) () // nothing expired
-    else if (straddling.isEmpty) {
-      // metadata-only expiry: every affected file dies wholesale
-      val cdf = cdfRel()
-      TokenRangeSource.withCommitLock(path) {
-        TokenRangeSource.publishManifest(path, Nil, truncate = false,
-          removeRel = retired.toSet, opKind = "expire", cdfRel = cdf,
-          dvSeenVersion = pinned)
+    rewrite(spark, path, "expire") { pinned =>
+      // per-file (min, max, nNulls) of the ts column; a row group without
+      // usable stats straddles conservatively. NULL-ts rows NEVER expire
+      // (CQL: no writetime → no TTL), and parquet min/max ignore nulls —
+      // so a file is only wholly-expired if its stats also prove it holds
+      // NO null (r11 review: the first cut dropped null rows unread when
+      // their file's non-null max fell under the cutoff). An all-null row
+      // group reports the empty interval (shared extractor, r15).
+      val (retired, straddling) = footerFates(path,
+          TokenRangeSource.visibleRelFiles(path, pinned).map(_._2)) { blocks =>
+        val stats = blocks.flatMap(b => TokenRangeSource.footerLongStats(b, tsCol))
+        if (stats.size != blocks.size) SplitFile // stats gap: be safe
+        else if (stats.map(_._2).max <= cutoffMicros && stats.map(_._3).sum == 0)
+          RetireFile
+        else if (stats.map(_._1).min > cutoffMicros) KeepFile // null rows survive with it
+        else SplitFile
       }
-    } else if (mode == "dv") {
-      // MERGE-ON-READ TTL (r17, completing the vector trilogy beside
-      // point deletes and range tombstones): wholly-expired files still
-      // retire wholesale (metadata-only), BOUNDARY files — the ones
-      // straddling the cutoff, typically one per time-slab seam — get a
-      // POSITION vector of exactly their expired rows; live rows are
-      // never rewritten. Exactly Cassandra's expired-cell semantics:
-      // merged out at read, purged at compaction.
-      val cdf = cdfRel()
-      val straddAbs =
-        straddling.map(rel => new java.io.File(path, rel).getAbsolutePath)
-      val lin = dvMergeLineaged(spark, path,
-        withFileLineage(spark, straddAbs), straddAbs, pinned)
-      val ltc = col(lin.schema.fields
-        .find(_.name.equalsIgnoreCase(tsCol)).map(_.name).getOrElse(tsCol))
-      val tombs = lin.filter(ltc.isNotNull && ltc <= cutoffTs)
-        .select(col(DvRelLin).as(TokenRangeSource.FileCol),
-          col(DvPosLin).cast("long").as(TokenRangeSource.PosCol))
-      val dvRel = s"_dv/${java.util.UUID.randomUUID().toString.take(12)}"
-      tombs.coalesce(1).write.mode("error")
-        .parquet(new java.io.File(path, dvRel).getAbsolutePath)
-      TokenRangeSource.withCommitLock(path) {
-        TokenRangeSource.publishManifest(path, Nil, truncate = false,
-          removeRel = retired.toSet, opKind = "expire", cdfRel = cdf,
-          dvBind = straddling.map(_ -> dvRel),
-          dvSeenVersion = pinned)
-      }
-      ()
-    } else {
-      // survivors of the straddling files only (null ts survives — CQL
-      // rows without a writetime never expire); wholly-expired files ride
-      // the same flip via replaceFiles without ever being read
-      val cdf = cdfRel()
-      val survivors = readFilesAligned(spark, path,
-          straddling.map(rel => new java.io.File(path, rel).getAbsolutePath),
-          pinned)
-        .filter(tsc.isNull || tsc > cutoffTs)
-      survivors.write.format(fmt)
-        .option("pk", pk)
-        .option("opKind", "expire")
-        .options(cdf.map("cdfRel" -> _).toMap)
-        .options(pinned.map(v => "dvSeenVersion" -> v.toString).toMap)
-        .option("replaceFiles", (retired ++ straddling).mkString("\n"))
-        .mode("append").save(path)
+      // wholly-expired files retire unread, boundary files lose exactly
+      // their expired rows (MERGE-ON-READ TTL in dv mode, r17: a position
+      // vector, live rows never rewritten — Cassandra's expired-cell
+      // semantics); null ts survives (rows without a writetime never expire)
+      sliceFlip(spark, path, pk, pinned, retired, straddling, mode == "dv",
+        "expire", c => c(tsCol).isNotNull && c(tsCol) <= cutoffTs)
     }
-    } // withConflictRetry("expire")
-    if (mode == "dv") vectorSweep(spark, path)
   }
 
   /** Maintenance sweep: delete data files referenced by NO manifest at
@@ -5908,7 +5667,7 @@ object TokenRangeOps {
     * keys (no join fan-out; `exceptAll` is bag semantics) and
     * fold-equivalent to pre/post images for every delta consumer.
     * Called by the sink's commit BEFORE the manifest flip. */
-  /** CDF sidecar for a MERGE-ON-READ SQL statement: `tombs` is the
+  /** Change rows for a MERGE-ON-READ SQL statement: `tombs` is the
     * position tombstone frame (`_file` rel + `_pos` — the vector's
     * content), `touchedRel` the files that held the removed rows at the
     * pin; pre-images read vector-merged from exactly those files (the
@@ -5917,16 +5676,14 @@ object TokenRangeOps {
     * every other op records. Pairing identity is the FULL primary key
     * (pk + ck — on clustered tables the pk alone is not the row);
     * tables with no recorded pk keep the delete+insert encoding. */
-  private[connector] def stageDeltaDmlSidecar(spark: SparkSession,
+  private[connector] def deltaDmlChanges(spark: SparkSession,
       path: String, pinned: Option[Int], touchedRel: Seq[String],
-      stagedAbs: Seq[String],
-      tombs: org.apache.spark.sql.DataFrame): String = {
+      stagedAbs: Seq[String], tombs: DataFrame): DataFrame = {
     val liter = org.apache.spark.sql.functions.lit _
     val ct = TokenRangeSource.ChangeTypeCol
     val pre =
       if (touchedRel.isEmpty) None
-      else Some(readTouchedVsTombs(spark, path,
-        touchedRel.map(rel => new java.io.File(path, rel).getAbsolutePath),
+      else Some(readTouchedVsTombs(spark, path, absOf(path, touchedRel),
         pinned, tombs, keep = true))
     val nw =
       if (stagedAbs.isEmpty) None
@@ -5939,7 +5696,7 @@ object TokenRangeOps {
       val sch = pre.orElse(nw).map(_.schema.fields).getOrElse(Array.empty)
       names.flatMap(n => sch.find(_.name.equalsIgnoreCase(n)).map(_.name))
     }
-    val changes = (pre, nw) match {
+    (pre, nw) match {
       case (Some(o), Some(n)) if idCols.nonEmpty =>
         val updKeys = o.select(idCols.map(col): _*).distinct()
           .join(n.select(idCols.map(col): _*).distinct(), idCols, "inner")
@@ -5959,7 +5716,6 @@ object TokenRangeOps {
       case (None, None) =>
         throw new IllegalStateException("empty delta commit records no feed")
     }
-    writeCdfSidecar(path, changes)
   }
 
   private[connector] def stageSqlDmlSidecar(spark: SparkSession,
@@ -6007,8 +5763,8 @@ object TokenRangeOps {
     writeCdfSidecar(path, changes)
   }
 
-  private def writeCdfSidecar(path: String,
-      changes: org.apache.spark.sql.DataFrame): String = {
+  private[connector] def writeCdfSidecar(path: String,
+      changes: DataFrame): String = {
     val rel = s"_cdf/${java.util.UUID.randomUUID().toString.take(12)}"
     // timestamps as raw INT64 µs — the sink's own physical encoding, so
     // the connector reader's TimestampType branch (getLong) reads the

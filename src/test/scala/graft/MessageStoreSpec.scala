@@ -274,6 +274,33 @@ class MessageStoreSpec extends SparkSpec {
     ms.dropKeyspace()
   }
 
+  test("compactUsers after a vector-mode deleteKeys on users applies the vector and retires its binding") {
+    // compactUsers retires every users file; it must declare the version
+    // it read, or the deletion vector bound to those files looks like a
+    // racing delete and every retry conflicts
+    import graft.sources.connector.TokenRangeOps
+    val ks2 = s"ks_dvc_${System.nanoTime()}"
+    val ms = new graft.sources.MessageStore(spark, ks2)
+    ms.createKeyspace(); ms.createTables()
+    try {
+      ms.insertUsers(Seq(("u1", "alice", "alice@a.io", "pw1"),
+        ("u2", "bob", "bob@b.io", "pw2")))
+      val dir = ms.tablePath("users")
+      TokenRangeOps.deleteKeys(spark, dir, "username", Seq("alice"), mode = "dv")
+      assert(TokenRangeOps.deletionVectors(dir).nonEmpty,
+        "the delete must bind a vector, not rewrite")
+      ms.compactUsers()
+      assert(ms.user("alice").count() == 0, "the deleted user stays deleted")
+      assert(ms.listUsers().collect().map(_.getAs[String]("username")).toSeq == Seq("bob"))
+      assert(TokenRangeOps.deletionVectors(dir).isEmpty,
+        "the binding dies with the files the compaction retired")
+      assert(TokenRangeOps.liveFiles(dir).forall { rel =>
+        spark.read.parquet(new java.io.File(dir, rel).getAbsolutePath)
+          .filter(org.apache.spark.sql.functions.col("username") === "alice").count() == 0
+      }, "the compaction applied the vector physically")
+    } finally ms.dropKeyspace()
+  }
+
   test("tailMessages: the poll-the-partition pattern as a stream — resume drains only new inserts (r15)") {
     val ks2 = s"ks_tail_${System.nanoTime()}"
     val ms = new MessageStore(spark, ks2)
