@@ -4003,7 +4003,7 @@ object TokenRangeOps {
   /** A conflict surfaces from a Spark write wrapped in SparkException
     * layers — walk the cause chain. */
   @annotation.tailrec
-  private[connector] def isConflict(t: Throwable): Boolean = t match {
+  private def isConflict(t: Throwable): Boolean = t match {
     case null => false
     case _: ManifestConflictException => true
     case other => isConflict(other.getCause)
