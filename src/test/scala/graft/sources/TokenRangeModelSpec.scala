@@ -211,12 +211,18 @@ class TokenRangeModelSpec extends SparkSpec {
         Option(r.getString(3)))))
 
   private val modes = Gen.oneOf("cow", "dv")
-  private val pkGen = Gen.choose(0L, 11L)
+  private val pkGen = Gen.choose(0L, 7L)
+
+  // ck and ts values, range bounds and TTL cutoffs share one coarse grid,
+  // so drawn bounds land exactly on stored values (the inclusive and
+  // exclusive edges get exercised)
+  private def grid(max: Long, step: Long): Gen[Long] =
+    Gen.choose(0L, max / step).map(_ * step)
 
   private def cRowGen(tag: String): Gen[CRow] = for {
     pk <- pkGen
-    ck <- Gen.choose(0L, 99L)
-    ts <- Gen.frequency(9 -> Gen.choose(0L, 9999L).map(Option(_)),
+    ck <- grid(90L, 10L)
+    ts <- Gen.frequency(9 -> grid(9500L, 500L).map(Option(_)),
       1 -> Gen.const(Option.empty[Long]))
   } yield (pk, Some(ck), ts, Some(tag))
 
@@ -225,22 +231,22 @@ class TokenRangeModelSpec extends SparkSpec {
       .map(rows => Append(rows.zipWithIndex.map { case (r, j) =>
         r.copy(_4 = Some(s"a$i.$j")) })),
     2 -> (for {
-      keys <- Gen.choose(1, 3).flatMap(n => Gen.pick(n, 0L to 11L))
+      keys <- Gen.choose(1, 3).flatMap(n => Gen.pick(n, 0L to 7L))
       rows <- Gen.sequence[List[CRow], CRow](keys.toList.map(k =>
         cRowGen(s"u$i.$k").map(_.copy(_1 = k))))
       mode <- modes
     } yield Upsert(rows, mode)),
-    1 -> Gen.choose(1, 3).flatMap(n => Gen.pick(n, 0L to 11L))
+    1 -> Gen.choose(1, 3).flatMap(n => Gen.pick(n, 0L to 7L))
       .map(keys => UpsertCells(keys.toSeq.map(k => (k, s"c$i.$k")))),
     2 -> (for {
-      keys <- Gen.choose(1, 2).flatMap(n => Gen.pick(n, 0L to 11L))
+      keys <- Gen.choose(1, 2).flatMap(n => Gen.pick(n, 0L to 7L))
       mode <- modes
     } yield DeleteKeys(keys.toSeq, mode)),
-    2 -> (for {
-      key <- pkGen; lo <- Gen.choose(0L, 90L); len <- Gen.choose(0L, 60L)
+    3 -> (for {
+      key <- pkGen; lo <- grid(80L, 10L); len <- grid(50L, 10L)
       mode <- modes
     } yield DeleteCkRange(key, lo, lo + len, mode)),
-    1 -> (for { c <- Gen.choose(0L, 2500L); mode <- modes } yield Expire(c, mode)),
+    1 -> (for { c <- grid(3000L, 500L); mode <- modes } yield Expire(c, mode)),
     1 -> Gen.oneOf(None, Some(2L)).map(Compact(_)),
     1 -> Gen.const(CompactVectors),
     1 -> Gen.const(CompactFragmented))
