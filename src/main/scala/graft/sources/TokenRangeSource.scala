@@ -4118,8 +4118,9 @@ object TokenRangeOps {
   private[sources] def rewrite(spark: SparkSession, path: String,
       what: String)(plan: Option[Int] => Option[Flip]): Option[Flip] = {
     // from here on everything is manifest-resolved and the rewrite is
-    // invisible until its flip
-    if (TokenRangeSource.currentVersion(path).isEmpty)
+    // invisible until its flip; a table that does not exist yet has no
+    // listing to pin (and a rewrite of it must not create it)
+    if (TokenRangeSource.currentVersion(path).isEmpty && new java.io.File(path).exists)
       TokenRangeSource.withCommitLock(path)(TokenRangeSource.pinLegacyListing(path))
     val done = withConflictRetry(what) {
       val pinned = TokenRangeSource.currentVersion(path)
@@ -5448,9 +5449,8 @@ object TokenRangeOps {
         Some(Bind(aligned.select(pks.map(col): _*).distinct(), affectedRel,
           "upsert", changes, append = Some(aligned -> pk)))
       else {
-        // no stored rows in the owning buckets: every incoming is new
         val merged =
-          if (affectedRel.isEmpty) aligned
+          if (affectedRel.isEmpty) aligned // no stored rows in the owning buckets
           else old.join(aligned.select(pks.map(col): _*).distinct(), pks, "left_anti")
             .select(aligned.columns.map(col).toSeq: _*).unionByName(aligned)
         Some(Replace(merged, affectedRel, pk, "upsert", changes))
