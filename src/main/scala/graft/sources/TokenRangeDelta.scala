@@ -262,7 +262,7 @@ private[connector] final class TokenRangeDeltaWriter(path: String,
       dir.mkdirs()
       tombFile = new java.io.File(dir,
         s"tomb-$partitionId-$taskId-$writeId.parquet").getAbsolutePath
-      val conf = new org.apache.hadoop.conf.Configuration()
+      val conf = new org.apache.hadoop.conf.Configuration(TokenRangeSource.hadoopConf)
       org.apache.parquet.hadoop.example.GroupWriteSupport
         .setSchema(tombSchema, conf)
       tombWriter = org.apache.parquet.hadoop.example.ExampleParquetWriter

@@ -5,10 +5,12 @@ import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.io.{ColumnIOFactory, RecordReader}
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types => PTypes}
 import org.apache.parquet.schema.LogicalTypeAnnotation.{DecimalLogicalTypeAnnotation, StringLogicalTypeAnnotation, TimestampLogicalTypeAnnotation}
@@ -347,14 +349,12 @@ object TokenRangeSource {
       val abs0 = f.getAbsolutePath
       val (nRows, pkMm, ckMm) = censusFooterCache.computeIfAbsent(
         s"$abs0|${f.length}|${f.lastModified}", { _ =>
-          val fr = ParquetFileReader.open(HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(abs0), new Configuration()))
-          try {
+          withParquet(abs0) { fr =>
             val blocks = fr.getFooter.getBlocks.asScala.toSeq
             (blocks.map(_.getRowCount).sum,
               pkCol.map(colStats(blocks, _)).getOrElse((None, None)),
               ckCol.map(colStats(blocks, _)).getOrElse((None, None)))
-          } finally fr.close()
+          }
         })
       FileCensusRow(bucket, rel, nRows, f.length(),
         pkMm._1, pkMm._2, ckMm._1, ckMm._2,
@@ -1514,10 +1514,39 @@ object TokenRangeSource {
     base.map(b => applyEdits(b, pinnedEdits))
   }
 
-  private[connector] def inferFromFile(file: String): StructType = {
-    val rd = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(file), new Configuration()))
-    try toSpark(rd.getFileMetaData.getSchema) finally rd.close()
+  private[connector] def inferFromFile(file: String): StructType =
+    withParquet(file)(rd => toSpark(rd.getFileMetaData.getSchema))
+
+  // ---- parquet file access -----------------------------------------------
+
+  /** The connector's one parsed Hadoop configuration per JVM: parsing one
+    * re-reads the default resources (5-11 ms), a cost that must stay out
+    * of every file open. Nothing mutates it: writers that set keys take a
+    * copy (`new Configuration(hadoopConf)`). */
+  private[connector] lazy val hadoopConf: Configuration = new Configuration()
+
+  /** Test seams: parquet files opened and closed through [[openParquet]]. */
+  private[graft] val parquetOpens = new java.util.concurrent.atomic.AtomicLong(0)
+  private[graft] val parquetCloses = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Opens `file` and reads its footer: the connector's only parquet open.
+    * The read options are built per reader from the shared configuration
+    * (closing a reader releases its options' codec factory, so they are
+    * never shared). */
+  private[connector] def openParquet(file: String): ParquetFileReader = {
+    val p = new org.apache.hadoop.fs.Path(file)
+    val rd = new ParquetFileReader(HadoopInputFile.fromPath(p, hadoopConf),
+        HadoopReadOptions.builder(hadoopConf, p).build()) {
+      override def close(): Unit =
+        try super.close() finally parquetCloses.incrementAndGet()
+    }
+    parquetOpens.incrementAndGet()
+    rd
+  }
+
+  private[connector] def withParquet[A](file: String)(f: ParquetFileReader => A): A = {
+    val rd = openParquet(file)
+    try f(rd) finally rd.close()
   }
 
   /** ONE footer-stats extractor for every stats-driven classifier (r15
@@ -1588,17 +1617,16 @@ object TokenRangeSource {
     val hit = bloomCache.get(key)
     if (hit != null) return hit
     bloomFooterReads.incrementAndGet()
-    val rd = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(abs), new Configuration()))
-    val out =
-      try rd.getFooter.getBlocks.asScala.toSeq.map { b =>
+    val out = withParquet(abs) { rd =>
+      rd.getFooter.getBlocks.asScala.toSeq.map { b =>
         b.getColumns.asScala
           .find(_.getPath.toDotString.equalsIgnoreCase(colName))
           .flatMap { c =>
             try Option(rd.getBloomFilterDataReader(b).readBloomFilter(c))
             catch { case _: Exception => None }
           }
-      } finally rd.close()
+      }
+    }
     if (bloomCache.size > 4096) bloomCache.clear()
     bloomCache.put(key, out)
     out
@@ -1668,10 +1696,8 @@ object TokenRangeSource {
     val hit = dictCache.get(key)
     if (hit != null) return hit
     bloomFooterReads.incrementAndGet()
-    val rd = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(abs), new Configuration()))
     val out: Seq[Option[Set[Any]]] =
-      try {
+      withParquet(abs) { rd =>
         val fileSchema = rd.getFooter.getFileMetaData.getSchema
         rd.getFooter.getBlocks.asScala.toSeq.map { b =>
           b.getColumns.asScala
@@ -1702,7 +1728,7 @@ object TokenRangeSource {
               } catch { case _: Exception => None }
             }
         }
-      } finally rd.close()
+      }
     if (dictCache.size > 4096) dictCache.clear()
     dictCache.put(key, out)
     out
@@ -1712,14 +1738,13 @@ object TokenRangeSource {
       abs: String): Seq[Map[String, (Long, Long, Long)]] = {
     val hit = fileStatsCache.get(abs)
     if (hit != null) return hit
-    val rd = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(abs), new Configuration()))
-    val out =
-      try rd.getFooter.getBlocks.asScala.toSeq.map { b =>
+    val out = withParquet(abs) { rd =>
+      rd.getFooter.getBlocks.asScala.toSeq.map { b =>
         b.getColumns.asScala.flatMap(c =>
           columnLongStats(c).map(c.getPath.toDotString.toLowerCase -> _))
           .toMap
-      } finally rd.close()
+      }
+    }
     if (fileStatsCache.size > 65536) fileStatsCache.clear()
     fileStatsCache.put(abs, out)
     out
@@ -2921,7 +2946,9 @@ private[connector] final class TokenRangeReader(files: Array[String],
     extends PartitionReader[InternalRow] {
 
   private var fileIdx = 0
-  private var reader: ParquetReader[Group] = _
+  // the file being read: opened once, its rows pulled off the same open
+  private var reader: ParquetFileReader = _
+  private var rows: GroupRows = _
   private var current: Group = _
   // ---- DELETION-VECTOR merge (merge-on-read) ------------------------------
   // each data file's bound vectors resolve to deleted-key GROUPS (KEY
@@ -2934,35 +2961,35 @@ private[connector] final class TokenRangeReader(files: Array[String],
   // schema (`_pos` present = position grain; else the subset of the
   // pk/ck key universe the sidecar carries).
   private val anyDv = dvFiles.nonEmpty && dvFiles.exists(_.nonEmpty)
-  // vector parquet → its (key fields, normalized key set) / per-file
-  // ordinal sets, loaded once per reader (the same vector commonly
-  // binds many files of one bucket)
-  private val dvKeyCache = scala.collection.mutable.Map
-    .empty[String, (Seq[(String, DataType)], Set[Any])]
-  private val dvPosCache =
-    scala.collection.mutable.Map.empty[String, Map[String, Set[Long]]]
-  private val dvGrainPos = scala.collection.mutable.Map.empty[String, Boolean]
+  // a KEY-grain vector: (key fields, normalized key set)
+  private type KeyDv = (Seq[(String, DataType)], Set[Any])
+  // vector parquet → Left(KeyDv) for key grain, Right(per-file ordinal
+  // sets) for position grain; each sidecar is opened once per reader (the
+  // same vector commonly binds many files of one bucket)
+  private type Dv = Either[KeyDv, Map[String, Set[Long]]]
+  private val dvCache = scala.collection.mutable.Map.empty[String, Dv]
   // the current file's key-grain vectors, grouped by key tuple (one
   // group in practice; a file bound by pk-grain AND tuple-grain vectors
   // gets two) — a row is suppressed when ANY group holds its tuple
-  private var currentDvKeyGroups
-      : Array[(Seq[(String, DataType)], Set[Any])] = Array.empty
+  private var currentDvKeyGroups: Array[KeyDv] = Array.empty
   private var currentDvPos: Set[Long] = Set.empty
   // physical ordinal of `current` within its file — counts EVERY stored
-  // row (suppressed ones included): the ordinal is a property of the
-  // immutable file, which is what makes position vectors stable
+  // row (suppressed ones included) across all its row groups: the
+  // ordinal is a property of the immutable file, which is what makes
+  // position vectors stable
   private var rowOrdinal: Long = -1L
   private def normKey(v: Any): Any = v match {
     case i: java.lang.Integer => i.longValue
     case other => other
   }
-  private def isPosGrain(file: String): Boolean =
-    dvGrainPos.getOrElseUpdate(file, {
-      val p = new org.apache.hadoop.fs.Path(file)
-      val fr = ParquetFileReader.open(HadoopInputFile.fromPath(p, new Configuration()))
-      val fileSchema = try fr.getFileMetaData.getSchema finally fr.close()
-      fileSchema.getFields.asScala.exists(
-        _.getName.equalsIgnoreCase(TokenRangeSource.PosCol))
+  private def loadVector(file: String): Dv =
+    dvCache.getOrElseUpdate(file, TokenRangeSource.withParquet(file) { rd =>
+      val schema = rd.getFooter.getFileMetaData.getSchema
+      val names = schema.getFields.asScala.map(_.getName).toSeq
+      val rows = new GroupRows(rd, schema)
+      if (names.exists(_.equalsIgnoreCase(TokenRangeSource.PosCol)))
+        Right(loadDvPos(file, names, rows))
+      else Left(loadDv(file, names, rows))
     })
   /** Read one KEY-grain deletion-vector parquet (tiny) into its
     * (key fields, normalized key set): the sidecar's own columns —
@@ -2970,14 +2997,9 @@ private[connector] final class TokenRangeReader(files: Array[String],
     * (pk-only sidecars delete whole partitions, pk+ck sidecars the
     * clustered insert-upsert's exact rows). Single-col keys as the
     * value, composite as a List of component values. */
-  private def loadDv(file: String): (Seq[(String, DataType)], Set[Any]) =
-    dvKeyCache.getOrElseUpdate(file, {
+  private def loadDv(file: String, names: Seq[String], rows: GroupRows): KeyDv = {
     require(pkFields.nonEmpty,
       "key-grain deletion-vector-bound files require the table's recorded pk")
-    val p = new org.apache.hadoop.fs.Path(file)
-    val fr = ParquetFileReader.open(HadoopInputFile.fromPath(p, new Configuration()))
-    val fileSchema = try fr.getFileMetaData.getSchema finally fr.close()
-    val names = fileSchema.getFields.asScala.map(_.getName)
     // the vector is written from the table-aligned frame, but match the
     // key names case-insensitively like every other read surface; every
     // PK column must be present (a partial-pk sidecar has no defined
@@ -2990,64 +3012,55 @@ private[connector] final class TokenRangeReader(files: Array[String],
           s"deletion vector $file lacks pk column '$n'")
         fn.map((_, dt))
     }
-    val rd = ParquetReader.builder(new GroupReadSupport(), p).build()
     val keys = Set.newBuilder[Any]
-    try {
-      var g = rd.read()
-      while (g != null) {
-        val vs = resolved.map { case (fn, dt) =>
-          // a null component can only appear on malformed sidecars (the
-          // bind excludes identity-less rows) — read as null, which
-          // matches no stored row with a bound value
-          if (g.getFieldRepetitionCount(fn) == 0) null
-          else dt match {
-            case LongType => g.getLong(fn, 0)
-            case IntegerType => normKey(g.getInteger(fn, 0))
-            case StringType => g.getString(fn, 0)
-            // the sink stores timestamps as raw INT64 µs and the sidecar
-            // writes them the same way (unix_micros convention)
-            case TimestampType => g.getLong(fn, 0)
-            case other => throw new IllegalStateException(
-              s"deletion-vector key dtype $other unsupported")
-          }
+    var g = rows.next()
+    while (g != null) {
+      val vs = resolved.map { case (fn, dt) =>
+        // a null component can only appear on malformed sidecars (the
+        // bind excludes identity-less rows) — read as null, which
+        // matches no stored row with a bound value
+        if (g.getFieldRepetitionCount(fn) == 0) null
+        else dt match {
+          case LongType => g.getLong(fn, 0)
+          case IntegerType => normKey(g.getInteger(fn, 0))
+          case StringType => g.getString(fn, 0)
+          // the sink stores timestamps as raw INT64 µs and the sidecar
+          // writes them the same way (unix_micros convention)
+          case TimestampType => g.getLong(fn, 0)
+          case other => throw new IllegalStateException(
+            s"deletion-vector key dtype $other unsupported")
         }
-        keys += (if (vs.length == 1) vs(0) else vs.toList)
-        g = rd.read()
       }
-    } finally rd.close()
+      keys += (if (vs.length == 1) vs(0) else vs.toList)
+      g = rows.next()
+    }
     // key fields keyed by the TABLE-side names (the data-file accessor
     // resolves its own casing through `present`)
     (pkFields.toSeq.collect { case (n, dt, _)
       if resolved.exists(_._1.equalsIgnoreCase(n)) => (n, dt) },
       keys.result())
-  })
+  }
   /** Read one POSITION-grain deletion-vector parquet (`_file` rel +
     * `_pos` ordinal) into per-target-file ordinal sets. */
-  private def loadDvPos(file: String): Map[String, Set[Long]] =
-    dvPosCache.getOrElseUpdate(file, {
-      val p = new org.apache.hadoop.fs.Path(file)
-      val rd = ParquetReader.builder(new GroupReadSupport(), p).build()
-      val acc = scala.collection.mutable.Map
-        .empty[String, scala.collection.mutable.Builder[Long, Set[Long]]]
-      try {
-        var g = rd.read()
-        while (g != null) {
-          val names = g.getType.getFields.asScala.map(_.getName)
-          val fileFn = names.find(
-            _.equalsIgnoreCase(TokenRangeSource.FileCol)).getOrElse(
-            throw new IllegalStateException(
-              s"position deletion vector $file lacks ${TokenRangeSource.FileCol}"))
-          val posFn = names.find(
-            _.equalsIgnoreCase(TokenRangeSource.PosCol)).get
-          if (g.getFieldRepetitionCount(fileFn) > 0 &&
-              g.getFieldRepetitionCount(posFn) > 0)
-            acc.getOrElseUpdate(g.getString(fileFn, 0), Set.newBuilder[Long]) +=
-              g.getLong(posFn, 0)
-          g = rd.read()
-        }
-      } finally rd.close()
-      acc.view.mapValues(_.result()).toMap
-    })
+  private def loadDvPos(file: String, names: Seq[String], rows: GroupRows)
+      : Map[String, Set[Long]] = {
+    val fileFn = names.find(
+      _.equalsIgnoreCase(TokenRangeSource.FileCol)).getOrElse(
+      throw new IllegalStateException(
+        s"position deletion vector $file lacks ${TokenRangeSource.FileCol}"))
+    val posFn = names.find(_.equalsIgnoreCase(TokenRangeSource.PosCol)).get
+    val acc = scala.collection.mutable.Map
+      .empty[String, scala.collection.mutable.Builder[Long, Set[Long]]]
+    var g = rows.next()
+    while (g != null) {
+      if (g.getFieldRepetitionCount(fileFn) > 0 &&
+          g.getFieldRepetitionCount(posFn) > 0)
+        acc.getOrElseUpdate(g.getString(fileFn, 0), Set.newBuilder[Long]) +=
+          g.getLong(posFn, 0)
+      g = rows.next()
+    }
+    acc.view.mapValues(_.result()).toMap
+  }
   /** The CURRENT row's key over `flds` (normalized like the vector's
     * keys); null components only on malformed files — such rows never
     * match. */
@@ -3073,19 +3086,16 @@ private[connector] final class TokenRangeReader(files: Array[String],
   private val posColIdx = projected.fields.indexWhere(
     _.name.equalsIgnoreCase(TokenRangeSource.PosCol))
   private var currentFileRel: UTF8String = _
-  // projection schema must carry each FILE's own repetition: Spark's
+  // the requested schema must carry each FILE's own repetition: Spark's
   // committer writes non-nullable columns as `required` while the sink
   // writes `optional`, and a manifest can legally mix both (legacy table
-  // + connector appends — r11 review caught the one-conf-per-partition
-  // shortcut crashing exactly there). Resolved per file from its footer,
-  // memoized by footer schema so a uniform table builds ONE conf; at
-  // 100 TB the footer metadata lives in the stats catalog the ck-prune
-  // note already posits, not per-task reads. Beside the conf rides the
-  // file's PRESENT projected-field set: files written before an ALTER
-  // TABLE ADD (or by a subset-column append) lack some projected columns
-  // — those read NULL (r13 verdict #3), never crash the Group accessor.
-  private val confBySchema =
-    scala.collection.mutable.Map.empty[String, (Configuration, Map[String, String])]
+  // + connector appends — r11 review caught the one-schema-per-partition
+  // shortcut crashing exactly there). Beside it rides the file's PRESENT
+  // projected-field set: files written before an ALTER TABLE ADD (or by a
+  // subset-column append) lack some projected columns — those read NULL
+  // (r13 verdict #3), never crash the Group accessor.
+  private val projectionBySchema =
+    scala.collection.mutable.Map.empty[String, (MessageType, Map[String, String])]
   // projected-name (lowercased) → THIS file's field name: absent keys read
   // NULL; the value carries the file's own casing because Group accessors
   // are case-sensitive while the table layer matches names like Spark
@@ -3093,11 +3103,13 @@ private[connector] final class TokenRangeReader(files: Array[String],
   // by the write guard but read back all-NULL by an exact-match reader
   private var present: Map[String, String] = Map.empty
 
-  private def confFor(path: org.apache.hadoop.fs.Path)
-      : (Configuration, Map[String, String]) = {
-    val fr = ParquetFileReader.open(HadoopInputFile.fromPath(path, new Configuration()))
-    val fileSchema = try fr.getFileMetaData.getSchema finally fr.close()
-    confBySchema.getOrElseUpdate(fileSchema.toString, {
+  /** The requested schema and present-field map for a file with schema
+    * `fileSchema`, taken from the footer the reader already opened.
+    * Memoized per distinct file schema, so a partition whose files share
+    * one schema resolves the projection once. */
+  private def projectionFor(fileSchema: MessageType)
+      : (MessageType, Map[String, String]) =
+    projectionBySchema.getOrElseUpdate(fileSchema.toString, {
       // deletion-vector merge needs the pk columns even when the
       // projection doesn't carry them (the suppressed-row test reads
       // them from the Group, never emits them)
@@ -3110,39 +3122,37 @@ private[connector] final class TokenRangeReader(files: Array[String],
       // (every projected value is NULL), like the empty-projection path
       val readFields =
         if (kept.nonEmpty) kept.toSeq else Seq(fileSchema.getFields.asScala.head)
-      val c = new Configuration()
-      c.set("parquet.read.schema",
-        new MessageType(fileSchema.getName, readFields.asJava).toString)
-      (c, kept.map(f => f.getName.toLowerCase -> f.getName).toMap)
+      (new MessageType(fileSchema.getName, readFields.asJava),
+        kept.map(f => f.getName.toLowerCase -> f.getName).toMap)
     })
-  }
+
+  private def closeFile(): Unit =
+    if (reader != null) { val r = reader; reader = null; rows = null; r.close() }
 
   private def openNext(): Boolean = {
-    if (reader != null) { reader.close(); reader = null }
+    closeFile()
     if (fileIdx >= files.length) return false
-    val path = new org.apache.hadoop.fs.Path(files(fileIdx))
     val f = new java.io.File(files(fileIdx))
     val rel = s"${f.getParentFile.getName}/${f.getName}"
     if (fileColIdx >= 0) currentFileRel = UTF8String.fromString(rel)
-    val (conf, pres) = confFor(path)
-    present = pres
-    rowOrdinal = -1L
-    if (fileIdx < dvFiles.length && dvFiles(fileIdx).nonEmpty) {
-      val (pos, key) = dvFiles(fileIdx).partition(isPosGrain)
-      currentDvKeyGroups =
-        if (key.isEmpty) Array.empty
-        else key.map(loadDv).groupBy(_._1.map(_._1.toLowerCase)).values
-          .map(g => (g.head._1, g.iterator.map(_._2).reduce(_ union _)))
-          .toArray
-      currentDvPos =
-        if (pos.isEmpty) Set.empty
-        else pos.iterator.map(v => loadDvPos(v).getOrElse(rel, Set.empty[Long]))
-          .reduce(_ union _)
-    } else { currentDvKeyGroups = Array.empty; currentDvPos = Set.empty }
-    reader = ParquetReader
-      .builder(new GroupReadSupport(), path)
-      .withConf(conf)
-      .build()
+    val rd = TokenRangeSource.openParquet(files(fileIdx))
+    try {
+      val (requested, pres) = projectionFor(rd.getFooter.getFileMetaData.getSchema)
+      present = pres
+      rowOrdinal = -1L
+      val vectors =
+        if (fileIdx < dvFiles.length) dvFiles(fileIdx).map(loadVector)
+        else Array.empty[Dv]
+      currentDvKeyGroups = vectors.collect { case Left(k) => k }
+        .groupBy(_._1.map(_._1.toLowerCase)).values
+        .map(g => (g.head._1, g.iterator.map(_._2).reduce(_ union _)))
+        .toArray
+      currentDvPos = vectors.iterator
+        .collect { case Right(p) => p.getOrElse(rel, Set.empty[Long]) }
+        .foldLeft(Set.empty[Long])(_ union _)
+      rows = new GroupRows(rd, requested)
+    } catch { case e: Throwable => rd.close(); throw e }
+    reader = rd
     fileIdx += 1
     true
   }
@@ -3150,7 +3160,7 @@ private[connector] final class TokenRangeReader(files: Array[String],
   override def next(): Boolean = {
     while (true) {
       if (reader == null && !openNext()) return false
-      current = reader.read()
+      current = rows.next()
       if (current != null) {
         rowOrdinal += 1
         // merge-on-read: rows a bound vector deletes — by stored ordinal
@@ -3160,9 +3170,7 @@ private[connector] final class TokenRangeReader(files: Array[String],
             (currentDvKeyGroups.isEmpty || !currentDvKeyGroups.exists {
               case (flds, keys) => keys.contains(rowKeyOf(flds)) }))
           return true
-      } else {
-        reader.close(); reader = null
-      }
+      } else closeFile()
     }
     false
   }
@@ -3200,7 +3208,34 @@ private[connector] final class TokenRangeReader(files: Array[String],
     new GenericInternalRow(vals)
   }
 
-  override def close(): Unit = if (reader != null) reader.close()
+  override def close(): Unit = closeFile()
+}
+
+/** Pulls `Group` rows of `requested` (a subset of the file's own schema)
+  * off an open reader, row group by row group: what parquet-mr's record
+  * reader does, without a second footer read or a fresh Hadoop
+  * configuration. */
+private[connector] final class GroupRows(rd: ParquetFileReader,
+    requested: MessageType) {
+  rd.setRequestedSchema(requested)
+  private val meta = rd.getFooter.getFileMetaData
+  private val io = new ColumnIOFactory(meta.getCreatedBy)
+    .getColumnIO(requested, meta.getSchema, true)
+  private val converter = new GroupRecordConverter(requested)
+  private var records: RecordReader[Group] = _
+  private var left = 0L
+
+  /** The next row, or null past the last row group. */
+  def next(): Group = {
+    while (left == 0) {
+      val pages = rd.readNextRowGroup()
+      if (pages == null) return null
+      left = pages.getRowCount
+      records = io.getRecordReader(pages, converter)
+    }
+    left -= 1
+    records.read()
+  }
 }
 
 /** Stream offset = manifest version. The version number is already
@@ -3831,7 +3866,7 @@ private[connector] final class TokenRangeDataWriter(path: String,
   private val msgType = TokenRangeSource.toParquet(writeSchema)
   private val factory = new SimpleGroupFactory(msgType)
   private val conf = {
-    val c = new Configuration()
+    val c = new Configuration(TokenRangeSource.hadoopConf)
     GroupWriteSupport.setSchema(msgType, c)
     c
   }
@@ -4179,13 +4214,9 @@ object TokenRangeOps {
       fate: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData] => Fate)
       : (Seq[String], Seq[String]) = {
     val fates = rels.map { rel =>
-      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(new java.io.File(path, rel).getAbsolutePath),
-        new Configuration()))
-      try {
-        val blocks = rd.getFooter.getBlocks.asScala.toSeq
-        rel -> (if (blocks.isEmpty) RetireFile else fate(blocks))
-      } finally rd.close()
+      val blocks = TokenRangeSource.withParquet(
+        new java.io.File(path, rel).getAbsolutePath)(_.getFooter.getBlocks.asScala.toSeq)
+      rel -> (if (blocks.isEmpty) RetireFile else fate(blocks))
     }
     (fates.collect { case (rel, RetireFile) => rel },
       fates.collect { case (rel, SplitFile) => rel })

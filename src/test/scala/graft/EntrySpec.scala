@@ -16,222 +16,8 @@ class EntrySpec extends SparkSpec {
   }
 
   test("inventory size matches SURVEY accounting") {
-    // round-3: 88 r2 entries + 12 new = 100 total. New rows-only (2):
-    // ev_value_percentiles_approx, ann_ivf_int8_topk. New with oracles (10):
-    // wc_compaction_incremental, wc_partition_stats, st_upsert_lww,
-    // st_counter_column, txt_gopher_rules, txt_pii_scrub,
-    // dedup_winnow_pairs, doc_chunk_overlap, emb_centroid_per_label,
-    // ev_anomaly_zscore — plus mm_decode_batch gained an oracle (real
-    // header parse replaced the stub).
-    // Oracles: 81 (r2) + 10 + 1 = 92; rows-only: 8 (minhash/simhash/
-    // clusters/rp-lsh/ivf/ivf-int8/approx-distinct/approx-pct).
-    // round-3 continuation: +5 with oracles (txt_decontaminate,
-    // smp_domain_mix, ev_gap_fill, wc_scd2_merge, st_enrich_join) + 1
-    // rows-only (ann_pq_topk) + 1 with oracle (st_stream_stream_join)
-    // → 107/98.
-    // round-4: +1 with oracle (st_attribution_unmatched) + 1 rows-only
-    // (ann_ivfpq_topk); dedup_minhash_lsh + dedup_simhash gained oracles
-    // (md5Int replay); dedup_clusters gained one (recursive-CTE CC) and
-    // dedup_near_survivors is new with one → 110/103; txt_unigram_stats
-    // new with oracle → 111/104; ann_ivfpq_residual_topk new rows-only
-    // → 112/104; round-4 continuation: +5 with oracles (wc_cas_insert,
-    // txt_tfidf_topk, smp_quality_weighted, ev_bitmap_distinct,
-    // st_dedup_watermark) → 117/109; +1 with oracle (txt_unigram_logprob)
-    // + 1 rows-only (ev_hll_merge) → 119/110; +2 with oracles
-    // (wc_page_after_cursor, st_bitmap_daily) → 121/112; +1 rows-only
-    // (ann_ivf_prebuilt_topk) → 122/112.
-    // round-5: +1 with oracle (dedup_labels_prebuilt — the stored label
-    // table replayed by the recursive-CTE oracle) → 123/113; +1 with
-    // oracle (wc_page_chain — chained seek pagination) → 124/114; +1
-    // rows-only (ann_ivfpq_prebuilt_topk — stored-code ADC serving)
-    // → 125/114; +1 with oracle (st_minhash_sig — streaming signature
-    // maintainer, 64 minima replayed in SQL) → 126/115; +2 with oracles
-    // (txt_gopher_repetition — duplicate-line/top-bigram signals;
-    // smp_temperature_mix — α=0.5 source upsampling) → 128/117; +2 with
-    // oracles (ev_cms_frequency — the mergeable frequency-sketch tier,
-    // integer CMS replayed verbatim in SQL; st_cms_frequency — its
-    // streaming maintainer, constant 4096-cell state, same oracle SQL)
-    // → 130/119; +1 with oracle (bloom_prune_join — explicit bloom
-    // pre-filter on the probe side of a semi join, exact by
-    // construction) → 131/120; +1 with oracle (wc_zorder_scan —
-    // Z-ordered layout read through a two-dim predicate; layout moves
-    // rows not values, so the oracle is the unsorted-table SQL) → 132/121;
-    // +2 with oracles (cube_priority_status — all 2^k slices in one
-    // shuffle; window_decile_per_nation — partitioned exact ntile) →
-    // 134/123; +1 with oracle (ev_cms_daily_rollup — daily CMS partials
-    // SUM-merged then probed, the materialized-rollup read path) →
-    // 135/124; +1 with oracle (dedup_fuzzy_pairs — LSH-blocked
-    // candidates verified by levenshtein, integer threshold) → 136/125;
-    // +2 with oracles (ev_hour_concurrency — interval stabbing by
-    // bounded bucket expansion; ev_bitmap_wow_retained — set
-    // intersection on the bitmap partial layer by inclusion-exclusion)
-    // → 138/127; +2 rows-only (ev_hll_wow_retained — HLL
-    // inclusion-exclusion overlap, EventsSpec-bounded vs exact;
-    // emb_pca_project — distributed PCA, PcaSpec asserts the
-    // linear-algebra contract) → 140/127; +1 rows-only (ann_pca_topk —
-    // the dimension-reduction ANN tier, AnnSpec recall floor) → 141/127;
-    // +1 oracle (dedup_semantic — SemDeDup with the k-means training
-    // unrolled into the SQL oracle) → 142/128; +1 oracle
-    // (ev_heavy_hitters — CMS candidate filter + exact recount, equality
-    // by the no-underestimate theorem) → 143/129; +1 oracle
-    // (emb_knn_label_vote — k-NN majority label propagation) → 144/130;
-    // +1 oracle (txt_filter_funnel — first-fail gate attribution
-    // waterfall) → 145/131; +1 oracle (smp_token_budget — per-(source,
-    // lang) token accounting with fixed-point shares) → 146/132; +1 oracle
-    // (st_filter_funnel — the live funnel twin, batch oracle verbatim)
-    // → 147/133; +1 rows-only (emb_outlier_whitened — calibrated
-    // Mahalanobis outlier screen, PcaSpec mean-is-k) → 148/133; +1
-    // oracle (pipeline_curated_budget — the capstone composing funnel +
-    // SemDeDup + token budget, CTEs reused verbatim) → 149/134;
-    // ann_ivf_topk CONVERTED rows-only → oracle (fixed-point centroid
-    // means make the trained IVF model replayable in SQL) → 149/135;
-    // ann_rp_lsh_topk CONVERTED rows-only → oracle (the 8 plane-literal
-    // tables unroll as UNION ALL branches) → 149/136; ann_ivf_int8_topk
-    // CONVERTED rows-only → oracle (integer dots + the floor quantizer
-    // compose with the shared training CTEs) → 149/137; ann_pq_topk,
-    // ann_ivfpq_topk, ann_ivfpq_residual_topk CONVERTED rows-only →
-    // oracle (fixed-point codebook training + NULL-padded dense ADC LUT
-    // lists + the q·c + q·r̂ decomposition — every trainable tier is now
-    // hash-green) → 149/140; +1 oracle (dedup_semantic_prebuilt — the
-    // stored semantic keep-list, same oracle proves the persisted index
-    // equals a fresh recompute) → 150/141; ann_ivf_prebuilt_topk +
-    // ann_ivfpq_prebuilt_topk CONVERTED rows-only → oracle (they share
-    // the inline tiers' oracles — deterministic training means stored
-    // serving must equal fresh training) → 150/143; emb_pca_project +
-    // emb_outlier_whitened CONVERTED rows-only → oracle (the EIGENSOLVE
-    // replayed in SQL: chained recursive CTEs alternate matvec/normalize
-    // half-steps, materialized matrix CTEs, bit-identical basis)
-    // → 150/145; ann_pca_topk CONVERTED rows-only → oracle (the same
-    // eigensolve CTEs + materialized reduced coordinates) → 150/146.
-    // r6: +wc_timeuuid_gen (oracle) → 151/147; the 4 sketch entries
-    // (ev_hll_merge, ev_hll_wow_retained, ev_approx_distinct,
-    // ev_value_percentiles_approx) CONVERTED rows-only → oracle (exact
-    // columns + thresholded error booleans — the estimate bound is data
-    // the oracle pins TRUE) → 151/151: every entry is oracle-checked.
-    // r6 late adds (containment/recall/feature-extract/top-paths):
-    // +dedup_containment, +ann_recall_eval, +mm_feature_extract,
-    // +ev_top_paths → 155/155.
-    // r7: +wc_quorum_read, +wc_read_repair, +wc_hinted_handoff,
-    // +wc_anti_entropy_repair (the replication quartet), +ev_rfm,
-    // +ev_markov_transitions, +ev_time_to_convert, +txt_bigram_logprob,
-    // +emb_radius_search, +emb_cluster_silhouette, +mm_phash_dedup,
-    // +st_anomaly_zscore — all with oracles → 167/167; late r7:
-    // +wc_vnode_rebalance (rendezvous ring expansion),
-    // +smp_preference_pairs (DPO pair construction),
-    // +st_markov_transitions (stateful step miner),
-    // +txt_rake_keyphrases (RAKE) → 171/171.
-    // r8: +ann_recall_eval_pq (quantized-tier recall gauge),
-    // +ann_ivfpq_residual_prebuilt_topk (residual tier served from the
-    // stored index), +mm_pixel_decode (real-codec PNG round trip,
-    // analytic oracle) → 174/174; mid-r8 batch:
-    // +dedup_substring_exact (Lee-et-al span dedup),
-    // +ann_filtered_topk (metadata-filtered serving on the stored index),
-    // +emb_mmr_rerank (greedy MMR, 10 unrolled oracle steps),
-    // +txt_collocations_pmi, +txt_zipf_fit, +txt_source_kl,
-    // +ev_ewma_smoothing, +ev_cusum_changepoint → 182/182; late r8:
-    // +ev_seasonality_dow (ISO weekday profile), +txt_source_overlap
-    // (pairwise source vocab Jaccard), +emb_pq_distortion (per-subspace
-    // reconstruction MSE gauge) → 185/185; r8 close-out batch:
-    // +ev_interarrival (gap profile), +ev_cohort_ltv (revenue cohorts),
-    // +txt_char_entropy (char-entropy quality gauge), +txt_heaps_fit
-    // (vocab-growth slope), +emb_ood_knn (kNN novelty), +emb_triplet_mining
-    // (contrastive hard triplets), +ann_rrf_hybrid (lexical+vector RRF),
-    // +mm_wav_probe (RIFF/WAVE audio probe) → 193/193; plus
-    // +smp_kfold (content-hash fold report), +emb_label_confusion
-    // (kNN confusion matrix), +txt_ngram_novelty (df=1 shingle share),
-    // +ev_value_histogram (decade buckets) → 197/197; +smp_dedup_weighted
-    // (cluster-size-inverse sampling off the stored label table) → 198/198.
-    // r9: +mm_jpeg_decode (lossy real-codec twin), +txt_bpe_merges,
-    // +txt_bpe_tokenize, +txt_bpe_vocab (real BPE tokenizer family),
-    // +ann_ivf_cell_stats (index balance gauge), +st_bpe_tokenize
-    // (streaming accounting twin) → 204/204. r10: +ev_autocorr (daily
-    // ACF at lags 1..7 — landed late in r9, integrated with its SURVEY
-    // line, spec, and scaling row this round) → 205/205; +wc_connector_multiget
-    // (IN-list read through the DSv2 connector over a table written
-    // through its sink) → 206/206; +dedup_lsh_recall (the measured
-    // banded-LSH S-curve per Jaccard band) → 207/207; +emb_matryoshka_eval
-    // (prefix-truncation recall@10 at dims 8/16/32) → 208/208;
-    // +ann_matryoshka_rerank (prefix-8 shortlist re-ranked at full
-    // width — the serving half of the pair) → 209/209;
-    // +ev_stationary_rank (PageRank over the event-type transition
-    // chain in exact 1e12 fixed point) → 210/210; +ann_probe_sweep
-    // (recall@10 at nprobe 1/2/4 on one trained index) → 211/211.
-    // r11: +wc_connector_user_lookup (TEXT partition key + timestamp
-    // payload through the DSv2 sink's manifest commit — the reference's
-    // users-table shape, server.py:263-269) → 212/212; +ann_ivf2_topk
-    // (two-level coarse quantizer: √k super-cells over the k cell
-    // centroids, closing the flat-broadcast ceiling) → 213/213;
-    // +wc_connector_snapshot_read (version-pinned manifest read — time
-    // travel from the atomic-commit manifest) → 214/214;
-    // +wc_connector_delete (CQL DELETE by partition key through
-    // SupportsDelete — bucket-grain copy-on-write + one manifest flip)
-    // → 215/215; +wc_connector_compact (one file per non-empty bucket
-    // in an atomic read-and-overwrite; oracle replays the ring
-    // arithmetic in SQL) → 216/216; +txt_perplexity_bucket (CCNet
-    // head/middle/tail tiering — 5 mean-relative µ-nat bands, map-only
-    // after one scalar aggregate) → 217/217; +smp_dsir_weights (DSIR
-    // hashed-feature importance weights, 256-bucket broadcast scoring)
-    // → 218/218; +st_connector_append (streaming ingest through the
-    // DSv2 sink — one manifest-atomic commit per micro-batch, read back
-    // through the connector) → 219/219; +wc_connector_ttl (TTL expiry
-    // as stats-driven copy-on-write: wholly-expired files retire from
-    // the manifest unread, wholly-live survive by reference) → 220/220;
-    // +ev_holt_trend (Brown double exponential smoothing — level+trend
-    // forecast from two truncated-kernel passes, the second pass
-    // day-grain) → 221/221; +ev_forecast_error (the Holt backtest —
-    // one-step-ahead forecast vs next-day actual, exact integer µ-unit
-    // errors) → 222/222; +wc_connector_upsert (CQL INSERT-is-upsert as
-    // an atomic bucket-grain copy-on-write through the connector)
-    // → 223/223; +ann_ivf2_prebuilt_topk (the two-level tier served from
-    // the persisted super-centroids + cell→super map — the last inline
-    // retrain retired) → 224/224; +wc_composite_key_lookup (composite
-    // partition keys: (l_orderkey, l_linenumber) tuple ring via chained
-    // xxhash64, pruned to the owning bucket) → 225/225.
-    // r14: +wc_composite_clustered_slice (the FULL Cassandra primary-key
-    // idiom PRIMARY KEY ((user_id, event_type), ts_us): tuple-equality
-    // bucket prune + physical-clustering-order file-slab prune in ONE
-    // scan) → 226/226; +wc_alter_add_column (ALTER TABLE ADD as table
-    // metadata: pre-ALTER files read NULL for the new column, post-ALTER
-    // appends bind it — the mixed-footer read oracle-hashed) → 227/227.
-    // r15: +st_connector_tail (CDC tail — readStream FROM the connector,
-    // offset = manifest version), +wc_delete_ck_range (clustering-range
-    // tombstone: covered slabs retire unread), +wc_cell_lww (per-cell LWW
-    // via two upsertCells rounds), +wc_sql_ddl (CREATE/INSERT/ALTER/SELECT
-    // through TokenRangeCatalog via spark.sql), +st_connector_pipeline
-    // (incremental curation: capped CDC tail → quality gate → atomic
-    // sink appends → read-back, exactly-once end to end) → 232/232.
-    // r15 continuation: +st_connector_cdf (CHANGE DATA FEED — rewrites
-    // record their removed/replaced rows as manifest-pinned sidecars,
-    // changeFeed reads serve _change_type/_commit_version; the plain
-    // tail is compaction-transparent via the #op kind) and
-    // +wc_sql_update_merge (SQL UPDATE/MERGE/predicate-DELETE through
-    // DSv2 group-based copy-on-write row-level operations),
-    // +st_cdf_incremental_agg (signed-delta fold of the feed ≡ the
-    // final-state aggregate — MV maintenance at mutation grain)
-    // → 235/235. r16: +wc_merge_on_read (deletion-vector merge-on-read
-    // DML — small DELETE/upsert publish a pk sidecar bound to the
-    // affected files instead of rewriting them), +wc_cell_tombstone
-    // (per-cell writetime: out-of-order older writes lose per cell,
-    // NULL-binds are stamped cell tombstones), +wc_sql_mor (SQL
-    // UPDATE/DELETE/MERGE merge-on-read via SupportsDelta) → 238/238.
-    // r17: +wc_sql_mor_clustered (POSITION deletion vectors — SQL
-    // merge-on-read DML on CLUSTERED tables, the reference's own
-    // messages shape, exact under duplicate pks), +wc_sai_index
-    // (declared secondary-index columns get per-file value blooms;
-    // non-key TEXT equality prunes files), +wc_range_tombstone_mor
-    // (deleteCkRange mode=dv: covered slabs retire unread, straddlers
-    // vector-suppressed by position, no survivor rewrite),
-    // +wc_insert_upsert (TBLPROPERTIES insert='upsert': plain SQL
-    // INSERT replaces by key via a key vector — CQL's INSERT semantic
-    // write-side) → 242/242. r18: +wc_insert_upsert_clustered (the
-    // (pk, ck)-grain key vector: blind INSERT upserts by the full
-    // primary key on clustered tables — the reference's messages write
-    // exactly, with intra-batch LWW), +wc_ttl_mor (expire mode=dv:
-    // wholly-expired files retire unread, the straddler's expired rows
-    // are position-vectored, nothing rewritten), +wc_multi_ck_slice
-    // (PRIMARY KEY ((a), b, c): the full clustering LIST — write-side
-    // lexicographic slab sort + leader-range prefix-slice prune)
-    // → 245/245.
+    // every entry carries an oracle; a new entry moves both counts and its
+    // SURVEY line together
     assert(SparkEntry.queries.size == 245, s"got ${SparkEntry.queries.size}")
     assert(SparkEntry.oracleSql.size == 245, s"got ${SparkEntry.oracleSql.size}")
   }

@@ -48,7 +48,9 @@ class TokenRangeModelSpec extends SparkSpec {
       read: Option[Int] => Seq[String],
       show: R => String,
       // a further per-step check of the live table against the model
-      extra: Seq[R] => Unit = (_: Seq[R]) => ())
+      extra: Seq[R] => Unit = (_: Seq[R]) => (),
+      // binds a drawn op to the model state it runs against
+      resolve: (O, Seq[R]) => O = (o: O, _: Seq[R]) => o)
 
   /** Per-step record: the version after the step and every state an
     * intermediate version published during the step may hold. */
@@ -85,8 +87,9 @@ class TokenRangeModelSpec extends SparkSpec {
     var nRaced = 0
     var nRetried = 0
     val recs = Seq.newBuilder[StepRec[R]]
-    steps.zipWithIndex.foreach { case ((op, racer), i) =>
+    steps.zipWithIndex.foreach { case ((drawn, racer), i) =>
       val s0 = model
+      val op = m.resolve(drawn, s0)
       val (ran, retried) = racer match {
         case Some(r) => raced(m.run(r))(m.run(op))
         case None => m.run(op); (false, false)
@@ -106,7 +109,7 @@ class TokenRangeModelSpec extends SparkSpec {
       val got = m.read(None).sorted
       val want = model.map(m.show).sorted
       assert(got == want,
-        s"step $i ${op}${racer.map(r => s" raced by $r (ran=$ran, retried=$retried)").getOrElse("")}:" +
+        s"step $i ${op}${if (drawn == op) "" else s" (drawn as $drawn)"}${racer.map(r => s" raced by $r (ran=$ran, retried=$retried)").getOrElse("")}:" +
           s"\n  table-only: ${got.diff(want).take(8)}\n  model-only: ${want.diff(got).take(8)}")
       m.extra(model)
       recs += StepRec(s0, racerState, model,
@@ -144,6 +147,10 @@ class TokenRangeModelSpec extends SparkSpec {
   private final case class DeleteKeys(keys: Seq[Long], mode: String) extends COp
   private final case class DeleteCkRange(key: Long, lo: Long, hi: Long,
       mode: String) extends COp
+  // a range delete whose bounds are stored ck values of live rows, picked
+  // when the step runs (see `liveRange`)
+  private final case class LiveCkRange(pick: Int, loPick: Int, mode: String)
+      extends COp
   private final case class Expire(cutoff: Long, mode: String) extends COp
   private final case class Compact(rollRows: Option[Long]) extends COp
   private case object CompactVectors extends COp
@@ -170,6 +177,21 @@ class TokenRangeModelSpec extends SparkSpec {
       Eff(r => r._1 == key && r._2.exists(c => c >= lo && c < hi), Nil)
     case Expire(cutoff, _) => Eff(r => r._3.exists(_ <= cutoff), Nil)
     case _: Compact | CompactVectors | CompactFragmented => Eff(_ => false, Nil)
+    case l: LiveCkRange => cEff(liveRange(l, s), s)
+  }
+
+  /** `hi` is the ck of a picked live row, `lo` a smaller ck of the same
+    * partition (or `hi` - 10): the row at `hi` must survive, and when it
+    * shares a file with a deleted row that file is split, not kept. */
+  private def liveRange(l: LiveCkRange, s: Seq[CRow]): DeleteCkRange = {
+    val live = s.collect { case (pk, Some(ck), _, _) => (pk, ck) }.distinct.sorted
+    if (live.isEmpty) DeleteCkRange(0L, 0L, 0L, l.mode)
+    else {
+      val (pk, hi) = live(l.pick % live.size)
+      val below = live.collect { case (`pk`, ck) if ck < hi => ck }
+      val lo = if (below.isEmpty) hi - 10L else below(l.loPick % below.size)
+      DeleteCkRange(pk, lo, hi, l.mode)
+    }
   }
 
   private def cFrame(rows: Seq[CRow]): DataFrame =
@@ -191,6 +213,8 @@ class TokenRangeModelSpec extends SparkSpec {
       TokenRangeOps.deleteKeys(spark, dir, "pk", keys, mode)
     case DeleteCkRange(key, lo, hi, mode) =>
       TokenRangeOps.deleteCkRange(spark, dir, "pk", key, lo, hi, mode)
+    case l: LiveCkRange =>
+      throw new IllegalStateException(s"$l runs only once resolved")
     case Expire(cutoff, mode) =>
       TokenRangeOps.expire(spark, dir, "pk", "ts", cutoff, mode)
     case Compact(roll) => TokenRangeOps.compact(spark, dir, "pk", roll)
@@ -242,10 +266,13 @@ class TokenRangeModelSpec extends SparkSpec {
       keys <- Gen.choose(1, 2).flatMap(n => Gen.pick(n, 0L to 7L))
       mode <- modes
     } yield DeleteKeys(keys.toSeq, mode)),
-    3 -> (for {
+    2 -> (for {
       key <- pkGen; lo <- grid(80L, 10L); len <- grid(50L, 10L)
       mode <- modes
     } yield DeleteCkRange(key, lo, lo + len, mode)),
+    2 -> (for {
+      pick <- Gen.choose(0, 999); loPick <- Gen.choose(0, 999); mode <- modes
+    } yield LiveCkRange(pick, loPick, mode)),
     1 -> (for { c <- grid(3000L, 500L); mode <- modes } yield Expire(c, mode)),
     1 -> Gen.oneOf(None, Some(2L)).map(Compact(_)),
     1 -> Gen.const(CompactVectors),
@@ -281,7 +308,11 @@ class TokenRangeModelSpec extends SparkSpec {
     val steps = draw[COp](seed, n,
       Append((0L until 8L).map(k => (k, Some(k * 10), Some(k * 1000), Some(s"seed$k")))),
       cOpGen, racerGen, raceP, _.isInstanceOf[Append])
-    val recs = runMachine(Machine[CRow, COp](dir, cEff, cRun(dir), cRead(dir), cShow),
+    val recs = runMachine(Machine[CRow, COp](dir, cEff, cRun(dir), cRead(dir), cShow,
+      resolve = (o, s) => o match {
+        case l: LiveCkRange => liveRange(l, s)
+        case _ => o
+      }),
       steps, () => {
         TokenRangeOps.setVectorCompaction(dir, sweepAfter)
         if (feed) TokenRangeOps.enableChangeFeed(dir)
