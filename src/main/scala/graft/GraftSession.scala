@@ -10,33 +10,39 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** The builder `local` and `cluster` share: the extensions plus the
-    * semantic + performance SQL settings. `shufflePartitions` should
-    * track total cores (2-3× on a cluster). */
+  /** The semantic + performance SQL settings `local` and `cluster` share.
+    * `shufflePartitions` should track total cores (2-3× on a cluster).
+    * SessionSettingsSpec runs every entry with the settings absent from
+    * Verify's reset to Spark's defaults and checks the results match. */
+  private[graft] def sqlSettings(shufflePartitions: Int): Map[String, Any] = Map(
+    "spark.sql.shuffle.partitions" -> shufflePartitions,
+    "spark.sql.session.timeZone" -> "UTC",
+    // AQE: runtime partition coalescing + skew-join splitting; at cluster
+    // scale this is what keeps post-shuffle partitions memory-sized.
+    "spark.sql.adaptive.enabled" -> true,
+    "spark.sql.adaptive.coalescePartitions.enabled" -> true,
+    "spark.sql.adaptive.skewJoin.enabled" -> true,
+    "spark.sql.autoBroadcastJoinThreshold" -> 64L * 1024 * 1024,
+    "spark.sql.parquet.filterPushdown" -> true,
+    "spark.sql.parquet.aggregatePushdown" -> true,
+    // a join keyed on a SUPERSET of a table's bucket columns can reuse the
+    // bucket partitioning (rows equal on all keys are equal on the bucket
+    // key, hence co-located) — required for the zero-shuffle incremental
+    // compaction merge on tables bucketed by partition key alone
+    "spark.sql.requireAllClusterKeysForCoPartition" -> false,
+    // janino class cache (static conf, default 100 entries): a workload
+    // of many distinct query shapes — or ONE query whose plan generates
+    // >100 codegen units — churns the cache and recompiles the same
+    // sources every run (r19, guide §1.2 per-task work)
+    "spark.sql.codegen.cache.maxEntries" -> 2000)
+
+  /** The builder `local` and `cluster` share: the extensions plus
+    * [[sqlSettings]]. */
   private def base(shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .appName("graft")
       .withExtensions(new plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE: runtime partition coalescing + skew-join splitting; at cluster
-      // scale this is what keeps post-shuffle partitions memory-sized.
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.parquet.filterPushdown", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      // a join keyed on a SUPERSET of a table's bucket columns can reuse the
-      // bucket partitioning (rows equal on all keys are equal on the bucket
-      // key, hence co-located) — required for the zero-shuffle incremental
-      // compaction merge on tables bucketed by partition key alone
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // janino class cache (static conf, default 100 entries): a workload
-      // of many distinct query shapes — or ONE query whose plan generates
-      // >100 codegen units — churns the cache and recompiles the same
-      // sources every run (r19, guide §1.2 per-task work)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
+      .config(sqlSettings(shufflePartitions))
 
   private def start(b: SparkSession.Builder): SparkSession = {
     val s = b.getOrCreate()

@@ -56,6 +56,15 @@ object Verify {
     println(s"[verify] scaling: $n/$want entries covered, $superlinear superlinear")
   }
 
+  private[graft] def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** The SQL settings of the plain session Verify runs every entry in —
+    * one definition, shared with SessionSettingsSpec, which checks that
+    * GraftSession's extra settings change no entry's result. */
+  private[graft] def sqlSettings: Map[String, Any] = Map(
+    "spark.sql.shuffle.partitions" -> cpus,
+    "spark.sql.session.timeZone" -> "UTC")
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // census first: a drifted checklist fails the round loudly before any
@@ -68,11 +77,9 @@ object Verify {
     // round-end decade re-run
     if (only.isEmpty && Files.exists(Paths.get("BENCH_SCALING.json")))
       scalingCoverageCheck()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+      .config(sqlSettings)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

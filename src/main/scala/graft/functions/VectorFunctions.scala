@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import graft.plans.DotProduct
+import org.apache.spark.sql.{Column, GraftColumns}
 import org.apache.spark.sql.functions._
 
 /** SURVEY.md §2.F — vector math over `array<float>` embedding columns.
@@ -12,11 +13,10 @@ import org.apache.spark.sql.functions._
   */
 object VectorFunctions {
 
-  /** Dot product in double (sequential fold — deterministic). */
+  /** Dot product in double (sequential fold — deterministic): the native
+    * DotProduct kernel. NULL on ragged input or a NULL element. */
   def dot(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
+    GraftColumns.column(DotProduct(GraftColumns.expression(a), GraftColumns.expression(b)))
 
   /** L2 norm. */
   def norm(a: Column): Column = sqrt(dot(a, a))
@@ -52,8 +52,8 @@ object VectorFunctions {
     * the sign of the projection onto plane (t, k). Same-bucket join replaces
     * the O(n²) cross join — and unlike a first-k-coordinates sign code,
     * random projections stay balanced on anisotropic real-world embedding
-    * distributions (VERDICT r1 "what's wrong" #5). The hyperplane dots fuse
-    * into the native DotProduct kernel via FuseDotProduct.
+    * distributions (VERDICT r1 "what's wrong" #5). The hyperplane dots run
+    * in the native DotProduct kernel ([[dot]]).
     *
     * Contract: vectors whose length ≠ `dim` get a NULL bucket (the plane
     * dot is null on ragged input) and therefore fall out of same-bucket

@@ -3,114 +3,14 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.DoubleType
 
-/** SURVEY.md §2.H — Catalyst optimizer rule: fuse the declarative
-  * aggregate∘zip_with dot-product shape (what VectorFunctions.dot builds)
-  * into the native DotProduct kernel. Matching is strict — the zip lambda
-  * must multiply exactly its two lambda variables (possibly cast) and the
-  * aggregate must be a 0.0-seeded Add fold — so nothing else is touched.
-  * The fold order is identical, so the rewrite is bit-exact. */
-object FuseDotProduct extends Rule[LogicalPlan] {
-
-  private def isVar(e: Expression, v: NamedLambdaVariable): Boolean = e match {
-    case x: NamedLambdaVariable => x.exprId == v.exprId
-    case Cast(x: NamedLambdaVariable, DoubleType, _, _) => x.exprId == v.exprId
-    case _ => false
-  }
-
-  private object DotShape {
-    def unapply(e: Expression): Option[(Expression, Expression)] = e match {
-      case ArrayAggregate(
-            ZipWith(a, b, LambdaFunction(Multiply(mx, my, _), Seq(x: NamedLambdaVariable, y: NamedLambdaVariable), _)),
-            Literal(0.0, DoubleType),
-            LambdaFunction(Add(aa, av, _), Seq(acc: NamedLambdaVariable, v: NamedLambdaVariable), _),
-            _)
-          if ((isVar(mx, x) && isVar(my, y)) || (isVar(mx, y) && isVar(my, x)))
-            && ((isVar(aa, acc) && isVar(av, v)) || (isVar(aa, v) && isVar(av, acc))) =>
-        Some((a, b))
-      case _ => None
-    }
-  }
-
-  private def isAddFold(f: LambdaFunction): Boolean = f match {
-    case LambdaFunction(Add(aa, av, _), Seq(acc: NamedLambdaVariable, v: NamedLambdaVariable), _) =>
-      (isVar(aa, acc) && isVar(av, v)) || (isVar(aa, v) && isVar(av, acc))
-    case _ => false
-  }
-
-  private def elemIs(e: Expression, t: org.apache.spark.sql.types.DataType): Boolean =
-    e.resolved && (e.dataType match {
-      case org.apache.spark.sql.types.ArrayType(et, _) => et == t
-      case _ => false
-    })
-
-  /** The squared-L2 shape Ann.l2sq builds: aggregate∘zip_with
-    * (x−y)·(x−y) with a 0.0-seeded Add fold. Matched only when both
-    * sides are array<double> (see L2Squared's bit-exactness note: a
-    * float-element lambda subtracts in FLOAT before widening, which the
-    * double kernel would not reproduce). */
-  private object L2Shape {
-    def unapply(e: Expression): Option[(Expression, Expression)] = e match {
-      case ArrayAggregate(
-            ZipWith(a, b, LambdaFunction(
-              Multiply(Subtract(s1x, s1y, _), Subtract(s2x, s2y, _), _),
-              Seq(x: NamedLambdaVariable, y: NamedLambdaVariable), _)),
-            Literal(0.0, DoubleType), fold: LambdaFunction, _)
-          if isAddFold(fold)
-            && isVar(s1x, x) && isVar(s1y, y) && isVar(s2x, x) && isVar(s2y, y)
-            && elemIs(a, DoubleType) && elemIs(b, DoubleType) =>
-        Some((a, b))
-      case _ => None
-    }
-  }
-
-  /** The integer-dot shape of the int8 tier: aggregate∘zip_with x·y with
-    * a 0L-seeded Add fold over two array<bigint> columns. */
-  private object LongDotShape {
-    def unapply(e: Expression): Option[(Expression, Expression)] = e match {
-      case ArrayAggregate(
-            ZipWith(a, b, LambdaFunction(Multiply(mx, my, _),
-              Seq(x: NamedLambdaVariable, y: NamedLambdaVariable), _)),
-            Literal(0L, org.apache.spark.sql.types.LongType), fold: LambdaFunction, _)
-          if isAddFold(fold)
-            && ((isVar(mx, x) && isVar(my, y)) || (isVar(mx, y) && isVar(my, x)))
-            && elemIs(a, org.apache.spark.sql.types.LongType)
-            && elemIs(b, org.apache.spark.sql.types.LongType) =>
-        Some((a, b))
-      case _ => None
-    }
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    // LongDotProduct's addExact/multiplyExact THROW on overflow — the
-    // behavior of the ANSI Multiply/Add fold it replaces. With ANSI off
-    // the declarative fold wraps silently, so fusing would turn a wrap
-    // into an exception for any user query matching the shape: gate the
-    // integer rewrite on the session's ANSI setting (ADVICE r19 #2;
-    // Spark 4 defaults ANSI on, so the suite's int8 tier still fuses).
-    val ansi = org.apache.spark.sql.internal.SQLConf.get.ansiEnabled
-    plan.transformAllExpressionsWithPruning(_.containsPattern(
-      org.apache.spark.sql.catalyst.trees.TreePattern.HIGH_ORDER_FUNCTION)) {
-      // Guard: only fuse when the replacement type-checks (array<float|double>
-      // on both sides) — anything else would leave the plan unresolved.
-      case DotShape(a, b) if DotProduct(a, b).resolved => DotProduct(a, b)
-      case L2Shape(a, b) if L2Squared(a, b).resolved => L2Squared(a, b)
-      case LongDotShape(a, b) if ansi && LongDotProduct(a, b).resolved =>
-        LongDotProduct(a, b)
-    }
-  }
-}
-
-/** SparkSessionExtensions entry point: registers the `graft_cosine` and
-  * `graft_dot` SQL functions and the FuseDotProduct optimizer rule.
+/** SparkSessionExtensions entry point (SURVEY.md §2.H): registers the
+  * `graft_cosine` and `graft_dot` SQL functions for user SQL.
   *
   * Usage: SparkSession.builder().withExtensions(new GraftExtensions) or
   * spark.sql.extensions=graft.plans.GraftExtensions. Installed by
-  * GraftSession; every library query is also correct (bit-identical)
-  * WITHOUT the extension — it only fuses the hot path.
+  * GraftSession. The library's own queries do not need it: they place
+  * the vector kernels in their plans directly (VectorExpressions.scala).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -122,6 +22,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
       (args: Seq[Expression]) => DotProduct(args(0), args(1))))
-    ext.injectOptimizerRule(_ => FuseDotProduct)
   }
 }

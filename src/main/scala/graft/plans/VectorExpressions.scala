@@ -8,26 +8,77 @@ import org.apache.spark.sql.types._
 
 /** SURVEY.md §2.H — native Catalyst expressions for the vector hot path.
   *
-  * The library's public API builds dot products declaratively
-  * (aggregate ∘ zip_with, VectorFunctions.dot); these fused kernels compute
-  * the identical sequential double fold in one tight loop with full
-  * whole-stage codegen — no lambda allocation per element, no intermediate
-  * array. The optimizer rule in GraftExtensions swaps them in, so results
-  * are bit-identical with or without the extension.
+  * The library places these kernels in its plans directly, through the
+  * `GraftColumns` bridge: `VectorFunctions.dot` (and so `norm`, `cosine`
+  * and `signBucket`) emits DotProduct, `Ann.l2sq` emits L2Squared and the
+  * int8 tier emits LongDotProduct. Every session therefore runs them, a
+  * plain one included. Each kernel computes the same sequential fold as
+  * the declarative aggregate∘zip_with form (element 0 first, acc + v) in
+  * one tight loop with full whole-stage codegen — no lambda allocation
+  * per element, no intermediate array — so the results are bit-identical
+  * to that form; ExtensionsSpec keeps the fold as the reference.
   *
-  * Element types: each side may be array<float> or array<double>
-  * (embeddings are float; IVF centroids from avg() are double) — each
-  * element is widened to double exactly as the HOF lambda's cast does.
+  * This trait is what every vector kernel shares: NULL on NULL input,
+  * NULL on ragged input, and the NULL-element guard. Each kernel keeps
+  * its own type check.
   */
-trait VectorBinaryExpression extends BinaryExpression {
+trait ArrayPairKernel extends BinaryExpression {
   override def nullIntolerant: Boolean = true
 
   /** Mismatched-length inputs yield NULL — exactly what the declarative
-    * aggregate∘zip_with shape does (zip_with null-pads the shorter array,
-    * the multiply nulls out, the sum goes null), so FuseDotProduct's
-    * bit-identical claim holds on ragged/malformed vectors too. */
+    * aggregate∘zip_with fold does (zip_with null-pads the shorter array,
+    * the multiply nulls out, the sum goes null). */
   override def nullable: Boolean = true
 
+  /** A NULL array ELEMENT nulls the declarative fold too (zip_with's
+    * Multiply nulls out, then Add(acc, null) stays null to the end), so
+    * the kernels return NULL — ArrayData.getDouble/getLong on a null slot
+    * would silently read 0/garbage. The check is emitted ONLY when a
+    * side's type admits null elements (containsNull), so provably
+    * non-null arrays keep the branch-free loop. */
+  protected def mayHaveNullElems: Boolean =
+    left.dataType.asInstanceOf[ArrayType].containsNull ||
+      right.dataType.asInstanceOf[ArrayType].containsNull
+
+  /** Interpreted-path guard: the common length, or -1 when the result
+    * is NULL (ragged input, or a null slot in either array). */
+  protected def guardedLength(x: ArrayData, y: ArrayData): Int = {
+    val n = x.numElements()
+    if (y.numElements() != n) return -1
+    if (mayHaveNullElems) {
+      var i = 0
+      while (i < n) {
+        if (x.isNullAt(i) || y.isNullAt(i)) return -1
+        i += 1
+      }
+    }
+    n
+  }
+
+  /** Codegen PREPASS fragment ("" when the types prove no null elements):
+    * scans the null bitmaps BEFORE the arithmetic loop and falls through
+    * with isNull set. Kept out of the compute loop deliberately — an
+    * early-exit branch inside the multiply-add loop defeats JIT
+    * auto-vectorization (measured r20: ~25-30 % on the cosine-bound
+    * entries); the split keeps the hot loop branch-free. */
+  protected def nullPrepassCode(a: String, b: String, n: String, isNull: String,
+      ctx: CodegenContext): String =
+    if (!mayHaveNullElems) ""
+    else {
+      val j = ctx.freshName("j")
+      s"""
+         |for (int $j = 0; $j < $n; $j++) {
+         |  if ($a.isNullAt($j) || $b.isNullAt($j)) { $isNull = true; break; }
+         |}
+       """.stripMargin
+    }
+}
+
+/** The floating-point kernels: each side may be array<float> or
+  * array<double> (embeddings are float; IVF centroids from avg() are
+  * double), each element widened to double exactly as the reference
+  * fold's cast does. */
+trait VectorBinaryExpression extends ArrayPairKernel {
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
       case (ArrayType(FloatType | DoubleType, _), ArrayType(FloatType | DoubleType, _)) =>
@@ -51,46 +102,6 @@ trait VectorBinaryExpression extends BinaryExpression {
       case FloatType => s"(double) $arr.getFloat($i)"
       case _         => s"$arr.getDouble($i)"
     }
-
-  /** A NULL array ELEMENT nulls the whole declarative fold (zip_with's
-    * Multiply nulls out, then Add(acc, null) stays null to the end), so
-    * the fused kernels must return NULL too — ArrayData.getDouble on a
-    * null slot would silently read 0/garbage (ADVICE r19 #1). The check
-    * is emitted ONLY when a side's type admits null elements
-    * (containsNull), so provably non-null arrays keep the branch-free
-    * loop. */
-  protected def mayHaveNullElems: Boolean =
-    left.dataType.asInstanceOf[ArrayType].containsNull ||
-      right.dataType.asInstanceOf[ArrayType].containsNull
-
-  /** Interpreted-path prepass: any null slot in the common prefix? */
-  protected def anyNullElem(x: ArrayData, y: ArrayData, n: Int): Boolean = {
-    if (!mayHaveNullElems) return false
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return true
-      i += 1
-    }
-    false
-  }
-
-  /** Codegen PREPASS fragment ("" when the types prove no null elements):
-    * scans the null bitmaps BEFORE the arithmetic loop and falls through
-    * with isNull set. Kept out of the compute loop deliberately — an
-    * early-exit branch inside the multiply-add loop defeats JIT
-    * auto-vectorization (measured r20: ~25-30 % on the cosine-bound
-    * entries); the split keeps the hot loop branch-free. */
-  protected def nullPrepassCode(a: String, b: String, n: String, isNull: String,
-      ctx: CodegenContext): String =
-    if (!mayHaveNullElems) ""
-    else {
-      val j = ctx.freshName("j")
-      s"""
-         |for (int $j = 0; $j < $n; $j++) {
-         |  if ($a.isNullAt($j) || $b.isNullAt($j)) { $isNull = true; break; }
-         |}
-       """.stripMargin
-    }
 }
 
 case class DotProduct(left: Expression, right: Expression)
@@ -102,9 +113,8 @@ case class DotProduct(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) return null
-    val n = x.numElements()
-    if (anyNullElem(x, y, n)) return null
+    val n = guardedLength(x, y)
+    if (n < 0) return null
     var dot = 0.0
     var i = 0
     while (i < n) {
@@ -153,9 +163,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) return null
-    val n = x.numElements()
-    if (anyNullElem(x, y, n)) return null
+    val n = guardedLength(x, y)
+    if (n < 0) return null
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
@@ -208,14 +217,15 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Squared L2 distance in one codegen'd loop — the fused form of the
-  * declarative aggregate∘zip_with (x−y)·(x−y) shape (Ann.l2sq), the PQ
-  * assignment hot path (r19, guide §4: the interpreted HOF allocates a
-  * zipped array + two lambda frames per element, per candidate code).
-  * Fold order is identical (element 0 first, acc + v), so the rewrite is
-  * bit-exact — but ONLY on array<double> inputs, where the HOF lambda
-  * subtracts in double too; FuseL2Squared guards on the element type
-  * (a float-array lambda would subtract in FLOAT before widening). */
+/** Squared L2 distance in one codegen'd loop — the PQ assignment hot
+  * path (Ann.l2sq; r19, guide §4: the interpreted aggregate∘zip_with
+  * (x−y)·(x−y) fold allocates a zipped array + two lambda frames per
+  * element, per candidate code). Fold order equals the reference fold's
+  * (element 0 first, acc + v). It matches that fold only on
+  * array<double> inputs, because a float-element lambda subtracts in
+  * FLOAT before widening and this kernel subtracts in double; its one
+  * caller, Ann.l2sq, always passes `subvectors`' double-cast slices and
+  * double codebooks. */
 case class L2Squared(left: Expression, right: Expression)
   extends VectorBinaryExpression {
 
@@ -225,9 +235,8 @@ case class L2Squared(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) return null
-    val n = x.numElements()
-    if (anyNullElem(x, y, n)) return null
+    val n = guardedLength(x, y)
+    if (n < 0) return null
     var d = 0.0
     var i = 0
     while (i < n) {
@@ -267,16 +276,14 @@ case class L2Squared(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Integer dot product over two array<long> columns in one codegen'd
-  * loop — the fused form of the int8 tier's aggregate∘zip_with long dot
-  * (Ann.ivfInt8TopK). Uses multiplyExact/addExact so an overflow throws
-  * exactly as the ANSI Multiply/Add fold it replaces would (the int8
-  * codes are |x| ≤ 127, so neither path can actually overflow). */
+/** Integer dot product over two array<bigint> columns in one codegen'd
+  * loop — the int8 tier's code dot (Ann.ivfInt8TopK). Arithmetic is
+  * always exact (multiplyExact/addExact): an overflow raises an error in
+  * every ANSI mode rather than wrapping. The int8 codes are |x| ≤ 127
+  * over 64 dims, so that caller cannot overflow. */
 case class LongDotProduct(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends ArrayPairKernel {
 
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = true
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_dot_long"
 
@@ -289,25 +296,11 @@ case class LongDotProduct(left: Expression, right: Expression)
           s"$prettyName expects (array<bigint>, array<bigint>), got ($lt, $rt)")
     }
 
-  /** Same null-element rule as VectorBinaryExpression (ADVICE r19 #1):
-    * a null slot nulls the declarative fold, and ArrayData.getLong on it
-    * would read garbage — guard emitted only when the type admits it. */
-  private def mayHaveNullElems: Boolean =
-    left.dataType.asInstanceOf[ArrayType].containsNull ||
-      right.dataType.asInstanceOf[ArrayType].containsNull
-
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) return null
-    val n = x.numElements()
-    if (mayHaveNullElems) {
-      var j = 0
-      while (j < n) {
-        if (x.isNullAt(j) || y.isNullAt(j)) return null
-        j += 1
-      }
-    }
+    val n = guardedLength(x, y)
+    if (n < 0) return null
     var acc = 0L
     var i = 0
     while (i < n) {
@@ -322,21 +315,12 @@ case class LongDotProduct(left: Expression, right: Expression)
       val i = ctx.freshName("i")
       val n = ctx.freshName("n")
       val acc = ctx.freshName("acc")
-      val j = ctx.freshName("j")
-      val nullPrepass =
-        if (!mayHaveNullElems) ""
-        else
-          s"""
-             |for (int $j = 0; $j < $n; $j++) {
-             |  if ($a.isNullAt($j) || $b.isNullAt($j)) { ${ev.isNull} = true; break; }
-             |}
-           """.stripMargin
       s"""
          |if ($a.numElements() != $b.numElements()) {
          |  ${ev.isNull} = true;
          |} else {
          |  int $n = $a.numElements();
-         |  $nullPrepass
+         |  ${nullPrepassCode(a, b, n, ev.isNull, ctx)}
          |  long $acc = 0L;
          |  if (!${ev.isNull}) {
          |    for (int $i = 0; $i < $n; $i++) {

@@ -2,7 +2,8 @@ package graft.similarity
 
 import graft.{Cols, QueryModule, Tables}
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.plans.{L2Squared, LongDotProduct}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumns, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -898,7 +899,10 @@ object Ann extends QueryModule {
         array_max(transform(col("qe"), x => abs(x.cast("double")))) / 127.0)
       .select(col("query_id"), col("qn"), col("pcell"), col("qscale"),
         q8(col("qe"), col("qscale")).as("qcodes"))
-    val intDot = aggregate(zip_with(col("codes"), col("qcodes"), _ * _), lit(0L), _ + _)
+    // exact integer dot (LongDotProduct): |code| ≤ 127 over 64 dims
+    // cannot overflow
+    val intDot = GraftColumns.column(LongDotProduct(
+      GraftColumns.expression(col("codes")), GraftColumns.expression(col("qcodes"))))
     val candidates = index
       .join(broadcast(probe), col("cell") === col("pcell") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), col("cell"),
@@ -1077,8 +1081,8 @@ object Ann extends QueryModule {
     * codes; candidates share a code in ANY table (union of buckets), then
     * exact cosine re-ranks. Recall grows with L at constant per-table
     * selectivity — the standard at-scale ANN shape: bucket equi-joins, no
-    * cross join, hyperplane dots fused into the native kernel by
-    * FuseDotProduct. Hash-green as of r5 (rpLshTopKSql; previously verified against the single-table
+    * cross join, hyperplane dots in the native DotProduct kernel
+    * (VectorFunctions.dot). Hash-green as of r5 (rpLshTopKSql; previously verified against the single-table
     * signBucket oracle family in AnnSpec); plane constants shared with
     * VectorFunctions.signBucket. */
   def rpLshTopK(s: SparkSession, d: String): DataFrame = {
@@ -1155,8 +1159,10 @@ object Ann extends QueryModule {
   // recall leak — spend the saved scan budget on re-rank depth.
   private val IvfPqReRank = 10 * K
 
+  /** Squared L2 distance (native L2Squared kernel); both sides are
+    * array<double> here — see L2Squared for why that matters. */
   private def l2sq(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)
+    GraftColumns.column(L2Squared(GraftColumns.expression(a), GraftColumns.expression(b)))
 
   /** Explode a vector frame into (vec_id, m, sub) subvector rows. */
   private def subvectors(df: DataFrame, vcol: String): DataFrame =

@@ -35,8 +35,9 @@ import org.apache.spark.sql.functions._
   *     is sign-canonicalized (largest-|component| made positive) so the
   *     basis is unique.
   *  3. Projection is a broadcast-literal dot product per component via
-  *     the native codegen [[VectorFunctions.dot]] — map-only, inside
-  *     whole-stage codegen, no second shuffle.
+  *     [[VectorFunctions.dot]], which places the native DotProduct kernel
+  *     in the plan — map-only, inside whole-stage codegen, no second
+  *     shuffle.
   *
   * At 100 TB only pass 1 touches the data, and its exchange carries
   * O(d² × tasks) cells. HASH-GREEN as of r5: even the eigensolve
