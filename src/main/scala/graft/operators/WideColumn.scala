@@ -803,20 +803,19 @@ object WideColumn extends QueryModule {
   // ---- SQL row-level DML: UPDATE / MERGE / predicate DELETE (r15) ---------
   /** The DML half of the SQL surface (`wc_sql_ddl` covers DDL): `UPDATE`,
     * `MERGE INTO`, and DELETE with a NON-KEY predicate, served through
-    * DSv2 group-based copy-on-write row-level operations
-    * (SupportsRowLevelOperations — the public interface Iceberg/Delta
-    * serve the same statements through). The operation pins one
-    * snapshot, its scans report exactly the files they plan
-    * (bucket-pruned + ck-slice-pruned), and the commit retires exactly
-    * that set in one conflict-validated flip — an `UPDATE ... WHERE
-    * pk = ?` rewrites one bucket's files, never the table
-    * (file-identity spec-asserted in TokenRangeRowLevelSpec). Script:
-    * load customers, UPDATE a balance bump for keys ≡ 3 (mod 10),
-    * DELETE the now-negative balances (non-key predicate — refused by
-    * the metadata-only SupportsDelete path, so this IS the rewrite
-    * path), then MERGE keys ≡ 0 (mod 7): matched rows take a renamed
-    * image, rows the DELETE removed re-insert with their original
-    * values. The oracle replays the identical script in SQL. */
+    * the DSv2 row-level delta operation (SupportsRowLevelOperations +
+    * SupportsDelta — the public interface Iceberg/Delta serve the same
+    * statements through). The operation pins one snapshot; each
+    * statement publishes a position vector over exactly the files that
+    * held its matched rows plus its new row images, or, above the
+    * table's `dml.fallback_rows` bound, rewrites those files in one
+    * conflict-validated flip. Script: load customers, UPDATE a balance
+    * bump for keys ≡ 3 (mod 10), DELETE the now-negative balances
+    * (non-key predicate — refused by the metadata-only SupportsDelete
+    * path, so this IS the row-level path), then MERGE keys ≡ 0 (mod 7):
+    * matched rows take a renamed image, rows the DELETE removed
+    * re-insert with their original values. The oracle replays the
+    * identical script in SQL. */
   private def sqlDmlDir(s: SparkSession, d: String): String =
     graft.PrebuiltDirs.cached("graft_connector_sqldml", d) { dir =>
       val cat = sqlCatalogOf(s, dir)
@@ -2362,15 +2361,16 @@ object WideColumn extends QueryModule {
       |ORDER BY c_custkey LIMIT 40""".stripMargin
 
   // ---- SQL merge-on-read DML (r16: SupportsDelta) --------------------------
-  /** The SQL statements themselves served MERGE-ON-READ: a table created
-    * with `TBLPROPERTIES('dml'='mor')` routes UPDATE / predicate-DELETE /
-    * MERGE through Spark's `SupportsDelta` protocol — matched rows arrive
-    * row-classified with their pk identity and `_file`, removals publish
-    * as a deletion vector bound to exactly the files that held them, new
-    * images append; NOTHING is rewritten (the builder REQUIRES file
-    * identity). A 1-row SQL UPDATE is one tiny appended file plus one
-    * tiny vector — Cassandra's write path reached from SQL. The oracle
-    * replays the statements relationally over raw orders. */
+  /** The SQL statements themselves served MERGE-ON-READ: every table
+    * routes UPDATE / predicate-DELETE / MERGE through Spark's
+    * `SupportsDelta` protocol — matched rows arrive row-classified with
+    * their `(_file, _pos)` position identity, removals publish as a
+    * deletion vector bound to exactly the files that held them, new
+    * images append; a statement below the `dml.fallback_rows` bound
+    * rewrites NOTHING (the builder REQUIRES file identity). A 1-row SQL
+    * UPDATE is one tiny appended file plus one tiny vector — Cassandra's
+    * write path reached from SQL. The oracle replays the statements
+    * relationally over raw orders. */
   private def sqlMorDir(s: SparkSession, d: String): String =
     graft.PrebuiltDirs.cached("graft_connector_sqlmor", d) { dir =>
       // per-dir catalog name + per-build view name (review r16: a fixed
@@ -2380,7 +2380,7 @@ object WideColumn extends QueryModule {
       s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ks")
       s.sql(s"""CREATE TABLE $cat.ks.orders
         (o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)
-        TBLPROPERTIES('pk'='o_orderkey', 'dml'='mor')""")
+        TBLPROPERTIES('pk'='o_orderkey')""")
       val src = s"src_$cat"
       Tables.orders(s, d)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -2433,7 +2433,7 @@ object WideColumn extends QueryModule {
     * message of a busy channel. r16's pk-grained vector refused
     * clustered tables (it would have tombstoned every ck sibling); the
     * POSITION vector (`_file` + `_pos`, the Delta/Iceberg DV shape)
-    * tombstones exactly the matched stored rows, so `dml='mor'` now
+    * tombstones exactly the matched stored rows, so the delta path now
     * serves the most reference-shaped workload: a one-row SQL UPDATE or
     * DELETE on (pk, ck) appends one tiny image + one tiny vector and
     * rewrites NOTHING (require-asserted below), ck siblings intact —
@@ -2446,7 +2446,7 @@ object WideColumn extends QueryModule {
       s.sql(s"""CREATE TABLE $cat.ks.corders
         (o_custkey BIGINT, o_orderkey BIGINT, o_orderstatus STRING,
          o_totalprice DOUBLE)
-        TBLPROPERTIES('pk'='o_custkey', 'ck'='o_orderkey', 'dml'='mor')""")
+        TBLPROPERTIES('pk'='o_custkey', 'ck'='o_orderkey')""")
       val src = s"srcck_$cat"
       Tables.orders(s, d)
         .select("o_custkey", "o_orderkey", "o_orderstatus", "o_totalprice")

@@ -193,22 +193,7 @@ final class TokenRangeCatalog extends TableCatalog with SupportsNamespaces
     props.put("path", path)
     TokenRangeSource.recordedPk(path).foreach(props.put("pk", _))
     TokenRangeSource.recordedCk(path).foreach(props.put("ck", _))
-    TokenRangeSource.recordedDml(path).foreach(props.put("dml", _))
-    // merge-on-read tables surface their pk as NOT NULL — truthful (the
-    // sink refuses null partition keys). Since r17 the delta row id is
-    // the (_file, _pos) metadata pair (both declared non-nullable), so
-    // this is no longer load-bearing for Spark's row-id nullability
-    // check — kept because it is simply the more accurate schema.
-    val served =
-      if (!TokenRangeSource.recordedDml(path).exists(_.equalsIgnoreCase("mor")))
-        schema
-      else {
-        val pkL = TokenRangeSource.recordedPk(path)
-          .map(_.split(',').map(_.trim.toLowerCase).toSet).getOrElse(Set.empty)
-        StructType(schema.fields.map(f =>
-          if (pkL(f.name.toLowerCase)) f.copy(nullable = false) else f))
-      }
-    new TokenRangeTable(served, new CaseInsensitiveStringMap(props))
+    new TokenRangeTable(schema, new CaseInsensitiveStringMap(props))
   }
 
   // ---- SQL time travel ------------------------------------------------------
@@ -448,20 +433,8 @@ final class TokenRangeCatalog extends TableCatalog with SupportsNamespaces
     ck.foreach(spec => TokenRangeSource.requireCkDomain(schema, spec, "table"))
     // dtype-domain check: every column must ride the sink
     TokenRangeSource.toParquet(schema)
-    // SQL-DML mode (r16): 'mor' = merge-on-read delta statements
-    // (deletion vectors). Clustered tables are served too since the
-    // vector went POSITION-grained (r17) — (file, ordinal) is the whole
-    // row identity, so ck siblings of a deleted row survive by
-    // construction. Validated HERE because the record is create-only
-    // (no ALTER re-mode).
-    val dml = Option(properties.get("dml")).map(_.trim.toLowerCase)
-      .filter(_.nonEmpty)
-    dml.foreach { m =>
-      require(Set("mor", "cow")(m),
-        s"TBLPROPERTIES('dml') must be 'mor' or 'cow', got '$m'")
-    }
-    // statement-size bound above which a mor DML falls back to the
-    // copy-on-write rewrite inside the same statement (r17)
+    // statement-size bound above which a SQL UPDATE / MERGE / predicate
+    // DELETE completes as a copy-on-write rewrite instead of a vector
     val fallbackRows = Option(properties.get("dml.fallback_rows"))
       .map(_.trim.toLong)
     fallbackRows.foreach(n => require(n >= 1,
@@ -499,7 +472,7 @@ final class TokenRangeCatalog extends TableCatalog with SupportsNamespaces
     // empty here (CREATE-then-INSERT, the CQL flow), and the _manifests
     // dir marks table existence
     TokenRangeSource.recordPk(dir.getAbsolutePath, pkCols.mkString(","),
-      ck, Some(schema.toDDL), dml, fallbackRows, index, insertMode)
+      ck, Some(schema.toDDL), fallbackRows, index, insertMode)
     // OPT-IN fragmentation auto-compaction (r18): a bucket reaching N
     // live files folds in the next append's tail (fileSweep)
     Option(properties.get("compact.files_per_bucket")).map(_.trim.toInt)

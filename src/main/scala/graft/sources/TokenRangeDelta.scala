@@ -6,19 +6,17 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** SQL MERGE-ON-READ row-level DML (r16, position grain r17):
-  * `SupportsDelta` — Spark's delta-based rewrite protocol, the public
-  * interface behind deletion-vector DML in the lakehouse formats. Where
-  * the group-based copy-on-write operation rewrites every file holding a
-  * matching row, the delta operation receives the matched rows
-  * THEMSELVES (delete/update/insert, each row carrying its
-  * `(_file, _pos)` position identity), stages ONLY the new row images as
-  * data files, and publishes the removals as a POSITION deletion vector
-  * (`_file` rel + `_pos` physical ordinal — the Delta/Iceberg DV shape)
-  * bound to exactly the files that held them — a 1-row SQL `UPDATE`
-  * appends one tiny file and one tiny vector instead of rewriting
-  * anything (Cassandra's write path, through SQL). Opt-in per table:
-  * `TBLPROPERTIES('dml'='mor')`.
+/** SQL row-level DML — every `UPDATE`, `MERGE INTO` and predicate
+  * `DELETE` (r16, position grain r17): `SupportsDelta` — Spark's
+  * delta-based rewrite protocol, the public interface behind
+  * deletion-vector DML in the lakehouse formats. The operation receives
+  * the matched rows THEMSELVES (delete/update/insert, each row carrying
+  * its `(_file, _pos)` position identity), stages ONLY the new row
+  * images as data files, and publishes the removals as a POSITION
+  * deletion vector (`_file` rel + `_pos` physical ordinal — the
+  * Delta/Iceberg DV shape) bound to exactly the files that held them —
+  * a 1-row SQL `UPDATE` appends one tiny file and one tiny vector
+  * instead of rewriting anything (Cassandra's write path, through SQL).
   *
   * POSITION identity (r17, VERDICT r16 #1/#4): the row id is the
   * immutable (file, stored ordinal), NOT the pk — so the statement is
@@ -34,7 +32,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * BULK statements FALL BACK, not refuse (r17, VERDICT r16 #3): a
   * statement tombstoning more rows than the table's
   * `dml.fallback_rows` bound (default 1M) completes through the
-  * copy-on-write rewrite inside the same commit — identical results,
+  * copy-on-write rewrite ([[TokenRangeOps.morFallbackRewrite]], a
+  * `flip`) inside the same commit — the statement's size, not a table
+  * property, chooses copy-on-write — identical results,
   * identical change-feed sidecar — because a huge vector would tax
   * every read until compaction while the rewrite pays once. Tombstones
   * stream from each task to a staged parquet sidecar as they arrive
@@ -46,7 +46,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * validates its bindings against the CAS base and the pinned version
   * ([[TokenRangeSource.publishManifest]] `dvBind`/`dvSeenVersion`), so a
   * racing rewrite fails the statement like a serializable-txn abort —
-  * the same contract as the copy-on-write path. */
+  * the same contract as the fallback's copy-on-write flip. */
 private[connector] final class TokenRangeDeltaOperation(
     cmd: RowLevelOperation.Command,
     tableSchema: StructType, options: CaseInsensitiveStringMap)
@@ -72,18 +72,20 @@ private[connector] final class TokenRangeDeltaOperation(
     val merged = new java.util.HashMap[String, String](options)
     merged.putAll(o)
     pinned.foreach(v => merged.put("version", v.toString))
-    // No runtime group filtering here, deliberately: Spark 4.1's
-    // RowLevelOperationRuntimeGroupFiltering matches only GROUP-based
-    // (ReplaceData) plans, and a delta operation wouldn't profit anyway
-    // — the matched-row scan is the statement's ONLY pass (cow needed
-    // the file prune because it re-reads pruned files' bystander rows;
-    // delta consumes matched rows directly, with static pushdown).
+    // the matched-row scan is the statement's ONLY pass: it consumes
+    // matched rows directly, pruned by static pushdown
     new TokenRangeScanBuilder(tableSchema, new CaseInsensitiveStringMap(merged))
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
-      override def build(): DeltaWrite = new DeltaWrite {
+      override def build(): DeltaWrite = new DeltaWrite with ClusteredWrite {
+        // row images sort like every sink write, so each bucket file stays
+        // ck-sorted; a pure DELETE writes no image (and its rows carry no
+        // data columns to sort on)
+        override def ckSpec: Option[String] =
+          if (info.schema().isEmpty) None
+          else TokenRangeSource.recordedCk(path)
         override def toBatch: DeltaBatchWrite =
           new TokenRangeDeltaBatchWrite(path, tableSchema, info.schema(),
             pinned, cmd)
@@ -196,9 +198,8 @@ private[connector] final class TokenRangeDeltaBatchWrite(path: String,
             dvBind = dvRel.map(dv => touchedRel.map(_ -> dv)).getOrElse(Nil),
             dvSeenVersion = pinned)
         }
+        TokenRangeOps.commitTail(spark, path, vectorPublished = dvRel.isDefined)
       }
-      TokenRangeOps.retentionSweep(path)
-      TokenRangeOps.vectorSweep(spark, path)
     } finally
       TokenRangeSource.deleteRecursively(TokenRangeSource.stagingDir(path, writeId))
   }

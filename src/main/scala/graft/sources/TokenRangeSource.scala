@@ -425,7 +425,6 @@ object TokenRangeSource {
 
   private[connector] def recordPk(path: String, pk: String,
       ck: Option[String] = None, schemaDdl: Option[String] = None,
-      dml: Option[String] = None,
       morFallbackRows: Option[Long] = None,
       index: Option[String] = None,
       insertMode: Option[String] = None): Unit = {
@@ -433,29 +432,15 @@ object TokenRangeSource {
     // allow re-keying (or re-clustering) a table either. The creation
     // SCHEMA is recorded beside the keys (r13 verdict #3) so later
     // subset-column appends can never shrink what inference sees — the
-    // schema is metadata, not a footer accident. `dml=mor` opts SQL
-    // row-level statements into the merge-on-read delta path (r16).
+    // schema is metadata, not a footer accident.
     manifestIO.createExclusive(
       new java.io.File(manifestDir(path), "table.properties").getPath,
       s"pk=$pk" + ck.map(c => s"\nck=$c").getOrElse("")
         + schemaDdl.map(d => s"\nschema=$d").getOrElse("")
-        + dml.map(m => s"\ndml=$m").getOrElse("")
         + morFallbackRows.map(n => s"\ndml.fallback_rows=$n").getOrElse("")
         + index.map(ix => s"\nindex=$ix").getOrElse("")
         + insertMode.map(m => s"\ninsert=$m").getOrElse(""))
     ()
-  }
-
-  /** The table's recorded SQL-DML mode: Some("mor") = row-level
-    * statements take the merge-on-read delta path (deletion vectors);
-    * absent/cow = group-based copy-on-write (the exact-under-duplicates
-    * default). */
-  private[connector] def recordedDml(path: String): Option[String] = {
-    val f = new java.io.File(manifestDir(path), "table.properties").getPath
-    if (!manifestIO.exists(f)) None
-    else manifestIO.read(f).split('\n').collectFirst {
-      case l if l.startsWith("dml=") => l.stripPrefix("dml=").trim
-    }
   }
 
   /** The table's recorded INSERT mode (r17): Some("upsert") = plain
@@ -480,12 +465,13 @@ object TokenRangeSource {
     }
   }
 
-  /** Statement-size bound above which a merge-on-read DML FALLS BACK to
-    * the copy-on-write rewrite plan inside the same statement (r17,
-    * VERDICT r16 #3: route, don't refuse): a vector tombstoning millions
-    * of rows would tax every subsequent read until compaction, while the
-    * group rewrite pays once at write time — the engine has both paths,
-    * so it picks. Tunable per table at CREATE via
+  /** Statement-size bound above which a SQL UPDATE / MERGE / predicate
+    * DELETE completes as a copy-on-write rewrite instead of publishing a
+    * position vector, inside the same statement: a vector tombstoning
+    * millions of rows would tax every subsequent read until compaction,
+    * while the rewrite pays once at write time. This bound is the only
+    * thing that chooses copy-on-write for SQL DML; every statement at or
+    * below it leaves a vector. Tunable per table at CREATE via
     * `TBLPROPERTIES('dml.fallback_rows'='N')`. */
   private[connector] val MorFallbackRowsDefault = 1000000L
   private[connector] def recordedMorFallbackRows(path: String): Long = {
@@ -736,7 +722,7 @@ object TokenRangeSource {
   //     deletes exactly the listed stored rows — the Delta/Iceberg DV
   //     shape. Row identity is (immutable file, ordinal), so it is exact
   //     under duplicate pk rows and on CLUSTERED tables; SQL
-  //     merge-on-read DML (`dml='mor'`) publishes this grain.
+  //     UPDATE / MERGE / predicate DELETE publish this grain.
 
   /** Recorded pk resolved against a table schema — the deletion-vector
     * merge key readers test suppression with. Empty when no pk is
@@ -787,14 +773,13 @@ object TokenRangeSource {
   private[connector] val ChangeTypeCol = "_change_type"
   private[connector] val CommitVersionCol = "_commit_version"
   // METADATA column: the data file (tb=<bucket>/<name>) serving each row
-  // — Spark's input_file_name as a DSv2 metadata column, and the GROUP
-  // IDENTITY runtime group filtering prunes row-level rewrites by
+  // — Spark's input_file_name as a DSv2 metadata column
   private[connector] val FileCol = "_file"
   // METADATA column: the row's PHYSICAL ordinal within its data file
   // (counting every stored row, including vector-suppressed ones — the
   // ordinal is a property of the immutable file, not of the visible
   // view). With `_file` it forms the POSITION row identity the
-  // merge-on-read delta path tombstones by (r17): exact under duplicate
+  // SQL row-level delta path tombstones by (r17): exact under duplicate
   // pk rows and on clustered tables, where the pk alone is not the row.
   private[connector] val PosCol = "_pos"
 
@@ -1912,12 +1897,8 @@ private[connector] final class TokenRangeTable(tableSchema: StructType,
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
 
   /** `_file` — the data file serving each row (`input_file_name` as a
-    * DSv2 metadata column, readable by any query) and the GROUP IDENTITY
-    * for row-level runtime group filtering: Spark computes the matching
-    * rows' `_file` set in a subquery and the copy-on-write scan prunes
-    * to exactly those files, so an UPDATE touching one file rewrites
-    * one file. Preserve flags OFF: the rewrite must NOT carry `_file`
-    * into the written rows (the task writers take table columns only). */
+    * DSv2 metadata column, readable by any query) and, with `_pos`, the
+    * row identity of SQL row-level statements. */
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] = Array(
     new org.apache.spark.sql.connector.catalog.MetadataColumn {
@@ -1927,11 +1908,10 @@ private[connector] final class TokenRangeTable(tableSchema: StructType,
       override def comment(): String =
         "data file (tb=<bucket>/<name>) serving the row"
       override def metadataInJSON(): String =
-        // PRESERVE on delete/update (r16): the DELTA path's writer
-        // receives each removed row's `_file` as its metadata — nulling
-        // it there would orphan the deletion vector. Group-based writes
-        // are unaffected: their write schema carries table columns only,
-        // so the preserved value never reaches a data file either way.
+        // PRESERVE on delete/update (r16): the delta writer receives
+        // each removed row's `_file` as its metadata — nulling it there
+        // would orphan the deletion vector. The value never reaches a
+        // data file: the write schema carries table columns only.
         """{"__preserve_on_delete":true,"__preserve_on_update":true,""" +
           """"__preserve_on_reinsert":false}"""
     },
@@ -1950,33 +1930,18 @@ private[connector] final class TokenRangeTable(tableSchema: StructType,
           """"__preserve_on_reinsert":false}"""
     })
 
-  /** SQL `UPDATE` / `MERGE INTO` / arbitrary-predicate `DELETE` (r15
-    * continuation): group-based COPY-ON-WRITE row-level operations — the
-    * public DSv2 surface Iceberg/Delta serve these statements through.
-    * Catalyst rewrites the statement into a ReplaceData plan: it scans
-    * the affected rows through [[TokenRangeRowLevelOperation
-    * .newScanBuilder]], computes the new row set, writes it through
-    * [[TokenRangeRowLevelOperation.newWriteBuilder]], and the commit
-    * retires EXACTLY the files the operation's scans planned — one
-    * conflict-validated atomic flip, same primitive as TokenRangeOps.
-    * pk-equality DELETEs still take the metadata-only [[SupportsDelete]]
-    * fast path (Spark prefers it when [[canDeleteWhere]] accepts). */
+  /** SQL `UPDATE` / `MERGE INTO` / arbitrary-predicate `DELETE`: the
+    * position-vector [[TokenRangeDeltaOperation]] (Spark's
+    * `SupportsDelta`). A statement at or below the table's
+    * `dml.fallback_rows` bound publishes a position vector plus its new
+    * row images; a larger one completes as a copy-on-write rewrite in the
+    * same commit. pk-equality DELETEs still take the metadata-only
+    * [[SupportsDelete]] fast path (Spark prefers it when
+    * [[canDeleteWhere]] accepts). */
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
-    () => {
-      // `TBLPROPERTIES('dml'='mor')` (r16): row-level statements take
-      // the MERGE-ON-READ delta path — matched rows arrive
-      // delete/update/insert-classified, removals publish as a deletion
-      // vector, new images append; nothing is rewritten. The catalog
-      // refuses the property on clustered tables (pk must be the whole
-      // row identity), so the dispatch here is a simple mode read.
-      val mor = Option(options.get("dml")).exists(_.equalsIgnoreCase("mor"))
-      if (mor)
-        new TokenRangeDeltaOperation(info.command(), tableSchema, options)
-      else
-        new TokenRangeRowLevelOperation(info.command(), tableSchema, options)
-    }
+    () => new TokenRangeDeltaOperation(info.command(), tableSchema, options)
   override def name(): String = s"token_range(${TokenRangeSource.pathOf(options)})"
   override def schema(): StructType = tableSchema
 
@@ -2196,109 +2161,8 @@ private[connector] final class TokenRangeTable(tableSchema: StructType,
   }
 }
 
-/** One SQL row-level statement's copy-on-write lifecycle (UPDATE /
-  * MERGE INTO / DELETE with a non-key predicate). The operation pins ONE
-  * snapshot; every scan Catalyst plans through it resolves that version
-  * and REPORTS the files it kept (bucket-pruned + ck-slice-pruned); the
-  * write retires exactly that union in the same flip that publishes the
-  * rewritten rows. Pruned-out files survive by reference — an
-  * `UPDATE ... WHERE pk = ?` rewrites one bucket's files, not the table.
-  * A racing rewrite that retired any planned file first fails the
-  * statement with [[ManifestConflictException]] (re-run it — the
-  * optimistic-concurrency contract every TokenRangeOps rewrite retries
-  * internally; a SQL statement surfaces it instead, like a serializable
-  * transaction abort). On a change-feed table the commit records a
-  * change sidecar as the MULTISET DIFF of the retired files' rows vs
-  * their staged replacements, CLASSIFIED by pk into true update
-  * pre/post image pairs, deletes and inserts (r16 — the same
-  * classification TokenRangeOps.upsert records; exact under duplicate
-  * keys, see stageSqlDmlSidecar). */
-private[connector] final class TokenRangeRowLevelOperation(
-    cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command,
-    tableSchema: StructType, options: CaseInsensitiveStringMap)
-    extends org.apache.spark.sql.connector.write.RowLevelOperation {
-
-  private val path = TokenRangeSource.pathOf(options)
-  private val pinned: Option[Int] = TokenRangeSource.currentVersion(path)
-  // one slot per SCAN OBJECT, holding its LATEST planned file set:
-  // runtime group filtering re-plans a scan with fewer files, and the
-  // retire set must track the set that actually EXECUTED. In Spark
-  // 4.1's RowLevelOperationRuntimeGroupFiltering the matching-rows
-  // subquery CLONES the write-back relation and shares its Scan, so its
-  // static planning and the write-back's runtime-narrowed re-plan land
-  // in ONE slot (put replaces; narrowed-last wins — verified by
-  // instrumentation under an all-columns predicate). Should a
-  // separately-BUILT full-schema scan ever register too (the shape the
-  // r15 advice flagged: a subquery whose `_file` + condition columns
-  // cover the table), the sound fold is the INTERSECTION of the
-  // registered sets, never the union: every registered set is a static
-  // or runtime over-approximation of the matching-rows file set on the
-  // same pinned version, and the write-back scan's runtime-narrowed set
-  // is exact — a union would retire files whose rows were never written
-  // back (silent loss of their bystander rows), an intersection yields
-  // exactly the executed set.
-  private val plannedBy =
-    new java.util.concurrent.ConcurrentHashMap[AnyRef, Seq[String]]()
-
-  override def command()
-      : org.apache.spark.sql.connector.write.RowLevelOperation.Command = cmd
-
-  /** `_file` rides the rewrite plan so Spark's
-    * RowLevelOperationRuntimeGroupFiltering can compute the matching
-    * rows' file set and prune the copy-on-write scan to it. */
-  override def requiredMetadataAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(org.apache.spark.sql.connector.expressions.Expressions
-      .column(TokenRangeSource.FileCol))
-
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder = {
-    val merged = new java.util.HashMap[String, String](options)
-    merged.putAll(o)
-    pinned.foreach(v => merged.put("version", v.toString))
-    new TokenRangeScanBuilder(tableSchema, new CaseInsensitiveStringMap(merged),
-      onPlanned = (scan, rels) => { plannedBy.put(scan, rels); () })
-  }
-
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo): WriteBuilder = {
-    val pk = TokenRangeSource.recordedPk(path)
-      .orElse(Option(options.get("pk")))
-      .getOrElse(throw new IllegalArgumentException(
-        s"token-range row-level ${cmd} at $path requires a recorded pk"))
-    val names = info.schema().fieldNames
-    val pkIdx = pk.split(',').map(_.trim).toSeq.map(n =>
-      names.indexWhere(_.equalsIgnoreCase(n)) match {
-        case -1 => throw new IllegalArgumentException(
-          s"token-range row-level ${cmd} at $path: pk column '$n' missing " +
-            s"from the rewrite schema ${info.schema().catalogString}")
-        case i => i
-      })
-    val kind = cmd match {
-      case org.apache.spark.sql.connector.write.RowLevelOperation.Command.DELETE =>
-        "delete"
-      case _ => "upsert" // UPDATE / MERGE: content-changing replacement
-    }
-    new TokenRangeWriteBuilder(path, info.schema(), pkIdx,
-      ckName = TokenRangeSource.recordedCk(path),
-      opKind = Some(kind),
-      lateReplaceRel = () => {
-        val sets = scala.collection.mutable.ArrayBuffer.empty[Set[String]]
-        plannedBy.values().forEach(rs => sets += rs.toSet)
-        if (sets.isEmpty) Set.empty[String] else sets.reduce(_ intersect _)
-      },
-      // Spark 4's ReplaceData prepends `__row_operation` to every row
-      // (constant for group-based writes) — the task writers skip it
-      rowOpColumn = true,
-      // the operation's scans read at the pinned version and MERGE its
-      // deletion vectors — declaring the pin lets publishManifest verify
-      // no vector landed on a retired file after it (conflict → re-run)
-      dvSeenVersion = pinned)
-  }
-}
-
 private[connector] final class TokenRangeScanBuilder(tableSchema: StructType,
-    options: CaseInsensitiveStringMap,
-    onPlanned: (AnyRef, Seq[String]) => Unit = null)
+    options: CaseInsensitiveStringMap)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
 
@@ -2608,14 +2472,6 @@ private[connector] final class TokenRangeScanBuilder(tableSchema: StructType,
       // one giant batch. AvailableNow still drains to its pinned end,
       // in multiple micro-batches.
       Option(options.get("maxVersionsPerTrigger")).map(_.toInt),
-      // full-schema scans report their planned files: the write-back
-      // scan always projects every table column (ReplaceData writes
-      // whole rows), and the group-filter subquery does too when the
-      // DML condition covers the schema — the retire set INTERSECTS
-      // the registered sets (see TokenRangeRowLevelOperation.plannedBy)
-      if (onPlanned != null && tableSchema.fields.forall(f =>
-        required.fields.exists(_.name.equalsIgnoreCase(f.name)))) onPlanned
-      else null,
       // fresh-stream start version (inclusive) — the Kafka
       // startingOffsets analog; ignored by batch scans
       Option(options.get("startingVersion")).map(_.toInt),
@@ -2636,11 +2492,9 @@ private[connector] final class TokenRangeScan(path: String,
     pkBuckets: Option[Set[Int]], ckSlice: Seq[(String, Long, Long)],
     splits: Int, version: Option[Int] = None,
     maxVersionsPerTrigger: Option[Int] = None,
-    onPlanned: (AnyRef, Seq[String]) => Unit = null,
     startingVersion: Option[Int] = None,
     bloomProbes: Seq[(String, DataType, Seq[Any], Boolean)] = Nil)
-    extends Scan with Batch
-    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
+    extends Scan with Batch {
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -2649,40 +2503,6 @@ private[connector] final class TokenRangeScan(path: String,
   // description() — (kept, total) within the bucket-pruned candidate set
   private var ckKept = 0
   private var ckTotal = 0
-
-  // ---- runtime GROUP filtering (SQL row-level copy-on-write) -------------
-  // Spark's RowLevelOperationRuntimeGroupFiltering computes the matching
-  // rows' `_file` set in a subquery and hands it here; the scan re-plans
-  // to exactly those files, and the operation's retire set follows (the
-  // onPlanned hook fires on every planning with the CURRENT set). Only
-  // the write-back scan of a row-level operation advertises the
-  // attribute — plain reads never runtime-filter.
-  @volatile private var runtimeKeepRel: Option[Set[String]] = None
-
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    if (onPlanned != null)
-      Array(org.apache.spark.sql.connector.expressions.Expressions
-        .column(TokenRangeSource.FileCol))
-    else Array.empty
-
-  override def filter(filters: Array[Filter]): Unit = {
-    def strOf(v: Any): Option[String] = v match {
-      case s: String => Some(s)
-      case u: UTF8String => Some(u.toString)
-      case _ => None
-    }
-    val keeps = filters.toSeq.flatMap {
-      case In(a, vs) if a.equalsIgnoreCase(TokenRangeSource.FileCol) =>
-        val ss = vs.toSeq.flatMap(strOf)
-        if (ss.length == vs.length) Some(ss.toSet) else None
-      case EqualTo(a, v) if a.equalsIgnoreCase(TokenRangeSource.FileCol) =>
-        strOf(v).map(Set(_))
-      case _ => None // unknown shapes prune nothing (conservative)
-    }
-    if (keeps.nonEmpty)
-      runtimeKeepRel = Some(keeps.reduce(_ intersect _))
-  }
 
   /** Clustering-slice file prune: keep a file iff, for EVERY pushed ck
     * column's closed interval, SOME row group's footer [min,max] stats
@@ -2711,14 +2531,6 @@ private[connector] final class TokenRangeScan(path: String,
         }
       }
     }
-
-  // memoized per runtime-filter STATE: runtime group filtering legally
-  // re-plans after filter() arrives, so the plan is a function of
-  // runtimeKeepRel — repeated calls in one state reuse the array, a
-  // narrowed state recomputes (and re-reports the narrowed set through
-  // onPlanned, which REPLACES the scan's slot — never unions)
-  @volatile private var plannedState
-      : (Option[Set[String]], Array[InputPartition]) = null
 
   private def relOf(abs: String): String = {
     val f = new java.io.File(abs)
@@ -2787,17 +2599,15 @@ private[connector] final class TokenRangeScan(path: String,
       case None => byBucket
     }
     val nRanges = math.min(splits, math.max(1, kept.size))
-    val keepRel = runtimeKeepRel
     // contiguous assignment over the PRESENT buckets (index within
     // `kept`, not the absolute ring position): a sparse or pruned layout
     // whose populated buckets cluster in one half of the ring must still
     // honor the requested split count (r9 review finding)
-    val parts: Array[TokenRangePartition] = kept.zipWithIndex
+    kept.zipWithIndex
       .groupBy { case (_, i) => i * nRanges / kept.size }
       .toSeq.sortBy(_._1)
       .map { case (_, group) =>
         val candidates = group.flatMap(_._1._2)
-          .filter(f => keepRel.forall(_(relOf(f))))
         // cheapest prune first: cached footer stats, then the bloom
         // (one footer+bloom read per file, point-lookup paths only)
         val files = candidates.filter(ckIntersects).filter(bloomKeep)
@@ -2809,26 +2619,12 @@ private[connector] final class TokenRangeScan(path: String,
             dvByRel.getOrElse(relOf(f), Array.empty[String])).toArray)
       }
       .filter(_.files.nonEmpty)
-      .toArray
-    // copy-on-write hook (SQL row-level ops): report exactly the files
-    // this scan will read — bucket-pruned, zone-pruned AND
-    // runtime-group-filtered — keyed by this scan (REPLACE, not union:
-    // a re-plan after runtime filtering narrows the retire set)
-    if (onPlanned != null)
-      onPlanned(this, parts.flatMap(_.files).toSeq.map(relOf))
-    parts.toArray[InputPartition]
+      .toArray[InputPartition]
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val keep = runtimeKeepRel
-    val st = plannedState
-    if (st != null && st._1 == keep) st._2
-    else {
-      val parts = computePartitions()
-      plannedState = (keep, parts)
-      parts
-    }
-  }
+  // planned once per scan: Spark may ask for the partitions repeatedly
+  private lazy val planned: Array[InputPartition] = computePartitions()
+  override def planInputPartitions(): Array[InputPartition] = planned
 
   private def pkFieldsForDv: Array[(String, DataType, Boolean)] =
     TokenRangeSource.dvKeyFieldsOf(path, full)
@@ -3496,47 +3292,52 @@ private[connector] final class TokenRangeWriteBuilder(path: String,
     ckName: Option[String] = None, rollRows: Long = Long.MaxValue,
     declaredDdl: Option[String] = None, opKind: Option[String] = None,
     cdfRel: Option[String] = None,
-    lateReplaceRel: () => Set[String] = null,
-    rowOpColumn: Boolean = false,
     dvBind: Seq[(String, String)] = Nil,
     dvSeenVersion: Option[Int] = None)
     extends WriteBuilder with SupportsTruncate {
   private var doTruncate = false
   override def truncate(): WriteBuilder = { doTruncate = true; this }
-  /** PHYSICAL clustering order (r13 verdict #1), the Spark-first way:
-    * the Write DECLARES `ORDER BY ck` to Catalyst via
-    * [[RequiresDistributionAndOrdering]] and the planner inserts the
-    * within-partition sort — no hand-rolled buffering in the task
-    * writers, and every caller (direct appends, TokenRangeOps rewrites,
-    * streaming foreachBatch ingest) inherits it from the one declaration.
-    * Each task's row stream arrives ck-sorted, and per-bucket routing is
-    * an order-preserving filter of that stream, so every bucket FILE is
-    * ck-sorted — Cassandra's in-SSTable clustering order. With `rollRows`
-    * the sorted stream additionally splits into disjoint ck slabs per
-    * file, which is what lets the footer-stats slice prune select a file
-    * subset on ANY ingest order. Distribution stays unspecified: the ring
-    * hash owns placement, the sort owns order. */
-  override def build(): Write = new Write
-      with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+  override def build(): Write = new Write with ClusteredWrite {
+    override def ckSpec: Option[String] = ckName
     override def toBatch: BatchWrite =
       new TokenRangeBatchWrite(path, writeSchema, pkIdx, doTruncate, replaceRel,
-        ckName, rollRows, declaredDdl, opKind, cdfRel, lateReplaceRel,
-        rowOpColumn, dvBind, dvSeenVersion)
-    override def requiredDistribution()
-        : org.apache.spark.sql.connector.distributions.Distribution =
-      org.apache.spark.sql.connector.distributions.Distributions.unspecified()
-    override def distributionStrictlyRequired(): Boolean = false
-    override def requiredOrdering()
-        : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-      ckName.map { spec =>
-        TokenRangeSource.parseCkSpec(spec).map { case (c, asc) =>
-          org.apache.spark.sql.connector.expressions.Expressions.sort(
-            org.apache.spark.sql.connector.expressions.Expressions.column(c),
-            if (asc) org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING
-            else org.apache.spark.sql.connector.expressions.SortDirection.DESCENDING)
-        }.toArray
-      }.getOrElse(Array.empty)
+        ckName, rollRows, declaredDdl, opKind, cdfRel, dvBind, dvSeenVersion)
   }
+}
+
+/** PHYSICAL clustering order (r13 verdict #1), the Spark-first way: a
+  * write DECLARES `ORDER BY ck` to Catalyst via
+  * [[org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering]]
+  * and the planner inserts the within-partition sort — no hand-rolled
+  * buffering in the task writers. The sink's write and the SQL
+  * row-level delta write both mix this in, so every caller (direct
+  * appends, TokenRangeOps rewrites, streaming foreachBatch ingest, SQL
+  * UPDATE/MERGE images) inherits it from the one declaration. Each
+  * task's row stream arrives ck-sorted, and per-bucket routing is an
+  * order-preserving filter of that stream, so every bucket FILE is
+  * ck-sorted — Cassandra's in-SSTable clustering order. With `rollRows`
+  * the sorted stream additionally splits into disjoint ck slabs per
+  * file, which is what lets the footer-stats slice prune select a file
+  * subset on ANY ingest order. Distribution stays unspecified: the ring
+  * hash owns placement, the sort owns order. */
+private[connector] trait ClusteredWrite
+    extends org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+  /** The clustering spec the written rows must follow; None = no order. */
+  def ckSpec: Option[String]
+  override def requiredDistribution()
+      : org.apache.spark.sql.connector.distributions.Distribution =
+    org.apache.spark.sql.connector.distributions.Distributions.unspecified()
+  override def distributionStrictlyRequired(): Boolean = false
+  override def requiredOrdering()
+      : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
+    ckSpec.map { spec =>
+      TokenRangeSource.parseCkSpec(spec).map { case (c, asc) =>
+        org.apache.spark.sql.connector.expressions.Expressions.sort(
+          org.apache.spark.sql.connector.expressions.Expressions.column(c),
+          if (asc) org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING
+          else org.apache.spark.sql.connector.expressions.SortDirection.DESCENDING)
+      }.toArray
+    }.getOrElse(Array.empty)
 }
 
 private[connector] final class TokenRangeBatchWrite(path: String,
@@ -3544,18 +3345,9 @@ private[connector] final class TokenRangeBatchWrite(path: String,
     replaceRel: Set[String] = Set.empty, ckName: Option[String] = None,
     rollRows: Long = Long.MaxValue, declaredDdl: Option[String] = None,
     opKind: Option[String] = None, cdfRel: Option[String] = None,
-    lateReplaceRel: () => Set[String] = null,
-    rowOpColumn: Boolean = false,
     dvBind: Seq[(String, String)] = Nil,
     dvSeenVersion: Option[Int] = None)
     extends BatchWrite {
-
-  /** Files this commit retires. A SQL row-level operation (copy-on-write
-    * UPDATE/MERGE/DELETE-by-predicate) resolves its set LATE — the
-    * operation's scans plan during job EXECUTION, after this write was
-    * built — so the commit re-reads it here, at the flip. */
-  private def effectiveReplaceRel: Set[String] =
-    replaceRel ++ Option(lateReplaceRel).map(_()).getOrElse(Set.empty)
 
   // app-unique token in file names AND the staging dir: partitionId/taskId
   // restart near 0 in every new application, so a second app appending to
@@ -3570,7 +3362,7 @@ private[connector] final class TokenRangeBatchWrite(path: String,
     // truncate applied at manifest-flip time
     new java.io.File(path).mkdirs()
     TokenRangeWriterFactory(path, writeSchema, pkIdx, writeId, rollRows,
-      rowOpColumn, TokenRangeSource.indexIdxOf(path, writeSchema))
+      TokenRangeSource.indexIdxOf(path, writeSchema))
   }
 
   /** The atomicity point: move every staged file into its `tb=<k>` dir,
@@ -3584,34 +3376,16 @@ private[connector] final class TokenRangeBatchWrite(path: String,
       case TokenRangeCommit(files) => files
       case _ => Array.empty[String]
     }
-    // resolve the retire set ONCE (a SQL row-level op binds it late, from
-    // what its scans planned) — the publish below and the change sidecar
-    // must agree on it
-    val replace = effectiveReplaceRel
-    // CHANGE DATA FEED for SQL row-level rewrites: the commit records the
-    // MULTISET DIFF of the retired files' rows vs their staged
-    // replacements, classified by pk into update pre/post image pairs,
-    // deletes and inserts (exact under duplicate keys). Computed
-    // BEFORE the lock (two reads + two exceptAll shuffles — the CDF
-    // write-time trade); retired files are still visible, staged files
-    // readable in place.
-    val commitCdfRel: Option[String] =
-      if (cdfRel.isDefined || !rowOpColumn || replace.isEmpty ||
-          !TokenRangeSource.changeFeedEnabled(path)) cdfRel
-      else Some(TokenRangeOps.stageSqlDmlSidecar(
-        org.apache.spark.sql.SparkSession.active, path,
-        replace.toSeq.map(rel => new java.io.File(path, rel).getAbsolutePath),
-        staged.toSeq, dvSeenVersion))
     // INSERT-IS-UPSERT (r17, clustered + intra-batch LWW r18): a plain
     // append on an `insert='upsert'` table publishes a KEY deletion
     // vector over the incoming keys' pre-existing files in the SAME
     // flip — CQL's INSERT semantic (server.py's whole write path) at
     // blind-write cost. Resolved BEFORE the lock (reads staged files in
     // place + the pinned manifest); only genuine appends qualify —
-    // rewrites, truncates, row-level ops and the delta path keep their
-    // own exact semantics.
-    val insertUpsert = !doTruncate && replace.isEmpty && opKind.isEmpty &&
-      dvBind.isEmpty && !rowOpColumn && staged.nonEmpty &&
+    // rewrites, truncates and vector-binding commits keep their own
+    // exact semantics.
+    val insertUpsert = !doTruncate && replaceRel.isEmpty && opKind.isEmpty &&
+      dvBind.isEmpty && staged.nonEmpty &&
       TokenRangeSource.recordedInsertMode(path).contains("upsert")
     val iuPlan: Option[TokenRangeOps.InsertUpsertPlan] =
       if (!insertUpsert) None
@@ -3661,8 +3435,8 @@ private[connector] final class TokenRangeBatchWrite(path: String,
     }
     val (effDvBind, effCdfRel, effSeen) = iuPlan match {
       case Some(TokenRangeOps.InsertUpsertBindPlan(bind, cdf, pin)) =>
-        (bind, cdf.orElse(commitCdfRel), pin)
-      case _ => (dvBind, commitCdfRel, dvSeenVersion)
+        (bind, cdf.orElse(cdfRel), pin)
+      case _ => (dvBind, cdfRel, dvSeenVersion)
     }
     // the bind the publish loop FINALLY committed (ADVICE r18: a retry
     // can degrade the bind to Nil — the racer removed every affected
@@ -3742,13 +3516,13 @@ private[connector] final class TokenRangeBatchWrite(path: String,
         while (!published) {
           try {
             TokenRangeSource.publishManifest(path, placedRel, doTruncate,
-              replace,
+              replaceRel,
               // `#op` kind: the caller's declaration wins; otherwise
               // classify from shape (insert-upsert / truncate /
               // undeclared-rewrite / append)
               opKind.getOrElse(
                 if (doTruncate) "truncate"
-                else if (replace.nonEmpty) "rewrite"
+                else if (replaceRel.nonEmpty) "rewrite"
                 else if (bind.nonEmpty) "upsert"
                 else "append"),
               cdf, bind, seen)
@@ -3773,7 +3547,7 @@ private[connector] final class TokenRangeBatchWrite(path: String,
                     s"insert-upsert at $path: vector plan re-resolved " +
                       "to a cow plan mid-retry")
                 case None =>
-                  bind = Nil; cdf = commitCdfRel; seen = dvSeenVersion
+                  bind = Nil; cdf = cdfRel; seen = dvSeenVersion
               }
               // the superseded attempt's _dv sidecars are referenced by
               // NO manifest (that publish failed) and not by the new
@@ -3788,20 +3562,11 @@ private[connector] final class TokenRangeBatchWrite(path: String,
           }
         }
       }
-      // retention automation (r13 #8): OUTSIDE the lock and after the flip
-      // — a sweep failure or a concurrent sweep can never fail this commit
-      TokenRangeOps.retentionSweep(path)
-      // the vector sweep is best-effort for the same reason (ADVICE r17:
-      // it runs inside the user's statement tail — a sweep failure must
-      // not fail an INSERT that already committed)
-      if (finalBind.nonEmpty && dvBind.isEmpty)
-        try TokenRangeOps.vectorSweep(
-          org.apache.spark.sql.SparkSession.active, path)
-        catch { case scala.util.control.NonFatal(_) => () }
+      TokenRangeOps.commitTail(org.apache.spark.sql.SparkSession.active,
+        path, vectorPublished = finalBind.nonEmpty)
       // fragmentation sweep (r18, OPT-IN via compact.files_per_bucket):
       // plain appends only — rewrites/compacts never re-trigger it
-      if (!doTruncate && replace.isEmpty && opKind.isEmpty && !rowOpColumn &&
-          staged.nonEmpty)
+      if (!doTruncate && replaceRel.isEmpty && opKind.isEmpty && staged.nonEmpty)
         TokenRangeOps.fileSweep(
           org.apache.spark.sql.SparkSession.active, path)
     } finally
@@ -3824,44 +3589,18 @@ private[connector] final case class TokenRangeCommit(files: Array[String])
 
 private[connector] final case class TokenRangeWriterFactory(path: String,
     writeSchema: StructType, pkIdx: Seq[Int], writeId: String,
-    rollRows: Long = Long.MaxValue, rowOpColumn: Boolean = false,
-    indexIdx: Seq[Int] = Nil)
+    rollRows: Long = Long.MaxValue, indexIdx: Seq[Int] = Nil)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new TokenRangeDataWriter(path, writeSchema, pkIdx, partitionId, taskId,
-      writeId, rollRows, rowOpColumn, indexIdx)
+      writeId, rollRows, indexIdx)
 }
 
 private[connector] final class TokenRangeDataWriter(path: String,
     writeSchema: StructType, pkIdx: Seq[Int], partitionId: Int, taskId: Long,
     writeId: String, rollRows: Long = Long.MaxValue,
-    rowOpColumn: Boolean = false, indexIdx: Seq[Int] = Nil)
+    indexIdx: Seq[Int] = Nil)
     extends DataWriter[InternalRow] {
-
-  /** SQL row-level writes (ReplaceData, Spark 4) MAY prepend
-    * [[org.apache.spark.sql.catalyst.util.RowDeltaUtils.OPERATION_COLUMN]]
-    * (`__row_operation`) to every row: the plain WritingSparkTask hands
-    * the marker through (offset 1), while DataAndMetadataWritingSparkTask
-    * (chosen when the operation requires metadata attributes, e.g.
-    * `_file` for runtime group filtering) consumes it and hands clean
-    * data rows (offset 0). Latched from the FIRST row's arity — all rows
-    * of one task share a layout; any other arity still fails loudly. For
-    * group-based copy-on-write every emitted row is a write (delta
-    * encodings require SupportsDelta, which this sink does not
-    * implement), so reading past the marker is always correct. */
-  private var fieldOffset = -1
-  private def resolveOffset(row: InternalRow): Int = {
-    if (fieldOffset < 0) {
-      val extra = row.numFields - writeSchema.fields.length
-      require(extra == 0 || (rowOpColumn && extra == 1),
-        s"token-range sink: row arity ${row.numFields} != write schema " +
-          s"${writeSchema.catalogString}" +
-          (if (rowOpColumn) " (+0 or +1 op column)" else "") +
-          " — the plan handed rows in a layout the writer did not declare")
-      fieldOffset = extra
-    }
-    fieldOffset
-  }
 
   private val msgType = TokenRangeSource.toParquet(writeSchema)
   private val factory = new SimpleGroupFactory(msgType)
@@ -3915,12 +3654,11 @@ private[connector] final class TokenRangeDataWriter(path: String,
   private val pkDts = pkIdx.map(writeSchema(_).dataType)
   private val pkScratch = new Array[Any](pkIdxArr.length)
 
-  // `i` below is always a SCHEMA index; row accesses shift by fieldOffset
   private def pkValue(row: InternalRow, i: Int): Any =
     writeSchema(i).dataType match {
-      case LongType => row.getLong(i + fieldOffset)
-      case IntegerType => row.getInt(i + fieldOffset)
-      case StringType => row.getUTF8String(i + fieldOffset)
+      case LongType => row.getLong(i)
+      case IntegerType => row.getInt(i)
+      case StringType => row.getUTF8String(i)
       case other => throw new IllegalArgumentException(
         s"unsupported partition-key type $other")
     }
@@ -3929,12 +3667,10 @@ private[connector] final class TokenRangeDataWriter(path: String,
     if (pkIdxArr.length == 1) {
       val i = pkIdxArr(0)
       writeSchema(i).dataType match {
-        case LongType => TokenLayout.bucketOfValue(row.getLong(i + fieldOffset))
-        case IntegerType =>
-          TokenLayout.bucketOfValue(row.getInt(i + fieldOffset).toLong)
+        case LongType => TokenLayout.bucketOfValue(row.getLong(i))
+        case IntegerType => TokenLayout.bucketOfValue(row.getInt(i).toLong)
         case StringType =>
-          TokenLayout.bucketOfStringValue(
-            row.getUTF8String(i + fieldOffset).toString)
+          TokenLayout.bucketOfStringValue(row.getUTF8String(i).toString)
         case other => throw new IllegalArgumentException(
           s"unsupported partition-key type $other")
       }
@@ -3951,36 +3687,34 @@ private[connector] final class TokenRangeDataWriter(path: String,
     }
 
   override def write(row: InternalRow): Unit = {
-    val off = resolveOffset(row)
-    require(row.numFields == writeSchema.fields.length + off,
+    require(row.numFields == writeSchema.fields.length,
       s"token-range sink: row arity ${row.numFields} != write schema " +
-        s"${writeSchema.catalogString} (+$off op column) — the " +
-        "plan handed rows in a layout the writer did not declare")
+        s"${writeSchema.catalogString} — the plan handed rows in a layout " +
+        "the writer did not declare")
     var pi = 0
     while (pi < pkIdxArr.length) {
-      require(!row.isNullAt(pkIdxArr(pi) + fieldOffset),
+      require(!row.isNullAt(pkIdxArr(pi)),
         "token-range sink: partition key must be non-null (CQL parity)")
       pi += 1
     }
     val g = factory.newGroup()
     var i = 0
     while (i < writeSchema.fields.length) {
-      val r = i + fieldOffset
-      if (!row.isNullAt(r)) {
+      if (!row.isNullAt(i)) {
         val f = writeSchema.fields(i)
         f.dataType match {
-          case LongType => g.add(f.name, row.getLong(r))
-          case IntegerType => g.add(f.name, row.getInt(r))
-          case DoubleType => g.add(f.name, row.getDouble(r))
-          case FloatType => g.add(f.name, row.getFloat(r))
-          case BooleanType => g.add(f.name, row.getBoolean(r))
-          case StringType => g.add(f.name, row.getUTF8String(r).toString)
+          case LongType => g.add(f.name, row.getLong(i))
+          case IntegerType => g.add(f.name, row.getInt(i))
+          case DoubleType => g.add(f.name, row.getDouble(i))
+          case FloatType => g.add(f.name, row.getFloat(i))
+          case BooleanType => g.add(f.name, row.getBoolean(i))
+          case StringType => g.add(f.name, row.getUTF8String(i).toString)
           // µs since epoch — the exact INT64 InternalRow already holds
-          case TimestampType => g.add(f.name, row.getLong(r))
+          case TimestampType => g.add(f.name, row.getLong(i))
           case dt: DecimalType =>
-            g.add(f.name, row.getDecimal(r, dt.precision, dt.scale).toUnscaledLong)
+            g.add(f.name, row.getDecimal(i, dt.precision, dt.scale).toUnscaledLong)
           case BinaryType =>
-            g.add(f.name, Binary.fromConstantByteArray(row.getBinary(r)))
+            g.add(f.name, Binary.fromConstantByteArray(row.getBinary(i)))
           case other => throw new IllegalArgumentException(s"unsupported $other")
         }
       }
@@ -4107,7 +3841,9 @@ object TokenRangeOps {
 
   /** The one place a planned change becomes a commit. Every flip declares
     * the version its rows were read at (`dvSeenVersion`), so a vector
-    * bound after the pin conflicts the publish instead of being dropped. */
+    * bound after the pin conflicts the publish instead of being dropped.
+    * A flip that writes rows commits through the sink, which runs
+    * [[commitTail]]; a metadata-only flip runs it here. */
   private def flip(path: String, pinned: Option[Int], f: Flip): Unit = {
     val cdfRel = f.changes.filter(_ => TokenRangeSource.changeFeedEnabled(path))
       .map(c => writeCdfSidecar(path, c()))
@@ -4140,6 +3876,7 @@ object TokenRangeOps {
             removeRel = f.retire.toSet, opKind = f.opKind, cdfRel = cdfRel,
             dvBind = bind, dvSeenVersion = pinned)
         }
+        commitTail(SparkSession.active, path, vectorPublished = bind.nonEmpty)
     }
   }
 
@@ -4147,8 +3884,7 @@ object TokenRangeOps {
     * listing as its first version, then per attempt pin the CURRENT
     * version, let the verb `plan` its change at that pin (None: nothing
     * to do) and [[flip]] it; a flip that loses a race re-runs the whole
-    * attempt from the fresh snapshot ([[withConflictRetry]]). A published
-    * vector triggers the binding-bound [[vectorSweep]]. Returns the
+    * attempt from the fresh snapshot ([[withConflictRetry]]). Returns the
     * committed change. */
   private[sources] def rewrite(spark: SparkSession, path: String,
       what: String)(plan: Option[Int] => Option[Flip]): Option[Flip] = {
@@ -4157,15 +3893,13 @@ object TokenRangeOps {
     // listing to pin (and a rewrite of it must not create it)
     if (TokenRangeSource.currentVersion(path).isEmpty && new java.io.File(path).exists)
       TokenRangeSource.withCommitLock(path)(TokenRangeSource.pinLegacyListing(path))
-    val done = withConflictRetry(what) {
+    withConflictRetry(what) {
       val pinned = TokenRangeSource.currentVersion(path)
       onSnapshotPinned()
       val f = plan(pinned)
       f.foreach(flip(path, pinned, _))
       f
     }
-    if (done.exists(_.isInstanceOf[Bind])) vectorSweep(spark, path)
-    done
   }
 
   /** A fresh deletion-vector sidecar name (`_dv/<uuid>`). */
@@ -4963,13 +4697,12 @@ object TokenRangeOps {
         .drop(DvRelLin, DvPosLin))
   }
 
-  /** Copy-on-write COMPLETION of a merge-on-read statement that matched
+  /** Copy-on-write COMPLETION of a SQL row-level statement that matched
     * more rows than the table's `dml.fallback_rows` bound (r17, VERDICT
     * r16 #3 — route, don't refuse): the touched files' survivors (their
     * old vectors merged, this statement's tombstoned positions dropped)
     * plus the staged row images republish while the touched files
-    * retire, in one conflict-validated flip — exactly the plan the
-    * group-based path would have produced, reached from the delta
+    * retire, in one conflict-validated flip, reached from the delta
     * commit. `changes` images the statement from the same tombstone
     * frame the vector path records, so the feed is identical either way. */
   private[connector] def morFallbackRewrite(spark: SparkSession,
@@ -5299,14 +5032,14 @@ object TokenRangeOps {
     * [[retentionSweep]] (a failed sweep never fails the commit that
     * triggered it; the debt stays visible in `describeTable`'s
     * `deletion_vectors` and the next commit retries). */
-  private[connector] def vectorSweep(spark: SparkSession, path: String): Unit =
+  private def vectorSweep(spark: SparkSession, path: String): Unit =
     try {
       val thr = dvCompactAfter(path)
       if (thr > 0 && TokenRangeSource.recordedPk(path).isDefined) {
         compactVectors(spark, path, thr); ()
       }
     } catch {
-      case e: Exception =>
+      case scala.util.control.NonFatal(e) =>
         System.err.println(s"[token-range] vector sweep at $path failed: " +
           s"${e.getMessage} — bindings keep accumulating; run " +
           "TokenRangeOps.compactVectors manually if this persists")
@@ -5685,19 +5418,6 @@ object TokenRangeOps {
       new java.io.File(TokenRangeSource.manifestDir(path), "cdf.properties").getPath,
       "cdf=false")
 
-  /** Stage a change sidecar (table columns + `_change_type`) under
-    * `_cdf/<uuid>` BEFORE the manifest flip that references it: readers
-    * only ever see sidecars pinned by a published `#cdf` header, a lost
-    * CAS race orphans the dir, and [[vacuum]] reaps orphans age-gated
-    * (a sidecar younger than the staging TTL may belong to an in-flight
-    * rewrite). */
-  /** Change sidecar for a SQL row-level rewrite (UPDATE/MERGE/predicate
-    * DELETE through SupportsRowLevelOperations): the MULTISET diff of
-    * the retired files' rows against their staged replacements. Updates
-    * encode as delete+insert pairs — exact under duplicate partition
-    * keys (no join fan-out; `exceptAll` is bag semantics) and
-    * fold-equivalent to pre/post images for every delta consumer.
-    * Called by the sink's commit BEFORE the manifest flip. */
   /** Change rows for a MERGE-ON-READ SQL statement: `tombs` is the
     * position tombstone frame (`_file` rel + `_pos` — the vector's
     * content), `touchedRel` the files that held the removed rows at the
@@ -5749,51 +5469,12 @@ object TokenRangeOps {
     }
   }
 
-  private[connector] def stageSqlDmlSidecar(spark: SparkSession,
-      path: String, retiredAbs: Seq[String], stagedAbs: Seq[String],
-      dvAt: Option[Int] = None): String = {
-    val liter = org.apache.spark.sql.functions.lit _
-    val ct = TokenRangeSource.ChangeTypeCol
-    // retired files read VECTOR-MERGED at the op's pinned version: a row
-    // a deletion vector already removed must not re-record as deleted
-    val old = readFilesAligned(spark, path, retiredAbs, dvAt)
-    val nw =
-      if (stagedAbs.isEmpty) old.limit(0)
-      else readFilesAligned(spark, path, stagedAbs, dvAt)
-    // multiset diff of retired vs staged rows, then CLASSIFIED by pk
-    // (VERDICT r15 #2 — true UPDATE images, what TokenRangeOps.upsert
-    // already records): keys present on BOTH sides of the diff are
-    // update pre/post image pairs, retired-only keys are deletes,
-    // staged-only keys inserts. Multiset-exact under duplicate keys
-    // (pre ⊎ delete ≡ the retired diff, post ⊎ insert ≡ the staged
-    // diff), and fold-equivalent by construction (the incremental-agg
-    // fold weighs update_preimage like delete, update_postimage like
-    // insert). Tables with no recorded pk keep the delete+insert
-    // encoding — there is no key to pair on.
-    val oldD = old.exceptAll(nw)
-    val newD = nw.exceptAll(old)
-    val changes = TokenRangeSource.recordedPk(path) match {
-      case Some(pk) =>
-        val pkCols = pk.split(',').map(_.trim).toSeq.map(n =>
-          old.schema.fields.find(_.name.equalsIgnoreCase(n))
-            .map(_.name).getOrElse(n))
-        val updKeys = oldD.select(pkCols.map(col): _*).distinct()
-          .join(newD.select(pkCols.map(col): _*).distinct(), pkCols, "inner")
-        oldD.join(updKeys, pkCols, "left_semi")
-          .withColumn(ct, liter("update_preimage"))
-          .unionByName(oldD.join(updKeys, pkCols, "left_anti")
-            .withColumn(ct, liter("delete")))
-          .unionByName(newD.join(updKeys, pkCols, "left_semi")
-            .withColumn(ct, liter("update_postimage")))
-          .unionByName(newD.join(updKeys, pkCols, "left_anti")
-            .withColumn(ct, liter("insert")))
-      case None =>
-        oldD.withColumn(ct, liter("delete"))
-          .unionByName(newD.withColumn(ct, liter("insert")))
-    }
-    writeCdfSidecar(path, changes)
-  }
-
+  /** Stage a change sidecar (table columns + `_change_type`) under
+    * `_cdf/<uuid>` BEFORE the manifest flip that references it: readers
+    * only ever see sidecars pinned by a published `#cdf` header, a lost
+    * CAS race orphans the dir, and [[vacuum]] reaps orphans age-gated
+    * (a sidecar younger than the staging TTL may belong to an in-flight
+    * rewrite). */
   private[connector] def writeCdfSidecar(path: String,
       changes: DataFrame): String = {
     val rel = s"_cdf/${java.util.UUID.randomUUID().toString.take(12)}"
@@ -5851,12 +5532,6 @@ object TokenRangeOps {
         .getOrElse("0"))
   }
 
-  /** The post-commit sweep hook: reap history beyond the recorded
-    * retention, best-effort. Called by [[TokenRangeBatchWrite.commit]]
-    * after its own lock is released, and only if the lock is FREE (a
-    * busy table defers to the next commit — never a convoy on the hot
-    * write path; r14 review); each commit past the bound retires at most
-    * its own overhang, so the amortized cost is O(1) versions. */
   /** Consecutive skipped/failed sweeps per table, for the operator signal
     * below (ADVICE r14: a crashed committer's leftover lock — or any
     * persistent vacuum failure — invisibly suppressed retention forever:
@@ -5865,7 +5540,13 @@ object TokenRangeOps {
     new java.util.concurrent.ConcurrentHashMap[String, Int]()
   private val SweepSkipWarnAfter = 3
 
-  private[connector] def retentionSweep(path: String): Unit =
+  /** The post-commit sweep hook: reap history beyond the recorded
+    * retention, best-effort. Runs in [[commitTail]], after the
+    * commit's lock is released, and only if the lock is FREE (a
+    * busy table defers to the next commit — never a convoy on the hot
+    * write path; r14 review); each commit past the bound retires at most
+    * its own overhang, so the amortized cost is O(1) versions. */
+  private def retentionSweep(path: String): Unit =
     try retentionKeep(path).foreach { keep =>
       val vs = TokenRangeSource.versions(path)
       if (vs.size > keep) {
@@ -5901,10 +5582,22 @@ object TokenRangeOps {
             "if this persists")
       }
     } catch {
-      case e: Exception => // never fail the caller's commit — but say so
+      case scala.util.control.NonFatal(e) => // never fail the caller's commit — but say so
         val skips = sweepSkips.merge(path, 1, (a, b) => a + b)
         if (skips <= SweepSkipWarnAfter)
           System.err.println(s"[token-range] retention sweep at $path failed: " +
             s"${e.getMessage}")
     }
+
+  /** What every commit runs once after its manifest flip: the sink's
+    * commit, the SQL delta commit and [[flip]]'s metadata-only branch.
+    * The retention sweep always runs; the vector sweep runs when the
+    * commit published a deletion vector. Both are best-effort: a sweep
+    * failure is logged and never fails a statement that already
+    * committed (a retry would apply it a second time). */
+  private[connector] def commitTail(spark: SparkSession, path: String,
+      vectorPublished: Boolean): Unit = {
+    retentionSweep(path)
+    if (vectorPublished) vectorSweep(spark, path)
+  }
 }

@@ -325,7 +325,7 @@ class TokenRangeDvSpec extends SparkSpec {
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
     spark.sql(s"CREATE NAMESPACE $cat.ks")
     spark.sql(s"""CREATE TABLE $cat.ks.t (pk BIGINT, v STRING)
-      TBLPROPERTIES('pk'='pk', 'dml'='mor')""")
+      TBLPROPERTIES('pk'='pk')""")
     spark.sql(s"INSERT INTO $cat.ks.t SELECT id, concat('a', id) FROM range(0, 64)")
     val path = new java.io.File(new java.io.File(wh, "ks"), "t").getAbsolutePath
     val before = TokenRangeOps.liveFiles(path).toSet

@@ -105,6 +105,16 @@ class TokenRangeMaintenanceSpec extends SparkSpec {
         .write.format(fmt).option("pk", "pk")
         .option("schema", "pk BIGINT, v STRING").mode("append").save(dir)
     }
+    assert(TokenRangeSource.versions(dir).size <= 3,
+      "retention=3 must bound history across appends")
+    // metadata-only commits (vector deletes publish no data file) run the
+    // same post-commit sweep: four vectors in four distinct buckets do not
+    // grow the history past the bound
+    val victims = (0L until 8L).groupBy(TokenLayout.bucketOfValue)
+      .values.map(_.head).toSeq.sorted.take(4)
+    assert(victims.size == 4, s"need 4 keys in distinct buckets, got $victims")
+    victims.foreach(k => TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(k), mode = "dv"))
+    assert(TokenRangeSource.dvBindings(dir).nonEmpty, "the deletes must publish vectors")
     val vs = TokenRangeSource.versions(dir)
     assert(vs.size <= 3, s"retention=3 must bound history, got ${vs.size} versions")
     // every RETAINED version stays pinned-readable (time travel preserved
@@ -114,7 +124,7 @@ class TokenRangeMaintenanceSpec extends SparkSpec {
         .option("version", v.toString).load(dir).count()
     }
     val cur = spark.read.format(fmt).option("pk", "pk").load(dir)
-    assert(cur.count() == 8)
+    assert(cur.count() == 8 - victims.size)
     // versions BELOW the window are gone — vacuumed manifests, not limbo
     val exOld = intercept[Exception] {
       spark.read.format(fmt).option("pk", "pk")

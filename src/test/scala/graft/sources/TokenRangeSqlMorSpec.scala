@@ -3,15 +3,16 @@ package graft.sources.connector
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** SQL MERGE-ON-READ DML (r16, position grain r17):
-  * `TBLPROPERTIES('dml'='mor')` routes UPDATE / MERGE / predicate-DELETE
-  * through `SupportsDelta` — matched rows arrive row-classified,
-  * removals publish as a POSITION deletion vector (`_file` + `_pos`)
-  * bound to exactly the files that held them, new images append.
+/** SQL MERGE-ON-READ DML (r16, position grain r17): every table routes
+  * UPDATE / MERGE / predicate-DELETE through `SupportsDelta` — matched
+  * rows arrive row-classified, removals publish as a POSITION deletion
+  * vector (`_file` + `_pos`) bound to exactly the files that held them,
+  * new images append.
   * Load-bearing claims:
   *   - a small SQL DELETE/UPDATE writes NO rewrite: every pre-existing
   *     data file survives by identity (UPDATE appends only its images);
-  *   - results are exactly the copy-on-write table's results;
+  *   - results are exactly the results of the copy-on-write completion
+  *     a `dml.fallback_rows` bound of 1 forces;
   *   - pk-changing UPDATEs move the row identity correctly;
   *   - MERGE classifies matched updates and unmatched inserts;
   *   - with the change feed on, the statement records TRUE update
@@ -44,7 +45,7 @@ class TokenRangeSqlMorSpec extends SparkSpec {
   test("mor UPDATE/DELETE write no rewrite: pre-existing files survive by identity") {
     val (cat, wh) = freshCat("ident")
     spark.sql(s"""CREATE TABLE $cat.ks.t (pk BIGINT, v STRING, n BIGINT)
-      TBLPROPERTIES('pk'='pk', 'dml'='mor')""")
+      TBLPROPERTIES('pk'='pk')""")
     (0 until 4).foreach { r =>
       spark.sql(s"INSERT INTO $cat.ks.t SELECT id, concat('a', id), id " +
         s"FROM range(${r * 32}, ${(r + 1) * 32})")
@@ -68,8 +69,10 @@ class TokenRangeSqlMorSpec extends SparkSpec {
 
   test("mor statements are result-equal to copy-on-write statements") {
     val (cat, wh) = freshCat("eq")
+    // 'c': every statement below matches more than one row, so a bound of
+    // 1 completes each of them as a copy-on-write rewrite
     for (name <- Seq("m", "c")) {
-      val prop = if (name == "m") ", 'dml'='mor'" else ""
+      val prop = if (name == "c") ", 'dml.fallback_rows'='1'" else ""
       spark.sql(s"""CREATE TABLE $cat.ks.$name (pk BIGINT, v STRING, n BIGINT)
         TBLPROPERTIES('pk'='pk'$prop)""")
       spark.sql(s"INSERT INTO $cat.ks.$name SELECT id, concat('a', id), id " +
@@ -85,7 +88,11 @@ class TokenRangeSqlMorSpec extends SparkSpec {
     }
     val m = spark.sql(s"SELECT * FROM $cat.ks.m ORDER BY pk").collect().map(_.toSeq)
     val c = spark.sql(s"SELECT * FROM $cat.ks.c ORDER BY pk").collect().map(_.toSeq)
+    assert(m.length == 70, s"unexpected row count ${m.length}")
     assert(m.toSeq == c.toSeq, "merge-on-read must equal copy-on-write")
+    assert(TokenRangeSource.dvBindings(tablePath(wh, "m")).nonEmpty)
+    assert(TokenRangeSource.dvBindings(tablePath(wh, "c")).isEmpty,
+      "the forced fallback must publish no vector")
     // and the mor table never rewrote: its original files are all live
     assert(TokenRangeOps.liveFiles(tablePath(wh, "m")).size
       > TokenRangeOps.liveFiles(tablePath(wh, "c")).size,
@@ -95,7 +102,7 @@ class TokenRangeSqlMorSpec extends SparkSpec {
   test("pk-changing UPDATE moves the row identity (tombstone old, append new)") {
     val (cat, _) = freshCat("pkmove")
     spark.sql(s"""CREATE TABLE $cat.ks.t (pk BIGINT, v STRING)
-      TBLPROPERTIES('pk'='pk', 'dml'='mor')""")
+      TBLPROPERTIES('pk'='pk')""")
     spark.sql(s"INSERT INTO $cat.ks.t SELECT id, concat('a', id) FROM range(0, 10)")
     spark.sql(s"UPDATE $cat.ks.t SET pk = 1000 WHERE pk = 3")
     val keys = spark.sql(s"SELECT pk FROM $cat.ks.t").collect()
@@ -108,16 +115,19 @@ class TokenRangeSqlMorSpec extends SparkSpec {
   test("mor DML records TRUE update images on a feed table; compact applies the vectors") {
     val (cat, wh) = freshCat("cdf")
     spark.sql(s"""CREATE TABLE $cat.ks.t (pk BIGINT, v STRING)
-      TBLPROPERTIES('pk'='pk', 'dml'='mor')""")
+      TBLPROPERTIES('pk'='pk')""")
     spark.sql(s"INSERT INTO $cat.ks.t SELECT id, concat('a', id) FROM range(0, 16)")
     val path = tablePath(wh, "t")
     TokenRangeOps.enableChangeFeed(path)
     spark.sql(s"UPDATE $cat.ks.t SET v = 'new5' WHERE pk = 5")
     spark.sql(s"DELETE FROM $cat.ks.t WHERE v = 'a9'")
+    // a value-preserving UPDATE still records its image pair (Delta's CDF)
+    spark.sql(s"UPDATE $cat.ks.t SET v = v WHERE pk = 2")
     val feed = spark.sql(s"SELECT _change_type, pk, v FROM $cat.ks.`t$$changes`")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2)))
     assert(feed.count(t => t._1 == "update_preimage" && t._2 == 5L && t._3 == "a5") == 1)
     assert(feed.count(t => t._1 == "update_postimage" && t._2 == 5L && t._3 == "new5") == 1)
+    assert(feed.count(t => t._1.startsWith("update_") && t._2 == 2L && t._3 == "a2") == 2)
     assert(feed.count(t => t._1 == "delete" && t._2 == 9L) == 1)
     // compaction applies the accumulated vectors and drops the bindings
     TokenRangeOps.compact(spark, path, "pk")
@@ -132,7 +142,7 @@ class TokenRangeSqlMorSpec extends SparkSpec {
     // the reference's messages shape: PRIMARY KEY (channel_id, message_id)
     spark.sql(s"""CREATE TABLE $cat.ks.msgs
       (channel_id BIGINT, message_id BIGINT, body STRING)
-      TBLPROPERTIES('pk'='channel_id', 'ck'='message_id', 'dml'='mor')""")
+      TBLPROPERTIES('pk'='channel_id', 'ck'='message_id')""")
     spark.sql(s"INSERT INTO $cat.ks.msgs SELECT id % 8, id, concat('m', id) " +
       "FROM range(0, 64)")
     val path = tablePath(wh, "msgs")
@@ -168,7 +178,7 @@ class TokenRangeSqlMorSpec extends SparkSpec {
   test("duplicate-pk rows: a predicate DML removes only the matched rows (position exactness)") {
     val (cat, wh) = freshCat("dup")
     spark.sql(s"""CREATE TABLE $cat.ks.t (pk BIGINT, v STRING)
-      TBLPROPERTIES('pk'='pk', 'dml'='mor')""")
+      TBLPROPERTIES('pk'='pk')""")
     // blind appends create THREE rows of pk=1 with different payloads
     spark.sql(s"INSERT INTO $cat.ks.t VALUES (1, 'keep_a'), (2, 'x2')")
     spark.sql(s"INSERT INTO $cat.ks.t VALUES (1, 'drop_me'), (3, 'x3')")
@@ -189,16 +199,11 @@ class TokenRangeSqlMorSpec extends SparkSpec {
     assert(TokenRangeSource.dvBindings(tablePath(wh, "t")).nonEmpty)
   }
 
-  test("bad dml modes / fallback bounds are refused at CREATE") {
+  test("bad fallback bounds are refused at CREATE") {
     val (cat, _) = freshCat("refuse")
-    val ex2 = intercept[Exception] {
-      spark.sql(s"""CREATE TABLE $cat.ks.bad2 (pk BIGINT, v STRING)
-        TBLPROPERTIES('pk'='pk', 'dml'='wat')""")
-    }
-    assert(ex2.getMessage.contains("'mor' or 'cow'"), ex2.getMessage)
     val ex3 = intercept[Exception] {
       spark.sql(s"""CREATE TABLE $cat.ks.bad3 (pk BIGINT, v STRING)
-        TBLPROPERTIES('pk'='pk', 'dml'='mor', 'dml.fallback_rows'='0')""")
+        TBLPROPERTIES('pk'='pk', 'dml.fallback_rows'='0')""")
     }
     assert(ex3.getMessage.contains("fallback_rows"), ex3.getMessage)
   }
@@ -207,7 +212,7 @@ class TokenRangeSqlMorSpec extends SparkSpec {
     val (cat, wh) = freshCat("fb")
     // tiny fallback bound so the test drives both sides of the routing
     spark.sql(s"""CREATE TABLE $cat.ks.t (pk BIGINT, v STRING, n BIGINT)
-      TBLPROPERTIES('pk'='pk', 'dml'='mor', 'dml.fallback_rows'='16')""")
+      TBLPROPERTIES('pk'='pk', 'dml.fallback_rows'='16')""")
     spark.sql(s"INSERT INTO $cat.ks.t SELECT id, concat('a', id), id " +
       "FROM range(0, 128)")
     val path = tablePath(wh, "t")
@@ -240,7 +245,7 @@ class TokenRangeSqlMorSpec extends SparkSpec {
     val (cat, wh) = freshCat("fbcdf")
     for ((name, bound) <- Seq(("small", "1000"), ("big", "2"))) {
       spark.sql(s"""CREATE TABLE $cat.ks.$name (pk BIGINT, v STRING)
-        TBLPROPERTIES('pk'='pk', 'dml'='mor', 'dml.fallback_rows'='$bound')""")
+        TBLPROPERTIES('pk'='pk', 'dml.fallback_rows'='$bound')""")
       spark.sql(s"INSERT INTO $cat.ks.$name SELECT id, concat('a', id) " +
         "FROM range(0, 16)")
       TokenRangeOps.enableChangeFeed(tablePath(wh, name))
@@ -255,5 +260,40 @@ class TokenRangeSqlMorSpec extends SparkSpec {
     assert(s == b, s"feeds must agree:\n vector: $s\n fallback: $b")
     assert(s.count(_._1 == "update_preimage") == 4)
     assert(s.count(_._1 == "update_postimage") == 4)
+  }
+
+  test("UPDATE and MERGE images are ck-sorted like every sink write: each live bucket file stays monotone") {
+    val (cat, wh) = freshCat("ckorder")
+    spark.sql(s"""CREATE TABLE $cat.ks.t (pk BIGINT, ck BIGINT, v STRING)
+      TBLPROPERTIES('pk'='pk', 'ck'='ck DESC')""")
+    // two appends into ONE bucket (one partition key) with interleaved ck
+    // values: each file is ck-sorted, but a scan of the bucket reads the
+    // even file's rows before the odd file's
+    spark.sql(s"INSERT INTO $cat.ks.t SELECT 1, id * 2, 'e' FROM range(0, 16)")
+    spark.sql(s"INSERT INTO $cat.ks.t SELECT 1, id * 2 + 1, 'o' FROM range(0, 16)")
+    val path = tablePath(wh, "t")
+    val before = liveRel(path)
+    // matches every row of both files, well under the fallback bound:
+    // the images append as new files beside a vector
+    spark.sql(s"UPDATE $cat.ks.t SET v = 'u' WHERE pk = 1")
+    val after = liveRel(path)
+    assert(before.subsetOf(after) && (after -- before).nonEmpty)
+    def assertSorted(): Unit = liveRel(path).foreach { rel =>
+      val cks = spark.read.parquet(new java.io.File(path, rel).getAbsolutePath)
+        .select("ck").collect().map(_.getLong(0)).toSeq
+      assert(cks == cks.sorted.reverse,
+        s"$rel must be sorted by ck DESC, got ${cks.take(8)}...")
+    }
+    assertSorted()
+    assert(spark.sql(s"SELECT ck FROM $cat.ks.t WHERE v = 'u'")
+      .collect().map(_.getLong(0)).sorted.toSeq == (0L until 32L))
+    // MERGE images (matched updates and inserts) take the same order
+    spark.sql(s"""MERGE INTO $cat.ks.t AS t
+      USING (SELECT 1L AS pk, id AS ck FROM range(16, 48)) AS s
+      ON t.pk = s.pk AND t.ck = s.ck
+      WHEN MATCHED THEN UPDATE SET t.v = 'm'
+      WHEN NOT MATCHED THEN INSERT (pk, ck, v) VALUES (s.pk, s.ck, 'i')""")
+    assertSorted()
+    assert(spark.sql(s"SELECT count(*) FROM $cat.ks.t").head().getLong(0) == 48L)
   }
 }

@@ -270,7 +270,7 @@ class TokenRangeSqlOpsSpec extends SparkSpec {
   test("`t$files` metadata table: file-grain triage through plain SQL (r18)") {
     val (cat, wh) = freshCat("files")
     spark.sql(s"""CREATE TABLE $cat.ks.t (pk BIGINT, ck BIGINT, v STRING)
-      TBLPROPERTIES('pk'='pk', 'ck'='ck', 'dml'='mor')""")
+      TBLPROPERTIES('pk'='pk', 'ck'='ck')""")
     spark.sql(s"INSERT INTO $cat.ks.t " +
       "SELECT id % 3, id, concat('a', id) FROM range(0, 30)")
     spark.sql(s"INSERT INTO $cat.ks.t " +
@@ -311,7 +311,7 @@ class TokenRangeSqlOpsSpec extends SparkSpec {
   test("`t$history` metadata table: DESCRIBE HISTORY by name through plain SQL (r17)") {
     val (cat, wh) = freshCat("hist")
     spark.sql(s"CREATE TABLE $cat.ks.t (pk BIGINT, v STRING) " +
-      "TBLPROPERTIES('pk'='pk', 'dml'='mor')")
+      "TBLPROPERTIES('pk'='pk')")
     spark.sql(s"INSERT INTO $cat.ks.t SELECT id, concat('a', id) FROM range(0, 16)")
     spark.sql(s"INSERT INTO $cat.ks.t SELECT id, concat('b', id) FROM range(16, 24)")
     spark.sql(s"DELETE FROM $cat.ks.t WHERE v = 'a3'") // position vector
