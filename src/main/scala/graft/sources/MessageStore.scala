@@ -206,8 +206,7 @@ final class MessageStore(spark: SparkSession, keyspace: String) {
       // appended mutation and folds LWW itself sees identical content,
       // so it skips this.
       else Some(TokenRangeOps.Replace(
-        spark.read.format(provider).option("pk", "username")
-          .options(pinned.map(v => "version" -> v.toString).toMap).load(dir)
+        TokenRangeOps.readTableFiles(spark, dir, snapshotRel, pinned)
           .withColumn("rn", row_number().over(usersPk))
           .filter(col("rn") === 1)
           .select("user_id", "username", "email", "password", "write_seq"),

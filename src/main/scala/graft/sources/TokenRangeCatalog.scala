@@ -382,6 +382,16 @@ final class TokenRangeCatalog extends TableCatalog with SupportsNamespaces
         .map(n => Identifier.of(Array("system"), n)).toArray
     else Array.empty
 
+  /** The TBLPROPERTIES keys CREATE TABLE honours. */
+  private val CreateProperties = Set("pk", "ck", "dml.fallback_rows", "insert",
+    "index", "compact.files_per_bucket")
+  /** The keys Spark itself reserves on a table. */
+  private val SparkProperties = Set(TableCatalog.PROP_COMMENT,
+    TableCatalog.PROP_COLLATION, TableCatalog.PROP_LOCATION,
+    TableCatalog.PROP_PROVIDER, TableCatalog.PROP_OWNER,
+    TableCatalog.PROP_EXTERNAL, TableCatalog.PROP_IS_MANAGED_LOCATION,
+    TableCatalog.PROP_TABLE_TYPE)
+
   private def pinnedTable(ident: Identifier, v: Int): Table = {
     if (!tableExists(ident))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
@@ -408,6 +418,18 @@ final class TokenRangeCatalog extends TableCatalog with SupportsNamespaces
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(
         catalogName +: ident.namespace().toSeq :+ ident.name())
     loadNamespaceMetadata(ident.namespace()) // keyspace must exist (CQL parity)
+    // an unknown key is refused, not dropped: a misspelt or stale
+    // property would otherwise leave the table without the behaviour it
+    // names. Spark's reserved keys and OPTIONS (`option.`) pass.
+    properties.keySet.asScala.foreach { k =>
+      require(CreateProperties(k) ||
+          SparkProperties(k) || k.startsWith("option."),
+        if (k == "retention")
+          "TBLPROPERTIES('retention') is set after creation: use ALTER TABLE … " +
+            "SET TBLPROPERTIES('retention'=N)"
+        else s"unknown TBLPROPERTIES key '$k' — a token-range table takes " +
+          CreateProperties.toSeq.sorted.mkString(", "))
+    }
     val pk = Option(properties.get("pk")).map(_.trim).filter(_.nonEmpty)
       .getOrElse(throw new IllegalArgumentException(
         "CREATE TABLE on a token-range catalog requires TBLPROPERTIES" +

@@ -108,9 +108,7 @@ final class TokenRangeSource extends TableProvider {
     // formats this mirrors). The pin is the `#edits` count the manifest
     // recorded at publish; pre-r15 manifests lack it and serve the
     // current view (documented legacy behavior).
-    val pinned = Option(options.get("version")).map(_.toInt)
-      .orElse(Option(options.get("asOfMillis")).map(m =>
-        TokenRangeSource.versionAsOf(path, m.toLong)))
+    val pinned = TokenRangeSource.pinnedVersion(options)
     val base = pinned.flatMap(v => TokenRangeSource.storedSchemaAt(path, v))
       .orElse(
         // bootstrap path for FIRST writes: a fresh keyspace table has no
@@ -405,6 +403,19 @@ object TokenRangeSource {
     segCache.computeIfAbsent(abs, p =>
       manifestIO.read(p).split('\n').toSeq.filter(_.nonEmpty))
   }
+
+  /** The version a read pins: an explicit `version`, or an `asOfMillis`
+    * timestamp resolved through the manifest history (TIMESTAMP AS OF —
+    * the number is the precise pin, the timestamp the convenience). None
+    * reads the current version. */
+  private[connector] def pinnedVersion(options: CaseInsensitiveStringMap): Option[Int] =
+    Option(options.get("version")).map(_.toInt)
+      .orElse(Option(options.get("asOfMillis")).map(m =>
+        versionAsOf(pathOf(options), m.toLong)))
+
+  /** The `splits` read option: how many token ranges a scan plans. */
+  private[connector] def splitsOf(options: CaseInsensitiveStringMap): Int =
+    math.max(1, Option(options.get("splits")).map(_.toInt).getOrElse(4))
 
   private[connector] def bucketOfRel(rel: String): Int =
     rel.takeWhile(_ != '/').stripPrefix("tb=").toInt
@@ -753,6 +764,24 @@ object TokenRangeSource {
           .map(f => (f.name, f.dataType, false))
       })
 
+  /** The table-relative name (`tb=<k>/<name>`) of a data file. */
+  private[connector] def relOf(abs: String): String = {
+    val f = new java.io.File(abs)
+    s"${f.getParentFile.getName}/${f.getName}"
+  }
+
+  /** Each vector-bound data file's bound vector parquet files at
+    * `version` (current when None), each `_dv` dir listed once. */
+  private[connector] def dvFilesByRel(path: String,
+      version: Option[Int]): Map[String, Array[String]] = {
+    val bind = dvBindings(path, version)
+    val dirFiles = bind.map(_._2).distinct
+      .map(dv => dv -> parquetFiles(new java.io.File(path, dv))).toMap
+    bind.groupBy(_._1).map { case (rel, bs) =>
+      rel -> bs.flatMap(b => dirFiles(b._2)).distinct.toArray
+    }
+  }
+
   /** `(dataRel, dvRel)` bindings visible at `version` (current when
     * None). Empty for manifest-less legacy tables. */
   private[connector] def dvBindings(path: String,
@@ -773,7 +802,6 @@ object TokenRangeSource {
   private[connector] val ChangeTypeCol = "_change_type"
   private[connector] val CommitVersionCol = "_commit_version"
   // METADATA column: the data file (tb=<bucket>/<name>) serving each row
-  // — Spark's input_file_name as a DSv2 metadata column
   private[connector] val FileCol = "_file"
   // METADATA column: the row's PHYSICAL ordinal within its data file
   // (counting every stored row, including vector-suppressed ones — the
@@ -902,21 +930,7 @@ object TokenRangeSource {
     val rels = visibleRelFiles(path, Some(filesVersion)).map(_._2)
     val snapFiles = checkedDataAbs(path, rels, filesVersion)
     if (snapFiles.isEmpty) return Nil
-    val dvByRel: Map[String, Array[String]] = {
-      val bind = dvBindings(path, Some(filesVersion))
-      if (bind.isEmpty) Map.empty
-      else {
-        val dirFiles = bind.map(_._2).distinct.map(dv =>
-          dv -> parquetFiles(new java.io.File(path, dv))).toMap
-        bind.groupBy(_._1).map { case (rel, bs) =>
-          rel -> bs.flatMap(b => dirFiles(b._2)).distinct.toArray
-        }
-      }
-    }
-    val relOfAbs = (abs: String) => {
-      val f = new java.io.File(abs)
-      s"${f.getParentFile.getName}/${f.getName}"
-    }
+    val dvByRel = dvFilesByRel(path, Some(filesVersion))
     val n = math.max(1, math.min(splits, snapFiles.size))
     snapFiles.zipWithIndex
       .groupBy { case (_, i) => i * n / snapFiles.size }
@@ -925,7 +939,7 @@ object TokenRangeSource {
         val fs = g.map(_._1)
         TokenRangeCdfPartition(fs.toArray, Some(changeType), stampVersion,
           if (dvByRel.isEmpty) Array.empty
-          else fs.map(f => dvByRel.getOrElse(relOfAbs(f),
+          else fs.map(f => dvByRel.getOrElse(relOf(f),
             Array.empty[String])).toArray)
       }
   }
@@ -1844,6 +1858,16 @@ object TokenLayout {
     (token * Buckets / Ring).toInt
   }
 
+  /** Owning bucket of a single-column key literal, for the key types the
+    * sink routes (integer and TEXT keys); None for any other type. */
+  def bucketOfLiteral(v: Any): Option[Int] = v match {
+    case l: Long => Some(bucketOfValue(l))
+    case i: Int => Some(bucketOfValue(i.toLong))
+    case s: String => Some(bucketOfStringValue(s))
+    case u: UTF8String => Some(bucketOfStringValue(u.toString))
+    case _ => None
+  }
+
   // ---- COMPOSITE partition keys (r12 verdict #8): Cassandra's
   // `PRIMARY KEY ((a, b), c)` — the partitioner hashes the SERIALIZED
   // (a, b) tuple. The Spark-native analog: catalyst's multi-child
@@ -1896,9 +1920,10 @@ private[connector] final class TokenRangeTable(tableSchema: StructType,
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
 
-  /** `_file` — the data file serving each row (`input_file_name` as a
-    * DSv2 metadata column, readable by any query) and, with `_pos`, the
-    * row identity of SQL row-level statements. */
+  /** `_file` — the data file serving each row (a DSv2 metadata column,
+    * readable by any query; a `_file` equality or IN-list prunes the scan
+    * to those files) and, with `_pos`, the row identity of SQL row-level
+    * statements. */
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] = Array(
     new org.apache.spark.sql.connector.catalog.MetadataColumn {
@@ -2265,23 +2290,35 @@ private[connector] final class TokenRangeScanBuilder(tableSchema: StructType,
       Some(t.getTime * 1000L + (t.getNanos % 1000000L) / 1000L)
     case _ => None
   }
-  /** Owning bucket of a pushdown literal, for the pk dtypes the sink
-    * accepts (integer and TEXT keys). None → the literal's type can't be
-    * bucket-routed, so the filter stays unpushed (residual-only). */
-  private def bucketOfLiteral(v: Any): Option[Int] = v match {
-    case l: Long => Some(TokenLayout.bucketOfValue(l))
-    case i: Int => Some(TokenLayout.bucketOfValue(i.toLong))
-    case s: String => Some(TokenLayout.bucketOfStringValue(s))
-    case u: UTF8String => Some(TokenLayout.bucketOfStringValue(u.toString))
-    case _ => None
-  }
   private def restrictBuckets(bs: Set[Int]): Unit =
     pkBuckets = Some(pkBuckets.fold(bs)(_ intersect bs))
+  // `_file` literals: the scan plans only these files, in their buckets
+  // (a literal that names no `tb=<k>/<name>` file matches no row). A
+  // table column of that name shadows the metadata column.
+  private val fileColIsMeta =
+    !tableSchema.fieldNames.exists(_.equalsIgnoreCase(TokenRangeSource.FileCol))
+  private var fileRels: Option[Set[String]] = None
+  private def restrictFiles(vs: Seq[Any]): Unit = {
+    val rels = vs.map(_.toString).toSet
+    fileRels = Some(fileRels.fold(rels)(_ intersect rels))
+    restrictBuckets(rels.flatMap(r =>
+      scala.util.Try(TokenRangeSource.bucketOfRel(r)).toOption))
+  }
+  private def isFileLiteral(a: String, v: Any): Boolean = fileColIsMeta &&
+    a.equalsIgnoreCase(TokenRangeSource.FileCol) && (v match {
+      case _: String | _: UTF8String => true
+      case _ => false
+    })
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters.filter {
-      case EqualTo(a, v) if a.equalsIgnoreCase(pkName) && bucketOfLiteral(v).isDefined =>
-        restrictBuckets(Set(bucketOfLiteral(v).get))
+      case EqualTo(a, v) if isFileLiteral(a, v) =>
+        restrictFiles(Seq(v)); true
+      case In(a, vs) if vs.nonEmpty && vs.forall(isFileLiteral(a, _)) =>
+        restrictFiles(vs.toSeq); true
+      case EqualTo(a, v) if a.equalsIgnoreCase(pkName) &&
+          TokenLayout.bucketOfLiteral(v).isDefined =>
+        restrictBuckets(TokenLayout.bucketOfLiteral(v).toSet)
         restrictProbe(Set(v))
         // point lookups ALSO zone-map within the owning bucket: a big
         // bucket's files whose pk stats exclude the key are never read
@@ -2289,8 +2326,8 @@ private[connector] final class TokenRangeScanBuilder(tableSchema: StructType,
           .foreach(x => narrowCk(a, x, x))
         true
       case In(a, vs) if a.equalsIgnoreCase(pkName) && vs.nonEmpty
-          && vs.forall(bucketOfLiteral(_).isDefined) =>
-        restrictBuckets(vs.flatMap(bucketOfLiteral).toSet)
+          && vs.forall(TokenLayout.bucketOfLiteral(_).isDefined) =>
+        restrictBuckets(vs.flatMap(TokenLayout.bucketOfLiteral).toSet)
         restrictProbe(vs.toSet)
         // IN-list ENVELOPE zone map: a file whose stats sit outside
         // [min, max] of the listed keys can hold none of them
@@ -2429,7 +2466,7 @@ private[connector] final class TokenRangeScanBuilder(tableSchema: StructType,
     if (options.getBoolean("changeFeed", false))
       return new TokenRangeCdfScan(TokenRangeSource.pathOf(options),
         required, tableSchema,
-        math.max(1, Option(options.get("splits")).map(_.toInt).getOrElse(4)),
+        TokenRangeSource.splitsOf(options),
         Option(options.get("startingVersion")).map(_.toInt),
         Option(options.get("endingVersion")).map(_.toInt),
         Option(options.get("maxVersionsPerTrigger")).map(_.toInt))
@@ -2458,14 +2495,8 @@ private[connector] final class TokenRangeScanBuilder(tableSchema: StructType,
     new TokenRangeScan(TokenRangeSource.pathOf(options), required,
       tableSchema, pushed, pkBuckets,
       ckIv.toSeq.map { case (c, (lo, hi)) => (c, lo, hi) },
-      math.max(1, Option(options.get("splits")).map(_.toInt).getOrElse(4)),
-      // version pin: explicit number, or AS-OF-TIMESTAMP resolved through
-      // the manifest history (Iceberg/Delta's TIMESTAMP AS OF ergonomics —
-      // the number is the precise pin, the timestamp the convenience)
-      Option(options.get("version")).map(_.toInt)
-        .orElse(Option(options.get("asOfMillis")).map(m =>
-          TokenRangeSource.versionAsOf(
-            TokenRangeSource.pathOf(options), m.toLong))),
+      TokenRangeSource.splitsOf(options),
+      TokenRangeSource.pinnedVersion(options),
       // CDC tail rate limit (r15): at most N manifest versions per
       // micro-batch — the maxFilesPerTrigger analog at commit grain; a
       // backfill over a long history becomes bounded steps instead of
@@ -2475,7 +2506,7 @@ private[connector] final class TokenRangeScanBuilder(tableSchema: StructType,
       // fresh-stream start version (inclusive) — the Kafka
       // startingOffsets analog; ignored by batch scans
       Option(options.get("startingVersion")).map(_.toInt),
-      bloomProbes)
+      bloomProbes, fileRels)
   }
 }
 
@@ -2493,7 +2524,8 @@ private[connector] final class TokenRangeScan(path: String,
     splits: Int, version: Option[Int] = None,
     maxVersionsPerTrigger: Option[Int] = None,
     startingVersion: Option[Int] = None,
-    bloomProbes: Seq[(String, DataType, Seq[Any], Boolean)] = Nil)
+    bloomProbes: Seq[(String, DataType, Seq[Any], Boolean)] = Nil,
+    fileRels: Option[Set[String]] = None)
     extends Scan with Batch {
 
   override def readSchema(): StructType = required
@@ -2532,11 +2564,6 @@ private[connector] final class TokenRangeScan(path: String,
       }
     }
 
-  private def relOf(abs: String): String = {
-    val f = new java.io.File(abs)
-    s"${f.getParentFile.getName}/${f.getName}"
-  }
-
   /** Per-file BLOOM probe (Cassandra's per-SSTable key bloom, and since
     * r17 the SAI-shaped VALUE bloom on declared indexed columns): a
     * point lookup / multiget / indexed-value equality keeps a file iff
@@ -2557,12 +2584,8 @@ private[connector] final class TokenRangeScan(path: String,
         else {
           val b = new java.io.File(file).getParentFile.getName
             .stripPrefix("tb=").toInt
-          values.filter {
-            case l: Long => TokenLayout.bucketOfValue(l) == b
-            case i: Int => TokenLayout.bucketOfValue(i.toLong) == b
-            case st: String => TokenLayout.bucketOfStringValue(st) == b
-            case _ => true // unroutable literal: conservatively probe it
-          }
+          // an unroutable literal is conservatively probed
+          values.filter(v => TokenLayout.bucketOfLiteral(v).forall(_ == b))
         }
       if (routed.isEmpty) false
       else TokenRangeSource.fileMightContain(file, colName, dt, routed)
@@ -2578,22 +2601,7 @@ private[connector] final class TokenRangeScan(path: String,
     val byBucket = TokenRangeSource.visibleFiles(path, pinV)
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (k, fs) => (k, fs.map(_._2)) }
-    // deletion-vector bindings at the pinned version: dataRel → its
-    // vectors' parquet files (each _dv dir expanded once)
-    val dvByRel: Map[String, Array[String]] = {
-      val bind = if (pinV.isEmpty) Nil
-        else TokenRangeSource.dvBindings(path, pinV)
-      if (bind.isEmpty) Map.empty
-      else {
-        val dirFiles: Map[String, Seq[String]] = bind.map(_._2).distinct
-          .map(dv => dv -> TokenRangeSource.parquetFiles(
-            new java.io.File(path, dv)))
-          .toMap
-        bind.groupBy(_._1).map { case (rel, bs) =>
-          rel -> bs.flatMap(b => dirFiles(b._2)).distinct.toArray
-        }
-      }
-    }
+    val dvByRel = TokenRangeSource.dvFilesByRel(path, pinV)
     val kept = pkBuckets match {
       case Some(bs) => byBucket.filter(d => bs(d._1))
       case None => byBucket
@@ -2608,15 +2616,18 @@ private[connector] final class TokenRangeScan(path: String,
       .toSeq.sortBy(_._1)
       .map { case (_, group) =>
         val candidates = group.flatMap(_._1._2)
-        // cheapest prune first: cached footer stats, then the bloom
-        // (one footer+bloom read per file, point-lookup paths only)
-        val files = candidates.filter(ckIntersects).filter(bloomKeep)
+        // cheapest prune first: the pushed `_file` set, cached footer
+        // stats, then the bloom (one footer+bloom read per file,
+        // point-lookup paths only)
+        val files = candidates
+          .filter(f => fileRels.forall(_(TokenRangeSource.relOf(f))))
+          .filter(ckIntersects).filter(bloomKeep)
         ckTotal += candidates.size
         ckKept += files.size
         TokenRangePartition(group.head._1._1, group.last._1._1, files.toArray,
           if (dvByRel.isEmpty) Array.empty
           else files.map(f =>
-            dvByRel.getOrElse(relOf(f), Array.empty[String])).toArray)
+            dvByRel.getOrElse(TokenRangeSource.relOf(f), Array.empty[String])).toArray)
       }
       .filter(_.files.nonEmpty)
       .toArray[InputPartition]
@@ -2665,7 +2676,7 @@ private[connector] final class TokenRangeScan(path: String,
     }.mkString("[", ", ", "]")
     val nParts = planInputPartitions().length // forces ckKept/ckTotal
     val slice =
-      if (ckSlice.nonEmpty || bloomProbes.nonEmpty)
+      if (ckSlice.nonEmpty || bloomProbes.nonEmpty || fileRels.nonEmpty)
         s" PrunedFiles: $ckKept/$ckTotal"
       else ""
     val snap = version.map(v => s" Version: $v").getOrElse("")
@@ -2798,14 +2809,17 @@ private[connector] final class TokenRangeReader(files: Array[String],
       "key-grain deletion-vector-bound files require the table's recorded pk")
     // the vector is written from the table-aligned frame, but match the
     // key names case-insensitively like every other read surface; every
-    // PK column must be present (a partial-pk sidecar has no defined
-    // grain — fail loudly, never over-delete), ck columns participate
-    // iff the sidecar carries them
+    // PK column must be present, ck columns participate iff the sidecar
+    // carries them. The one copy of this check: every read of a table
+    // file, rewrites included, comes through this reader, and a sidecar
+    // missing a pk column (corruption or a foreign writer) would match
+    // on a PARTIAL grain and over-delete every row sharing the rest.
     val resolved: Seq[(String, DataType)] = pkFields.toSeq.flatMap {
       case (n, dt, isPk) =>
         val fn = names.find(_.equalsIgnoreCase(n))
         require(fn.isDefined || !isPk,
-          s"deletion vector $file lacks pk column '$n'")
+          s"deletion vector $file lacks pk column '$n' — refusing the " +
+            "partial-grain key match")
         fn.map((_, dt))
     }
     val keys = Set.newBuilder[Any]
@@ -2928,8 +2942,7 @@ private[connector] final class TokenRangeReader(files: Array[String],
   private def openNext(): Boolean = {
     closeFile()
     if (fileIdx >= files.length) return false
-    val f = new java.io.File(files(fileIdx))
-    val rel = s"${f.getParentFile.getName}/${f.getName}"
+    val rel = TokenRangeSource.relOf(files(fileIdx))
     if (fileColIdx >= 0) currentFileRel = UTF8String.fromString(rel)
     val rd = TokenRangeSource.openParquet(files(fileIdx))
     try {
@@ -3966,28 +3979,23 @@ object TokenRangeOps {
     * record a retired file's rows: the fast path yields to the feed). */
   private def sliceFlip(spark: SparkSession, path: String, pk: String,
       pinned: Option[Int], retired: Seq[String], split: Seq[String],
-      dv: Boolean, opKind: String,
-      matches: (String => Column) => Column): Option[Flip] = {
+      dv: Boolean, opKind: String, matches: Column): Option[Flip] = {
     val changes = Some(() =>
-      deleted(readRels(spark, path, retired ++ split, pinned).filter(matches(col))))
+      deleted(readTableFiles(spark, path, retired ++ split, pinned).filter(matches)))
     if (retired.isEmpty && split.isEmpty) None // nothing matches
     else if (split.isEmpty) Some(Retire(retired, opKind, changes))
     else if (dv)
-      Some(Bind(positionsWhere(spark, path, split, pinned, matches), split,
+      Some(Bind(readTableFiles(spark, path, split, pinned, positions = true)
+          .filter(matches).select(PositionCols.map(col): _*), split,
         opKind, changes, retire = retired))
     else
-      Some(Replace(readRels(spark, path, split, pinned).filter(not(matches(col))),
+      Some(Replace(readTableFiles(spark, path, split, pinned).filter(not(matches)),
         retired ++ split, pk, opKind, changes))
   }
 
-  private def bucketOfKey(v: Any): Int = v match {
-    case l: Long => TokenLayout.bucketOfValue(l)
-    case i: Int => TokenLayout.bucketOfValue(i.toLong)
-    case s: String => TokenLayout.bucketOfStringValue(s)
-    case u: UTF8String => TokenLayout.bucketOfStringValue(u.toString)
-    case other => throw new IllegalArgumentException(
-      s"token-range DELETE key of unsupported type ${other.getClass}")
-  }
+  private def bucketOfKey(v: Any): Int = TokenLayout.bucketOfLiteral(v).getOrElse(
+    throw new IllegalArgumentException(
+      s"token-range DELETE key of unsupported type ${v.getClass}"))
 
   /** Keyed rewrites must name the table's FULL recorded partition key
     * (r13 review): deleteKeys("a") against a table bucketed on (a, b)
@@ -4057,7 +4065,7 @@ object TokenRangeOps {
         .collect { case (k, rel) if buckets(k) => rel }
       // vector-merged at the pin, so rows an EARLIER vector already
       // deleted never re-record in the feed
-      lazy val affected = readRels(spark, path, affectedRel, pinned)
+      lazy val affected = readTableFiles(spark, path, affectedRel, pinned)
       val changes = Some(() => deleted(affected.filter(matches)))
       if (affectedRel.isEmpty) None // keys owning no visible files: no-op
       else if (useDv) {
@@ -4135,7 +4143,7 @@ object TokenRangeOps {
     rewrite(spark, path, "DELETE") { pinned =>
       val affectedRel = TokenRangeSource.visibleRelFiles(path, pinned)
         .collect { case (k, rel) if buckets(k) => rel }
-      lazy val affected = readRels(spark, path, affectedRel, pinned)
+      lazy val affected = readTableFiles(spark, path, affectedRel, pinned)
       def keyed(how: String) = affected.join(
         org.apache.spark.sql.functions.broadcast(keyDf), joinCols, how)
       val changes = Some(() => deleted(keyed("left_semi")))
@@ -4246,8 +4254,8 @@ object TokenRangeOps {
       // matches a range (CQL/SQL agree), and without the guard not(NULL)
       // = NULL would silently DROP it from the rewrite
       sliceFlip(spark, path, pk, pinned, retired, straddling, mode == "dv",
-        "delete", c => c(pk) === lit(keyV) &&
-          c(ckCol).isNotNull && c(ckCol) >= ckLo && c(ckCol) < ckHi)
+        "delete", col(pk) === lit(keyV) &&
+          col(ckCol).isNotNull && col(ckCol) >= ckLo && col(ckCol) < ckHi)
     }
   }
 
@@ -4353,7 +4361,7 @@ object TokenRangeOps {
     rewrite(spark, path, "upsertCells") { pinned =>
       val affectedRel = TokenRangeSource.visibleRelFiles(path, pinned)
         .collect { case (k, rel) if buckets(k) => rel }
-      val old = readRels(spark, path, affectedRel, pinned, ts)
+      val old = readTableFiles(spark, path, affectedRel, pinned, empty = ts)
       val cellSet = cellCols.map(_.toLowerCase).toSet
       // writetime mode: which cell each _wt_ shadow belongs to, and the
       // per-cell WIN predicate (bound by the frame AND strictly newer
@@ -4437,9 +4445,7 @@ object TokenRangeOps {
       // time-window-compaction layout the slice prune selects within).
       // Content-preserving, so the CDC tail SKIPS `#op compact` versions
       // (Cassandra's CDC never re-emits compaction either).
-      else Some(Replace(alignToStored(path,
-          spark.read.format(fmt).option("pk", pk)
-            .options(pinned.map(v => "version" -> v.toString).toMap).load(path)),
+      else Some(Replace(readTableFiles(spark, path, snapshotRel, pinned),
         snapshotRel, pk, "compact", repartition = true, rollRows = rollRows))
     }
   }
@@ -4529,173 +4535,44 @@ object TokenRangeOps {
       TokenRangeSource.claimEdit(path, s"DROP ${name.toLowerCase}")
     }
 
-  /** Read specific data files ALIGNED to the stored schema: merged across
-    * heterogeneous footers (pre/post-ALTER files, subset-column appends)
-    * with missing columns NULL-filled and dtypes cast — so every
-    * copy-on-write rewrite (DELETE/upsert/expire survivors) reads the
-    * same logical rows the connector scan serves, never a random single
-    * footer's view (which, post-ALTER, would silently DROP the new
-    * column from every rewritten row). */
-  // lineage columns the deletion-vector merges and the delta DML's
-  // tombstone joins key on: the row's file rel + physical ordinal
-  private val DvRelLin = "__dv_rel"
-  private val DvPosLin = "__dv_pos"
-
-  private def relOfAbs(abs: String): String = {
-    val f = new java.io.File(abs)
-    s"${f.getParentFile.getName}/${f.getName}"
-  }
-
-  /** Raw merged-footer read of `absFiles` carrying the lineage columns —
-    * `__dv_rel` (file rel) and `__dv_pos` (the physical row ordinal,
-    * parquet's `_metadata.row_index`, which matches the connector
-    * reader's `_pos` exactly: both count stored rows). */
-  private def withFileLineage(spark: SparkSession,
-      absFiles: Seq[String]): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(absFiles: _*)
-      .withColumn(DvRelLin, org.apache.spark.sql.functions.regexp_extract(
-        org.apache.spark.sql.functions.input_file_name(),
-        "(tb=[^/]+/[^/]+)$", 1))
-      .withColumn(DvPosLin, col("_metadata.row_index"))
-
-  private def readFilesAligned(spark: SparkSession, path: String,
-      absFiles: Seq[String], dvAt: Option[Int] = None): DataFrame =
-    alignToStored(path,
-      dvMergeLineaged(spark, path, withFileLineage(spark, absFiles),
-        absFiles, dvAt).drop(DvRelLin, DvPosLin))
-
-  private def absOf(path: String, rels: Seq[String]): Seq[String] =
-    rels.map(rel => new java.io.File(path, rel).getAbsolutePath)
-
-  /** [[readFilesAligned]] of the table-relative `rels` at `pinned`; an
-    * empty frame of schema `empty` when there are none. */
-  private def readRels(spark: SparkSession, path: String, rels: Seq[String],
-      pinned: Option[Int], empty: => StructType = new StructType()): DataFrame =
+  /** The rows of the table files `rels` as the connector scan serves
+    * them at `pinned`: deletion vectors bound at that version applied,
+    * schema drift absorbed, aligned to the CURRENT stored view by
+    * [[alignToStored]] — so a vector-suppressed row never resurrects
+    * through a rewrite's survivors or re-records in a change sidecar, and
+    * a post-ALTER column never drops out of a rewritten row. The `_file`
+    * filter prunes the scan to exactly those files; `positions` keeps
+    * each row's `_file`/`_pos` identity. An empty frame of schema `empty`
+    * when there are no files. */
+  private[sources] def readTableFiles(spark: SparkSession, path: String,
+      rels: Seq[String], pinned: Option[Int], positions: Boolean = false,
+      empty: => StructType = new StructType()): DataFrame =
     if (rels.isEmpty)
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), empty)
-    else readFilesAligned(spark, path, absOf(path, rels), pinned)
+    else alignToStored(path,
+      spark.read.format(fmt).option("splits", TokenLayout.Buckets.toString)
+        .options(pinned.map(v => "version" -> v.toString).toMap).load(path)
+        .filter(col(TokenRangeSource.FileCol).isin(rels: _*)),
+      keep = if (positions) PositionCols else Nil)
 
-  /** Position-vector rows (`_file`, `_pos`) of the rows of `rels`,
-    * vector-merged at `pinned`, that match `pred` — which resolves
-    * column names case-insensitively against the raw footers. */
-  private def positionsWhere(spark: SparkSession, path: String,
-      rels: Seq[String], pinned: Option[Int],
-      pred: (String => Column) => Column): DataFrame = {
-    val abs = absOf(path, rels)
-    val lin = dvMergeLineaged(spark, path, withFileLineage(spark, abs), abs, pinned)
-    def lc(n: String) = col(lin.schema.fields
-      .find(_.name.equalsIgnoreCase(n)).map(_.name).getOrElse(n))
-    lin.filter(pred(lc)).select(col(DvRelLin).as(TokenRangeSource.FileCol),
-      col(DvPosLin).cast("long").as(TokenRangeSource.PosCol))
+  /** The staged files of a commit in flight, aligned to the stored view:
+    * they are in no manifest yet, so this is the one read that stays on
+    * Spark's parquet reader. `lineage` adds each row's staged file path
+    * and stored ordinal as [[StagedFileCol]]/[[StagedPosCol]]. */
+  private def readStaged(spark: SparkSession, path: String,
+      stagedAbs: Seq[String], lineage: Boolean = false): DataFrame = {
+    val raw = spark.read.option("mergeSchema", "true").parquet(stagedAbs: _*)
+    if (!lineage) alignToStored(path, raw)
+    else alignToStored(path,
+      raw.withColumn(StagedFileCol, col("_metadata.file_path"))
+        .withColumn(StagedPosCol, col("_metadata.row_index")),
+      keep = Seq(StagedFileCol, StagedPosCol))
   }
+  private val StagedFileCol = "_staged_file"
+  private val StagedPosCol = "_staged_pos"
 
-  /** Apply the deletion vectors bound to `absFiles` at version `dvAt`
-    * (current when None) to a lineage-carrying frame: key-grain vectors
-    * anti-join on (pk, file), position-grain vectors (r17) on the
-    * (file, ordinal) lineage — the copy-on-write rewrites read through
-    * this so a vector-suppressed row can never resurrect through a
-    * rewrite's survivor set (and never re-records in a CDF sidecar).
-    * No-op on vector-free tables; lineage columns stay on the result. */
-  private def dvMergeLineaged(spark: SparkSession, path: String,
-      lin: DataFrame, absFiles: Seq[String], dvAt: Option[Int]): DataFrame = {
-    val rels = absFiles.map(relOfAbs).toSet
-    val bind = TokenRangeSource
-      .dvBindings(path, dvAt.orElse(TokenRangeSource.currentVersion(path)))
-      .filter { case (d, _) => rels(d) }
-    if (bind.isEmpty) return lin
-    val frames: Map[String, DataFrame] = bind.map(_._2).distinct.map { dv =>
-      dv -> spark.read.parquet(new java.io.File(path, dv).getAbsolutePath)
-    }.toMap
-    // grain is the sidecar's own schema: `_pos` present = position grain
-    val (posBind, keyBind) = bind.partition { case (_, dv) =>
-      frames(dv).schema.fieldNames
-        .exists(_.equalsIgnoreCase(TokenRangeSource.PosCol))
-    }
-    var out = lin
-    if (keyBind.nonEmpty) {
-      // the sidecar's own columns ARE its key tuple (pk-only = whole
-      // partition, pk+ck = the clustered insert-upsert's exact row,
-      // r18): resolve each against the pk/ck universe and anti-join
-      // per distinct grain (one group in practice)
-      val universe = (TokenRangeSource.recordedPk(path)
-        .getOrElse(throw new IllegalStateException(
-          s"deletion-vector table at $path lacks a recorded pk"))
-        .split(',').map(_.trim).toSeq ++
-        TokenRangeSource.recordedCk(path).toSeq.flatMap(spec =>
-          TokenRangeSource.parseCkSpec(spec).map(_._1)))
-        .map(n => lin.schema.fields.find(_.name.equalsIgnoreCase(n))
-          .getOrElse(throw new IllegalStateException(
-            s"deletion-vector key column '$n' missing from rewrite read"))
-          .name)
-      // the pk prefix of the universe (recordedPk order) — grainOf must
-      // see EVERY one of these in a sidecar before trusting its grain
-      val pkUniverse = universe.take(
-        TokenRangeSource.recordedPk(path).get.split(',').length)
-      def grainOf(dv: String): Seq[String] = {
-        val names = frames(dv).schema.fieldNames
-        val grain = universe.filter(u => names.exists(_.equalsIgnoreCase(u)))
-        // mirror loadDv's require(fn.isDefined || !isPk) (ADVICE r18):
-        // a sidecar missing a pk column — corruption or a foreign
-        // writer — would key the anti-join on a PARTIAL grain and
-        // over-delete every row sharing the remaining columns
-        // (permanent data loss); a sidecar with no key columns at all
-        // would tombstone every row of its bound files. Fail loudly.
-        val missingPk = pkUniverse.filterNot(p => grain.exists(_.equalsIgnoreCase(p)))
-        require(missingPk.isEmpty,
-          s"deletion-vector sidecar '$dv' lacks pk column(s) " +
-            s"${missingPk.mkString(", ")} — refusing the partial-grain anti-join")
-        grain
-      }
-      keyBind.groupBy(b => grainOf(b._2)).foreach { case (keyCols, binds) =>
-        // one tombstone row per (bound file, deleted key): rows match
-        // only within their own file, so an unbound file's rows survive.
-        // Timestamp key columns store in the sidecar as LONG µs (write
-        // convention — see insertUpsertBind); convert back here.
-        val tomb = binds.map { case (d, dv) =>
-          val f = frames(dv).toDF(frames(dv).schema.fieldNames.map(n =>
-            keyCols.find(_.equalsIgnoreCase(n)).getOrElse(n)): _*)
-          f.select(keyCols.map { n =>
-            val linTs = lin.schema.fields.exists(x =>
-              x.name.equalsIgnoreCase(n) && x.dataType == TimestampType)
-            if (linTs && f.schema(n).dataType != TimestampType)
-              org.apache.spark.sql.functions
-                .timestamp_micros(col(n).cast("long")).as(n)
-            else col(n)
-          }: _*).withColumn(DvRelLin, org.apache.spark.sql.functions.lit(d))
-        }.reduce(_ unionByName _)
-        out = out.join(org.apache.spark.sql.functions.broadcast(tomb),
-          keyCols :+ DvRelLin, "left_anti")
-      }
-    }
-    if (posBind.nonEmpty) {
-      // a position vector names its target rows as (file, ordinal) in
-      // its own rows; rows of files outside the read set never match
-      val tomb = posBind.map(_._2).distinct.map(frames).reduce(_ unionByName _)
-        .select(col(TokenRangeSource.FileCol).as(DvRelLin),
-          col(TokenRangeSource.PosCol).cast("long").as(DvPosLin))
-      out = out.join(org.apache.spark.sql.functions.broadcast(tomb),
-        Seq(DvRelLin, DvPosLin), "left_anti")
-    }
-    out
-  }
-
-  /** Rows of `touchedAbs` (vector-merged at `pinned`, then aligned to
-    * the stored schema) SPLIT by the position tombstone frame `tombs`
-    * (`_file` rel + `_pos` ordinal): `keep = true` returns the matched
-    * rows (the delta DML's pre-images), `keep = false` the survivors
-    * (its copy-on-write fallback's rewrite input). */
-  private[connector] def readTouchedVsTombs(spark: SparkSession,
-      path: String, touchedAbs: Seq[String], pinned: Option[Int],
-      tombs: DataFrame, keep: Boolean): DataFrame = {
-    val merged = dvMergeLineaged(spark, path,
-      withFileLineage(spark, touchedAbs), touchedAbs, pinned)
-    val t = tombs.select(col(TokenRangeSource.FileCol).as(DvRelLin),
-      col(TokenRangeSource.PosCol).cast("long").as(DvPosLin))
-    alignToStored(path,
-      merged.join(t, Seq(DvRelLin, DvPosLin),
-        if (keep) "left_semi" else "left_anti")
-        .drop(DvRelLin, DvPosLin))
-  }
+  /** The position row identity: a stored row's file rel and ordinal. */
+  private val PositionCols = Seq(TokenRangeSource.FileCol, TokenRangeSource.PosCol)
 
   /** Copy-on-write COMPLETION of a SQL row-level statement that matched
     * more rows than the table's `dml.fallback_rows` bound (r17, VERDICT
@@ -4709,11 +4586,11 @@ object TokenRangeOps {
       path: String, pinned: Option[Int], touchedRel: Seq[String],
       stagedAbs: Seq[String], tombs: DataFrame, opKind: String,
       changes: () => DataFrame): Unit = {
-    val survivors = readTouchedVsTombs(spark, path, absOf(path, touchedRel),
-      pinned, tombs, keep = false)
+    val survivors = readTableFiles(spark, path, touchedRel, pinned, positions = true)
+      .join(tombs, PositionCols, "left_anti").drop(PositionCols: _*)
     val out =
       if (stagedAbs.isEmpty) survivors
-      else survivors.unionByName(readFilesAligned(spark, path, stagedAbs, pinned))
+      else survivors.unionByName(readStaged(spark, path, stagedAbs))
     flip(path, pinned, Replace(out, touchedRel,
       recordedPkOf(path, "merge-on-read fallback"), opKind, Some(changes)))
   }
@@ -4767,8 +4644,13 @@ object TokenRangeOps {
       val pks = pkRec.split(',').map(_.trim).toSeq
       val cks = TokenRangeSource.recordedCk(path).toSeq
         .flatMap(spec => TokenRangeSource.parseCkSpec(spec).map(_._1))
-      val incoming = alignToStored(path,
-        spark.read.option("mergeSchema", "true").parquet(stagedAbs: _*))
+      // staged-row lineage for the intra-batch winner pick: the staged
+      // file will keep its `tb=<k>/<name>` under the table root after
+      // the commit's move, and the staged ordinal is the stored-row
+      // ordinal `_pos` counts — so (rel, ordinal) is a valid POSITION
+      // vector target for the files this very commit places
+      val stagedLin = readStaged(spark, path, stagedAbs, lineage = true)
+      val incoming = stagedLin.drop(StagedFileCol, StagedPosCol)
       def resolve(n: String): String = incoming.schema.fields
         .find(_.name.equalsIgnoreCase(n))
         .getOrElse(throw new IllegalStateException(
@@ -4778,19 +4660,6 @@ object TokenRangeOps {
       // the replacement grain: whole partition on unclustered tables,
       // the exact (pk, ck) row on clustered ones
       val keyCols = pkCols ++ cks.map(resolve)
-      // staged-row lineage for the intra-batch winner pick: the staged
-      // file will keep its `tb=<k>/<name>` under the table root after
-      // the commit's move, and `_metadata.row_index` is the stored-row
-      // ordinal `_pos` counts — so (rel, row_index) is a valid POSITION
-      // vector target for the files this very commit places
-      val sfile = "_iu_sfile"; val spos = "_iu_spos"
-      val stagedLin = alignToStored(path,
-        spark.read.option("mergeSchema", "true").parquet(stagedAbs: _*)
-          .withColumn(sfile, org.apache.spark.sql.functions
-            .col("_metadata.file_path"))
-          .withColumn(spos, org.apache.spark.sql.functions
-            .col("_metadata.row_index").cast("long")),
-        keep = Seq(sfile, spos))
       // a NULL key component means the row has NO replacement identity:
       // CQL refuses null clustering keys outright; graft stores such
       // rows (clustered tables legally hold null-ck rows elsewhere) but
@@ -4811,12 +4680,12 @@ object TokenRangeOps {
       // so unparseable names degrade to string order, never to a tie.
       import org.apache.spark.sql.functions.{element_at, split => fsplit,
         concat, lit => flit, struct => fstruct, regexp_extract}
-      val fname = element_at(fsplit(col(sfile), "/"), -1)
+      val fname = element_at(fsplit(col(StagedFileCol), "/"), -1)
       def nameInt(group: Int) = regexp_extract(fname,
         "part-(\\d+)-(\\d+)-[0-9a-fA-F]+-(\\d+)\\.parquet", group)
         .cast("long")
       val ordCol = fstruct(nameInt(1), nameInt(2), nameInt(3), fname,
-        col(spos))
+        col(StagedPosCol))
       // ONE aggregation serves three needs: the keys' owning buckets
       // (a ≤ Buckets-row distinct — bounded by the ring width, never
       // data volume), the intra-batch duplicate flag, and the LWW
@@ -4846,8 +4715,8 @@ object TokenRangeOps {
       lazy val losers = keyedLin
         .join(keyAgg.filter(col("_iu_n") > 1L), keyCols)
         .filter(ordCol =!= col("_iu_w"))
-        .select(relOf(col(sfile)).as(TokenRangeSource.FileCol),
-          col(spos).as(TokenRangeSource.PosCol))
+        .select(relOf(col(StagedFileCol)).as(TokenRangeSource.FileCol),
+          col(StagedPosCol).as(TokenRangeSource.PosCol))
       // the batch with intra-batch losers dropped — what actually
       // becomes visible, and what the change feed must image;
       // identity-less (null-key) rows pass through verbatim
@@ -4892,7 +4761,7 @@ object TokenRangeOps {
         // from the DEDUPED batch (a loser row never becomes visible, so
         // it never reaches the feed)
         val changes = () => upsertChanges(
-          readRels(spark, path, affectedRel, pinned, incoming.schema),
+          readTableFiles(spark, path, affectedRel, pinned, empty = incoming.schema),
           deduped, keyCols)
         // STATEMENT-SIZE fallback (r18, the mor-DML trade at the INSERT
         // path): past `dml.fallback_rows` distinct keys, complete
@@ -4910,7 +4779,7 @@ object TokenRangeOps {
         // as raw INT64 µs and a vanilla session would write the sidecar
         // as INT96 otherwise (the library must not depend on
         // outputTimestampType); both read boundaries (the task reader's
-        // loadDv and dvMergeLineaged's tomb frame) convert back.
+        // loadDv, and Spark when it reads the sidecar) convert back.
         val oldBind: Seq[(String, String)] =
           if (affectedRel.isEmpty) Nil
           else {
@@ -4959,7 +4828,7 @@ object TokenRangeOps {
       path: String, plan: InsertUpsertCowPlan): Unit = {
     val out =
       if (plan.affectedRel.isEmpty) plan.deduped
-      else readRels(spark, path, plan.affectedRel, plan.pinned)
+      else readTableFiles(spark, path, plan.affectedRel, plan.pinned)
         .join(plan.keysDf, plan.keyCols, "left_anti")
         .unionByName(plan.deduped)
     flip(path, plan.pinned, Replace(out, plan.affectedRel,
@@ -5022,7 +4891,7 @@ object TokenRangeOps {
           case (rel, bs) if bs.size >= threshold => rel
         }.toSeq.sorted
       if (victims.isEmpty) None
-      else Some(Replace(readRels(spark, path, victims, pinned), victims, pk, "compact"))
+      else Some(Replace(readTableFiles(spark, path, victims, pinned), victims, pk, "compact"))
     }.fold(0)(_.retire.size)
   }
 
@@ -5096,7 +4965,7 @@ object TokenRangeOps {
       // rewrite would re-emit one file per input partition and never
       // reduce the count it exists to reduce
       if (victims.isEmpty) None
-      else Some(Replace(readRels(spark, path, victims, pinned), victims, pk,
+      else Some(Replace(readTableFiles(spark, path, victims, pinned), victims, pk,
         "compact", repartition = true))
     }.fold(0)(_.retire.map(TokenRangeSource.bucketOfRel).distinct.size)
   }
@@ -5201,7 +5070,7 @@ object TokenRangeOps {
     rewrite(spark, path, "upsert") { pinned =>
       val affectedRel = TokenRangeSource.visibleRelFiles(path, pinned)
         .collect { case (k, rel) if buckets(k) => rel }
-      lazy val old = readRels(spark, path, affectedRel, pinned, aligned.schema)
+      lazy val old = readTableFiles(spark, path, affectedRel, pinned, empty = aligned.schema)
       val changes = Some(() => upsertChanges(old, aligned, pks))
       if (mode == "dv" && affectedRel.nonEmpty)
         // MERGE-ON-READ upsert: the incoming rows APPEND, and a deletion
@@ -5265,7 +5134,7 @@ object TokenRangeOps {
       // vector, live rows never rewritten — Cassandra's expired-cell
       // semantics); null ts survives (rows without a writetime never expire)
       sliceFlip(spark, path, pk, pinned, retired, straddling, mode == "dv",
-        "expire", c => c(tsCol).isNotNull && c(tsCol) <= cutoffTs)
+        "expire", col(tsCol).isNotNull && col(tsCol) <= cutoffTs)
     }
   }
 
@@ -5434,11 +5303,11 @@ object TokenRangeOps {
     val ct = TokenRangeSource.ChangeTypeCol
     val pre =
       if (touchedRel.isEmpty) None
-      else Some(readTouchedVsTombs(spark, path, absOf(path, touchedRel),
-        pinned, tombs, keep = true))
+      else Some(readTableFiles(spark, path, touchedRel, pinned, positions = true)
+        .join(tombs, PositionCols, "left_semi").drop(PositionCols: _*))
     val nw =
       if (stagedAbs.isEmpty) None
-      else Some(readFilesAligned(spark, path, stagedAbs, pinned))
+      else Some(readStaged(spark, path, stagedAbs))
     val idCols: Seq[String] = {
       val names = (TokenRangeSource.recordedPk(path).toSeq.flatMap(
           _.split(',').map(_.trim)) ++

@@ -158,7 +158,7 @@ class TokenRangeDvSpec extends SparkSpec {
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-    // the rewrite read (dvMergeLineaged) must refuse the partial grain —
+    // the rewrite read (the task reader's loadDv) must refuse the partial grain —
     // key 7 so the cow rewrite touches a bucket the sidecar is bound to
     val e = intercept[Exception] {
       TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L), mode = "cow")

@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** The task reader opens each data file once and each bound vector once
   * per reader, and every file it opens is closed again: on a normal end,
-  * on a partly read file, and when resolving a file's vectors fails. */
+  * on a partly read file, and when resolving a file's vectors fails. A
+  * `_file` filter opens only the files it names, and every rewrite reads
+  * its table files through this reader. */
 class TokenRangeOpenSpec extends SparkSpec {
 
   private val fmt = classOf[TokenRangeSource].getName
@@ -94,5 +96,60 @@ class TokenRangeOpenSpec extends SparkSpec {
       s"expected the partial-pk refusal, got: ${messages(e).mkString(" | ")}")
     assert(opens > o1 && closes - c1 == opens - o1,
       s"${opens - o1} opens against ${closes - c1} closes after the failed read")
+  }
+
+  test("a _file filter plans and opens exactly the named files") {
+    val dir = freshTable("file")
+    val rels = TokenRangeSource.visibleRelFiles(dir).map(_._2)
+    assert(rels.size > 12)
+    val all = scan(dir).select(TokenRangeSource.FileCol).collect().map(_.getString(0))
+    // one rel reaches the scan as an equality; more than ten become an
+    // InSet, which reaches it as an IN-list
+    Seq(rels.take(1), rels.takeRight(12)).foreach { want =>
+      val df = scan(dir).filter(col(TokenRangeSource.FileCol).isin(want: _*))
+        .select(TokenRangeSource.FileCol)
+      val plan = df.queryExecution.executedPlan.toString()
+      assert(plan.contains(s"PushedFilters: [${TokenRangeSource.FileCol}") &&
+        plan.contains(s"PrunedFiles: ${want.size}/"), plan.take(900))
+      val o0 = opens
+      val got = df.collect().map(_.getString(0))
+      assert(opens - o0 == want.size,
+        s"${opens - o0} opens for a filter naming ${want.size} files")
+      assert(got.sorted.toSeq == all.filter(want.contains).sorted.toSeq)
+    }
+    // a literal that names no live file plans nothing
+    val none = scan(dir).filter(col(TokenRangeSource.FileCol) === "tb=x/none.parquet")
+    val o0 = opens
+    assert(none.count() == 0L && opens == o0)
+  }
+
+  test("every rewrite reads the files it touches through the reader, each once") {
+    val dir = freshTable("rewrite")
+    def row(pk: Long, v: String) =
+      spark.range(pk, pk + 1).select(col("id").as("pk"), lit(v).as("v"))
+    // a rewrite that read its table files any other way would open them
+    // outside the reader's counter
+    def check(what: String, extra: Long = 0L)(body: => Unit): Unit = {
+      val before = TokenRangeOps.liveFiles(dir).toSet
+      val o0 = opens
+      body
+      val n = opens - o0
+      val retired = before -- TokenRangeOps.liveFiles(dir)
+      assert(retired.nonEmpty, s"$what must rewrite some file")
+      assert(n == retired.size + extra,
+        s"$what: $n opens for ${retired.size} rewritten files (+ $extra vector files)")
+    }
+    check("upsert")(TokenRangeOps.upsert(spark, dir, "pk", row(5L, "up")))
+    check("upsertCells")(TokenRangeOps.upsertCells(spark, dir, "pk", row(70L, "cell")))
+    check("deleteKeys")(TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(100L), mode = "cow"))
+    check("compactFragmented")(TokenRangeOps.compactFragmented(spark, dir, 2))
+    // one key vector bound to one bucket's single file: the compaction
+    // reads that file and the vector's file once
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L), mode = "dv")
+    assert(TokenRangeSource.dvBindings(dir).size == 1)
+    check("compactVectors", vectorFiles(dir).size)(TokenRangeOps.compactVectors(spark, dir))
+    check("compact")(TokenRangeOps.compact(spark, dir, "pk"))
+    val t = scan(dir).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(t.size == 190 && t(5L) == "up" && t(70L) == "cell" && !t.contains(7L))
   }
 }

@@ -15,15 +15,18 @@ import org.apache.spark.sql.types.LongType
   * pre-ALTER file that lacks a column, and a key-grain vector. Every
   * projection, the empty-projection count and the `_file`/`_pos` columns
   * must equal the rows `spark.read.parquet` returns per live file minus
-  * the known deletions; `_pos` counts stored rows across row groups. */
+  * the known deletions; `_pos` counts stored rows across row groups. The
+  * row-level verbs read the files they rewrite through the same reader,
+  * so each of them over this table must leave exactly the modelled rows. */
 class TokenRangeReaderShapeSpec extends SparkSpec {
 
   private val fmt = classOf[TokenRangeSource].getName
   private val cols = Seq("pk", "ck", "v", "extra", TokenRangeSource.FileCol,
     TokenRangeSource.PosCol)
 
-  test("every projection over mixed file shapes equals the per-file parquet rows minus the deletions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_reader_shapes").toString
+  /** The mixed-shape table: its path and the legacy file's rel. */
+  private def mixedTable(tag: String): (String, String) = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_reader_$tag").toString
     // legacy layout written by Spark's own committer: non-nullable columns
     // land `required`, and a tiny block size cuts the file into row groups
     // of about 100 rows
@@ -60,7 +63,15 @@ class TokenRangeReaderShapeSpec extends SparkSpec {
     val legacyRel = TokenRangeSource.visibleRelFiles(dir)
       .map(_._2).find(r => legacy.head.endsWith(r)).get
     assert(bound(legacyRel), "the range delete must bind a vector to the legacy file")
+    (dir, legacyRel)
+  }
 
+  private def table(dir: String) = spark.read.format(fmt).option("pk", "pk").load(dir)
+
+  private def show(r: Seq[Any]): String = r.map(String.valueOf).mkString("|")
+
+  test("every projection over mixed file shapes equals the per-file parquet rows minus the deletions") {
+    val (dir, legacyRel) = mixedTable("shapes")
     // expected: each live file's rows in stored order, columns matched
     // case-insensitively, absent ones NULL, deleted rows dropped
     val perFile = TokenRangeSource.visibleFiles(dir).map { case (_, abs) =>
@@ -95,9 +106,8 @@ class TokenRangeReaderShapeSpec extends SparkSpec {
     assert(expected.exists(r => r(4) == legacyRel && r(5) == 160L),
       "the row after the deleted range keeps its stored ordinal")
 
-    val t = spark.read.format(fmt).option("pk", "pk").load(dir)
+    val t = table(dir)
     assert(t.count() == expected.size, "empty-projection count")
-    def show(r: Seq[Any]): String = r.map(String.valueOf).mkString("|")
     (1 to cols.size).flatMap(cols.indices.combinations).foreach { idx =>
       val got = t.select(idx.map(i => col(cols(i))): _*).collect()
         .map((r: Row) => show(r.toSeq)).sorted.toSeq
@@ -105,5 +115,63 @@ class TokenRangeReaderShapeSpec extends SparkSpec {
       assert(got == want, s"projection ${idx.map(cols).mkString(",")}: " +
         s"table-only ${got.diff(want).take(5)}, expected-only ${want.diff(got).take(5)}")
     }
+  }
+
+  test("row-level rewrites over mixed file shapes leave exactly the modelled rows") {
+    // a key sharing a bucket with `pk` but holding no row: a rewrite keyed
+    // on it reads and rewrites every file of that bucket, all survivors
+    def sameBucket(pk: Long): Long = (5L until 1000L).find(k =>
+      TokenLayout.bucketOfValue(k) == TokenLayout.bucketOfValue(pk)).get
+    def row(pk: Long, ck: Long, v: String) = spark.range(1)
+      .select(lit(pk).as("pk"), lit(ck).as("ck"), lit(v).as("v"), lit(s"x$v").as("extra"))
+    // each verb runs on a fresh table; bucket(1) holds every file shape and
+    // the legacy file's position vector, bucket(3) the key vector. The
+    // model is the table's rows before the verb, which the test above
+    // checks against the files themselves.
+    val verbs: Seq[(String, String => Unit, Seq[Seq[Any]] => Seq[Seq[Any]])] = Seq(
+      ("copy-on-write upsert", dir => TokenRangeOps.upsert(spark, dir, "pk",
+          row(sameBucket(1L), 5L, "u1").unionByName(row(sameBucket(3L), 6L, "u3"))),
+        m => m ++ Seq(Seq(sameBucket(1L), 5L, "u1", "xu1"),
+          Seq(sameBucket(3L), 6L, "u3", "xu3"))),
+      ("copy-on-write deleteKeys", dir => TokenRangeOps.deleteKeys(spark, dir, "pk",
+          Seq(sameBucket(1L), sameBucket(3L), 2L), mode = "cow"),
+        m => m.filterNot(_.head == 2L)),
+      ("dv deleteCkRange split", dir =>
+          TokenRangeOps.deleteCkRange(spark, dir, "pk", 1L, 200L, 210L, mode = "dv"),
+        m => m.filterNot(r => r.head == 1L &&
+          r(1).asInstanceOf[Long] >= 200L && r(1).asInstanceOf[Long] < 210L)),
+      ("compactVectors", dir => TokenRangeOps.compactVectors(spark, dir), m => m))
+    verbs.foreach { case (what, verb, model) =>
+      val (dir, legacyRel) = mixedTable(what.filter(_.isLetter))
+      def rows() = table(dir).select("pk", "ck", "v", "extra").collect().toSeq
+        .map((r: Row) => r.toSeq)
+      val want = model(rows()).map(show).sorted
+      val before = TokenRangeOps.liveFiles(dir).toSet
+      verb(dir)
+      val live = TokenRangeOps.liveFiles(dir).toSet
+      if (what.startsWith("dv"))
+        assert(live == before && TokenRangeSource.dvBindings(dir).count(_._1 == legacyRel) == 2,
+          "the range split binds a second vector to the legacy file, rewriting nothing")
+      else assert(!live(legacyRel), s"$what must rewrite the legacy file")
+      if (what == "compactVectors")
+        assert(TokenRangeSource.dvBindings(dir).isEmpty)
+      val got = rows().map(show).sorted
+      assert(got == want, s"$what: table-only ${got.diff(want).take(5)}, " +
+        s"expected-only ${want.diff(got).take(5)}")
+    }
+  }
+
+  test("the rewrite read serves its pinned version's vectors, not the current ones") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_reader_pin").toString
+    spark.range(0, 64).select(col("id").as("pk"), concat(lit("v"), col("id")).as("v"))
+      .write.format(fmt).option("pk", "pk").mode("overwrite").save(dir)
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(1L), mode = "dv")
+    val pinned = TokenRangeSource.currentVersion(dir)
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(2L), mode = "dv")
+    val rels = TokenRangeOps.liveFiles(dir)
+    def keys(v: Option[Int]) = TokenRangeOps.readTableFiles(spark, dir, rels, v)
+      .select("pk").collect().map(_.getLong(0)).toSet
+    assert(keys(pinned) == (0L until 64L).toSet - 1L)
+    assert(keys(TokenRangeSource.currentVersion(dir)) == (0L until 64L).toSet - 1L - 2L)
   }
 }

@@ -200,12 +200,32 @@ class TokenRangeSqlMorSpec extends SparkSpec {
   }
 
   test("bad fallback bounds are refused at CREATE") {
-    val (cat, _) = freshCat("refuse")
+    val (cat, wh) = freshCat("refuse")
     val ex3 = intercept[Exception] {
       spark.sql(s"""CREATE TABLE $cat.ks.bad3 (pk BIGINT, v STRING)
         TBLPROPERTIES('pk'='pk', 'dml.fallback_rows'='0')""")
     }
     assert(ex3.getMessage.contains("fallback_rows"), ex3.getMessage)
+    // unknown keys are refused, not dropped: a stale 'dml' value, a
+    // misspelt bound, and 'retention', which only ALTER sets
+    Seq("'dml'='wat'" -> "unknown TBLPROPERTIES key 'dml'",
+        "'dml.fallback_row'='5'" -> "unknown TBLPROPERTIES key 'dml.fallback_row'",
+        "'compact.files_per_buckets'='4'" ->
+          "unknown TBLPROPERTIES key 'compact.files_per_buckets'",
+        "'retention'='3'" -> "ALTER TABLE").zipWithIndex.foreach {
+      case ((prop, msg), i) =>
+        val ex = intercept[Exception] {
+          spark.sql(s"""CREATE TABLE $cat.ks.unknown$i (pk BIGINT, v STRING)
+            TBLPROPERTIES('pk'='pk', $prop)""")
+        }
+        assert(ex.getMessage.contains(msg), ex.getMessage)
+    }
+    // a refused CREATE leaves no table behind; the known keys still pass
+    assert(!new java.io.File(tablePath(wh, "unknown0")).exists)
+    spark.sql(s"""CREATE TABLE $cat.ks.known (pk BIGINT, v STRING)
+      TBLPROPERTIES('pk'='pk', 'dml.fallback_rows'='5',
+        'compact.files_per_bucket'='4')""")
+    assert(new java.io.File(tablePath(wh, "known")).exists)
   }
 
   test("bulk mor statements FALL BACK to copy-on-write inside the same statement") {
