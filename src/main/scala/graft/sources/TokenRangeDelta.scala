@@ -267,7 +267,7 @@ private[connector] final class TokenRangeDeltaWriter(path: String,
       org.apache.parquet.hadoop.example.GroupWriteSupport
         .setSchema(tombSchema, conf)
       tombWriter = org.apache.parquet.hadoop.example.ExampleParquetWriter
-        .builder(new org.apache.hadoop.fs.Path(tombFile))
+        .builder(TokenRangeSource.createParquet(tombFile))
         .withConf(conf).withType(tombSchema).build()
     }
     val g = tombFactory.newGroup()

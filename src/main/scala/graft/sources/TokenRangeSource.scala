@@ -1543,6 +1543,57 @@ object TokenRangeSource {
     rd
   }
 
+  /** The checksummed local file system the connector writes through. Its
+    * raw layer creates a file with a null permission as a plain stream,
+    * so the file keeps the mode the process umask gives it (rw-r--r--
+    * under umask 022). Hadoop's own raw layer would fork a `chmod`
+    * process for every data file and for its `.crc` sidecar. */
+  private lazy val writeFs: org.apache.hadoop.fs.LocalFileSystem = {
+    val raw = new org.apache.hadoop.fs.RawLocalFileSystem {
+      override def create(f: org.apache.hadoop.fs.Path,
+          permission: org.apache.hadoop.fs.permission.FsPermission,
+          overwrite: Boolean, bufferSize: Int, replication: Short,
+          blockSize: Long, progress: org.apache.hadoop.util.Progressable)
+          : org.apache.hadoop.fs.FSDataOutputStream =
+        if (permission != null)
+          super.create(f, permission, overwrite, bufferSize, replication,
+            blockSize, progress)
+        else {
+          val file = pathToFile(f)
+          if (!overwrite && file.exists())
+            throw new org.apache.hadoop.fs.FileAlreadyExistsException(
+              s"File already exists: $f")
+          new org.apache.hadoop.fs.FSDataOutputStream(
+            new java.io.BufferedOutputStream(
+              new java.io.FileOutputStream(file), bufferSize), statistics)
+        }
+    }
+    val fs = new org.apache.hadoop.fs.LocalFileSystem(raw)
+    fs.initialize(java.net.URI.create("file:///"), hadoopConf)
+    fs
+  }
+
+  /** Creates the local `file` for a parquet writer: the writer-side twin
+    * of [[openParquet]], and the connector's only parquet create. It
+    * keeps the `.crc` sidecar and passes a null permission (see
+    * [[writeFs]]). */
+  private[connector] def createParquet(file: String): org.apache.parquet.io.OutputFile = {
+    val p = new org.apache.hadoop.fs.Path(file)
+    new org.apache.parquet.io.OutputFile {
+      private def open(overwrite: Boolean, blockSizeHint: Long) =
+        org.apache.parquet.hadoop.util.HadoopStreams.wrap(writeFs.create(p,
+          null, overwrite, hadoopConf.getInt("io.file.buffer.size", 4096),
+          writeFs.getDefaultReplication(p),
+          math.max(writeFs.getDefaultBlockSize(p), blockSizeHint), null))
+      override def create(blockSizeHint: Long) = open(overwrite = false, blockSizeHint)
+      override def createOrOverwrite(blockSizeHint: Long) =
+        open(overwrite = true, blockSizeHint)
+      override def supportsBlockSize(): Boolean = true
+      override def defaultBlockSize(): Long = writeFs.getDefaultBlockSize(p)
+      override def getPath(): String = file
+    }
+  }
+
   private[connector] def withParquet[A](file: String)(f: ParquetFileReader => A): A = {
     val rd = openParquet(file)
     try f(rd) finally rd.close()
@@ -2506,17 +2557,29 @@ private[connector] final class TokenRangeScanBuilder(tableSchema: StructType,
       // fresh-stream start version (inclusive) — the Kafka
       // startingOffsets analog; ignored by batch scans
       Option(options.get("startingVersion")).map(_.toInt),
-      bloomProbes, fileRels)
+      bloomProbes, fileRels,
+      // a single-column key's schema name, for the reported partitioning
+      if (pkNames.size == 1)
+        tableSchema.fields.find(_.name.equalsIgnoreCase(pkName)).map(_.name)
+      else None)
   }
 }
 
 /** One input partition = one contiguous token range's files. `dvFiles`
   * (aligned with `files`; empty when the version carries no deletion
   * vectors) holds each file's bound deletion-vector parquet paths — the
-  * reader suppresses rows whose pk is in any of them (merge-on-read). */
+  * reader suppresses rows whose pk is in any of them (merge-on-read).
+  * A one-bucket partition's key is its bucket; the scan reports keys
+  * only when every partition it planned is one bucket. */
 private[connector] final case class TokenRangePartition(
     loBucket: Int, hiBucket: Int, files: Array[String],
-    dvFiles: Array[Array[String]] = Array.empty) extends InputPartition
+    dvFiles: Array[Array[String]] = Array.empty) extends HasPartitionKey {
+  override def partitionKey(): InternalRow = {
+    require(loBucket == hiBucket,
+      s"token range $loBucket..$hiBucket spans several buckets and has no partition key")
+    new GenericInternalRow(Array[Any](loBucket))
+  }
+}
 
 private[connector] final class TokenRangeScan(path: String,
     required: StructType, full: StructType, pushed: Array[Filter],
@@ -2525,11 +2588,32 @@ private[connector] final class TokenRangeScan(path: String,
     maxVersionsPerTrigger: Option[Int] = None,
     startingVersion: Option[Int] = None,
     bloomProbes: Seq[(String, DataType, Seq[Any], Boolean)] = Nil,
-    fileRels: Option[Set[String]] = None)
-    extends Scan with Batch {
+    fileRels: Option[Set[String]] = None, bucketKey: Option[String] = None)
+    extends Scan with Batch with SupportsReportPartitioning {
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+
+  /** `bucket(16, pk)` key-grouped partitioning when every planned
+    * partition holds exactly one bucket, else unknown. Spark binds the
+    * `bucket` transform through the relation's function catalog, so only
+    * [[TokenRangeCatalog]] tables are bucket-partitioned: a `.load(path)`
+    * relation has no catalog, and `spark_catalog` (V2SessionCatalog)
+    * loads only V1 functions. Composite keys (`bucketKey` = None) report
+    * nothing: Spark's transform binding takes one column. With the
+    * partitioning, a per-key window, aggregate or join on pk plans no
+    * exchange; a global `orderBy` still needs a single partition. */
+  override def outputPartitioning()
+      : org.apache.spark.sql.connector.read.partitioning.Partitioning = {
+    import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, UnknownPartitioning}
+    val parts = planned.map(_.asInstanceOf[TokenRangePartition])
+    bucketKey.filter(_ => parts.forall(p => p.loBucket == p.hiBucket)) match {
+      case Some(pk) => new KeyGroupedPartitioning(Array(
+        org.apache.spark.sql.connector.expressions.Expressions.bucket(
+          TokenLayout.Buckets, pk)), parts.length)
+      case None => new UnknownPartitioning(parts.length)
+    }
+  }
 
   // files dropped by the clustering-slice footer-stats prune, for
   // description() — (kept, total) within the bucket-pruned candidate set
@@ -3649,7 +3733,7 @@ private[connector] final class TokenRangeDataWriter(path: String,
     // ONLY per-file prune possible for TEXT keys, whose truncatable
     // binary stats zone maps can't use). Adaptive sizing: parquet picks
     // the smallest candidate filter that holds the file's NDV.
-    val builder = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(file))
+    val builder = ExampleParquetWriter.builder(TokenRangeSource.createParquet(file))
       .withConf(conf).withType(msgType)
       .withAdaptiveBloomFilterEnabled(true)
     pkIdx.foreach(i =>

@@ -67,7 +67,8 @@ class MessageStoreSpec extends SparkSpec {
 
     // compaction rewrites to the LWW view without changing read results
     store.compactUsers()
-    assert(spark.table(s"$ks.users").count() == 2, "compaction drops shadowed writes")
+    assert(spark.table(store.tableName("users")).count() == 2,
+      "compaction drops shadowed writes")
     assert(store.user("alice").collect().head.getAs[String]("email") == "alice@new.io")
 
     // channel predicate is pushed to the parquet scan
@@ -77,6 +78,9 @@ class MessageStoreSpec extends SparkSpec {
 
     store.dropKeyspace()
     assert(!spark.catalog.databaseExists(ks))
+    assert(!spark.sql(s"SHOW NAMESPACES IN ${MessageStore.Catalog}").collect()
+      .map(_.getString(0)).contains(ks), "the keyspace's namespace is gone")
+    assert(!new java.io.File(store.tablePath("users")).exists())
   }
 
   test("token-range connector: split planning, pk pushdown pruning, column pruning") {

@@ -407,6 +407,20 @@ class TokenRangeModelSpec extends SparkSpec {
     Gen.oneOf(names).map(n => DeleteUsers(Seq(n))))
 
   test("MessageStore keyspace: inserts, upserts, vector deletes and compactUsers match the model") {
+    messageStoreModel()
+  }
+
+  // `latestUsers` reads through the keyspace's catalog, whose scans report
+  // bucket partitioning; the verbs above read by path and report none
+  test("MessageStore keyspace matches the model with v2 bucketing off") {
+    val k = "spark.sql.sources.v2.bucketing.enabled"
+    val was = spark.conf.getOption(k)
+    spark.conf.set(k, "false")
+    try messageStoreModel()
+    finally was.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  private def messageStoreModel(): Unit = {
     val ks = s"ks_model_${System.nanoTime()}"
     val store = new MessageStore(spark, ks)
     store.createKeyspace(); store.createTables()
