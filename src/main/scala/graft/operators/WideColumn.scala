@@ -576,10 +576,10 @@ object WideColumn extends QueryModule {
     * horizon choosing the cheapest correct move per file from parquet
     * footer min/max stats: wholly-expired files RETIRE from the manifest
     * without being read (Cassandra's drop-the-SSTable fast path),
-    * wholly-live files survive by reference, only straddlers rewrite —
+    * wholly-live files survive by reference, only straddlers lose rows —
     * here the tranche split makes expiry a pure METADATA flip, which is
     * the 100 TB claim (TokenRangeDeleteSpec drives the straddling
-    * rewrite path on a mixed fixture). The entry aggregates the
+    * paths on a mixed fixture). The entry aggregates the
     * post-expiry table through the connector; the oracle filters raw
     * events at the same horizon, so the hash check proves expiry dropped
     * exactly the expired rows. */
@@ -625,11 +625,12 @@ object WideColumn extends QueryModule {
   // ---- MERGE-ON-READ TTL (r18, VERDICT r17 #2) ----------------------------
   /** The deletion-vector trilogy's third leg at the driver surface
     * (point deletes = wc_merge_on_read, range tombstones =
-    * wc_range_tombstone_mor, TTL = this): `expire(mode='dv')` on a
+    * wc_range_tombstone_mor, TTL = this): `expire` on a
     * three-tranche time-correlated ingest whose middle tranche STRADDLES
     * the cutoff. Wholly-expired files retire from the manifest unread
     * (the drop-the-SSTable fast path), the straddler gets a POSITION
-    * vector of exactly its expired rows, wholly-live files survive by
+    * vector of exactly its expired rows (its stored rows are within the
+    * table's `dml.fallback_rows` bound), wholly-live files survive by
     * reference — and NOTHING is rewritten: require-asserted live-files ⊂
     * before-files (retire-only, no new file) with vectors present.
     * Cassandra's expired-cell semantics exactly: merged out at read,
@@ -652,10 +653,10 @@ object WideColumn extends QueryModule {
           .option("schema", sch).mode("append").save(dir))
       val before = graft.sources.connector.TokenRangeOps.liveFiles(dir).toSet
       graft.sources.connector.TokenRangeOps.expire(
-        s, dir, "event_id", "ts", TtlMorCutoffMicros, mode = "dv")
+        s, dir, "event_id", "ts", TtlMorCutoffMicros)
       val after = graft.sources.connector.TokenRangeOps.liveFiles(dir).toSet
       require(after.subsetOf(before) && after != before,
-        "dv-mode TTL must retire wholly-expired files and rewrite " +
+        "a vector TTL must retire wholly-expired files and rewrite " +
           "nothing: live files must be a strict subset of the pre-expire " +
           "set")
       require(graft.sources.connector.TokenRangeOps
@@ -684,10 +685,11 @@ object WideColumn extends QueryModule {
     * at the connector layer: orders land through the sink, then the 8
     * derived keys (smallest ≡ 0 mod 97, the suite's multiget rule) are
     * RE-INSERTED with status 'U' and price + 1000, via
-    * `TokenRangeOps.upsert`: only the keys' owning buckets' files are
-    * rewritten (old rows anti-joined out, incoming written beside the
-    * survivors), everything else survives the manifest flip by
-    * reference, and the swap is atomic — the BatchStatement-of-upserts
+    * `TokenRangeOps.upsert`: the incoming rows append and a key vector
+    * bound to the keys' owning buckets' files suppresses their old rows
+    * (8 rows are far inside the table's `dml.fallback_rows` bound, past
+    * which those files would be rewritten instead), every file survives
+    * the manifest flip by reference, and the swap is atomic — the BatchStatement-of-upserts
     * shape (server.py's insert path). The entry aggregates the
     * post-upsert table per status; the oracle applies the same
     * replacement to raw orders in SQL, so the hash check proves the
@@ -887,8 +889,10 @@ object WideColumn extends QueryModule {
     * `TokenRangeOps.deleteCkRange` drops its middle third: wholly-covered
     * slabs RETIRE from the manifest WITHOUT BEING READ (the TTL
     * whole-file fast path generalized to (key, slice) — file-identity
-    * spec-asserted in TokenRangeDeleteSpec), straddlers rewrite their
-    * survivors, every other file survives by reference, and it all lands
+    * spec-asserted in TokenRangeDeleteSpec), straddlers get a position
+    * vector of their in-range rows (a survivor rewrite past the table's
+    * `dml.fallback_rows` bound), every other file survives by reference,
+    * and it all lands
     * in one conflict-validated atomic flip. The entry aggregates the
     * post-delete table through the connector; the oracle replays the
     * same slice arithmetic over raw events, so the hash check proves the
@@ -944,7 +948,7 @@ object WideColumn extends QueryModule {
 
   /** MERGE-ON-READ range tombstone (r17): Cassandra's range tombstone is
     * not a rewrite — it is a marker merged at read and purged at
-    * compaction, and `deleteCkRange(mode = "dv")` now IS that shape:
+    * compaction, and `deleteCkRange` IS that shape:
     * provably-covered slabs retire from the manifest unread, straddling
     * slabs get a POSITION deletion vector of exactly their in-range rows,
     * and NO survivor row is rewritten (require-asserted: the live file
@@ -979,7 +983,7 @@ object WideColumn extends QueryModule {
       val (lo0, hi0) = (b.getLong(0), b.getLong(1))
       val before = graft.sources.connector.TokenRangeOps.liveFiles(dir).toSet
       graft.sources.connector.TokenRangeOps.deleteCkRange(s, dir, "user_id", k,
-        lo0 + (hi0 - lo0) / 3, lo0 + 2 * ((hi0 - lo0) / 3), mode = "dv")
+        lo0 + (hi0 - lo0) / 3, lo0 + 2 * ((hi0 - lo0) / 3))
       val after = graft.sources.connector.TokenRangeOps.liveFiles(dir).toSet
       require(after.subsetOf(before),
         "a merge-on-read range tombstone must write NO data file " +
@@ -2247,7 +2251,7 @@ object WideColumn extends QueryModule {
         .orderBy(asc("o_orderkey")).limit(12)
         .select("o_orderkey").collect().map(_.getLong(0)).toSeq
       graft.sources.connector.TokenRangeOps
-        .deleteKeys(s, dir, "o_orderkey", delKeys, mode = "dv")
+        .deleteKeys(s, dir, "o_orderkey", delKeys)
       // key upsert: 8 keys take a new status and a bumped price — the
       // incoming rows APPEND, a vector tombstones the old generations
       val upFrame = Tables.orders(s, d)
@@ -2256,7 +2260,7 @@ object WideColumn extends QueryModule {
         .select(col("o_orderkey"), lit("M").as("o_orderstatus"),
           (col("o_totalprice") + 1000.0).as("o_totalprice"))
       graft.sources.connector.TokenRangeOps
-        .upsert(s, dir, "o_orderkey", upFrame, mode = "dv")
+        .upsert(s, dir, "o_orderkey", upFrame)
       // the merge-on-read CONTRACT, enforced at build time: every
       // pre-existing data file survives by identity (the upsert only
       // ADDED files; the delete added none)
@@ -2366,7 +2370,7 @@ object WideColumn extends QueryModule {
     * `SupportsDelta` protocol — matched rows arrive row-classified with
     * their `(_file, _pos)` position identity, removals publish as a
     * deletion vector bound to exactly the files that held them, new
-    * images append; a statement below the `dml.fallback_rows` bound
+    * images append; a statement within the `dml.fallback_rows` bound
     * rewrites NOTHING (the builder REQUIRES file identity). A 1-row SQL
     * UPDATE is one tiny appended file plus one tiny vector — Cassandra's
     * write path reached from SQL. The oracle replays the statements

@@ -481,8 +481,9 @@ final class TokenRangeCatalog extends TableCatalog with SupportsNamespaces
     ck.foreach(spec => TokenRangeSource.requireCkDomain(schema, spec, "table"))
     // dtype-domain check: every column must ride the sink
     TokenRangeSource.toParquet(schema)
-    // statement-size bound above which a SQL UPDATE / MERGE / predicate
-    // DELETE completes as a copy-on-write rewrite instead of a vector
+    // statement-size bound above which every row-level write (SQL DML,
+    // insert-upsert, the TokenRangeOps verbs) rewrites instead of
+    // publishing a deletion vector
     val fallbackRows = Option(properties.get("dml.fallback_rows"))
       .map(_.trim.toLong)
     fallbackRows.foreach(n => require(n >= 1,

@@ -163,7 +163,7 @@ private[connector] final class TokenRangeDeltaBatchWrite(path: String,
     val changes = () => TokenRangeOps.deltaDmlChanges(spark, path, pinned,
       touchedRel, staged.toSeq, tombs)
     try {
-      if (tombRows > TokenRangeSource.recordedMorFallbackRows(path)) {
+      if (!TokenRangeOps.publishesVector(path, tombRows)) {
         // COPY-ON-WRITE FALLBACK: same statement, group rewrite — the
         // touched files' survivors (old vectors merged, this statement's
         // tombstoned positions dropped) plus the staged images republish

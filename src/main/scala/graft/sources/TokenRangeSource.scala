@@ -426,11 +426,18 @@ object TokenRangeSource {
     * composite key would otherwise route to the WRONG buckets and
     * silently retain rows). Absent on pre-r13 tables: validation simply
     * skips. */
-  private[connector] def recordedPk(path: String): Option[String] = {
-    val f = new java.io.File(manifestDir(path), "table.properties").getPath
+  private[connector] def recordedPk(path: String): Option[String] =
+    manifestProperty(path, "table.properties", "pk")
+
+  /** The trimmed value of the first `key=` line of the properties file
+    * `file` under the table's `_manifests`; None when the file or the
+    * line is absent. */
+  private[connector] def manifestProperty(path: String, file: String,
+      key: String): Option[String] = {
+    val f = new java.io.File(manifestDir(path), file).getPath
     if (!manifestIO.exists(f)) None
     else manifestIO.read(f).split('\n').collectFirst {
-      case l if l.startsWith("pk=") => l.stripPrefix("pk=").trim
+      case l if l.startsWith(s"$key=") => l.stripPrefix(s"$key=").trim
     }
   }
 
@@ -468,31 +475,21 @@ object TokenRangeSource {
     * survive: the reference's blind INSERT into the clustered
     * `messages` table (server.py:186-207) now upserts by
     * (channel_id, message_id) exactly as CQL does. */
-  private[connector] def recordedInsertMode(path: String): Option[String] = {
-    val f = new java.io.File(manifestDir(path), "table.properties").getPath
-    if (!manifestIO.exists(f)) None
-    else manifestIO.read(f).split('\n').collectFirst {
-      case l if l.startsWith("insert=") => l.stripPrefix("insert=").trim
-    }
-  }
+  private[connector] def recordedInsertMode(path: String): Option[String] =
+    manifestProperty(path, "table.properties", "insert")
 
-  /** Statement-size bound above which a SQL UPDATE / MERGE / predicate
-    * DELETE completes as a copy-on-write rewrite instead of publishing a
-    * position vector, inside the same statement: a vector tombstoning
-    * millions of rows would tax every subsequent read until compaction,
-    * while the rewrite pays once at write time. This bound is the only
-    * thing that chooses copy-on-write for SQL DML; every statement at or
-    * below it leaves a vector. Tunable per table at CREATE via
-    * `TBLPROPERTIES('dml.fallback_rows'='N')`. */
+  /** Statement-size bound above which a row-level write rewrites the
+    * files it touches instead of publishing a deletion vector: a vector
+    * tombstoning millions of rows would tax every subsequent read until
+    * compaction, while the rewrite pays once at write time. Every
+    * row-level writer (the `TokenRangeOps` verbs, SQL UPDATE / MERGE /
+    * DELETE and `insert='upsert'` INSERTs) sizes its statement against
+    * it through [[TokenRangeOps.publishesVector]]. Tunable per table at
+    * CREATE via `TBLPROPERTIES('dml.fallback_rows'='N')`. */
   private[connector] val MorFallbackRowsDefault = 1000000L
-  private[connector] def recordedMorFallbackRows(path: String): Long = {
-    val f = new java.io.File(manifestDir(path), "table.properties").getPath
-    if (!manifestIO.exists(f)) MorFallbackRowsDefault
-    else manifestIO.read(f).split('\n').collectFirst {
-      case l if l.startsWith("dml.fallback_rows=") =>
-        l.stripPrefix("dml.fallback_rows=").trim.toLong
-    }.getOrElse(MorFallbackRowsDefault)
-  }
+  private[connector] def recordedMorFallbackRows(path: String): Long =
+    manifestProperty(path, "table.properties", "dml.fallback_rows")
+      .map(_.toLong).getOrElse(MorFallbackRowsDefault)
 
   /** Declared SECONDARY-INDEX columns (r17 — the Cassandra 2i/SAI
     * analog's cheap 80%): each declared non-key column gets a per-file
@@ -507,19 +504,9 @@ object TokenRangeSource {
     * build-on-write semantics without a rebuild job; a compact after
     * declaring rebuilds every file's bloom. */
   private[connector] def recordedIndexCols(path: String): Seq[String] = {
-    val f = new java.io.File(manifestDir(path), "index.properties").getPath
-    val own =
-      if (!manifestIO.exists(f)) None
-      else manifestIO.read(f).split('\n').collectFirst {
-        case l if l.startsWith("cols=") => l.stripPrefix("cols=").trim
-      }
-    own.orElse {
-      val tp = new java.io.File(manifestDir(path), "table.properties").getPath
-      if (!manifestIO.exists(tp)) None
-      else manifestIO.read(tp).split('\n').collectFirst {
-        case l if l.startsWith("index=") => l.stripPrefix("index=").trim
-      }
-    }.map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+    manifestProperty(path, "index.properties", "cols")
+      .orElse(manifestProperty(path, "table.properties", "index"))
+      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
   }
 
   /** Schema indices of the declared indexed columns present in a write
@@ -535,19 +522,13 @@ object TokenRangeSource {
 
   /** The CREATION schema recorded by the first commit (absent on tables
     * created before r14 — those fall back to footer inference). */
-  private[connector] def recordedSchema(path: String): Option[StructType] = {
-    val f = new java.io.File(manifestDir(path), "table.properties").getPath
-    if (!manifestIO.exists(f)) None
-    else manifestIO.read(f).split('\n').collectFirst {
-      case l if l.startsWith("schema=") =>
-        // all-nullable, like toSpark's footer mapping: the sink writes
-        // every column optional, and subset appends / ALTER columns read
-        // NULL — a NOT NULL creation field must not leak into the scan
-        // schema and let codegen assume non-nullability
-        StructType(StructType.fromDDL(l.stripPrefix("schema="))
-          .fields.map(_.copy(nullable = true)))
-    }
-  }
+  private[connector] def recordedSchema(path: String): Option[StructType] =
+    manifestProperty(path, "table.properties", "schema").map(ddl =>
+      // all-nullable, like toSpark's footer mapping: the sink writes
+      // every column optional, and subset appends / ALTER columns read
+      // NULL — a NOT NULL creation field must not leak into the scan
+      // schema and let codegen assume non-nullability
+      StructType(StructType.fromDDL(ddl).fields.map(_.copy(nullable = true))))
 
   /** The table's recorded CLUSTERING key (r13 verdict #1 — `WITH
     * CLUSTERING ORDER BY`, server.py:181-183, made PHYSICAL): recorded by
@@ -561,22 +542,11 @@ object TokenRangeSource {
     * bites on any ingest order, not just time-correlated loads, and a
     * contradicting later `ck` is refused. Absent on tables that never
     * declared one: writes stay order-preserving as before. */
-  private[graft] def recordedCk(path: String): Option[String] = {
-    val cf = new java.io.File(manifestDir(path), "clustering.properties").getPath
-    val fromOwn =
-      if (!manifestIO.exists(cf)) None
-      else manifestIO.read(cf).split('\n').collectFirst {
-        case l if l.startsWith("ck=") => l.stripPrefix("ck=").trim
-      }
-    fromOwn.orElse {
+  private[graft] def recordedCk(path: String): Option[String] =
+    manifestProperty(path, "clustering.properties", "ck")
       // creation-time declaration (recorded beside pk by recordPk)
-      val f = new java.io.File(manifestDir(path), "table.properties").getPath
-      if (!manifestIO.exists(f)) None
-      else manifestIO.read(f).split('\n').collectFirst {
-        case l if l.startsWith("ck=") => l.stripPrefix("ck=").trim
-      }
-    }.filter(_.nonEmpty)
-  }
+      .orElse(manifestProperty(path, "table.properties", "ck"))
+      .filter(_.nonEmpty)
 
   private[graft] def recordCk(path: String, ck: String): Unit = {
     if (recordedCk(path).isEmpty)
@@ -818,24 +788,16 @@ object TokenRangeSource {
     * changed-row CDC over rewrites a read-time O(sidecar) serve instead
     * of an impossible file diff. Off by default (appends never need it);
     * last-writer-wins like retention. */
-  private[connector] def changeFeedEnabled(path: String): Boolean = {
-    val f = new java.io.File(manifestDir(path), "cdf.properties").getPath
-    manifestIO.exists(f) && manifestIO.read(f).split('\n').exists(
-      _.trim == "cdf=true")
-  }
+  private[connector] def changeFeedEnabled(path: String): Boolean =
+    manifestProperty(path, "cdf.properties", "cdf").contains("true")
 
   /** The version at which the change feed was ENABLED (r16) — the
     * snapshot-seeding anchor for backfills that cross pre-enable
     * rewrites. None on feeds enabled before the header existed (those
     * keep the loud pre-enable refusal). */
-  private[connector] def changeFeedSince(path: String): Option[Int] = {
-    val f = new java.io.File(manifestDir(path), "cdf.properties").getPath
-    if (!manifestIO.exists(f) || !changeFeedEnabled(path)) None
-    else manifestIO.read(f).split('\n').collectFirst {
-      case l if l.trim.startsWith("since=") =>
-        l.trim.stripPrefix("since=").toInt
-    }
-  }
+  private[connector] def changeFeedSince(path: String): Option[Int] =
+    if (!changeFeedEnabled(path)) None
+    else manifestProperty(path, "cdf.properties", "since").map(_.toInt)
 
   /** One classified entry per version in `(fromEx, toIn]` — the shared
     * commit-log walk behind the CDC tail and the batch `table_changes`
@@ -1543,56 +1505,13 @@ object TokenRangeSource {
     rd
   }
 
-  /** The checksummed local file system the connector writes through. Its
-    * raw layer creates a file with a null permission as a plain stream,
-    * so the file keeps the mode the process umask gives it (rw-r--r--
-    * under umask 022). Hadoop's own raw layer would fork a `chmod`
-    * process for every data file and for its `.crc` sidecar. */
-  private lazy val writeFs: org.apache.hadoop.fs.LocalFileSystem = {
-    val raw = new org.apache.hadoop.fs.RawLocalFileSystem {
-      override def create(f: org.apache.hadoop.fs.Path,
-          permission: org.apache.hadoop.fs.permission.FsPermission,
-          overwrite: Boolean, bufferSize: Int, replication: Short,
-          blockSize: Long, progress: org.apache.hadoop.util.Progressable)
-          : org.apache.hadoop.fs.FSDataOutputStream =
-        if (permission != null)
-          super.create(f, permission, overwrite, bufferSize, replication,
-            blockSize, progress)
-        else {
-          val file = pathToFile(f)
-          if (!overwrite && file.exists())
-            throw new org.apache.hadoop.fs.FileAlreadyExistsException(
-              s"File already exists: $f")
-          new org.apache.hadoop.fs.FSDataOutputStream(
-            new java.io.BufferedOutputStream(
-              new java.io.FileOutputStream(file), bufferSize), statistics)
-        }
-    }
-    val fs = new org.apache.hadoop.fs.LocalFileSystem(raw)
-    fs.initialize(java.net.URI.create("file:///"), hadoopConf)
-    fs
-  }
-
   /** Creates the local `file` for a parquet writer: the writer-side twin
-    * of [[openParquet]], and the connector's only parquet create. It
-    * keeps the `.crc` sidecar and passes a null permission (see
-    * [[writeFs]]). */
-  private[connector] def createParquet(file: String): org.apache.parquet.io.OutputFile = {
-    val p = new org.apache.hadoop.fs.Path(file)
-    new org.apache.parquet.io.OutputFile {
-      private def open(overwrite: Boolean, blockSizeHint: Long) =
-        org.apache.parquet.hadoop.util.HadoopStreams.wrap(writeFs.create(p,
-          null, overwrite, hadoopConf.getInt("io.file.buffer.size", 4096),
-          writeFs.getDefaultReplication(p),
-          math.max(writeFs.getDefaultBlockSize(p), blockSizeHint), null))
-      override def create(blockSizeHint: Long) = open(overwrite = false, blockSizeHint)
-      override def createOrOverwrite(blockSizeHint: Long) =
-        open(overwrite = true, blockSizeHint)
-      override def supportsBlockSize(): Boolean = true
-      override def defaultBlockSize(): Long = writeFs.getDefaultBlockSize(p)
-      override def getPath(): String = file
-    }
-  }
+    * of [[openParquet]], and the connector's only parquet create. Plain
+    * NIO streams: no Hadoop file system, so no `.crc` sidecar and no
+    * `chmod` fork — the file keeps the mode the process umask gives it
+    * (rw-r--r-- under umask 022). */
+  private[connector] def createParquet(file: String): org.apache.parquet.io.OutputFile =
+    new org.apache.parquet.io.LocalOutputFile(java.nio.file.Paths.get(file))
 
   private[connector] def withParquet[A](file: String)(f: ParquetFileReader => A): A = {
     val rd = openParquet(file)
@@ -2172,9 +2091,10 @@ private[connector] final class TokenRangeTable(tableSchema: StructType,
 
   // ---- row-level DELETE (CQL `DELETE ... WHERE pk = ?` / `pk IN (...)`,
   // server.py's delete surface) — the DSv2 SupportsDelete hook, served by
-  // the copy-on-write rewrite in [[TokenRangeOps.deleteKeys]]: only the
-  // keys' OWNING BUCKETS' files are rewritten, every other bucket's files
-  // survive by reference, and the swap is one atomic manifest flip.
+  // [[TokenRangeOps.deleteKeys]]: only the keys' OWNING BUCKETS' files are
+  // touched (a key vector, or a rewrite past the table's bound), every
+  // other bucket's files survive by reference, and the swap is one atomic
+  // manifest flip.
   // the DSv2 contract is CONJUNCTIVE: a row is deleted iff EVERY filter
   // matches, so multiple pk predicates INTERSECT their key sets (r11
   // review: the first cut unioned them — unrequested data loss). An
@@ -2713,7 +2633,10 @@ private[connector] final class TokenRangeScan(path: String,
           else files.map(f =>
             dvByRel.getOrElse(TokenRangeSource.relOf(f), Array.empty[String])).toArray)
       }
-      .filter(_.files.nonEmpty)
+      // a pk-pruned one-bucket range keeps its partition with no files:
+      // with zero partitions Spark drops the reported key grouping and
+      // plans an exchange over no rows
+      .filter(p => p.files.nonEmpty || (pkBuckets.isDefined && p.loBucket == p.hiBucket))
       .toArray[InputPartition]
   }
 
@@ -3844,9 +3767,10 @@ private[connector] final class TokenRangeDataWriter(path: String,
   override def close(): Unit = ()
 }
 
-/** Table-maintenance operations over the manifest layer: row-level DELETE
-  * and per-bucket compaction, both expressed as COPY-ON-WRITE rewrites
-  * that publish through one atomic manifest flip (the primitive
+/** Table-maintenance operations over the manifest layer: row-level
+  * writes (a deletion vector or a COPY-ON-WRITE rewrite, chosen by
+  * [[TokenRangeOps.publishesVector]]) and per-bucket compaction, each
+  * published through one atomic manifest flip (the primitive
   * [[TokenRangeSource.publishManifest]]'s `removeRel` exists for).
   *
   * Concurrency model (documented, Delta/Iceberg-style optimistic): each
@@ -3999,6 +3923,19 @@ object TokenRangeOps {
     }
   }
 
+  /** Whether a row-level write of `rows` rows or keys publishes a
+    * deletion vector instead of rewriting the files it touches — the only
+    * place that choice is made, for every writer. A vector needs the
+    * recorded pk (readers resolve the merge key through it; without it
+    * every read, compaction included, would refuse), and it stays at or
+    * below the table's [[TokenRangeSource.recordedMorFallbackRows]] bound:
+    * past it, the rewrite pays once at write time instead of taxing every
+    * read until compaction. Cassandra's shape below the bound: tombstones
+    * merged at read, purged at compaction. */
+  private[connector] def publishesVector(path: String, rows: Long): Boolean =
+    TokenRangeSource.recordedPk(path).isDefined &&
+      rows <= TokenRangeSource.recordedMorFallbackRows(path)
+
   /** A fresh deletion-vector sidecar name (`_dv/<uuid>`). */
   private[connector] def newDvRel(): String =
     s"_dv/${java.util.UUID.randomUUID().toString.take(12)}"
@@ -4039,36 +3976,44 @@ object TokenRangeOps {
   private case object RetireFile extends Fate
   private case object SplitFile extends Fate
 
-  /** (retired, split) files of `rels` by `fate` over each file's parquet
-    * row groups; a file without row groups holds nothing to keep. */
+  /** The footer-classified files of a delete: `retired` and `split`
+    * files, and the stored rows of the split files — an upper bound on
+    * the rows the delete removes from them. */
+  private final case class Fates(retired: Seq[String], split: Seq[String],
+      splitRows: Long)
+
+  /** [[Fates]] of `rels` by `fate` over each file's parquet row groups; a
+    * file without row groups holds nothing to keep. */
   private def footerFates(path: String, rels: Seq[String])(
-      fate: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData] => Fate)
-      : (Seq[String], Seq[String]) = {
+      fate: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData] => Fate): Fates = {
     val fates = rels.map { rel =>
       val blocks = TokenRangeSource.withParquet(
         new java.io.File(path, rel).getAbsolutePath)(_.getFooter.getBlocks.asScala.toSeq)
-      rel -> (if (blocks.isEmpty) RetireFile else fate(blocks))
+      (rel, if (blocks.isEmpty) RetireFile else fate(blocks), blocks.map(_.getRowCount).sum)
     }
-    (fates.collect { case (rel, RetireFile) => rel },
-      fates.collect { case (rel, SplitFile) => rel })
+    Fates(fates.collect { case (rel, RetireFile, _) => rel },
+      fates.collect { case (rel, SplitFile, _) => rel },
+      fates.collect { case (_, SplitFile, n) => n }.sum)
   }
 
-  /** The plan the footer-classified deletes share: `retired` files leave
+  /** The plan the footer-classified deletes share: retired files leave
     * unread (metadata-only when nothing splits — sound with vectors too:
     * suppressed rows are already deleted, the rest provably match),
-    * `split` files lose exactly their `matches` rows — a POSITION vector
-    * in dv mode (survivors never rewritten; rows an earlier vector
-    * deleted never re-tombstone), a survivor rewrite otherwise — and the
-    * feed records every matching row of both (reading is the only way to
-    * record a retired file's rows: the fast path yields to the feed). */
+    * split files lose exactly their `matches` rows — a POSITION vector
+    * when [[publishesVector]] takes their stored rows (survivors never
+    * rewritten; rows an earlier vector deleted never re-tombstone), a
+    * survivor rewrite otherwise — and the feed records every matching
+    * row of both (reading is the only way to record a retired file's
+    * rows: the fast path yields to the feed). */
   private def sliceFlip(spark: SparkSession, path: String, pk: String,
-      pinned: Option[Int], retired: Seq[String], split: Seq[String],
-      dv: Boolean, opKind: String, matches: Column): Option[Flip] = {
+      pinned: Option[Int], fates: Fates, opKind: String,
+      matches: Column): Option[Flip] = {
+    val Fates(retired, split, splitRows) = fates
     val changes = Some(() =>
       deleted(readTableFiles(spark, path, retired ++ split, pinned).filter(matches)))
     if (retired.isEmpty && split.isEmpty) None // nothing matches
     else if (split.isEmpty) Some(Retire(retired, opKind, changes))
-    else if (dv)
+    else if (publishesVector(path, splitRows))
       Some(Bind(readTableFiles(spark, path, split, pinned, positions = true)
           .filter(matches).select(PositionCols.map(col): _*), split,
         opKind, changes, retire = retired))
@@ -4103,41 +4048,22 @@ object TokenRangeOps {
 
   /** Row-level DELETE of the given partition keys (CQL
     * `DELETE FROM t WHERE pk IN (...)`, server.py's delete surface):
-    * only files in the keys' OWNING token buckets are read and
-    * rewritten without the matching rows — every other bucket's files
-    * survive in the new manifest BY REFERENCE (untouched on disk,
-    * spec-asserted) — and the swap is one atomic flip: readers see the
-    * pre-delete version in full until the commit, the post-delete
-    * version after it, never a mix. The rewrite is a distributed Spark
-    * job (survivors shuffle nothing — they re-route to the same bucket),
-    * so a 100 TB table deletes at the cost of the affected buckets, not
-    * a table scan. */
-  /** Point deletes above this key count take the copy-on-write path
-    * under `mode = "auto"`; at or below it they publish a deletion
-    * vector instead (merge-on-read) — a small DELETE then writes NO data
-    * file, just a tiny key sidecar plus one manifest flip, and the read
-    * path suppresses the rows until compaction applies the vector
-    * physically. Cassandra's own shape: tombstones merged at read,
-    * purged at compaction. */
-  val DvAutoMaxKeys = 128
-
+    * only files in the keys' OWNING token buckets are touched — every
+    * other bucket's files survive in the new manifest BY REFERENCE
+    * (untouched on disk, spec-asserted) — and the change is one atomic
+    * flip: readers see the pre-delete version in full until the commit,
+    * the post-delete version after it, never a mix. Up to the table's
+    * `dml.fallback_rows` distinct keys ([[publishesVector]]) the delete
+    * writes NO data file, just a key vector bound to the owning buckets'
+    * files; readers suppress the rows until compaction applies it. Past
+    * the bound those files are rewritten without the matching rows in a
+    * distributed Spark job (survivors shuffle nothing — they re-route to
+    * the same bucket), so a 100 TB table deletes at the cost of the
+    * affected buckets, not a table scan. */
   def deleteKeys(spark: SparkSession, path: String, pk: String,
-      keys: Seq[Any], mode: String = "auto"): Unit = {
+      keys: Seq[Any]): Unit = {
     require(keys.nonEmpty, "token-range DELETE requires at least one key")
-    require(Set("auto", "cow", "dv")(mode),
-      s"token-range DELETE mode must be auto|cow|dv, got '$mode'")
     requirePkMatches(path, pk, "DELETE", singleOnly = true)
-    // the vector path NEEDS the recorded pk (readers resolve the merge
-    // key through it): on a legacy table that never recorded one, a
-    // published vector would make every read — including the compaction
-    // that could remove it — refuse (review r16: the silent brick).
-    // auto falls back to copy-on-write; explicit dv refuses loudly.
-    val pkRecorded = TokenRangeSource.recordedPk(path).isDefined
-    require(mode != "dv" || pkRecorded,
-      s"token-range DELETE mode=dv at $path requires a recorded pk " +
-        "(write through the sink once, or use cow)")
-    val useDv = pkRecorded &&
-      (mode == "dv" || (mode == "auto" && keys.size <= DvAutoMaxKeys))
     val buckets = keys.map(bucketOfKey).toSet
     val keyLits = keys.map {
       case u: UTF8String => u.toString
@@ -4152,7 +4078,7 @@ object TokenRangeOps {
       lazy val affected = readTableFiles(spark, path, affectedRel, pinned)
       val changes = Some(() => deleted(affected.filter(matches)))
       if (affectedRel.isEmpty) None // keys owning no visible files: no-op
-      else if (useDv) {
+      else if (publishesVector(path, keyLits.distinct.size)) {
         // MERGE-ON-READ: no data file is read or written — a key sidecar
         // bound to every file currently owning the keys' buckets; readers
         // suppress, compaction applies
@@ -4181,15 +4107,14 @@ object TokenRangeOps {
     * matching tuples (a left-anti join against the literal tuple frame —
     * scales to any tuple-list size, unlike an OR-chain), every other
     * bucket survives by reference, and the swap is one atomic
-    * conflict-validated flip, exactly like [[deleteKeys]]. */
+    * conflict-validated flip, exactly like [[deleteKeys]] — a tuple
+    * vector up to the `dml.fallback_rows` bound, a rewrite past it. */
   def deleteTuples(spark: SparkSession, path: String, pks: Seq[String],
-      keys: Seq[Seq[Any]], mode: String = "auto"): Unit = {
+      keys: Seq[Seq[Any]]): Unit = {
     require(pks.size >= 2, "deleteTuples is the composite-key surface; " +
       "use deleteKeys for single-column partition keys")
     require(keys.nonEmpty && keys.forall(_.size == pks.size),
       s"every tuple must bind all of (${pks.mkString(", ")})")
-    require(Set("auto", "cow", "dv")(mode),
-      s"token-range DELETE mode must be auto|cow|dv, got '$mode'")
     requirePkMatches(path, pks.mkString(","), "DELETE")
     // an EMPTY table deletes nothing — and has no footer to read the
     // component dtypes from (r13 review: the schemaless load below would
@@ -4218,11 +4143,6 @@ object TokenRangeOps {
     val keyDf = spark.createDataFrame(
       spark.sparkContext.parallelize(keyRows, 1),
       StructType(pkFields.map(f => StructField(f.name, f.dataType))))
-    val pkRecorded = TokenRangeSource.recordedPk(path).isDefined
-    require(mode != "dv" || pkRecorded,
-      s"token-range DELETE mode=dv at $path requires a recorded pk")
-    val useDv = pkRecorded &&
-      (mode == "dv" || (mode == "auto" && keys.size <= DvAutoMaxKeys))
     val joinCols = pkFields.map(_.name).toSeq
     rewrite(spark, path, "DELETE") { pinned =>
       val affectedRel = TokenRangeSource.visibleRelFiles(path, pinned)
@@ -4234,7 +4154,8 @@ object TokenRangeOps {
       if (affectedRel.isEmpty) None
       // merge-on-read, composite grain: the vector holds the tuples (all
       // pk components, table dtypes) — see deleteKeys
-      else if (useDv) Some(Bind(keyDf.distinct(), affectedRel, "delete", changes))
+      else if (publishesVector(path, coerced.distinct.size))
+        Some(Bind(keyDf.distinct(), affectedRel, "delete", changes))
       else Some(Replace(keyed("left_anti"), affectedRel, pks.mkString(","),
         "delete", changes))
     }
@@ -4253,25 +4174,23 @@ object TokenRangeOps {
     *     inside [lo, hi), zero nulls in both) → RETIRED from the
     *     manifest outright, never read — the TTL whole-file fast path
     *     generalized to (key, slice);
-    *   - anything unprovable → copy-on-write rewrite of the survivors,
-    *     or — `mode = "dv"` (r17) — a POSITION deletion vector of
-    *     exactly the straddlers' matching rows: Cassandra's actual
+    *   - anything unprovable → a POSITION deletion vector of exactly
+    *     the straddlers' matching rows: Cassandra's actual
     *     range-tombstone shape (merged at read, purged at compaction).
-    *     The matching rows are read either way (the feed needs them);
-    *     the vector skips WRITING the survivors, which is the dominant
+    *     The vector skips WRITING the survivors, which is the dominant
     *     cost when the deleted slice is small relative to its files
-    *     (delete one hour of a hot channel). `auto` stays copy-on-write
-    *     (the slice/file ratio is unknowable without reading — a
-    *     retention-style wide slice would build a data-sized vector).
+    *     (delete one hour of a hot channel). The straddlers' stored rows
+    *     bound the vector's size (the slice/file ratio is unknowable
+    *     without reading); past the table's `dml.fallback_rows` bound
+    *     ([[publishesVector]]) the survivors are rewritten instead, so a
+    *     retention-style wide slice never builds a data-sized vector.
     * All moves land in ONE conflict-validated atomic flip. NULL-ck rows
     * never match a range predicate (SQL/CQL agree), so they always
     * survive — a file with ck nulls can Keep but never Retire. pk-stat
     * reasoning applies to integral keys; TEXT keys (truncatable binary
     * stats) conservatively straddle unless ck-disjoint. */
   def deleteCkRange(spark: SparkSession, path: String, pk: String, key: Any,
-      ckLo: Long, ckHi: Long, mode: String = "auto"): Unit = {
-    require(Set("auto", "cow", "dv")(mode),
-      s"token-range DELETE mode must be auto|cow|dv, got '$mode'")
+      ckLo: Long, ckHi: Long): Unit = {
     requirePkMatches(path, pk, "DELETE", singleOnly = true)
     val ckCol = TokenRangeSource.recordedCk(path)
       .map(s => TokenRangeSource.parseCkSpec(s).head._1)
@@ -4300,7 +4219,7 @@ object TokenRangeOps {
       // per-file fate from footer stats (block-conjunctive: Keep needs
       // EVERY row group provably matchless, Retire EVERY row group
       // provably all-match)
-      val (retired, straddling) = footerFates(path,
+      val fates = footerFates(path,
           TokenRangeSource.visibleRelFiles(path, pinned)
             .collect { case (k, rel) if k == bucket => rel }) { blocks =>
         val per = blocks.map { b =>
@@ -4337,7 +4256,7 @@ object TokenRangeOps {
       // ck.isNotNull keeps the predicate two-valued: a NULL-ck row never
       // matches a range (CQL/SQL agree), and without the guard not(NULL)
       // = NULL would silently DROP it from the rewrite
-      sliceFlip(spark, path, pk, pinned, retired, straddling, mode == "dv",
+      sliceFlip(spark, path, pk, pinned, fates,
         "delete", col(pk) === lit(keyV) &&
           col(ckCol).isNotNull && col(ckCol) >= ckLo && col(ckCol) < ckHi)
     }
@@ -4703,7 +4622,7 @@ object TokenRangeOps {
     * bound file conflicts the publish — [[TokenRangeBatchWrite.commit]]
     * re-binds from the fresh snapshot and retries (ADVICE r17); racing
     * appends of the same key stay concurrent blind writes, exactly
-    * [[upsert]]'s dv-mode contract. */
+    * [[upsert]]'s vector contract. */
   /** How a qualifying plain append on an `insert='upsert'` table
     * completes (r18): bind a deletion vector (the blind-write fast
     * path), or — above `dml.fallback_rows` distinct keys — complete as
@@ -4719,6 +4638,10 @@ object TokenRangeOps {
       affectedRel: Seq[String], pinned: Option[Int],
       changes: Option[() => DataFrame], keyCols: Seq[String],
       keysDf: DataFrame, deduped: DataFrame) extends InsertUpsertPlan
+
+  /** Single-column-key INSERT batches of at most this many distinct keys
+    * probe each candidate file's pk bloom before binding it. */
+  private val InsertProbeMaxKeys = 128
 
   private[connector] def insertUpsertBind(spark: SparkSession, path: String,
       stagedAbs: Seq[String])
@@ -4827,8 +4750,8 @@ object TokenRangeOps {
         if (pkCols.size != 1 || bucketRel.isEmpty) None
         else {
           val few = keysDf.select(col(pkCols.head)).distinct()
-            .limit(DvAutoMaxKeys + 1).collect()
-          if (few.length > DvAutoMaxKeys) None
+            .limit(InsertProbeMaxKeys + 1).collect()
+          if (few.length > InsertProbeMaxKeys) None
           else Some(few.map(_.get(0)).toSeq)
         }
       val affectedRel = fewKeys match {
@@ -4850,7 +4773,7 @@ object TokenRangeOps {
         // STATEMENT-SIZE fallback (r18, the mor-DML trade at the INSERT
         // path): past `dml.fallback_rows` distinct keys, complete
         // copy-on-write — see [[InsertUpsertPlan]]
-        if (nKeys > TokenRangeSource.recordedMorFallbackRows(path))
+        if (!publishesVector(path, nKeys))
           Some(InsertUpsertCowPlan(affectedRel, pinned, Some(changes),
             keyCols, keysDf, deduped))
         else {
@@ -4939,15 +4862,9 @@ object TokenRangeOps {
     * instead. */
   private[connector] val DvCompactAfterDefault = 8
 
-  private[connector] def dvCompactAfter(path: String): Int = {
-    val f = new java.io.File(
-      TokenRangeSource.manifestDir(path), "dv.properties").getPath
-    if (!TokenRangeSource.manifestIO.exists(f)) DvCompactAfterDefault
-    else TokenRangeSource.manifestIO.read(f).split('\n').collectFirst {
-      case l if l.startsWith("compact_after=") =>
-        l.stripPrefix("compact_after=").trim.toInt
-    }.getOrElse(DvCompactAfterDefault)
-  }
+  private[connector] def dvCompactAfter(path: String): Int =
+    TokenRangeSource.manifestProperty(path, "dv.properties", "compact_after")
+      .map(_.toInt).getOrElse(DvCompactAfterDefault)
 
   /** Record the per-file binding bound the automatic vector sweep
     * compacts at (last-writer-wins, like retention); 0 disables it. */
@@ -5016,15 +4933,9 @@ object TokenRangeOps {
         "compact.properties").getPath,
       s"files_per_bucket=$filesPerBucket")
 
-  private[connector] def filesPerBucketBound(path: String): Int = {
-    val f = new java.io.File(
-      TokenRangeSource.manifestDir(path), "compact.properties").getPath
-    if (!TokenRangeSource.manifestIO.exists(f)) 0
-    else TokenRangeSource.manifestIO.read(f).split('\n').collectFirst {
-      case l if l.startsWith("files_per_bucket=") =>
-        l.stripPrefix("files_per_bucket=").trim.toInt
-    }.getOrElse(0)
-  }
+  private[connector] def filesPerBucketBound(path: String): Int =
+    TokenRangeSource.manifestProperty(path, "compact.properties", "files_per_bucket")
+      .map(_.toInt).getOrElse(0)
 
   /** SELECTIVE fragmentation compaction: rewrite exactly the buckets
     * holding at least `threshold` live files — each hot bucket's files
@@ -5096,19 +5007,17 @@ object TokenRangeOps {
     * every other bucket's files survive by reference, and the manifest
     * flip publishes survivors + incoming while retiring the affected
     * files (the same append+replaceFiles primitive DELETE/compaction
-    * use, so a racing append rebases in intact). A reader sees the
-    * pre-upsert table in full until the flip, the post-upsert one after
-    * — the row-level LWW register the reference's INSERT path implements
-    * per key, here at batch grain. At 100 TB the cost is the touched
+    * use, so a racing append rebases in intact). Up to the table's
+    * `dml.fallback_rows` incoming rows ([[publishesVector]]) nothing is
+    * rewritten: the incoming rows append and a key vector bound to the
+    * owning buckets' files suppresses the replaced keys' old rows in the
+    * same flip. A reader sees the pre-upsert table in full until the
+    * flip, the post-upsert one after — the row-level LWW register the
+    * reference's INSERT path implements per key, here at batch grain. At 100 TB the cost is the touched
     * buckets' rewrite, not a table scan. */
   def upsert(spark: SparkSession, path: String, pk: String,
-      incoming: org.apache.spark.sql.DataFrame, mode: String = "cow"): Unit = {
+      incoming: org.apache.spark.sql.DataFrame): Unit = {
     requirePkMatches(path, pk, "upsert")
-    require(Set("cow", "dv")(mode),
-      s"token-range upsert mode must be cow|dv, got '$mode'")
-    require(mode != "dv" || TokenRangeSource.recordedPk(path).isDefined,
-      s"token-range upsert mode=dv at $path requires a recorded pk " +
-        "(readers resolve the vector merge key through it)")
     // single OR composite key (r13): the bucket expression and the
     // replace-by-key anti-join both generalize column-for-column — a
     // composite upsert replaces at TUPLE grain, exactly CQL's
@@ -5147,16 +5056,17 @@ object TokenRangeOps {
           col(f.name).cast(f.dataType)).toSeq: _*)
       case None => incoming // fresh/empty table: incoming defines the schema
     }
-    // owning buckets of the incoming keys: a ≤ Buckets-row distinct
-    // aggregate (bounded by the ring width, never by data volume)
-    val buckets = aligned.select(ringOf(pks, aligned.schema).as("tb"))
-      .distinct().collect().map(_.getInt(0)).toSet
+    // incoming rows per owning bucket: a ≤ Buckets-row aggregate
+    // (bounded by the ring width, never by data volume)
+    val perBucket = aligned.groupBy(ringOf(pks, aligned.schema).as("tb"))
+      .count().collect()
+    val buckets = perBucket.map(_.getInt(0)).toSet
     rewrite(spark, path, "upsert") { pinned =>
       val affectedRel = TokenRangeSource.visibleRelFiles(path, pinned)
         .collect { case (k, rel) if buckets(k) => rel }
       lazy val old = readTableFiles(spark, path, affectedRel, pinned, empty = aligned.schema)
       val changes = Some(() => upsertChanges(old, aligned, pks))
-      if (mode == "dv" && affectedRel.nonEmpty)
+      if (affectedRel.nonEmpty && publishesVector(path, perBucket.map(_.getLong(1)).sum))
         // MERGE-ON-READ upsert: the incoming rows APPEND, and a deletion
         // vector bound to the pre-existing owning-bucket files suppresses
         // the replaced keys' old rows in the same flip — Cassandra's
@@ -5183,16 +5093,17 @@ object TokenRangeOps {
     *     the manifest outright (no read, no rewrite — Cassandra's
     *     "drop the whole SSTable" fast path);
     *   - min(ts) >  cutoff  → wholly live: survives BY REFERENCE;
-    *   - straddling (or stats missing) → copy-on-write rewrite of the
-    *     survivors, conservative-correct.
+    *   - straddling (or stats missing) → a POSITION vector of exactly
+    *     the expired rows up to the table's `dml.fallback_rows` stored
+    *     rows in those files ([[publishesVector]]) — Cassandra's
+    *     expired-cell semantics, live rows never rewritten — and a
+    *     rewrite of the survivors past it.
     * All three land in ONE atomic manifest flip. At 100 TB with
     * time-correlated ingest (each load lands one time-slab of files),
     * almost every file is wholly-expired or wholly-live and expiry is a
     * metadata operation — the entry + spec assert exactly that. */
   def expire(spark: SparkSession, path: String, pk: String, tsCol: String,
-      cutoffMicros: Long, mode: String = "auto"): Unit = {
-    require(Set("auto", "cow", "dv")(mode),
-      s"token-range expire mode must be auto|cow|dv, got '$mode'")
+      cutoffMicros: Long): Unit = {
     requirePkMatches(path, pk, "expire") // composite ok: pk just passes through to the sink
     val cutoffTs = org.apache.spark.sql.functions
       .timestamp_micros(org.apache.spark.sql.functions.lit(cutoffMicros))
@@ -5204,7 +5115,7 @@ object TokenRangeOps {
       // NO null (r11 review: the first cut dropped null rows unread when
       // their file's non-null max fell under the cutoff). An all-null row
       // group reports the empty interval (shared extractor, r15).
-      val (retired, straddling) = footerFates(path,
+      val fates = footerFates(path,
           TokenRangeSource.visibleRelFiles(path, pinned).map(_._2)) { blocks =>
         val stats = blocks.flatMap(b => TokenRangeSource.footerLongStats(b, tsCol))
         if (stats.size != blocks.size) SplitFile // stats gap: be safe
@@ -5214,11 +5125,9 @@ object TokenRangeOps {
         else SplitFile
       }
       // wholly-expired files retire unread, boundary files lose exactly
-      // their expired rows (MERGE-ON-READ TTL in dv mode, r17: a position
-      // vector, live rows never rewritten — Cassandra's expired-cell
-      // semantics); null ts survives (rows without a writetime never expire)
-      sliceFlip(spark, path, pk, pinned, retired, straddling, mode == "dv",
-        "expire", col(tsCol).isNotNull && col(tsCol) <= cutoffTs)
+      // their expired rows; null ts survives (rows without a writetime
+      // never expire)
+      sliceFlip(spark, path, pk, pinned, fates, "expire", col(tsCol).isNotNull && col(tsCol) <= cutoffTs)
     }
   }
 
@@ -5445,15 +5354,9 @@ object TokenRangeOps {
     rel
   }
 
-  private[connector] def retentionKeep(path: String): Option[Int] = {
-    val f = new java.io.File(
-      TokenRangeSource.manifestDir(path), "retention.properties").getPath
-    if (!TokenRangeSource.manifestIO.exists(f)) None
-    else TokenRangeSource.manifestIO.read(f).split('\n').collectFirst {
-      case l if l.startsWith("retain.versions=") =>
-        l.stripPrefix("retain.versions=").trim.toInt
-    }
-  }
+  private[connector] def retentionKeep(path: String): Option[Int] =
+    TokenRangeSource.manifestProperty(path, "retention.properties", "retain.versions")
+      .map(_.toInt)
 
   /** Operator's one-stop table description (`DESCRIBE TABLE` +
     * `DESCRIBE HISTORY` in one map): recorded keys, stored schema,

@@ -796,8 +796,10 @@ object StreamingEntries extends QueryModule {
 
   /** CHANGE DATA FEED over the connector (r15 continuation — Delta's CDF
     * / Cassandra's CDC-over-mutations analog): a connector table takes an
-    * append, a bounded DELETE and an upsert with the feed enabled; the
-    * rewrites record the rows they remove/replace as `_cdf/` sidecars
+    * append, a bounded DELETE and an upsert with the feed enabled (both
+    * bind deletion vectors: they are within the table's
+    * `dml.fallback_rows` bound); they record the rows they remove/replace
+    * as `_cdf/` sidecars
     * pinned by their manifest's `#cdf` header, and a `changeFeed`
     * readStream drains EVERY mutation with its `_change_type` —
     * synthesized `insert` for appends, recorded `delete` /

@@ -290,7 +290,7 @@ class MessageStoreSpec extends SparkSpec {
       ms.insertUsers(Seq(("u1", "alice", "alice@a.io", "pw1"),
         ("u2", "bob", "bob@b.io", "pw2")))
       val dir = ms.tablePath("users")
-      TokenRangeOps.deleteKeys(spark, dir, "username", Seq("alice"), mode = "dv")
+      TokenRangeOps.deleteKeys(spark, dir, "username", Seq("alice"))
       assert(TokenRangeOps.deletionVectors(dir).nonEmpty,
         "the delete must bind a vector, not rewrite")
       ms.compactUsers()

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   *   - the plan shape and Spark job count of the `MessageStore` reads;
   *   - the same rows with `spark.sql.sources.v2.bucketing.enabled` on
   *     and off;
-  *   - the connector's parquet writer keeps the file mode and the `.crc`
-  *     sidecar. */
+  *   - the connector's parquet writer keeps the file mode and writes no
+  *     `.crc` sidecar. */
 class TokenRangeBucketingSpec extends SparkSpec {
 
   private val BucketingKey = "spark.sql.sources.v2.bucketing.enabled"
@@ -118,9 +118,12 @@ class TokenRangeBucketingSpec extends SparkSpec {
       assert(!hasExchange(user), user.queryExecution.executedPlan.toString)
       assert(jobsOf(user.collect()) == 1)
       assert(user.collect().map(_.getAs[String]("email")).toSeq == Seq("user7@new.io"))
-      // a key no file holds plans no partition: the scan then reports
-      // nothing and Spark's exchange runs over no rows
-      assert(store.user("nobody").collect().isEmpty)
+      // a key no file holds keeps one empty partition of its bucket, so
+      // the scan still reports the key grouping
+      val nobody = store.user("nobody")
+      assert(!hasExchange(nobody), nobody.queryExecution.executedPlan.toString)
+      assert(jobsOf(nobody.collect()) == 1)
+      assert(nobody.collect().isEmpty)
 
       // the pruned catalog read itself reports the key grouping
       val pruned = spark.table(store.tableName("users")).filter(col("username") === "user7")
@@ -209,11 +212,11 @@ class TokenRangeBucketingSpec extends SparkSpec {
     } finally store.dropKeyspace()
   }
 
-  test("connector parquet writes keep mode rw-r--r-- and write their .crc sidecar") {
+  test("connector parquet writes keep mode rw-r--r-- and write no .crc sidecar") {
     def mode(f: java.io.File) = java.nio.file.attribute.PosixFilePermissions.toString(
       java.nio.file.Files.getPosixFilePermissions(f.toPath))
-    // the create helper itself: the checksummed file system writes the
-    // sidecar beside the file, and the mode is the umask's
+    // the create helper itself: plain NIO streams, so no sidecar beside
+    // the file, and the mode is the umask's
     val tmp = java.nio.file.Files.createTempDirectory("graft_bk_create").toFile
     val f = new java.io.File(tmp, "one.parquet")
     val schema = org.apache.parquet.schema.MessageTypeParser
@@ -226,7 +229,7 @@ class TokenRangeBucketingSpec extends SparkSpec {
       .newGroup().append("x", 7L))
     w.close()
     assert(mode(f) == "rw-r--r--")
-    assert(new java.io.File(tmp, ".one.parquet.crc").isFile, "no checksum sidecar")
+    assert(tmp.list().toSeq == Seq("one.parquet"), "a checksum sidecar was written")
     assert(TokenRangeSource.withParquet(f.getPath)(_.getRecordCount) == 1)
     // the same for every file the sink publishes (commit moves the data
     // file out of staging; the mode travels with it)

@@ -30,6 +30,13 @@ class TokenRangeCdfSpec extends SparkSpec {
 
   private val ddl = "pk BIGINT, v STRING"
 
+  /** `dir` with a one-row vector bound recorded before its first write:
+    * statements of two or more keys rewrite what they touch. */
+  private def rewriting(dir: String): String = {
+    TokenRangeSource.recordPk(dir, "pk", schemaDdl = Some(ddl), morFallbackRows = Some(1L))
+    dir
+  }
+
   private def append(dir: String, keys: Seq[Long]): Unit = {
     val s2 = spark; import s2.implicits._
     keys.map(i => (i, s"a$i")).toDF("pk", "v")
@@ -287,13 +294,13 @@ class TokenRangeCdfSpec extends SparkSpec {
   }
 
   test("snapshot-seeded backfill: table_changes(from 0) across a PRE-enable rewrite serves the enable snapshot as inserts, then sidecars forward") {
-    val dir = freshDir("graft_cdf_seed")
+    val dir = rewriting(freshDir("graft_cdf_seed"))
     append(dir, 0L until 20L)
     // PRE-enable rewrites: no sidecar exists for them, by design — one
-    // copy-on-write, one deletion-vector (the seed must serve the
-    // VECTOR-MERGED enable snapshot)
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(3L), mode = "cow")
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L), mode = "dv")
+    // copy-on-write (two keys; 100 holds no row), one deletion-vector
+    // (the seed must serve the VECTOR-MERGED enable snapshot)
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(3L, 100L))
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L))
     TokenRangeOps.enableChangeFeed(dir)
     val enableV = TokenRangeSource.versions(dir).last
     // post-enable history: an append and a recorded delete
@@ -330,9 +337,10 @@ class TokenRangeCdfSpec extends SparkSpec {
   }
 
   test("a RATE-LIMITED from-zero CDF stream still seeds: the first batch reaches the enable version (review r16)") {
-    val dir = freshDir("graft_cdf_seedrl")
+    val dir = rewriting(freshDir("graft_cdf_seedrl"))
     append(dir, 0L until 10L)
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(2L), mode = "cow") // unservable
+    // a rewrite (100 holds no row), unservable
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(2L, 100L))
     TokenRangeOps.enableChangeFeed(dir)
     append(dir, 10L until 12L)
     val got = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
@@ -357,10 +365,11 @@ class TokenRangeCdfSpec extends SparkSpec {
   }
 
   test("mid-history backfill: a range crossing a pre-enable rewrite serves a SYNTHESIZED REBASE (r17)") {
-    val dir = freshDir("graft_cdf_seedmid")
+    val dir = rewriting(freshDir("graft_cdf_seedmid"))
     append(dir, 0L until 8L)
     val v1 = TokenRangeSource.versions(dir).last
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(2L), mode = "cow")
+    // a rewrite: 1000 holds no row
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(2L, 1000L))
     val vUnservable = TokenRangeSource.versions(dir).last
     append(dir, 100L until 102L)
     TokenRangeOps.enableChangeFeed(dir)

@@ -6,7 +6,9 @@ import org.apache.spark.sql.types._
 
 /** The r11 table-maintenance layer over the manifest: row-level DELETE
   * (CQL `DELETE ... WHERE pk IN (...)`, the reference's delete surface)
-  * as a bucket-grain copy-on-write rewrite, per-bucket COMPACTION as one
+  * as a bucket-grain copy-on-write rewrite on tables whose recorded
+  * `dml.fallback_rows` bound the statement exceeds (under the bound it
+  * binds a deletion vector, TokenRangeDvSpec), per-bucket COMPACTION as one
   * atomic read-and-overwrite, and the VACUUM sweep that retires
   * unreferenced files. The load-bearing claims, each asserted here:
   * a delete rewrites ONLY the keys' owning buckets (every other bucket's
@@ -28,13 +30,20 @@ class TokenRangeDeleteSpec extends SparkSpec {
       .write.format(fmt).option("pk", "pk").option("schema", ddl)
       .mode("append").save(dir)
   }
+  /** `dir` with a one-row vector bound recorded before its first write:
+    * statements of two or more rows or keys rewrite what they touch. */
+  private def rewriting(dir: String, schema: String = ddl): String = {
+    TokenRangeSource.recordPk(dir, "pk", schemaDdl = Some(schema),
+      morFallbackRows = Some(1L))
+    dir
+  }
   private def load(dir: String) =
     spark.read.format(fmt).option("pk", "pk").load(dir)
   private def relFiles(dir: String): Set[(Int, String)] =
     TokenRangeSource.visibleRelFiles(dir).toSet
 
   test("deleteKeys: removes exactly the keys; untouched buckets survive by reference; old version pinned-readable") {
-    val dir = freshDir()
+    val dir = rewriting(freshDir())
     val all = (0L until 200L)
     seed(dir, all)
     val before = relFiles(dir)
@@ -43,7 +52,7 @@ class TokenRangeDeleteSpec extends SparkSpec {
     val doomed = Seq(3L, 77L, 141L)
     // this spec pins the COPY-ON-WRITE contract (file retirement);
     // the merge-on-read path has its own physical spec (TokenRangeDvSpec)
-    TokenRangeOps.deleteKeys(spark, dir, "pk", doomed, mode = "cow")
+    TokenRangeOps.deleteKeys(spark, dir, "pk", doomed)
 
     // exactly those rows gone, every other row intact
     val got = load(dir).select("pk").collect().map(_.getLong(0)).toSet
@@ -121,14 +130,14 @@ class TokenRangeDeleteSpec extends SparkSpec {
   }
 
   test("deleteKeys: deleting every row of a bucket leaves the bucket empty (no ghost file), others intact") {
-    val dir = freshDir()
+    val dir = rewriting(freshDir())
     // keys all landing in one bucket plus a control key elsewhere
     val together = (0L until 5000L)
       .filter(TokenLayout.bucketOfValue(_) == 0).take(4).toSeq
     assert(together.size == 4)
     val control = (0L until 5000L).find(TokenLayout.bucketOfValue(_) == 1).get
     seed(dir, together :+ control)
-    TokenRangeOps.deleteKeys(spark, dir, "pk", together, mode = "cow")
+    TokenRangeOps.deleteKeys(spark, dir, "pk", together)
     assert(load(dir).select("pk").collect().map(_.getLong(0)).toSeq
       == Seq(control))
     assert(!relFiles(dir).exists(_._1 == 0),
@@ -221,7 +230,7 @@ class TokenRangeDeleteSpec extends SparkSpec {
     tranche(cKeys.zipWithIndex.map { case (k, i) =>
       (k, if (i % 2 == 0) 2000L else 8000L, s"mix$k") })
     val before = TokenRangeSource.visibleRelFiles(dir).map(_._2).toSet
-    TokenRangeOps.expire(spark, dir, "pk", "ts", 5000L, mode = "dv")
+    TokenRangeOps.expire(spark, dir, "pk", "ts", 5000L)
     val after = TokenRangeSource.visibleRelFiles(dir).map(_._2).toSet
     assert((after -- before).isEmpty,
       "a merge-on-read expiry writes NO data file")
@@ -245,8 +254,8 @@ class TokenRangeDeleteSpec extends SparkSpec {
 
   test("expire: wholly-expired files retire unread, wholly-live survive by reference, straddlers rewrite — one flip") {
     val s2 = spark; import s2.implicits._
-    val dir = freshDir()
     val tddl = "pk BIGINT, ts TIMESTAMP, v STRING"
+    val dir = rewriting(freshDir(), tddl)
     def tranche(rows: Seq[(Long, Long, String)]): Unit =
       rows.toDF("pk", "us", "v")
         .select(col("pk"), org.apache.spark.sql.functions.timestamp_micros(col("us")).as("ts"), col("v"))
@@ -308,8 +317,7 @@ class TokenRangeDeleteSpec extends SparkSpec {
       .select("pk").collect().map(_.getLong(0)).toSet == (5000L until 5004L).toSet)
     // and a table that really holds nothing empties completely: delete
     // the null rows, then the manifest lists no files
-    TokenRangeOps.deleteKeys(spark, dir, "pk", (5000L until 5004L),
-      mode = "cow")
+    TokenRangeOps.deleteKeys(spark, dir, "pk", (5000L until 5004L))
     assert(spark.read.format(fmt).option("pk", "pk").load(dir).count() == 0)
     assert(TokenRangeSource.visibleRelFiles(dir).isEmpty)
 
@@ -390,7 +398,7 @@ class TokenRangeDeleteSpec extends SparkSpec {
       .select("seq").collect().map(_.getLong(0)).sorted.toSeq
 
   test("deleteCkRange: covered slabs retire UNREAD, straddlers rewrite, rest by reference — one flip") {
-    val dir = freshDir()
+    val dir = rewriting(freshDir(), "pk BIGINT, seq BIGINT, v STRING")
     ckRangeFixture(dir)
     val beforeRels = relFiles(dir).map(_._2)
     // per-file seq ranges of pk=1's slabs, to name each file's expected fate
@@ -447,7 +455,7 @@ class TokenRangeDeleteSpec extends SparkSpec {
     ckRangeFixture(dir)
     val beforeRels = relFiles(dir).map(_._2)
     // DELETE WHERE pk = 1 AND seq >= 250 AND seq < 750, merge-on-read
-    TokenRangeOps.deleteCkRange(spark, dir, "pk", 1L, 250L, 750L, mode = "dv")
+    TokenRangeOps.deleteCkRange(spark, dir, "pk", 1L, 250L, 750L)
     assert(pk1Seqs(dir) == ((0L until 250L) ++ (750L until 1000L)),
       "exactly the sliced rows must be gone through the vector merge")
     assert(load(dir).filter(col("pk") =!= 1L).count() == 48,
@@ -495,7 +503,7 @@ class TokenRangeDeleteSpec extends SparkSpec {
     TokenRangeOps.deleteCkRange(spark, dir2, "pk", 1L, 5L, 5L)
     assert(load(dir2).count() == 3)
     // NULL-ck rows never match a range predicate (CQL/SQL agree): the
-    // straddling rewrite must keep them
+    // straddling delete must keep them
     TokenRangeOps.deleteCkRange(spark, dir2, "pk", 1L, 0L, 100L)
     val left = load(dir2).select("v").collect().map(_.getString(0)).sorted
     assert(left.toSeq == Seq("b", "c"), s"null-ck row must survive, got ${left.toSeq}")

@@ -25,9 +25,14 @@ class TokenRangeDvSpec extends SparkSpec {
 
   private val fmt = classOf[TokenRangeSource].getName
 
-  private def freshTable(tag: String, loads: Int = 4): String = {
+  /** 128 rows over `loads` appends. `bound` records the table's vector
+    * bound before the first write: statements past it rewrite. */
+  private def freshTable(tag: String, loads: Int = 4,
+      bound: Option[Long] = None): String = {
     import org.apache.spark.sql.SaveMode
     val dir = java.nio.file.Files.createTempDirectory(s"graft_dv_$tag").toString
+    bound.foreach(n => TokenRangeSource.recordPk(dir, "pk",
+      schemaDdl = Some("pk BIGINT, v STRING, n BIGINT"), morFallbackRows = Some(n)))
     (0 until loads).foreach { r =>
       spark.range(r * 32, (r + 1) * 32)
         .select(col("id").as("pk"), concat(lit("a"), col("id")).as("v"),
@@ -67,18 +72,24 @@ class TokenRangeDvSpec extends SparkSpec {
   }
 
   test("merge-on-read is result-equal to copy-on-write") {
+    // the same statements bind vectors on `a` and rewrite on `b`, whose
+    // one-row bound both exceed
     val a = freshTable("eqdv")
-    val b = freshTable("eqcow")
-    TokenRangeOps.deleteKeys(spark, a, "pk", Seq(3L, 64L), mode = "dv")
-    TokenRangeOps.deleteKeys(spark, b, "pk", Seq(3L, 64L), mode = "cow")
+    val b = freshTable("eqcow", bound = Some(1L))
+    TokenRangeOps.deleteKeys(spark, a, "pk", Seq(3L, 64L))
+    TokenRangeOps.deleteKeys(spark, b, "pk", Seq(3L, 64L))
+    assert(TokenRangeSource.dvBindings(a).nonEmpty && TokenRangeSource.dvBindings(b).isEmpty)
     val ra = readAll(a).orderBy("pk").collect().map(_.toSeq)
     val rb = readAll(b).orderBy("pk").collect().map(_.toSeq)
     assert(ra.toSeq == rb.toSeq)
     // and the upsert pair: dv-upsert ≡ cow-upsert
     val up = spark.range(60, 70)
       .select(col("id").as("pk"), lit("patched").as("v"), lit(-1L).as("n"))
-    TokenRangeOps.upsert(spark, a, "pk", up, mode = "dv")
-    TokenRangeOps.upsert(spark, b, "pk", up) // cow default
+    val bFiles = liveRel(b)
+    TokenRangeOps.upsert(spark, a, "pk", up)
+    TokenRangeOps.upsert(spark, b, "pk", up)
+    assert(TokenRangeSource.dvBindings(b).isEmpty && !bFiles.subsetOf(liveRel(b)),
+      "the 10-row upsert rewrites the one-row-bound table")
     val ua = readAll(a).orderBy("pk").collect().map(_.toSeq)
     val ub = readAll(b).orderBy("pk").collect().map(_.toSeq)
     assert(ua.toSeq == ub.toSeq)
@@ -90,7 +101,7 @@ class TokenRangeDvSpec extends SparkSpec {
     val before = liveRel(dir)
     val up = spark.range(10, 13)
       .select(col("id").as("pk"), lit("new").as("v"), lit(0L).as("n"))
-    TokenRangeOps.upsert(spark, dir, "pk", up, mode = "dv")
+    TokenRangeOps.upsert(spark, dir, "pk", up)
     val after = liveRel(dir)
     assert(before.subsetOf(after), "dv-upsert must retire nothing")
     assert((after -- before).nonEmpty, "the incoming rows append as new files")
@@ -102,14 +113,14 @@ class TokenRangeDvSpec extends SparkSpec {
     // upsert's file too — newest generation wins
     val up2 = spark.range(11, 12)
       .select(col("id").as("pk"), lit("newest").as("v"), lit(1L).as("n"))
-    TokenRangeOps.upsert(spark, dir, "pk", up2, mode = "dv")
+    TokenRangeOps.upsert(spark, dir, "pk", up2)
     val vs = readAll(dir).filter(col("pk") === 11L).collect()
     assert(vs.length == 1 && vs.head.getString(1) == "newest")
   }
 
   test("delete-then-reinsert serves the new row") {
     val dir = freshTable("reins")
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(5L), mode = "dv")
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(5L))
     assert(readAll(dir).filter(col("pk") === 5L).count() == 0L)
     spark.range(5, 6)
       .select(col("id").as("pk"), lit("back").as("v"), lit(0L).as("n"))
@@ -121,7 +132,7 @@ class TokenRangeDvSpec extends SparkSpec {
 
   test("compaction applies vectors physically and drops the bindings") {
     val dir = freshTable("cmp")
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L, 8L), mode = "dv")
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L, 8L))
     assert(TokenRangeSource.dvBindings(dir).nonEmpty)
     TokenRangeOps.compact(spark, dir, "pk")
     assert(TokenRangeSource.dvBindings(dir).isEmpty,
@@ -133,8 +144,9 @@ class TokenRangeDvSpec extends SparkSpec {
   }
 
   test("a sidecar missing a pk column fails the rewrite loudly (no partial-grain over-delete, r19)") {
-    val dir = freshTable("grain")
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L, 8L), mode = "dv")
+    // a two-key bound: the two-key delete binds, the three-key one rewrites
+    val dir = freshTable("grain", bound = Some(2L))
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L, 8L))
     val dvRels = TokenRangeSource.dvBindings(dir).map(_._2).distinct
     assert(dvRels.nonEmpty)
     // corrupt every bound sidecar IN PLACE: rename its pk column, so the
@@ -160,8 +172,9 @@ class TokenRangeDvSpec extends SparkSpec {
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
     // the rewrite read (the task reader's loadDv) must refuse the partial grain —
     // key 7 so the cow rewrite touches a bucket the sidecar is bound to
+    // (200 and 201 hold no row)
     val e = intercept[Exception] {
-      TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L), mode = "cow")
+      TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L, 200L, 201L))
     }
     assert(messages(e).exists(_.contains("partial-grain")),
       s"expected the partial-grain refusal, got: ${messages(e).mkString(" | ")}")
@@ -173,7 +186,8 @@ class TokenRangeDvSpec extends SparkSpec {
   }
 
   test("a rewrite racing a vector commit conflicts and re-runs (no resurrection)") {
-    val dir = freshTable("race")
+    // one-row bound: the one-key delete binds, the two-row upsert rewrites
+    val dir = freshTable("race", bound = Some(1L))
     // install the race: after the upsert pins its snapshot, a vector
     // delete lands on the same bucket's files — the upsert's publish
     // must CONFLICT (unseen binding on a retired file) and re-run from
@@ -182,22 +196,23 @@ class TokenRangeDvSpec extends SparkSpec {
     TokenRangeOps.onSnapshotPinned = () => {
       if (!fired) {
         fired = true
-        TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(20L), mode = "dv")
+        TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(20L))
       }
     }
     try {
-      // pk=20's bucket: upsert a DIFFERENT key of the same bucket so the
+      // pk=20's bucket: upsert DIFFERENT keys of the same bucket so the
       // rewrite reads and retires the file holding pk=20
-      val sameBucketKey = (0L until 128L).find(k =>
-        k != 20L && TokenLayout.bucketOfValue(k) == TokenLayout.bucketOfValue(20L)).get
-      val up = spark.range(sameBucketKey, sameBucketKey + 1)
+      val sameBucketKeys = (0L until 128L).filter(k =>
+        k != 20L && TokenLayout.bucketOfValue(k) == TokenLayout.bucketOfValue(20L)).take(2)
+      assert(sameBucketKeys.size == 2)
+      val up = spark.range(0, 128).filter(col("id").isin(sameBucketKeys: _*))
         .select(col("id").as("pk"), lit("upd").as("v"), lit(-5L).as("n"))
-      TokenRangeOps.upsert(spark, dir, "pk", up) // cow: reads + retires
+      TokenRangeOps.upsert(spark, dir, "pk", up) // rewrite: reads + retires
       val t = readAll(dir)
       assert(t.filter(col("pk") === 20L).count() == 0L,
         "the racing vector delete must survive the rewrite (no resurrection)")
-      assert(t.filter(col("pk") === sameBucketKey).select("v")
-        .head().getString(0) == "upd")
+      assert(t.filter(col("pk").isin(sameBucketKeys: _*)).select("v")
+        .collect().map(_.getString(0)).toSeq == Seq("upd", "upd"))
       assert(t.count() == 127L)
     } finally TokenRangeOps.onSnapshotPinned = () => ()
   }
@@ -205,7 +220,7 @@ class TokenRangeDvSpec extends SparkSpec {
   test("snapshot reads: a pre-vector version still serves the rows") {
     val dir = freshTable("snap")
     val v0 = TokenRangeSource.currentVersion(dir).get
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(42L), mode = "dv")
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(42L))
     assert(spark.read.format(fmt).option("pk", "pk")
       .option("version", v0.toString).load(dir)
       .filter(col("pk") === 42L).count() == 1L)
@@ -229,7 +244,7 @@ class TokenRangeDvSpec extends SparkSpec {
     }
     assert(drain() == 32)
     TokenRangeOps.enableChangeFeed(dir)
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(9L), mode = "dv")
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(9L))
     // the plain tail (fresh, no feed option) refuses the vector version
     val ckpt2 = java.nio.file.Files.createTempDirectory("graft_dv_ck2").toString
     val ex = intercept[Exception] {
@@ -257,7 +272,7 @@ class TokenRangeDvSpec extends SparkSpec {
         col("id").as("n"))
       .write.format(fmt).option("pk", "a,b").mode("overwrite").save(dir)
     TokenRangeOps.deleteTuples(spark, dir, Seq("a", "b"),
-      Seq(Seq(2L, 3L), Seq(5L, 0L)), mode = "dv")
+      Seq(Seq(2L, 3L), Seq(5L, 0L)))
     val t = spark.read.format(fmt).option("pk", "a,b").load(dir)
     assert(t.count() == 58L)
     assert(t.filter(col("a") === 2L && col("b") === 3L).count() == 0L)
@@ -272,15 +287,10 @@ class TokenRangeDvSpec extends SparkSpec {
     TokenLayout.writeTokenBucketed(
       (0L until 24L).map(i => (i, s"a$i")).toDF("pk", "v"), "pk", dir)
     assert(TokenRangeSource.recordedPk(dir).isEmpty)
-    // explicit dv mode refuses loudly while no pk is recorded
-    val ex = intercept[IllegalArgumentException] {
-      TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(5L), mode = "dv")
-    }
-    assert(ex.getMessage.contains("recorded pk"), ex.getMessage)
-    // auto mode must FALL BACK to copy-on-write (a vector would make
-    // every read — including compaction — refuse for lack of the pk);
-    // the cow rewrite's sink commit then RECORDS the pk, so later small
-    // deletes graduate to the vector path legitimately
+    // a one-key delete rewrites (a vector would make every read —
+    // including compaction — refuse for lack of the pk); the rewrite's
+    // sink commit then RECORDS the pk, so later small deletes graduate
+    // to the vector path legitimately
     TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(3L))
     assert(TokenRangeSource.dvBindings(dir).isEmpty,
       "no vector may publish without a recorded pk")
@@ -297,7 +307,7 @@ class TokenRangeDvSpec extends SparkSpec {
       Option(new java.io.File(mdir, "segments").listFiles())
         .getOrElse(Array.empty).map(_.getName).toSet
     val before = segs()
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L), mode = "dv")
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L))
     assert(segs() == before,
       "a vector-only publish must write NO new segment files — bound " +
         "buckets carry by reference, only validated against the base")
@@ -306,7 +316,7 @@ class TokenRangeDvSpec extends SparkSpec {
   test("describeTable reports the merge-on-read debt (deletion_vectors)") {
     val dir = freshTable("desc")
     assert(TokenRangeOps.describeTable(dir)("deletion_vectors") == "0")
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L), mode = "dv")
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L))
     val n = TokenRangeOps.describeTable(dir)("deletion_vectors").toInt
     assert(n >= 1, s"bindings must surface, got $n")
     TokenRangeOps.compact(spark, dir, "pk")
@@ -332,7 +342,7 @@ class TokenRangeDvSpec extends SparkSpec {
     // position vector: SQL predicate DELETE (row-grain)
     spark.sql(s"DELETE FROM $cat.ks.t WHERE v = 'a7'")
     // key vector: whole-partition point delete through the ops surface
-    TokenRangeOps.deleteKeys(spark, path, "pk", Seq(9L), mode = "dv")
+    TokenRangeOps.deleteKeys(spark, path, "pk", Seq(9L))
     assert(TokenRangeOps.liveFiles(path).toSet == before,
       "neither grain may rewrite or retire a data file")
     val grains = TokenRangeSource.dvBindings(path).map(_._2).distinct
@@ -357,11 +367,11 @@ class TokenRangeDvSpec extends SparkSpec {
     // compact them — without any manual compact call
     val byBucket = (0L until 128L).groupBy(TokenLayout.bucketOfValue)
     val ks = byBucket.values.find(_.size >= 3).get.take(3)
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(ks(0)), mode = "dv")
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(ks(1)), mode = "dv")
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(ks(0)))
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(ks(1)))
     assert(TokenRangeSource.dvBindings(dir).groupBy(_._1).values
       .exists(_.size == 2), "below the bound the debt accumulates")
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(ks(2)), mode = "dv")
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(ks(2)))
     assert(TokenRangeSource.dvBindings(dir).isEmpty,
       "the third commit's sweep must compact the bound files and clear " +
         "the bindings")
@@ -389,13 +399,14 @@ class TokenRangeDvSpec extends SparkSpec {
   }
 
   test("ops rewrites over vector-bound files never resurrect (ckRange/expire read merged)") {
-    val dir = freshTable("opsmrg")
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(30L), mode = "dv")
-    // a COW delete of a DIFFERENT key in the same bucket rewrites the
-    // bound file — the rewrite must consume the vector, not resurrect 30
+    val dir = freshTable("opsmrg", bound = Some(1L))
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(30L))
+    // a COW delete of a DIFFERENT key in the same bucket (and of 1000,
+    // which holds no row: two keys exceed the bound) rewrites the bound
+    // file — the rewrite must consume the vector, not resurrect 30
     val sameBucketKey = (0L until 128L).find(k =>
       k != 30L && TokenLayout.bucketOfValue(k) == TokenLayout.bucketOfValue(30L)).get
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(sameBucketKey), mode = "cow")
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(sameBucketKey, 1000L))
     val t = readAll(dir)
     assert(t.filter(col("pk").isin(30L, sameBucketKey)).count() == 0L)
     assert(t.count() == 126L)

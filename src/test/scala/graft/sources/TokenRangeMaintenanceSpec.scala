@@ -113,7 +113,7 @@ class TokenRangeMaintenanceSpec extends SparkSpec {
     val victims = (0L until 8L).groupBy(TokenLayout.bucketOfValue)
       .values.map(_.head).toSeq.sorted.take(4)
     assert(victims.size == 4, s"need 4 keys in distinct buckets, got $victims")
-    victims.foreach(k => TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(k), mode = "dv"))
+    victims.foreach(k => TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(k)))
     assert(TokenRangeSource.dvBindings(dir).nonEmpty, "the deletes must publish vectors")
     val vs = TokenRangeSource.versions(dir)
     assert(vs.size <= 3, s"retention=3 must bound history, got ${vs.size} versions")

@@ -13,7 +13,9 @@ import org.scalacheck.rng.Seed
 /** Model-based safety net for the connector's row-level verbs: seeded
   * random sequences of writes, upserts, deletes, TTL expiry and
   * compactions run against a real table and an in-memory multiset model
-  * side by side. After every step the current read must equal the model;
+  * side by side. The clustered table records a small vector bound and
+  * draws statement sizes on both sides of it, so vector and rewrite
+  * steps interleave. After every step the current read must equal the model;
   * at the end every retained `option("version", v)` read must equal the
   * model at v, and (feed on) the change feed's net rows per step must
   * equal the model's diff across that step.
@@ -52,10 +54,13 @@ class TokenRangeModelSpec extends SparkSpec {
       // binds a drawn op to the model state it runs against
       resolve: (O, Seq[R]) => O = (o: O, _: Seq[R]) => o)
 
-  /** Per-step record: the version after the step and every state an
-    * intermediate version published during the step may hold. */
+  /** Per-step record: the version after the step, every state an
+    * intermediate version published during the step may hold, and how
+    * the step (with its racer) changed the files: `vector` when it bound
+    * a new deletion vector, `rewrite` when it replaced files without
+    * one. */
   private final case class StepRec[R](before: Seq[R], racer: Option[Seq[R]],
-      after: Seq[R], version: Int)
+      after: Seq[R], version: Int, op: String, vector: Boolean, rewrite: Boolean)
 
   private def counts(rows: Seq[String]): Map[String, Int] =
     rows.groupBy(identity).map { case (k, v) => k -> v.size }
@@ -87,9 +92,12 @@ class TokenRangeModelSpec extends SparkSpec {
     var nRaced = 0
     var nRetried = 0
     val recs = Seq.newBuilder[StepRec[R]]
+    def vectors() = TokenRangeSource.dvBindings(m.dir).map(_._2).toSet
+    def live() = TokenRangeOps.liveFiles(m.dir).toSet
     steps.zipWithIndex.foreach { case ((drawn, racer), i) =>
       val s0 = model
       val op = m.resolve(drawn, s0)
+      val (d0, l0) = (vectors(), live())
       val (ran, retried) = racer match {
         case Some(r) => raced(m.run(r))(m.run(op))
         case None => m.run(op); (false, false)
@@ -112,8 +120,12 @@ class TokenRangeModelSpec extends SparkSpec {
         s"step $i ${op}${if (drawn == op) "" else s" (drawn as $drawn)"}${racer.map(r => s" raced by $r (ran=$ran, retried=$retried)").getOrElse("")}:" +
           s"\n  table-only: ${got.diff(want).take(8)}\n  model-only: ${want.diff(got).take(8)}")
       m.extra(model)
+      val (d1, l1) = (vectors(), live())
+      val vector = (d1 -- d0).nonEmpty
       recs += StepRec(s0, racerState, model,
-        TokenRangeSource.currentVersion(m.dir).getOrElse(0))
+        TokenRangeSource.currentVersion(m.dir).getOrElse(0),
+        op.getClass.getSimpleName.stripSuffix("$"), vector,
+        !vector && (l0 -- l1).nonEmpty && (l1 -- l0).nonEmpty)
       if (i == 0) afterOpen()
     }
     val out = recs.result()
@@ -142,16 +154,14 @@ class TokenRangeModelSpec extends SparkSpec {
 
   private sealed trait COp
   private final case class Append(rows: Seq[CRow]) extends COp
-  private final case class Upsert(rows: Seq[CRow], mode: String) extends COp
+  private final case class Upsert(rows: Seq[CRow]) extends COp
   private final case class UpsertCells(cells: Seq[(Long, String)]) extends COp
-  private final case class DeleteKeys(keys: Seq[Long], mode: String) extends COp
-  private final case class DeleteCkRange(key: Long, lo: Long, hi: Long,
-      mode: String) extends COp
+  private final case class DeleteKeys(keys: Seq[Long]) extends COp
+  private final case class DeleteCkRange(key: Long, lo: Long, hi: Long) extends COp
   // a range delete whose bounds are stored ck values of live rows, picked
   // when the step runs (see `liveRange`)
-  private final case class LiveCkRange(pick: Int, loPick: Int, mode: String)
-      extends COp
-  private final case class Expire(cutoff: Long, mode: String) extends COp
+  private final case class LiveCkRange(pick: Int, loPick: Int) extends COp
+  private final case class Expire(cutoff: Long) extends COp
   private final case class Compact(rollRows: Option[Long]) extends COp
   private case object CompactVectors extends COp
   private case object CompactFragmented extends COp
@@ -162,7 +172,7 @@ class TokenRangeModelSpec extends SparkSpec {
 
   private def cEff(op: COp, s: Seq[CRow]): Eff[CRow] = op match {
     case Append(rows) => Eff(_ => false, rows)
-    case Upsert(rows, _) =>
+    case Upsert(rows) =>
       val keys = rows.map(_._1).toSet
       Eff(r => keys(r._1), rows)
     case UpsertCells(cells) =>
@@ -172,10 +182,10 @@ class TokenRangeModelSpec extends SparkSpec {
       val fresh = cells.filterNot(c => s.exists(_._1 == c._1))
         .map(c => (c._1, None, None, Some(c._2)))
       Eff(r => in.contains(r._1), merged ++ fresh)
-    case DeleteKeys(keys, _) => Eff(r => keys.contains(r._1), Nil)
-    case DeleteCkRange(key, lo, hi, _) =>
+    case DeleteKeys(keys) => Eff(r => keys.contains(r._1), Nil)
+    case DeleteCkRange(key, lo, hi) =>
       Eff(r => r._1 == key && r._2.exists(c => c >= lo && c < hi), Nil)
-    case Expire(cutoff, _) => Eff(r => r._3.exists(_ <= cutoff), Nil)
+    case Expire(cutoff) => Eff(r => r._3.exists(_ <= cutoff), Nil)
     case _: Compact | CompactVectors | CompactFragmented => Eff(_ => false, Nil)
     case l: LiveCkRange => cEff(liveRange(l, s), s)
   }
@@ -185,12 +195,12 @@ class TokenRangeModelSpec extends SparkSpec {
     * shares a file with a deleted row that file is split, not kept. */
   private def liveRange(l: LiveCkRange, s: Seq[CRow]): DeleteCkRange = {
     val live = s.collect { case (pk, Some(ck), _, _) => (pk, ck) }.distinct.sorted
-    if (live.isEmpty) DeleteCkRange(0L, 0L, 0L, l.mode)
+    if (live.isEmpty) DeleteCkRange(0L, 0L, 0L)
     else {
       val (pk, hi) = live(l.pick % live.size)
       val below = live.collect { case (`pk`, ck) if ck < hi => ck }
       val lo = if (below.isEmpty) hi - 10L else below(l.loPick % below.size)
-      DeleteCkRange(pk, lo, hi, l.mode)
+      DeleteCkRange(pk, lo, hi)
     }
   }
 
@@ -204,19 +214,19 @@ class TokenRangeModelSpec extends SparkSpec {
     case Append(rows) =>
       cFrame(rows).write.format(fmt).option("pk", "pk").option("ck", "ck")
         .option("schema", cDdl).mode("append").save(dir)
-    case Upsert(rows, mode) =>
-      TokenRangeOps.upsert(spark, dir, "pk", cFrame(rows), mode)
+    case Upsert(rows) =>
+      TokenRangeOps.upsert(spark, dir, "pk", cFrame(rows))
     case UpsertCells(cells) =>
       val s2 = spark; import s2.implicits._
       TokenRangeOps.upsertCells(spark, dir, "pk", cells.toDF("pk", "v"))
-    case DeleteKeys(keys, mode) =>
-      TokenRangeOps.deleteKeys(spark, dir, "pk", keys, mode)
-    case DeleteCkRange(key, lo, hi, mode) =>
-      TokenRangeOps.deleteCkRange(spark, dir, "pk", key, lo, hi, mode)
+    case DeleteKeys(keys) =>
+      TokenRangeOps.deleteKeys(spark, dir, "pk", keys)
+    case DeleteCkRange(key, lo, hi) =>
+      TokenRangeOps.deleteCkRange(spark, dir, "pk", key, lo, hi)
     case l: LiveCkRange =>
       throw new IllegalStateException(s"$l runs only once resolved")
-    case Expire(cutoff, mode) =>
-      TokenRangeOps.expire(spark, dir, "pk", "ts", cutoff, mode)
+    case Expire(cutoff) =>
+      TokenRangeOps.expire(spark, dir, "pk", "ts", cutoff)
     case Compact(roll) => TokenRangeOps.compact(spark, dir, "pk", roll)
     case CompactVectors => TokenRangeOps.compactVectors(spark, dir, 1)
     case CompactFragmented => TokenRangeOps.compactFragmented(spark, dir, 2)
@@ -234,8 +244,14 @@ class TokenRangeModelSpec extends SparkSpec {
         Option(r.get(2)).map(_.asInstanceOf[Long]),
         Option(r.getString(3)))))
 
-  private val modes = Gen.oneOf("cow", "dv")
+  /** The clustered table's vector bound: upserts of up to 3 rows and
+    * deletes of up to 3 keys land on both sides of it, and so do range
+    * deletes and expiries, sized by the stored rows of the files they
+    * split. */
+  private val ModelBound = 2L
   private val pkGen = Gen.choose(0L, 7L)
+  private def keysGen: Gen[Seq[Long]] =
+    Gen.choose(1, 3).flatMap(n => Gen.pick(n, 0L to 7L)).map(_.toSeq)
 
   // ck and ts values, range bounds and TTL cutoffs share one coarse grid,
   // so drawn bounds land exactly on stored values (the inclusive and
@@ -254,36 +270,34 @@ class TokenRangeModelSpec extends SparkSpec {
     5 -> Gen.choose(1, 6).flatMap(n => Gen.listOfN(n, cRowGen(s"a$i")))
       .map(rows => Append(rows.zipWithIndex.map { case (r, j) =>
         r.copy(_4 = Some(s"a$i.$j")) })),
-    2 -> (for {
-      keys <- Gen.choose(1, 3).flatMap(n => Gen.pick(n, 0L to 7L))
-      rows <- Gen.sequence[List[CRow], CRow](keys.toList.map(k =>
-        cRowGen(s"u$i.$k").map(_.copy(_1 = k))))
-      mode <- modes
-    } yield Upsert(rows, mode)),
+    2 -> upsertGen(s"u$i"),
     1 -> Gen.choose(1, 3).flatMap(n => Gen.pick(n, 0L to 7L))
       .map(keys => UpsertCells(keys.toSeq.map(k => (k, s"c$i.$k")))),
-    2 -> (for {
-      keys <- Gen.choose(1, 2).flatMap(n => Gen.pick(n, 0L to 7L))
-      mode <- modes
-    } yield DeleteKeys(keys.toSeq, mode)),
+    2 -> keysGen.map(DeleteKeys(_)),
     2 -> (for {
       key <- pkGen; lo <- grid(80L, 10L); len <- grid(50L, 10L)
-      mode <- modes
-    } yield DeleteCkRange(key, lo, lo + len, mode)),
+    } yield DeleteCkRange(key, lo, lo + len)),
     2 -> (for {
-      pick <- Gen.choose(0, 999); loPick <- Gen.choose(0, 999); mode <- modes
-    } yield LiveCkRange(pick, loPick, mode)),
-    1 -> (for { c <- grid(3000L, 500L); mode <- modes } yield Expire(c, mode)),
+      pick <- Gen.choose(0, 999); loPick <- Gen.choose(0, 999)
+    } yield LiveCkRange(pick, loPick)),
+    1 -> grid(3000L, 500L).map(Expire(_)),
     1 -> Gen.oneOf(None, Some(2L)).map(Compact(_)),
     1 -> Gen.const(CompactVectors),
     1 -> Gen.const(CompactFragmented))
+
+  /** One row per drawn key. */
+  private def upsertGen(tag: String): Gen[COp] = for {
+    keys <- keysGen
+    rows <- Gen.sequence[List[CRow], CRow](keys.toList.map(k =>
+      cRowGen(s"$tag.$k").map(_.copy(_1 = k))))
+  } yield Upsert(rows)
 
   private def racerGen(i: Int): Gen[COp] = Gen.oneOf(
     Gen.choose(1, 3).flatMap(n => Gen.listOfN(n, cRowGen(s"r$i")))
       .map(rows => Append(rows.zipWithIndex.map { case (r, j) =>
         r.copy(_4 = Some(s"r$i.$j")) })),
-    pkGen.flatMap(k => modes.map(m => DeleteKeys(Seq(k), m))),
-    pkGen.flatMap(k => cRowGen(s"ru$i").map(r => Upsert(Seq(r.copy(_1 = k)), "cow"))),
+    keysGen.map(DeleteKeys(_)),
+    upsertGen(s"ru$i"),
     Gen.const(Compact(None)))
 
   /** `n` steps from `seed`: an opening append, then drawn ops; a raced
@@ -302,9 +316,13 @@ class TokenRangeModelSpec extends SparkSpec {
     }
   }
 
+  /** Runs one drawn sequence; returns the steps of the row-level verbs
+    * that bound a vector and those that rewrote. */
   private def clustered(seed: Long, n: Int, raceP: Int, feed: Boolean,
-      sweepAfter: Int): Unit = {
+      sweepAfter: Int): (Int, Int) = {
     val dir = freshDir(s"graft_tr_model_$seed")
+    TokenRangeSource.recordPk(dir, "pk", schemaDdl = Some(cDdl),
+      morFallbackRows = Some(ModelBound))
     val steps = draw[COp](seed, n,
       Append((0L until 8L).map(k => (k, Some(k * 10), Some(k * 1000), Some(s"seed$k")))),
       cOpGen, racerGen, raceP, _.isInstanceOf[Append])
@@ -346,11 +364,17 @@ class TokenRangeModelSpec extends SparkSpec {
           s"feed of step ${i + 1} (${steps(i + 1)._1}): feed net $net, model diff $want")
       }
     }
+    val verbs = recs.filter(r => Set("Upsert", "DeleteKeys", "DeleteCkRange", "Expire")(r.op))
+    info(s"seed $seed, row-level steps (vector/rewrite): " + verbs.groupBy(_.op).toSeq
+      .sortBy(_._1).map { case (op, rs) =>
+        s"$op ${rs.count(_.vector)}/${rs.count(_.rewrite)}" }.mkString(", "))
+    (verbs.count(_.vector), verbs.count(_.rewrite))
   }
 
   test("clustered table: drawn sequences with races match the model at every step, version and feed range") {
-    clustered(seed = 11L, n = 30, raceP = 30, feed = true, sweepAfter = 0)
-    clustered(seed = 12L, n = 30, raceP = 30, feed = false, sweepAfter = 0)
+    val (v1, r1) = clustered(seed = 11L, n = 30, raceP = 30, feed = true, sweepAfter = 0)
+    val (v2, r2) = clustered(seed = 12L, n = 30, raceP = 30, feed = false, sweepAfter = 0)
+    assert(v1 + v2 > 0 && r1 + r2 > 0, "both sides of the vector bound must be drawn")
   }
 
   test("clustered table: the automatic vector sweep preserves content") {
@@ -435,7 +459,7 @@ class TokenRangeModelSpec extends SparkSpec {
         TokenRangeOps.upsert(spark, dir, "username",
           rows.toDF("user_id", "username", "email", "password")
             .withColumn("write_seq", lit(System.currentTimeMillis() * 1000L)))
-      case DeleteUsers(ns) => TokenRangeOps.deleteKeys(spark, dir, "username", ns, "dv")
+      case DeleteUsers(ns) => TokenRangeOps.deleteKeys(spark, dir, "username", ns)
       case CompactUsers => store.compactUsers()
     }
     val read: Option[Int] => Seq[String] = v =>

@@ -15,8 +15,12 @@ class TokenRangeOpenSpec extends SparkSpec {
   private def opens = TokenRangeSource.parquetOpens.get()
   private def closes = TokenRangeSource.parquetCloses.get()
 
-  private def freshTable(tag: String): String = {
+  /** 192 rows over three appends; `bound` records the table's vector
+    * bound before the first write. */
+  private def freshTable(tag: String, bound: Option[Long] = None): String = {
     val dir = java.nio.file.Files.createTempDirectory(s"graft_open_$tag").toString
+    bound.foreach(n => TokenRangeSource.recordPk(dir, "pk",
+      schemaDdl = Some("pk BIGINT, v STRING"), morFallbackRows = Some(n)))
     (0 until 3).foreach { r =>
       spark.range(r * 64, (r + 1) * 64).coalesce(1)
         .select(col("id").as("pk"), concat(lit("u"), col("id")).as("v"))
@@ -50,7 +54,7 @@ class TokenRangeOpenSpec extends SparkSpec {
 
   test("a scan of vector-bound files opens each sidecar at most once per reader") {
     val dir = freshTable("dv")
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L, 40L, 99L, 150L), mode = "dv")
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L, 40L, 99L, 150L))
     val n = TokenRangeSource.visibleRelFiles(dir).size
     val vs = vectorFiles(dir)
     assert(vs.nonEmpty)
@@ -73,7 +77,7 @@ class TokenRangeOpenSpec extends SparkSpec {
     assert(scan(dir, splits = 1).limit(3).collect().length == 3)
     assert(opens > o0 && closes - c0 == opens - o0,
       "a reader stopped partway through a file must close it")
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L), mode = "dv")
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L))
     // rename the sidecar's pk column: a partial-pk vector has no defined
     // grain, so the read must refuse it
     TokenRangeSource.dvBindings(dir).map(_._2).distinct.foreach { rel =>
@@ -124,7 +128,8 @@ class TokenRangeOpenSpec extends SparkSpec {
   }
 
   test("every rewrite reads the files it touches through the reader, each once") {
-    val dir = freshTable("rewrite")
+    // a one-row bound: two-row and two-key statements rewrite
+    val dir = freshTable("rewrite", bound = Some(1L))
     def row(pk: Long, v: String) =
       spark.range(pk, pk + 1).select(col("id").as("pk"), lit(v).as("v"))
     // a rewrite that read its table files any other way would open them
@@ -139,17 +144,20 @@ class TokenRangeOpenSpec extends SparkSpec {
       assert(n == retired.size + extra,
         s"$what: $n opens for ${retired.size} rewritten files (+ $extra vector files)")
     }
-    check("upsert")(TokenRangeOps.upsert(spark, dir, "pk", row(5L, "up")))
+    check("upsert")(TokenRangeOps.upsert(spark, dir, "pk",
+      row(5L, "up").unionByName(row(6L, "up"))))
     check("upsertCells")(TokenRangeOps.upsertCells(spark, dir, "pk", row(70L, "cell")))
-    check("deleteKeys")(TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(100L), mode = "cow"))
+    // 1000 holds no row
+    check("deleteKeys")(TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(100L, 1000L)))
     check("compactFragmented")(TokenRangeOps.compactFragmented(spark, dir, 2))
     // one key vector bound to one bucket's single file: the compaction
     // reads that file and the vector's file once
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L), mode = "dv")
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L))
     assert(TokenRangeSource.dvBindings(dir).size == 1)
     check("compactVectors", vectorFiles(dir).size)(TokenRangeOps.compactVectors(spark, dir))
     check("compact")(TokenRangeOps.compact(spark, dir, "pk"))
     val t = scan(dir).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(t.size == 190 && t(5L) == "up" && t(70L) == "cell" && !t.contains(7L))
+    assert(t.size == 190 && t(5L) == "up" && t(6L) == "up" && t(70L) == "cell" &&
+      !t.contains(7L))
   }
 }

@@ -24,6 +24,8 @@ class TokenRangeReaderShapeSpec extends SparkSpec {
   private val cols = Seq("pk", "ck", "v", "extra", TokenRangeSource.FileCol,
     TokenRangeSource.PosCol)
 
+  private val RewriteBound = 400L
+
   /** The mixed-shape table: its path and the legacy file's rel. */
   private def mixedTable(tag: String): (String, String) = {
     val dir = java.nio.file.Files.createTempDirectory(s"graft_reader_$tag").toString
@@ -39,6 +41,12 @@ class TokenRangeReaderShapeSpec extends SparkSpec {
     assert(legacy.size == 1)
     assert(TokenRangeSource.fileLongStats(legacy.head).size >= 2,
       "the legacy file must hold several row groups")
+    // the vector bound is the legacy file's 400 stored rows: a range
+    // delete splitting it binds a vector, a 401-row or 401-key statement
+    // rewrites
+    TokenRangeSource.recordPk(dir, "pk",
+      schemaDdl = TokenRangeSource.storedSchema(dir).map(_.toDDL),
+      morFallbackRows = Some(RewriteBound))
     // sink appends (`optional` columns); the first pins the legacy listing
     spark.range(0, 40)
       .select((col("id") % 4 + 1).as("pk"), (col("id") * 7 % 50 + 1000).as("ck"),
@@ -57,8 +65,8 @@ class TokenRangeReaderShapeSpec extends SparkSpec {
       .write.format(fmt).option("pk", "pk").mode("append").save(dir)
     // a key-grain vector, then a position-grain one: the range straddles
     // the legacy file's second row group, so that file is split
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(3L), mode = "dv")
-    TokenRangeOps.deleteCkRange(spark, dir, "pk", 1L, 150L, 160L, mode = "dv")
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(3L))
+    TokenRangeOps.deleteCkRange(spark, dir, "pk", 1L, 150L, 160L)
     val bound = TokenRangeSource.dvBindings(dir).map(_._1).toSet
     val legacyRel = TokenRangeSource.visibleRelFiles(dir)
       .map(_._2).find(r => legacy.head.endsWith(r)).get
@@ -122,22 +130,28 @@ class TokenRangeReaderShapeSpec extends SparkSpec {
     // on it reads and rewrites every file of that bucket, all survivors
     def sameBucket(pk: Long): Long = (5L until 1000L).find(k =>
       TokenLayout.bucketOfValue(k) == TokenLayout.bucketOfValue(pk)).get
-    def row(pk: Long, ck: Long, v: String) = spark.range(1)
-      .select(lit(pk).as("pk"), lit(ck).as("ck"), lit(v).as("v"), lit(s"x$v").as("extra"))
     // each verb runs on a fresh table; bucket(1) holds every file shape and
     // the legacy file's position vector, bucket(3) the key vector. The
     // model is the table's rows before the verb, which the test above
     // checks against the files themselves.
+    // statements one row or key past the table's bound rewrite: the
+    // upsert's 400 rows of one absent key plus one row, the delete's
+    // absent keys beside pk 2
+    val upRows = (0L until RewriteBound).map(i => (sameBucket(1L), 5000L + i, s"u$i")) :+
+      ((sameBucket(3L), 6L, "u3"))
+    val upFrame = {
+      val s2 = spark; import s2.implicits._
+      upRows.toDF("pk", "ck", "v").withColumn("extra", concat(lit("x"), col("v")))
+    }
+    val absentKeys = 10000L until 10000L + RewriteBound - 1L
     val verbs: Seq[(String, String => Unit, Seq[Seq[Any]] => Seq[Seq[Any]])] = Seq(
-      ("copy-on-write upsert", dir => TokenRangeOps.upsert(spark, dir, "pk",
-          row(sameBucket(1L), 5L, "u1").unionByName(row(sameBucket(3L), 6L, "u3"))),
-        m => m ++ Seq(Seq(sameBucket(1L), 5L, "u1", "xu1"),
-          Seq(sameBucket(3L), 6L, "u3", "xu3"))),
+      ("copy-on-write upsert", dir => TokenRangeOps.upsert(spark, dir, "pk", upFrame),
+        m => m ++ upRows.map { case (pk, ck, v) => Seq(pk, ck, v, s"x$v") }),
       ("copy-on-write deleteKeys", dir => TokenRangeOps.deleteKeys(spark, dir, "pk",
-          Seq(sameBucket(1L), sameBucket(3L), 2L), mode = "cow"),
+          Seq(sameBucket(1L), 2L) ++ absentKeys),
         m => m.filterNot(_.head == 2L)),
       ("dv deleteCkRange split", dir =>
-          TokenRangeOps.deleteCkRange(spark, dir, "pk", 1L, 200L, 210L, mode = "dv"),
+          TokenRangeOps.deleteCkRange(spark, dir, "pk", 1L, 200L, 210L),
         m => m.filterNot(r => r.head == 1L &&
           r(1).asInstanceOf[Long] >= 200L && r(1).asInstanceOf[Long] < 210L)),
       ("compactVectors", dir => TokenRangeOps.compactVectors(spark, dir), m => m))
@@ -165,9 +179,9 @@ class TokenRangeReaderShapeSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_reader_pin").toString
     spark.range(0, 64).select(col("id").as("pk"), concat(lit("v"), col("id")).as("v"))
       .write.format(fmt).option("pk", "pk").mode("overwrite").save(dir)
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(1L), mode = "dv")
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(1L))
     val pinned = TokenRangeSource.currentVersion(dir)
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(2L), mode = "dv")
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(2L))
     val rels = TokenRangeOps.liveFiles(dir)
     def keys(v: Option[Int]) = TokenRangeOps.readTableFiles(spark, dir, rels, v)
       .select("pk").collect().map(_.getLong(0)).toSet
