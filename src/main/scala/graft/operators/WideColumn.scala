@@ -1122,7 +1122,7 @@ object WideColumn extends QueryModule {
     * keys' pre-existing files in the same flip its new generation
     * appends — blind write (no existing data read), old generations
     * tombstoned at read, purged at compaction. Require-asserted: no
-    * pre-existing file is read, rewritten or retired, and the vector
+    * pre-existing file is rewritten or retired, and the vector
     * publishes. Small single-column-key batches narrow the binding by
     * the cached pk bloom/dictionary probes, so a disjoint-key INSERT
     * stays a pure append. Oracle replays the replacement with CASE. */
@@ -1188,9 +1188,10 @@ object WideColumn extends QueryModule {
     * SURVIVAL (the same users' other events keep their original values
     * — a pk-grain vector would have tombstoned them). The statement
     * inserts each patched row TWICE (the redelivery shape): intra-batch
-    * LWW keeps exactly one — a position vector over the statement's own
-    * files, still a blind write. Require-asserted: no pre-existing file
-    * is read, rewritten or retired, and vectors publish. */
+    * LWW keeps exactly one — the commit keeps each (pk, ck)'s last-written
+    * row before it appends, still a blind write for the stored rows.
+    * Require-asserted: no pre-existing file is rewritten or retired, and
+    * the key vector publishes. */
   private def insertUpsertClusteredDir(s: SparkSession, d: String): String =
     graft.PrebuiltDirs.cached("graft_connector_insupck", d) { dir =>
       val cat = sqlCatalogOf(s, dir)
@@ -1208,8 +1209,8 @@ object WideColumn extends QueryModule {
         .getAbsolutePath
       val before = graft.sources.connector.TokenRangeOps.liveFiles(path).toSet
       // redelivered writes: each patched (pk, ck) row lands TWICE in ONE
-      // statement — CQL keeps one row per key; graft suppresses the
-      // intra-batch loser with a position vector over the new files
+      // statement — CQL keeps one row per key; the commit drops the
+      // intra-batch loser before it appends
       val sliver = "SELECT user_id, event_id, " +
         "'redelivered' AS event_type, value + 5.0 AS value " +
         s"FROM $src WHERE event_id % 37 = 0"

@@ -461,19 +461,20 @@ object TokenRangeSource {
     ()
   }
 
-  /** The table's recorded INSERT mode (r17): Some("upsert") = plain
-    * INSERT/append commits publish a KEY deletion vector over the
-    * incoming keys' pre-existing owning-bucket files — CQL's
+  /** The table's recorded INSERT mode (r17): Some("upsert") = a plain
+    * INSERT/append replaces the stored rows that share its keys — CQL's
     * INSERT-IS-UPSERT made the write path's default (server.py's whole
-    * write surface is this semantic), at blind-write cost: no existing
-    * data is read (without the change feed), older generations are
-    * tombstoned at read and purged at compaction. Absent = blind
-    * append (the r11-r16 behavior). Recorded at CREATE
-    * (`TBLPROPERTIES('insert'='upsert')`). On CLUSTERED tables (r18)
-    * the vector carries the full (pk, ck) tuple — its sidecar's own
-    * schema declares the grain — so ck siblings of a replaced row
-    * survive: the reference's blind INSERT into the clustered
-    * `messages` table (server.py:186-207) now upserts by
+    * write surface is this semantic). The commit runs through
+    * [[TokenRangeOps.upsertStaged]]: one row per key survives the
+    * statement, and the one upsert plan either appends the rows beside a
+    * key deletion vector over the touched files (no stored row read
+    * without the change feed; older generations tombstoned at read,
+    * purged at compaction) or, past `dml.fallback_rows`, rewrites the
+    * touched files. Absent = blind append (the r11-r16 behavior).
+    * Recorded at CREATE (`TBLPROPERTIES('insert'='upsert')`). On
+    * CLUSTERED tables (r18) the key is the full (pk, ck) tuple, so ck
+    * siblings of a replaced row survive: the reference's blind INSERT
+    * into the clustered `messages` table (server.py:186-207) upserts by
     * (channel_id, message_id) exactly as CQL does. */
   private[connector] def recordedInsertMode(path: String): Option[String] =
     manifestProperty(path, "table.properties", "insert")
@@ -1279,11 +1280,7 @@ object TokenRangeSource {
       }
       if (!truncate && dvBind.nonEmpty) {
         val visibleTouched = baseTouched.values.flatten.toSet
-        // a binding may target a file THIS commit places (the
-        // insert-upsert's intra-batch-duplicate position vector, r18) —
-        // those are validated by construction, not against the base
-        val missingTargets =
-          dvBind.map(_._1).toSet -- visibleTouched -- placedRel.toSet
+        val missingTargets = dvBind.map(_._1).toSet -- visibleTouched
         if (missingTargets.nonEmpty) throw new ManifestConflictException(
           s"merge-on-read conflict at $path: ${missingTargets.size} " +
             s"deletion-vector target file(s) were retired by a racing " +
@@ -1607,9 +1604,11 @@ object TokenRangeSource {
     * dictionary-encoded, the DICTIONARY is the membership test (exact,
     * zero false positives); a row group with neither (legacy file,
     * mixed encodings, absent column) keeps conservatively. The one
-    * probe body behind the scan's bloom prune AND the insert-upsert
-    * binding narrowing — correctness never rests on it (a false KEEP
-    * costs a wasted read or an inert vector row, never a wrong row). */
+    * probe body behind the scan's bloom prune AND the upsert plan's
+    * narrowing of the files a small upsert or `insert='upsert'` INSERT
+    * touches — correctness never rests on it (a false KEEP costs a
+    * wasted read, an inert vector row or a needless rewrite, never a
+    * wrong row). */
   private[connector] def fileMightContain(abs: String, colName: String,
       dt: DataType, values: Seq[Any]): Boolean = {
     val blooms = fileBlooms(abs, colName)
@@ -2606,7 +2605,13 @@ private[connector] final class TokenRangeScan(path: String,
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (k, fs) => (k, fs.map(_._2)) }
     val dvByRel = TokenRangeSource.dvFilesByRel(path, pinV)
+    // a pk prune to one bucket keeps that bucket even when it holds no
+    // file (and below, when every file was pruned): with zero partitions
+    // Spark drops the reported key grouping and plans an exchange over
+    // no rows
     val kept = pkBuckets match {
+      case Some(bs) if bs.size == 1 && !byBucket.exists(d => bs(d._1)) =>
+        Seq(bs.head -> Seq.empty[String])
       case Some(bs) => byBucket.filter(d => bs(d._1))
       case None => byBucket
     }
@@ -2633,9 +2638,6 @@ private[connector] final class TokenRangeScan(path: String,
           else files.map(f =>
             dvByRel.getOrElse(TokenRangeSource.relOf(f), Array.empty[String])).toArray)
       }
-      // a pk-pruned one-bucket range keeps its partition with no files:
-      // with zero partitions Spark drops the reported key grouping and
-      // plans an exchange over no rows
       .filter(p => p.files.nonEmpty || (pkBuckets.isDefined && p.loBucket == p.hiBucket))
       .toArray[InputPartition]
   }
@@ -3390,205 +3392,103 @@ private[connector] final class TokenRangeBatchWrite(path: String,
     * files only for truncate/overwrite). Until the flip, readers resolve
     * the previous version in full; after it, the new one — there is no
     * intermediate state (manifest rename is atomic; commits serialize on
-    * the table's commit lock). */
+    * the table's commit lock).
+    *
+    * A plain append on an `insert='upsert'` table places nothing: CQL's
+    * INSERT semantic (server.py's whole write path) commits through
+    * [[TokenRangeOps.upsertStaged]], which reads the staged rows, keeps
+    * one row per (pk, ck) and re-writes them through the one upsert plan
+    * in [[TokenRangeOps.rewrite]]'s flip. Rewrites, truncates and
+    * vector-binding commits are never upserts. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val staged = messages.flatMap {
       case TokenRangeCommit(files) => files
       case _ => Array.empty[String]
     }
-    // INSERT-IS-UPSERT (r17, clustered + intra-batch LWW r18): a plain
-    // append on an `insert='upsert'` table publishes a KEY deletion
-    // vector over the incoming keys' pre-existing files in the SAME
-    // flip — CQL's INSERT semantic (server.py's whole write path) at
-    // blind-write cost. Resolved BEFORE the lock (reads staged files in
-    // place + the pinned manifest); only genuine appends qualify —
-    // rewrites, truncates and vector-binding commits keep their own
-    // exact semantics.
-    val insertUpsert = !doTruncate && replaceRel.isEmpty && opKind.isEmpty &&
-      dvBind.isEmpty && staged.nonEmpty &&
-      TokenRangeSource.recordedInsertMode(path).contains("upsert")
-    val iuPlan: Option[TokenRangeOps.InsertUpsertPlan] =
-      if (!insertUpsert) None
-      else TokenRangeOps.insertUpsertBind(
-        org.apache.spark.sql.SparkSession.active, path, staged.toSeq)
-    iuPlan match {
-      case Some(cow0: TokenRangeOps.InsertUpsertCowPlan) =>
-        // OVERSIZED statement (> dml.fallback_rows distinct keys, r18):
-        // complete as a copy-on-write replace-by-key in ONE nested flip
-        // — a data-sized key vector would tax every later read and the
-        // task readers' memory; this staging dir publishes nothing (the
-        // rewrite re-writes the batch's rows). Racing maintenance
-        // conflicts re-resolve from the fresh snapshot and retry.
-        val spark = org.apache.spark.sql.SparkSession.active
-        // a lost race re-resolves the plan from the fresh snapshot
-        def reResolve(p: TokenRangeOps.InsertUpsertCowPlan)
-            : TokenRangeOps.InsertUpsertCowPlan =
-          TokenRangeOps.insertUpsertBind(spark, path, staged.toSeq) match {
-            case Some(c: TokenRangeOps.InsertUpsertCowPlan) => c
-            case Some(_: TokenRangeOps.InsertUpsertBindPlan) =>
-              // unreachable for a fixed batch: the cow decision keys on
-              // the batch's distinct-key count alone
-              throw new IllegalStateException(
-                s"insert-upsert at $path: cow plan re-resolved to a vector " +
-                  "plan mid-retry — the key census changed for an " +
-                  "immutable staged batch")
-            case None =>
-              // no pre-existing file owns any key anymore and the batch
-              // is duplicate-free at this grain: the cow write degrades to
-              // a plain APPEND of the batch, recording no change rows — a
-              // pure append is feed-servable by insert synthesis, exact
-              p.copy(affectedRel = Nil, changes = None,
-                pinned = TokenRangeSource.currentVersion(path))
-          }
-        try {
-          var next = () => cow0
-          TokenRangeOps.withConflictRetry("insert-upsert") {
-            val p = next()
-            next = () => reResolve(p)
-            TokenRangeOps.insertUpsertCowRewrite(spark, path, p)
-          }
-        } finally
-          TokenRangeSource.deleteRecursively(
-            TokenRangeSource.stagingDir(path, writeId))
-        return
-      case _ => ()
-    }
-    val (effDvBind, effCdfRel, effSeen) = iuPlan match {
-      case Some(TokenRangeOps.InsertUpsertBindPlan(bind, cdf, pin)) =>
-        (bind, cdf.orElse(cdfRel), pin)
-      case _ => (dvBind, cdfRel, dvSeenVersion)
-    }
-    // the bind the publish loop FINALLY committed (ADVICE r18: a retry
-    // can degrade the bind to Nil — the racer removed every affected
-    // file — and the post-commit sweep must gate on what was published,
-    // not on the pre-retry plan)
-    var finalBind: Seq[(String, String)] = effDvBind
+    val plainAppend = !doTruncate && replaceRel.isEmpty && opKind.isEmpty &&
+      dvBind.isEmpty && staged.nonEmpty
+    val spark = org.apache.spark.sql.SparkSession.active
     try {
-      TokenRangeSource.withCommitLock(path) {
-        // LEGACY tables first (r11 review): a manifest-less table reads
-        // via physical listing, so moving files in before any manifest
-        // exists would expose a torn batch (and a crash mid-move would
-        // leave it visible forever). Pin the current legacy listing as
-        // manifest v1 BEFORE the first move — from then on readers resolve
-        // manifests and the moves are invisible until the flip.
-        TokenRangeSource.pinLegacyListing(path)
-        // record the bucketing key once (first committer wins) so the
-        // keyed rewrite ops can validate callers against it — and validate
-        // THIS writer against an already-recorded key under the same lock
-        // (ADVICE r13: only TokenRangeOps callers were guarded; a direct
-        // df.write append with a partial composite key would route rows on
-        // the wrong ring and point-lookup pruning would silently miss them)
-        val writerPk = pkIdx.map(writeSchema(_).name).mkString(",")
-        TokenRangeSource.requireRecordedPk(path, writerPk, "write")
-        // canonical clustering spec everywhere it is recorded, so later
-        // comparisons are insensitive to case/spacing/implicit-ASC
-        val ckNorm = ckName.map(TokenRangeSource.normalizeCkSpec)
-        // re-validate the ck UNDER THE LOCK too (r14 review): two racing
-        // first-declarers with contradicting specs both pass the
-        // planning-time check (nothing recorded yet) — the loser must
-        // fail here, before publishing files sorted opposite to the
-        // spec the winner just recorded
-        (ckNorm, TokenRangeSource.recordedCk(path)) match {
-          case (Some(o), Some(r)) =>
-            require(o == TokenRangeSource.normalizeCkSpec(r),
-              s"token-range write at $path: table is clustered on ck '$r' " +
-                s"but the write declared '$o' — the clustering key is " +
-                "fixed at creation (a racing declarer recorded first)")
-          case _ => ()
-        }
-        if (TokenRangeSource.recordedPk(path).isEmpty) {
-          // creation record. For a pre-existing LEGACY table (data files,
-          // no properties yet) the creation schema is the TABLE's stored
-          // view, never this write's — a subset-column first append must
-          // not shrink what later inference sees (r14 review). On a FRESH
-          // table the caller's CREATE TABLE DDL wins over this write's
-          // frame (ADVICE r14: a declared-then-subset-bound first insert
-          // must not permanently shrink the creation schema either).
-          val creation = TokenRangeSource.storedSchema(path)
-            .orElse(declaredDdl.map(d => StructType(
-              StructType.fromDDL(d).fields.map(_.copy(nullable = true)))))
-            .getOrElse(writeSchema)
-          TokenRangeSource.recordPk(path, writerPk, ckNorm, Some(creation.toDDL))
-        }
-        // the clustering key records on FIRST declaration, not first
-        // commit — a table created without one still becomes physically
-        // clustered the day a writer declares it (r14 review)
-        ckNorm.foreach(ck => TokenRangeSource.recordCk(path, ck))
-        val placedRel = TokenRangeSource.placeStaged(path, staged.toSeq)
-        // CAS publish: rebases on the visible set it observes; the lock
-        // only reduces contention (see publishManifest). replaceRel retires
-        // the files a copy-on-write rewrite (DELETE/compaction) supersedes
-        // in the SAME flip their rewritten successors appear — and FAILS
-        // with ManifestConflictException when a racing committer already
-        // retired any of them (r12 verdict #2). On that failure the moved
-        // files are referenced by NO manifest (invisible; vacuum reaps
-        // them) and TokenRangeOps re-runs the rewrite from the new
-        // snapshot.
-        // the INSERT-UPSERT bind resolved against a pre-lock pin: racing
-        // maintenance (another commit's vector sweep, a compaction) may
-        // have retired a bound file since — re-resolve from the fresh
-        // snapshot and retry instead of failing the user's INSERT
-        // (ADVICE r17: appends never conflicted before the bind existed)
-        var bind = effDvBind; var cdf = effCdfRel; var seen = effSeen
-        var attempts = 0
-        var published = false
-        finalBind = bind
-        while (!published) {
-          try {
-            TokenRangeSource.publishManifest(path, placedRel, doTruncate,
-              replaceRel,
-              // `#op` kind: the caller's declaration wins; otherwise
-              // classify from shape (insert-upsert / truncate /
-              // undeclared-rewrite / append)
-              opKind.getOrElse(
-                if (doTruncate) "truncate"
-                else if (replaceRel.nonEmpty) "rewrite"
-                else if (bind.nonEmpty) "upsert"
-                else "append"),
-              cdf, bind, seen)
-            published = true
-            finalBind = bind
-          } catch {
-            case _: ManifestConflictException
-                if insertUpsert && attempts < TokenRangeOps.MaxRewriteAttempts =>
-              attempts += 1
-              val prevBind = bind
-              val placedAbs = placedRel.map(rel =>
-                new java.io.File(path, rel).getAbsolutePath)
-              TokenRangeOps.insertUpsertBind(
-                  org.apache.spark.sql.SparkSession.active, path,
-                  placedAbs) match {
-                case Some(TokenRangeOps.InsertUpsertBindPlan(b, c, p)) =>
-                  bind = b; cdf = c; seen = p
-                case Some(_: TokenRangeOps.InsertUpsertCowPlan) =>
-                  // unreachable for a fixed batch (the cow decision keys
-                  // on the batch's distinct-key count alone)
-                  throw new IllegalStateException(
-                    s"insert-upsert at $path: vector plan re-resolved " +
-                      "to a cow plan mid-retry")
-                case None =>
-                  bind = Nil; cdf = cdfRel; seen = dvSeenVersion
-              }
-              // the superseded attempt's _dv sidecars are referenced by
-              // NO manifest (that publish failed) and not by the new
-              // plan — delete them now instead of leaving vacuum debt
-              // (ADVICE r18); only the `_dv/` namespace, never a
-              // caller-provided CDF sidecar
-              val keep = bind.map(_._2).toSet
-              prevBind.map(_._2).distinct
-                .filter(rel => rel.startsWith("_dv/") && !keep(rel))
-                .foreach(rel => TokenRangeSource.deleteRecursively(
-                  new java.io.File(path, rel)))
+      if (plainAppend && TokenRangeSource.recordedInsertMode(path).contains("upsert"))
+        TokenRangeOps.upsertStaged(spark, path, staged.toSeq)
+      else {
+        TokenRangeSource.withCommitLock(path) {
+          // LEGACY tables first (r11 review): a manifest-less table reads
+          // via physical listing, so moving files in before any manifest
+          // exists would expose a torn batch (and a crash mid-move would
+          // leave it visible forever). Pin the current legacy listing as
+          // manifest v1 BEFORE the first move — from then on readers resolve
+          // manifests and the moves are invisible until the flip.
+          TokenRangeSource.pinLegacyListing(path)
+          // record the bucketing key once (first committer wins) so the
+          // keyed rewrite ops can validate callers against it — and validate
+          // THIS writer against an already-recorded key under the same lock
+          // (ADVICE r13: only TokenRangeOps callers were guarded; a direct
+          // df.write append with a partial composite key would route rows on
+          // the wrong ring and point-lookup pruning would silently miss them)
+          val writerPk = pkIdx.map(writeSchema(_).name).mkString(",")
+          TokenRangeSource.requireRecordedPk(path, writerPk, "write")
+          // canonical clustering spec everywhere it is recorded, so later
+          // comparisons are insensitive to case/spacing/implicit-ASC
+          val ckNorm = ckName.map(TokenRangeSource.normalizeCkSpec)
+          // re-validate the ck UNDER THE LOCK too (r14 review): two racing
+          // first-declarers with contradicting specs both pass the
+          // planning-time check (nothing recorded yet) — the loser must
+          // fail here, before publishing files sorted opposite to the
+          // spec the winner just recorded
+          (ckNorm, TokenRangeSource.recordedCk(path)) match {
+            case (Some(o), Some(r)) =>
+              require(o == TokenRangeSource.normalizeCkSpec(r),
+                s"token-range write at $path: table is clustered on ck '$r' " +
+                  s"but the write declared '$o' — the clustering key is " +
+                  "fixed at creation (a racing declarer recorded first)")
+            case _ => ()
           }
+          if (TokenRangeSource.recordedPk(path).isEmpty) {
+            // creation record. For a pre-existing LEGACY table (data files,
+            // no properties yet) the creation schema is the TABLE's stored
+            // view, never this write's — a subset-column first append must
+            // not shrink what later inference sees (r14 review). On a FRESH
+            // table the caller's CREATE TABLE DDL wins over this write's
+            // frame (ADVICE r14: a declared-then-subset-bound first insert
+            // must not permanently shrink the creation schema either).
+            val creation = TokenRangeSource.storedSchema(path)
+              .orElse(declaredDdl.map(d => StructType(
+                StructType.fromDDL(d).fields.map(_.copy(nullable = true)))))
+              .getOrElse(writeSchema)
+            TokenRangeSource.recordPk(path, writerPk, ckNorm, Some(creation.toDDL))
+          }
+          // the clustering key records on FIRST declaration, not first
+          // commit — a table created without one still becomes physically
+          // clustered the day a writer declares it (r14 review)
+          ckNorm.foreach(ck => TokenRangeSource.recordCk(path, ck))
+          val placedRel = TokenRangeSource.placeStaged(path, staged.toSeq)
+          // CAS publish: rebases on the visible set it observes; the lock
+          // only reduces contention (see publishManifest). replaceRel retires
+          // the files a copy-on-write rewrite (DELETE/compaction) supersedes
+          // in the SAME flip their rewritten successors appear — and FAILS
+          // with ManifestConflictException when a racing committer already
+          // retired any of them (r12 verdict #2). On that failure the moved
+          // files are referenced by NO manifest (invisible; vacuum reaps
+          // them) and TokenRangeOps re-runs the rewrite from the new
+          // snapshot.
+          TokenRangeSource.publishManifest(path, placedRel, doTruncate,
+            replaceRel,
+            // `#op` kind: the caller's declaration wins; otherwise
+            // classify from shape (vector bind / truncate /
+            // undeclared-rewrite / append)
+            opKind.getOrElse(
+              if (doTruncate) "truncate"
+              else if (replaceRel.nonEmpty) "rewrite"
+              else if (dvBind.nonEmpty) "upsert"
+              else "append"),
+            cdfRel, dvBind, dvSeenVersion)
         }
+        TokenRangeOps.commitTail(spark, path, vectorPublished = dvBind.nonEmpty)
       }
-      TokenRangeOps.commitTail(org.apache.spark.sql.SparkSession.active,
-        path, vectorPublished = finalBind.nonEmpty)
       // fragmentation sweep (r18, OPT-IN via compact.files_per_bucket):
       // plain appends only — rewrites/compacts never re-trigger it
-      if (!doTruncate && replaceRel.isEmpty && opKind.isEmpty && staged.nonEmpty)
-        TokenRangeOps.fileSweep(
-          org.apache.spark.sql.SparkSession.active, path)
+      if (plainAppend) TokenRangeOps.fileSweep(spark, path)
     } finally
       TokenRangeSource.deleteRecursively(TokenRangeSource.stagingDir(path, writeId))
   }
@@ -3799,7 +3699,7 @@ object TokenRangeOps {
     case other => isConflict(other.getCause)
   }
 
-  private[connector] val MaxRewriteAttempts = 5
+  private val MaxRewriteAttempts = 5
 
   /** Test seam: invoked once per attempt AFTER the rewrite pins its
     * snapshot and BEFORE it publishes — a spec installs a racing commit
@@ -3810,7 +3710,7 @@ object TokenRangeOps {
   /** Optimistic-concurrency loop around one copy-on-write rewrite: re-run
     * `body` (which re-pins the CURRENT snapshot each attempt) until its
     * publish lands without a [[ManifestConflictException]]. */
-  private[connector] def withConflictRetry[T](what: String)(body: => T): T = {
+  private def withConflictRetry[T](what: String)(body: => T): T = {
     var attempt = 1
     var out: Option[T] = None
     while (out.isEmpty) {
@@ -3864,7 +3764,10 @@ object TokenRangeOps {
     * the version its rows were read at (`dvSeenVersion`), so a vector
     * bound after the pin conflicts the publish instead of being dropped.
     * A flip that writes rows commits through the sink, which runs
-    * [[commitTail]]; a metadata-only flip runs it here. */
+    * [[commitTail]]; a metadata-only flip runs it here. A flip whose
+    * publish loses a race deletes the `_dv/` and `_cdf/` sidecars it
+    * wrote (no manifest references them) before the conflict propagates
+    * to [[rewrite]]'s retry. */
   private def flip(path: String, pinned: Option[Int], f: Flip): Unit = {
     val cdfRel = f.changes.filter(_ => TokenRangeSource.changeFeedEnabled(path))
       .map(c => writeCdfSidecar(path, c()))
@@ -3877,12 +3780,12 @@ object TokenRangeOps {
         (Some(out -> r.pk), Nil, r.rollRows)
       case b: Bind =>
         val dvRel = newDvRel()
-        b.vector.coalesce(1).write.mode("error")
+        withMicros(b.vector).coalesce(1).write.mode("error")
           .parquet(new java.io.File(path, dvRel).getAbsolutePath)
         (b.append, b.targets.map(_ -> dvRel), None)
       case _: Retire => (None, Nil, None)
     }
-    rows match {
+    try rows match {
       case Some((df, pk)) =>
         df.write.format(fmt).option("pk", pk).option("opKind", f.opKind)
           .options(cdfRel.map("cdfRel" -> _).toMap)
@@ -3898,6 +3801,11 @@ object TokenRangeOps {
             dvBind = bind, dvSeenVersion = pinned)
         }
         commitTail(SparkSession.active, path, vectorPublished = bind.nonEmpty)
+    } catch {
+      case t: Throwable if isConflict(t) =>
+        (cdfRel ++ bind.headOption.map(_._2)).foreach(rel =>
+          TokenRangeSource.deleteRecursively(new java.io.File(path, rel)))
+        throw t
     }
   }
 
@@ -4598,248 +4506,113 @@ object TokenRangeOps {
       recordedPkOf(path, "merge-on-read fallback"), opKind, Some(changes)))
   }
 
-  /** INSERT-IS-UPSERT commit support (r17, clustered + intra-batch LWW
-    * r18): for a plain append on an `insert='upsert'` table, resolve
-    * the incoming keys' pre-existing owning-bucket files at the pinned
-    * version, stage a KEY deletion vector over them (and, on a feed
-    * table, the upsert-classified change sidecar), so the caller's ONE
-    * manifest flip publishes new-generation files + the vector that
-    * tombstones the old generations — CQL's INSERT semantic at
-    * blind-write cost. On CLUSTERED tables the vector's grain is the
-    * full (pk, ck) tuple — the sidecar carries pk+ck columns and the
-    * reader matches exactly those, so ck siblings of a replaced row
-    * survive by construction (the reference's own hottest write is a
-    * blind INSERT into the clustered `messages` table, server.py:186-
-    * 207, which CQL upserts by (channel_id, message_id)). A statement
-    * inserting the SAME key twice (re-delivered writes) additionally
-    * binds a POSITION vector over its own staged files suppressing all
-    * but the last-written row per key (ADVICE r17: CQL keeps one row
-    * per key even intra-batch) — still a blind write: nothing is
-    * rewritten, the losers are tombstoned at read and purged at
-    * compaction. Returns None when no pre-existing file owns any
-    * incoming key and the batch is duplicate-free (a plain append is
-    * already exact). Concurrency: a racing rewrite that retires a
-    * bound file conflicts the publish — [[TokenRangeBatchWrite.commit]]
-    * re-binds from the fresh snapshot and retries (ADVICE r17); racing
-    * appends of the same key stay concurrent blind writes, exactly
-    * [[upsert]]'s vector contract. */
-  /** How a qualifying plain append on an `insert='upsert'` table
-    * completes (r18): bind a deletion vector (the blind-write fast
-    * path), or — above `dml.fallback_rows` distinct keys — complete as
-    * a copy-on-write replace-by-key (a data-sized key vector would tax
-    * every later read AND readers load each bound sidecar's key set
-    * into task memory; the group rewrite pays once at write time —
-    * the same route-don't-refuse trade the mor DML fallback makes). */
-  private[connector] sealed trait InsertUpsertPlan
-  private[connector] final case class InsertUpsertBindPlan(
-      bind: Seq[(String, String)], cdfRel: Option[String],
-      pinned: Option[Int]) extends InsertUpsertPlan
-  private[connector] final case class InsertUpsertCowPlan(
-      affectedRel: Seq[String], pinned: Option[Int],
-      changes: Option[() => DataFrame], keyCols: Seq[String],
-      keysDf: DataFrame, deduped: DataFrame) extends InsertUpsertPlan
+  // ---- the ONE upsert plan: TokenRangeOps.upsert and insert='upsert' INSERTs
 
-  /** Single-column-key INSERT batches of at most this many distinct keys
-    * probe each candidate file's pk bloom before binding it. */
+  /** Single-column-key upserts of at most this many distinct keys probe
+    * each owning-bucket file's pk bloom/dictionary before touching it. */
   private val InsertProbeMaxKeys = 128
 
-  private[connector] def insertUpsertBind(spark: SparkSession, path: String,
-      stagedAbs: Seq[String])
-      : Option[InsertUpsertPlan] =
-    TokenRangeSource.recordedPk(path).flatMap { pkRec =>
-      val pinned = TokenRangeSource.currentVersion(path)
-      val pks = pkRec.split(',').map(_.trim).toSeq
-      val cks = TokenRangeSource.recordedCk(path).toSeq
-        .flatMap(spec => TokenRangeSource.parseCkSpec(spec).map(_._1))
-      // staged-row lineage for the intra-batch winner pick: the staged
-      // file will keep its `tb=<k>/<name>` under the table root after
-      // the commit's move, and the staged ordinal is the stored-row
-      // ordinal `_pos` counts — so (rel, ordinal) is a valid POSITION
-      // vector target for the files this very commit places
-      val stagedLin = readStaged(spark, path, stagedAbs, lineage = true)
-      val incoming = stagedLin.drop(StagedFileCol, StagedPosCol)
-      def resolve(n: String): String = incoming.schema.fields
-        .find(_.name.equalsIgnoreCase(n))
-        .getOrElse(throw new IllegalStateException(
-          s"insert-upsert at $path: key column '$n' missing from the " +
-            s"staged frame ${incoming.schema.catalogString}")).name
-      val pkCols = pks.map(resolve)
-      // the replacement grain: whole partition on unclustered tables,
-      // the exact (pk, ck) row on clustered ones
-      val keyCols = pkCols ++ cks.map(resolve)
-      // a NULL key component means the row has NO replacement identity:
-      // CQL refuses null clustering keys outright; graft stores such
-      // rows (clustered tables legally hold null-ck rows elsewhere) but
-      // they take the BLIND-APPEND path — excluded from the key census,
-      // from the vector, and from the LWW dedupe (review r18: the
-      // null-unsafe inner joins below would otherwise silently DROP
-      // them from the cow completion's output)
-      val keyNotNull = keyCols.map(col(_).isNotNull)
-        .reduce(_ && _)
-      val keyedLin = stagedLin.filter(keyNotNull)
-      // the winner ORDER: numeric (partition, task, roll, ordinal) from
-      // the staged name `part-<pid>-<tid>-<writeId>-<k>.parquet` — a
-      // string compare would rank "...-9" above "...-10" and pick an
-      // OLDER rolled file's row (review r18). Within one task this is
-      // true write order; across parallel tasks it is deterministic for
-      // a given staging layout, which is all CQL's own same-timestamp
-      // tie promises. The raw name rides along as the unique tiebreak
-      // so unparseable names degrade to string order, never to a tie.
-      import org.apache.spark.sql.functions.{element_at, split => fsplit,
-        concat, lit => flit, struct => fstruct, regexp_extract}
-      val fname = element_at(fsplit(col(StagedFileCol), "/"), -1)
-      def nameInt(group: Int) = regexp_extract(fname,
-        "part-(\\d+)-(\\d+)-[0-9a-fA-F]+-(\\d+)\\.parquet", group)
-        .cast("long")
-      val ordCol = fstruct(nameInt(1), nameInt(2), nameInt(3), fname,
-        col(StagedPosCol))
-      // ONE aggregation serves three needs: the keys' owning buckets
-      // (a ≤ Buckets-row distinct — bounded by the ring width, never
-      // data volume), the intra-batch duplicate flag, and the LWW
-      // winner per duplicated key
-      val winCol = org.apache.spark.sql.functions.max(ordCol)
-      val keyAgg = keyedLin.groupBy(keyCols.map(col): _*)
-        .agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("_iu_n"),
-          winCol.as("_iu_w"))
-      val keysDf = keyAgg.select(keyCols.map(col): _*)
-      val bucketRows = keyAgg
-        .select(ringOf(pkCols, incoming.schema).as("tb"), col("_iu_n"))
-        .groupBy("tb")
-        .agg(org.apache.spark.sql.functions.max("_iu_n").as("mx"),
-          org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("nk"))
-        .collect()
-      val buckets = bucketRows.map(_.getInt(0)).toSet
-      val hasDups = bucketRows.exists(_.getLong(1) > 1L)
-      val nKeys = bucketRows.map(_.getLong(2)).sum
-      // losers of intra-batch duplicates, addressed as (placed rel,
-      // stored ordinal); empty frame when the batch is duplicate-free.
-      // `element_at(split(path,'/'), -2)` is the `tb=<k>` dir the
-      // committer moves the file under verbatim.
-      def relOf(c: org.apache.spark.sql.Column) = concat(
-        element_at(fsplit(c, "/"), -2), flit("/"), element_at(fsplit(c, "/"), -1))
-      lazy val losers = keyedLin
-        .join(keyAgg.filter(col("_iu_n") > 1L), keyCols)
-        .filter(ordCol =!= col("_iu_w"))
-        .select(relOf(col(StagedFileCol)).as(TokenRangeSource.FileCol),
-          col(StagedPosCol).as(TokenRangeSource.PosCol))
-      // the batch with intra-batch losers dropped — what actually
-      // becomes visible, and what the change feed must image;
-      // identity-less (null-key) rows pass through verbatim
-      lazy val deduped =
-        if (!hasDups) incoming
-        else keyedLin.join(keyAgg, keyCols)
-          .filter(col("_iu_n") === 1L || ordCol === col("_iu_w"))
-          .select(incoming.schema.fieldNames.map(col): _*)
-          .unionByName(stagedLin.filter(!keyNotNull)
-            .select(incoming.schema.fieldNames.map(col): _*))
-      val bucketRel = TokenRangeSource.visibleRelFiles(path, pinned)
-        .collect { case (k, rel) if buckets(k) => rel }
-      // POINT-INSERT narrowing: small single-key-column batches probe
-      // each candidate file's pk bloom/dictionary (cached, the same
-      // probe point lookups use) so a hot-path small INSERT binds only
-      // the files that might actually hold its keys — and a DISJOINT
-      // insert binds NOTHING and stays a plain append. Larger batches
-      // (or composite pks) keep the bucket grain: they overlap widely
-      // anyway, and an inert vector row is harmless by construction.
-      // On clustered tables the probe stays pk-valued (the bloom is on
-      // the pk column); overbinding a file lacking the exact (pk, ck)
-      // is inert for the same reason.
-      val fewKeys: Option[Seq[Any]] =
-        if (pkCols.size != 1 || bucketRel.isEmpty) None
-        else {
-          val few = keysDf.select(col(pkCols.head)).distinct()
-            .limit(InsertProbeMaxKeys + 1).collect()
-          if (few.length > InsertProbeMaxKeys) None
-          else Some(few.map(_.get(0)).toSeq)
-        }
-      val affectedRel = fewKeys match {
-        case Some(ks) =>
-          val dt = incoming.schema(pkCols.head).dataType
-          bucketRel.filter(rel => TokenRangeSource.fileMightContain(
-            new java.io.File(path, rel).getAbsolutePath,
-            pkCols.head, dt, ks))
-        case None => bucketRel
-      }
-      if (affectedRel.isEmpty && !hasDups) None
-      else {
-        // the upsert classification, vector-merged at the pin and imaged
-        // from the DEDUPED batch (a loser row never becomes visible, so
-        // it never reaches the feed)
-        val changes = () => upsertChanges(
-          readTableFiles(spark, path, affectedRel, pinned, empty = incoming.schema),
-          deduped, keyCols)
-        // STATEMENT-SIZE fallback (r18, the mor-DML trade at the INSERT
-        // path): past `dml.fallback_rows` distinct keys, complete
-        // copy-on-write — see [[InsertUpsertPlan]]
-        if (!publishesVector(path, nKeys))
-          Some(InsertUpsertCowPlan(affectedRel, pinned, Some(changes),
-            keyCols, keysDf, deduped))
-        else {
-        val cdfRel =
-          if (!TokenRangeSource.changeFeedEnabled(path)) None
-          else Some(writeCdfSidecar(path, changes()))
-        // pre-existing generations: one KEY vector binding every
-        // affected old file. SIDECAR CONVENTION: timestamp key columns
-        // store as LONG µs (`unix_micros`) — the sink stores timestamps
-        // as raw INT64 µs and a vanilla session would write the sidecar
-        // as INT96 otherwise (the library must not depend on
-        // outputTimestampType); both read boundaries (the task reader's
-        // loadDv, and Spark when it reads the sidecar) convert back.
-        val oldBind: Seq[(String, String)] =
-          if (affectedRel.isEmpty) Nil
-          else {
-            val dvRel = newDvRel()
-            keysDf.select(keyCols.map { n =>
-              if (incoming.schema(n).dataType == TimestampType)
-                org.apache.spark.sql.functions.unix_micros(col(n)).as(n)
-              else col(n)
-            }: _*).coalesce(1).write.mode("error")
-              .parquet(new java.io.File(path, dvRel).getAbsolutePath)
-            affectedRel.map(_ -> dvRel)
-          }
-        // intra-batch losers: one POSITION vector binding the staged
-        // files that carry them (placed in the same flip)
-        val stagedBind: Seq[(String, String)] =
-          if (!hasDups) Nil
-          else {
-            val dvRel = newDvRel()
-            val rows = losers.persist()
-            try {
-              val rels = rows.select(TokenRangeSource.FileCol).distinct()
-                .collect().map(_.getString(0)).toSeq
-              if (rels.isEmpty) Nil
-              else {
-                rows.coalesce(1).write.mode("error")
-                  .parquet(new java.io.File(path, dvRel).getAbsolutePath)
-                rels.map(_ -> dvRel)
-              }
-            } finally { rows.unpersist(); () }
-          }
-        if (oldBind.isEmpty && stagedBind.isEmpty) None
-        else Some(InsertUpsertBindPlan(oldBind ++ stagedBind, cdfRel, pinned))
-        }
-      }
-    }
+  /** An upsert statement as its one bucket aggregate sees it: the
+    * owning buckets of its keyed rows, how many keyed rows there are,
+    * and — for a single-column pk with at most [[InsertProbeMaxKeys]]
+    * distinct keys — those keys per bucket. */
+  private final case class UpsertStatement(buckets: Set[Int], rows: Long,
+      probeKeys: Option[Map[Int, Seq[Any]]])
 
-  /** Copy-on-write COMPLETION of an oversized INSERT-IS-UPSERT statement
-    * (r18 — [[InsertUpsertCowPlan]]): the affected old files' survivors
-    * (rows whose key the batch does NOT replace, vector-merged at the
-    * pin) plus the LWW-deduped incoming batch republish while the
-    * affected files retire, in ONE nested conflict-validated flip — the
-    * same semantics the vector path serves at read time, paid once at
-    * write time. The caller's staged files never place (the rewrite
-    * re-writes the batch's rows); its staging dir is reaped after. */
-  private[connector] def insertUpsertCowRewrite(spark: SparkSession,
-      path: String, plan: InsertUpsertCowPlan): Unit = {
-    val out =
-      if (plan.affectedRel.isEmpty) plan.deduped
-      else readTableFiles(spark, path, plan.affectedRel, plan.pinned)
-        .join(plan.keysDf, plan.keyCols, "left_anti")
-        .unionByName(plan.deduped)
-    flip(path, plan.pinned, Replace(out, plan.affectedRel,
-      recordedPkOf(path, "insert-upsert cow completion"), "upsert", plan.changes))
+  /** [[UpsertStatement]] of `keyed` (rows whose key columns are all
+    * non-null) in ONE Spark job: a ≤ Buckets-row aggregate of the rows
+    * per owning bucket and, for a single-column pk, up to
+    * [[InsertProbeMaxKeys]] + 1 of each bucket's distinct keys (keys of
+    * different buckets differ, so the per-bucket counts add up). */
+  private def upsertStatement(keyed: DataFrame, pks: Seq[String]): UpsertStatement = {
+    import org.apache.spark.sql.functions.{collect_set, count, slice}
+    val sample =
+      if (pks.size == 1) slice(collect_set(col(pks.head)), 1, InsertProbeMaxKeys + 1)
+      else lit(null)
+    val perBucket = keyed.groupBy(ringOf(pks, keyed.schema).as("tb"))
+      .agg(count(lit(1)), sample).collect()
+    val keys = perBucket.map(r => r.getInt(0) -> Option(r.getSeq[Any](2)).getOrElse(Nil)).toMap
+    UpsertStatement(keys.keySet, perBucket.map(_.getLong(1)).sum,
+      Some(keys).filter(_ => pks.size == 1 && keys.values.map(_.size).sum <= InsertProbeMaxKeys))
+  }
+
+  /** The one upsert plan: at `pinned`, `rows` replace the stored rows
+    * that share their `keys` values (a row with a NULL key component has
+    * no identity: it replaces nothing). The owning buckets' files are
+    * the candidates; a small single-column-key statement keeps only the
+    * files whose cached pk bloom/dictionary probe
+    * ([[TokenRangeSource.fileMightContain]]) says they might hold one of
+    * its keys, so a disjoint statement touches nothing and records
+    * `#op append`. Otherwise, while [[publishesVector]] takes the
+    * statement, the rows append and a key vector over the touched files
+    * suppresses the replaced rows in the same flip (Cassandra's blind
+    * write: no stored row is read unless the change feed is on); past
+    * it the touched files' survivors — anti-joined on `keys` — and the
+    * rows replace the touched files. `pk` is the sink key the rows are
+    * written by. */
+  private def upsertPlan(spark: SparkSession, path: String, pk: String,
+      rows: DataFrame, keys: Seq[String], st: UpsertStatement,
+      pinned: Option[Int]): Flip = {
+    val pkCol = pk.split(',').head.trim
+    val touched = TokenRangeSource.visibleRelFiles(path, pinned).collect {
+      case (k, rel) if st.buckets(k) && st.probeKeys.forall(ks =>
+          TokenRangeSource.fileMightContain(new java.io.File(path, rel).getAbsolutePath,
+            pkCol, rows.schema(pkCol).dataType, ks(k))) => rel
+    }
+    if (touched.isEmpty) Replace(rows, Nil, pk, "append")
+    else {
+      val replaced = rows.filter(keys.map(col(_).isNotNull).reduce(_ && _))
+        .select(keys.map(col): _*).distinct()
+      lazy val old = readTableFiles(spark, path, touched, pinned, empty = rows.schema)
+      val changes = Some(() => upsertChanges(old, rows, keys))
+      if (publishesVector(path, st.rows))
+        Bind(replaced, touched, "upsert", changes, append = Some(rows -> pk))
+      else Replace(old.join(replaced, keys, "left_anti")
+        .select(rows.columns.map(col).toSeq: _*).unionByName(rows),
+        touched, pk, "upsert", changes)
+    }
+  }
+
+  /** Commit a plain append on an `insert='upsert'` table
+    * ([[TokenRangeBatchWrite.commit]]): the staged rows, read once with
+    * their lineage, keep the current intra-batch winner per (pk, ck) —
+    * CQL keeps one row per key even within one statement — and replace
+    * stored rows on (pk, ck) through [[rewrite]] and [[upsertPlan]]. The
+    * flip re-writes the batch's rows; the staged files never place. */
+  private[connector] def upsertStaged(spark: SparkSession, path: String,
+      stagedAbs: Seq[String]): Unit = {
+    import org.apache.spark.sql.functions.{element_at, max_by, regexp_extract,
+      split => fsplit, struct}
+    val lin = readStaged(spark, path, stagedAbs, lineage = true)
+    val cols = lin.columns.filterNot(Set(StagedFileCol, StagedPosCol)).toSeq
+    def resolve(n: String): String = cols.find(_.equalsIgnoreCase(n.trim))
+      .getOrElse(throw new IllegalStateException(s"insert-upsert at $path: key " +
+        s"column '$n' missing from the staged columns ${cols.mkString(", ")}"))
+    val pks = recordedPkOf(path, "insert-upsert").split(',').map(resolve).toSeq
+    // the replacement grain: whole partition on unclustered tables, the
+    // exact (pk, ck) row on clustered ones
+    val keys = pks ++ TokenRangeSource.recordedCk(path).toSeq
+      .flatMap(spec => TokenRangeSource.parseCkSpec(spec).map(c => resolve(c._1)))
+    // a NULL key component means no replacement identity (CQL refuses
+    // null clustering keys; graft stores such rows): they blind-append
+    val keyed = keys.map(col(_).isNotNull).reduce(_ && _)
+    // the winner ORDER: numeric (partition, task, roll, ordinal) from the
+    // staged name `part-<pid>-<tid>-<writeId>-<k>.parquet` — a string
+    // compare would rank "...-9" above "...-10". Within one task this is
+    // true write order; across parallel tasks it is deterministic for a
+    // given staging layout, which is all CQL's own same-timestamp tie
+    // promises. The raw name rides along as the unique tiebreak.
+    val fname = element_at(fsplit(col(StagedFileCol), "/"), -1)
+    def nameInt(group: Int) = regexp_extract(fname,
+      "part-(\\d+)-(\\d+)-[0-9a-fA-F]+-(\\d+)\\.parquet", group).cast("long")
+    val order = struct(nameInt(1), nameInt(2), nameInt(3), fname, col(StagedPosCol))
+    val rows = lin.filter(keyed).groupBy(keys.map(col): _*)
+      .agg(max_by(struct(cols.map(col): _*), order).as("w")).select(col("w.*"))
+      .unionByName(lin.filter(!keyed).select(cols.map(col): _*))
+    val st = upsertStatement(rows.filter(keyed), pks)
+    rewrite(spark, path, "insert-upsert")(pinned =>
+      Some(upsertPlan(spark, path, pks.mkString(","), rows, keys, st, pinned)))
+    ()
   }
 
   // ---- deletion-vector COMPACTION policy (r17, VERDICT r16 #2) ------------
@@ -5000,21 +4773,19 @@ object TokenRangeOps {
     }
 
   /** CQL's INSERT-IS-UPSERT at the connector layer: replace-by-partition-
-    * key in ONE atomic flip. Only the incoming keys' OWNING BUCKETS'
-    * files are read and rewritten — each rewritten file keeps its rows
-    * whose pk is NOT being upserted (a left-anti join against the
-    * incoming frame) and the incoming rows are written beside them;
-    * every other bucket's files survive by reference, and the manifest
-    * flip publishes survivors + incoming while retiring the affected
-    * files (the same append+replaceFiles primitive DELETE/compaction
-    * use, so a racing append rebases in intact). Up to the table's
+    * key in ONE atomic flip, planned by [[upsertPlan]] on `pk`. Only the
+    * incoming keys' OWNING BUCKETS' files are candidates (a small
+    * statement keeps just the files its keys' blooms admit); every other
+    * bucket's files survive by reference. Up to the table's
     * `dml.fallback_rows` incoming rows ([[publishesVector]]) nothing is
     * rewritten: the incoming rows append and a key vector bound to the
-    * owning buckets' files suppresses the replaced keys' old rows in the
-    * same flip. A reader sees the pre-upsert table in full until the
-    * flip, the post-upsert one after — the row-level LWW register the
-    * reference's INSERT path implements per key, here at batch grain. At 100 TB the cost is the touched
-    * buckets' rewrite, not a table scan. */
+    * touched files suppresses the replaced keys' old rows in the same
+    * flip; past it the touched files' survivors (rows whose pk is NOT
+    * being upserted) are rewritten beside the incoming rows while the
+    * touched files retire. A reader sees the pre-upsert table in full
+    * until the flip, the post-upsert one after — the row-level LWW
+    * register the reference's INSERT path implements per key, here at
+    * batch grain. */
   def upsert(spark: SparkSession, path: String, pk: String,
       incoming: org.apache.spark.sql.DataFrame): Unit = {
     requirePkMatches(path, pk, "upsert")
@@ -5056,33 +4827,10 @@ object TokenRangeOps {
           col(f.name).cast(f.dataType)).toSeq: _*)
       case None => incoming // fresh/empty table: incoming defines the schema
     }
-    // incoming rows per owning bucket: a ≤ Buckets-row aggregate
-    // (bounded by the ring width, never by data volume)
-    val perBucket = aligned.groupBy(ringOf(pks, aligned.schema).as("tb"))
-      .count().collect()
-    val buckets = perBucket.map(_.getInt(0)).toSet
-    rewrite(spark, path, "upsert") { pinned =>
-      val affectedRel = TokenRangeSource.visibleRelFiles(path, pinned)
-        .collect { case (k, rel) if buckets(k) => rel }
-      lazy val old = readTableFiles(spark, path, affectedRel, pinned, empty = aligned.schema)
-      val changes = Some(() => upsertChanges(old, aligned, pks))
-      if (affectedRel.nonEmpty && publishesVector(path, perBucket.map(_.getLong(1)).sum))
-        // MERGE-ON-READ upsert: the incoming rows APPEND, and a deletion
-        // vector bound to the pre-existing owning-bucket files suppresses
-        // the replaced keys' old rows in the same flip — Cassandra's
-        // actual write path (blind write, newest wins, older generations
-        // tombstoned at read, purged at compaction). Without the change
-        // feed NO existing data is read at all.
-        Some(Bind(aligned.select(pks.map(col): _*).distinct(), affectedRel,
-          "upsert", changes, append = Some(aligned -> pk)))
-      else {
-        val merged =
-          if (affectedRel.isEmpty) aligned // no stored rows in the owning buckets
-          else old.join(aligned.select(pks.map(col): _*).distinct(), pks, "left_anti")
-            .select(aligned.columns.map(col).toSeq: _*).unionByName(aligned)
-        Some(Replace(merged, affectedRel, pk, "upsert", changes))
-      }
-    }
+    val st = upsertStatement(aligned, pks)
+    rewrite(spark, path, "upsert")(pinned =>
+      Some(upsertPlan(spark, path, pk, aligned, pks, st, pinned)))
+    ()
   }
 
   /** TTL expiry (CQL's `USING TTL` read-time semantics made physical —
@@ -5333,26 +5081,29 @@ object TokenRangeOps {
 
   /** Stage a change sidecar (table columns + `_change_type`) under
     * `_cdf/<uuid>` BEFORE the manifest flip that references it: readers
-    * only ever see sidecars pinned by a published `#cdf` header, a lost
-    * CAS race orphans the dir, and [[vacuum]] reaps orphans age-gated
-    * (a sidecar younger than the staging TTL may belong to an in-flight
-    * rewrite). */
+    * only ever see sidecars pinned by a published `#cdf` header, a
+    * [[flip]] that loses its race deletes the dir, and [[vacuum]] reaps
+    * other orphans age-gated (a sidecar younger than the staging TTL may
+    * belong to an in-flight rewrite). */
   private[connector] def writeCdfSidecar(path: String,
       changes: DataFrame): String = {
     val rel = s"_cdf/${java.util.UUID.randomUUID().toString.take(12)}"
-    // timestamps as raw INT64 µs — the sink's own physical encoding, so
-    // the connector reader's TimestampType branch (getLong) reads the
-    // sidecar exactly like a data file (Spark's writer would otherwise
-    // annotate or INT96-encode per session conf)
-    val safe = changes.select(changes.schema.fields.map { f =>
+    withMicros(changes).write.mode("error")
+      .parquet(new java.io.File(path, rel).getAbsolutePath)
+    rel
+  }
+
+  /** `df` with its timestamp columns as raw INT64 µs (`unix_micros`) —
+    * how change and deletion-vector sidecars store them: the sink's own
+    * physical encoding, so the connector reader's TimestampType branch
+    * (getLong) reads a sidecar exactly like a data file (Spark's writer
+    * would otherwise annotate or INT96-encode per session conf). */
+  private def withMicros(df: DataFrame): DataFrame =
+    df.select(df.schema.fields.map { f =>
       if (f.dataType == org.apache.spark.sql.types.TimestampType)
         org.apache.spark.sql.functions.unix_micros(col(f.name)).as(f.name)
       else col(f.name)
     }.toSeq: _*)
-    safe.write.mode("error")
-      .parquet(new java.io.File(path, rel).getAbsolutePath)
-    rel
-  }
 
   private[connector] def retentionKeep(path: String): Option[Int] =
     TokenRangeSource.manifestProperty(path, "retention.properties", "retain.versions")

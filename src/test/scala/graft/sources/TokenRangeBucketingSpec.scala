@@ -2,7 +2,6 @@ package graft.sources.connector
 
 import graft.SparkSpec
 import graft.sources.MessageStore
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.physical.KeyGroupedPartitioning
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -36,31 +35,6 @@ class TokenRangeBucketingSpec extends SparkSpec {
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse",
       java.nio.file.Files.createTempDirectory(s"graft_bk_$tag").toString)
     cat
-  }
-
-  /** Spark jobs `f` starts. Listener events arrive in order, so once a
-    * sentinel job's start is seen every job of `f` has been counted. */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"counted-${System.nanoTime()}"
-    val sentinel = s"$group-end"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "counted")
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup(sentinel, "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(seen.contains(sentinel), "the sentinel job's start never arrived")
-      seen.toArray.count(_ == group)
-    } finally sc.removeSparkListener(l)
   }
 
   private def hasExchange(df: DataFrame): Boolean =
@@ -152,6 +126,15 @@ class TokenRangeBucketingSpec extends SparkSpec {
       small.insertUsers(Seq(("u1", "alice", "a@x.io", "pw"), ("u2", "bob", "b@x.io", "pw")))
       assert(!hasExchange(small.listUsers()), small.listUsers().queryExecution.executedPlan.toString)
       assert(small.listUsers().count() == 2)
+      // a name whose bucket holds no file at all plans that bucket as
+      // one empty partition, so the read keeps the key grouping
+      val filled = Set("alice", "bob").map(TokenLayout.bucketOfStringValue)
+      val stranger = Iterator.from(0).map(i => s"stranger$i")
+        .find(n => !filled(TokenLayout.bucketOfStringValue(n))).get
+      val absent = small.user(stranger)
+      assert(!hasExchange(absent), absent.queryExecution.executedPlan.toString)
+      assert(jobsOf(absent.collect()) == 1)
+      assert(absent.collect().isEmpty)
     } finally small.dropKeyspace()
   }
 

@@ -124,6 +124,45 @@ class TokenRangeConflictSpec extends SparkSpec {
     assert(dup == 0, "no row may be duplicated by the retried rewrite")
   }
 
+  test("a flip that loses its race deletes the _dv/ and _cdf/ sidecars it wrote") {
+    val s2 = spark; import s2.implicits._
+    val dir = freshDir("graft_tr_conflict_sidecars")
+    seed(dir, 64)
+    TokenRangeOps.enableChangeFeed(dir)
+    // the automatic vector sweep pins a snapshot of its own
+    TokenRangeOps.setVectorCompaction(dir, 0)
+    // attempts of `step`, with `racer` committing at its first pin
+    def racedBy(racer: => Unit)(step: => Unit): Int = {
+      var pins = 0
+      TokenRangeOps.onSnapshotPinned = () => {
+        TokenRangeOps.onSnapshotPinned = () => ()
+        racer
+        TokenRangeOps.onSnapshotPinned = () => pins += 1
+        pins += 1
+      }
+      try step finally TokenRangeOps.onSnapshotPinned = () => ()
+      pins
+    }
+    // the compaction retires every file the step's vector binds, so the
+    // first flip conflicts after writing its vector and change sidecars
+    assert(racedBy(TokenRangeOps.compact(spark, dir, "pk")) {
+      TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(3L, 40L))
+    } == 2)
+    assert(racedBy(TokenRangeOps.compact(spark, dir, "pk")) {
+      TokenRangeOps.upsert(spark, dir, "pk", Seq((5L, "n5"), (6L, "n6")).toDF("pk", "v"))
+    } == 2)
+    val rows = load(dir).collect().map(r => r.getAs[Long]("pk") -> r.getAs[String]("v")).toMap
+    assert(rows.size == 62 && rows(5L) == "n5" && !rows.contains(40L))
+    val referenced = TokenRangeSource.versions(dir).flatMap(v =>
+      TokenRangeSource.dvBindings(dir, Some(v)).map(_._2) ++
+        TokenRangeSource.cdfRelAt(dir, v)).toSet
+    val sidecars = Seq("_dv", "_cdf").flatMap(d =>
+      Option(new java.io.File(dir, d).list()).toSeq.flatten.map(n => s"$d/$n"))
+    assert(sidecars.exists(_.startsWith("_dv/")) && sidecars.exists(_.startsWith("_cdf/")))
+    assert(sidecars.filterNot(referenced).isEmpty,
+      s"sidecars no manifest references: ${sidecars.filterNot(referenced)}")
+  }
+
   test("a rewrite losing every retry errors loudly after MaxRewriteAttempts (never silent)") {
     val dir = freshDir("graft_tr_conflict_exhaust")
     seed(dir, 200)

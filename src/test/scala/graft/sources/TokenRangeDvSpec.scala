@@ -118,6 +118,20 @@ class TokenRangeDvSpec extends SparkSpec {
     assert(vs.length == 1 && vs.head.getString(1) == "newest")
   }
 
+  // the bucket-grain plan (no bloom probe) ran 4 jobs on this statement;
+  // the probe's keys must ride on the bucket aggregate, not add a job
+  test("upsert of 20 single-key rows runs no more Spark jobs than the bucket-grain plan did") {
+    val dir = freshTable("upjobs")
+    val before = liveRel(dir)
+    val up = spark.range(40, 60)
+      .select(col("id").as("pk"), lit("new").as("v"), lit(0L).as("n"))
+    val jobs = jobsOf(TokenRangeOps.upsert(spark, dir, "pk", up))
+    assert(jobs <= 4, s"upsert ran $jobs Spark jobs")
+    assert(before.subsetOf(liveRel(dir)), "20 rows are under the bound: a vector")
+    assert(readAll(dir).count() == 128L)
+    assert(readAll(dir).filter(col("v") === "new").count() == 20L)
+  }
+
   test("delete-then-reinsert serves the new row") {
     val dir = freshTable("reins")
     TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(5L))

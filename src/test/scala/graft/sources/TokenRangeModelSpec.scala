@@ -381,6 +381,98 @@ class TokenRangeModelSpec extends SparkSpec {
     clustered(seed = 13L, n = 20, raceP = 0, feed = false, sweepAfter = 2)
   }
 
+  // ---- insert='upsert' table clustered on a TIMESTAMP ck ---------------
+
+  /** (pk, ck µs, v) — a `None` ck is NULL. */
+  private type IRow = (Long, Option[Long], String)
+
+  private sealed trait IOp
+  // rows in write order, written by one task: a later row wins its key
+  private final case class Insert(rows: Seq[IRow]) extends IOp
+  private final case class DeletePartitions(keys: Seq[Long]) extends IOp
+  private case object CompactTable extends IOp
+
+  private val iDdl = "pk BIGINT, ck TIMESTAMP, v STRING"
+
+  /** An INSERT replaces the stored rows of its (pk, ck) keys with each
+    * key's last row; a NULL-ck row has no key and only appends. */
+  private def iEff(op: IOp, s: Seq[IRow]): Eff[IRow] = op match {
+    case Insert(rows) =>
+      val (keyed, nullCk) = rows.partition(_._2.isDefined)
+      val winners = keyed.groupBy(r => (r._1, r._2)).values.map(_.last).toSeq
+      val keys = winners.map(r => (r._1, r._2)).toSet
+      Eff(r => r._2.isDefined && keys((r._1, r._2)), winners ++ nullCk)
+    case DeletePartitions(keys) => Eff(r => keys.contains(r._1), Nil)
+    case CompactTable => Eff(_ => false, Nil)
+  }
+
+  private def iRun(dir: String)(op: IOp): Unit = op match {
+    case Insert(rows) =>
+      spark.createDataFrame(rows.map { case (p, c, v) =>
+        Row(p, c.map(Long.box).orNull, v)
+      }.asJava, StructType.fromDDL("pk BIGINT, us BIGINT, v STRING"))
+        .select(col("pk"), timestamp_micros(col("us")).as("ck"), col("v"))
+        .coalesce(1)
+        .write.format(fmt).option("pk", "pk").option("ck", "ck").mode("append").save(dir)
+    case DeletePartitions(keys) => TokenRangeOps.deleteKeys(spark, dir, "pk", keys)
+    case CompactTable => TokenRangeOps.compact(spark, dir, "pk")
+  }
+
+  private def iShow(r: IRow): String = s"${r._1}|${r._2.getOrElse("null")}|${r._3}"
+
+  private def iRead(dir: String)(version: Option[Int]): Seq[String] =
+    spark.read.format(fmt).option("pk", "pk")
+      .options(version.map(v => "version" -> v.toString).toMap).load(dir)
+      .select(col("pk"), unix_micros(col("ck")), col("v"))
+      .collect().toSeq.map(r =>
+        iShow((r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long]), r.getString(2))))
+
+  /** 1–4 rows over 4 partitions and 4 ck instants, one in ten with a
+    * NULL ck; a drawn key may repeat within the statement. */
+  private def insertGen(tag: String): Gen[IOp] =
+    Gen.choose(1, 4).flatMap(n => Gen.listOfN(n, for {
+      pk <- Gen.choose(0L, 3L)
+      ck <- Gen.frequency(9 -> grid(3000L, 1000L).map(Option(_)),
+        1 -> Gen.const(Option.empty[Long]))
+    } yield (pk, ck))).map(keys => Insert(keys.zipWithIndex.map {
+      case ((pk, ck), j) => (pk, ck, s"$tag.$j")
+    }))
+
+  private def iOpGen(i: Int): Gen[IOp] = Gen.frequency(
+    6 -> insertGen(s"i$i"),
+    1 -> Gen.choose(1, 2).flatMap(n => Gen.pick(n, 0L to 3L)).map(ks => DeletePartitions(ks.toSeq)),
+    1 -> Gen.const(CompactTable))
+
+  private def iRacerGen(i: Int): Gen[IOp] = Gen.oneOf(
+    insertGen(s"r$i"),
+    Gen.oneOf(0L to 3L).map(k => DeletePartitions(Seq(k))),
+    Gen.const(CompactTable))
+
+  test("insert='upsert' table on a TIMESTAMP ck: drawn INSERTs with races match (pk, ck) replacement") {
+    val steps = Seq(12L, 14L).flatMap { seed =>
+      val dir = freshDir(s"graft_tr_model_ins_$seed")
+      TokenRangeSource.recordPk(dir, "pk", ck = Some("ck"), schemaDdl = Some(iDdl),
+        morFallbackRows = Some(ModelBound), insertMode = Some("upsert"))
+      // the opening statements: a key written twice in one statement
+      // (the later row wins), then NULL-ck rows (they only append), then
+      // a statement over the bound
+      val opening = Seq[(IOp, Option[IOp])](
+        (Insert(Seq((0L, Some(0L), "o0"), (1L, Some(1000L), "o1"),
+          (0L, Some(0L), "o2"))), None),
+        (Insert(Seq((1L, None, "n0"), (1L, Some(1000L), "n1"), (1L, None, "n2"))), None),
+        (Insert(Seq((0L, Some(0L), "b0"), (1L, Some(1000L), "b1"), (2L, Some(2000L), "b2"))),
+          None))
+      val drawn = draw[IOp](seed, 25, opening.head._1, iOpGen, iRacerGen, 40, _ => false)
+        .drop(1)
+      val recs = runMachine(Machine[IRow, IOp](dir, iEff, iRun(dir), iRead(dir), iShow),
+        opening ++ drawn, () => TokenRangeOps.setVectorCompaction(dir, 0))
+      recs.filter(_.op == "Insert")
+    }
+    info(s"INSERT steps (vector/rewrite): ${steps.count(_.vector)}/${steps.count(_.rewrite)}")
+    assert(steps.exists(_.vector) && steps.exists(_.rewrite),
+      "both sides of the vector bound must be drawn")
+  }
+
   // ---- MessageStore keyspace -------------------------------------------
 
   /** (user_id, username, email, password, write order) — the order is the

@@ -126,19 +126,21 @@ class TokenRangeReaderShapeSpec extends SparkSpec {
   }
 
   test("row-level rewrites over mixed file shapes leave exactly the modelled rows") {
-    // a key sharing a bucket with `pk` but holding no row: a rewrite keyed
-    // on it reads and rewrites every file of that bucket, all survivors
-    def sameBucket(pk: Long): Long = (5L until 1000L).find(k =>
-      TokenLayout.bucketOfValue(k) == TokenLayout.bucketOfValue(pk)).get
+    // keys sharing a bucket with `pk` but holding no row: a rewrite keyed
+    // on them reads and rewrites every file of that bucket, all
+    // survivors (an upsert of at most 128 keys rewrites only the files
+    // whose bloom or dictionary admits one of them, so it draws more)
+    def sameBucket(pk: Long): Iterator[Long] = Iterator.from(5).map(_.toLong)
+      .filter(k => TokenLayout.bucketOfValue(k) == TokenLayout.bucketOfValue(pk))
     // each verb runs on a fresh table; bucket(1) holds every file shape and
     // the legacy file's position vector, bucket(3) the key vector. The
     // model is the table's rows before the verb, which the test above
     // checks against the files themselves.
     // statements one row or key past the table's bound rewrite: the
-    // upsert's 400 rows of one absent key plus one row, the delete's
-    // absent keys beside pk 2
-    val upRows = (0L until RewriteBound).map(i => (sameBucket(1L), 5000L + i, s"u$i")) :+
-      ((sameBucket(3L), 6L, "u3"))
+    // upsert's 400 rows of absent keys plus one row, the delete's absent
+    // keys beside pk 2
+    val upRows = sameBucket(1L).take(RewriteBound.toInt).toSeq.zipWithIndex
+      .map { case (k, i) => (k, 5000L + i, s"u$i") } :+ ((sameBucket(3L).next(), 6L, "u3"))
     val upFrame = {
       val s2 = spark; import s2.implicits._
       upRows.toDF("pk", "ck", "v").withColumn("extra", concat(lit("x"), col("v")))
@@ -148,7 +150,7 @@ class TokenRangeReaderShapeSpec extends SparkSpec {
       ("copy-on-write upsert", dir => TokenRangeOps.upsert(spark, dir, "pk", upFrame),
         m => m ++ upRows.map { case (pk, ck, v) => Seq(pk, ck, v, s"x$v") }),
       ("copy-on-write deleteKeys", dir => TokenRangeOps.deleteKeys(spark, dir, "pk",
-          Seq(sameBucket(1L), 2L) ++ absentKeys),
+          Seq(sameBucket(1L).next(), 2L) ++ absentKeys),
         m => m.filterNot(_.head == 2L)),
       ("dv deleteCkRange split", dir =>
           TokenRangeOps.deleteCkRange(spark, dir, "pk", 1L, 200L, 210L),
