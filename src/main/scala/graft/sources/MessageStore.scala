@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.connector.TokenLayout
+
 /** The reference's full REST/CQL surface (server.py) as a Spark library —
   * the operation-for-operation switch path for a client of the reference:
   *
@@ -50,6 +52,8 @@ import org.apache.spark.sql.functions._
   * `uuid()` — time-sortable exactly like a v1 timeuuid. Writes publish
   * through the connector's manifest commit, so every batch insert is
   * ATOMIC to readers — the BatchStatement guarantee the r10 sink lacked.
+  * A batch insert runs one write task per owning bucket, so a batch adds
+  * about one file per bucket it writes (a one-channel batch exactly one).
   *
   * At 100 TB: appends are the only write path (blind writes, no read-
   * modify-write — same contract as Cassandra); `compactUsers()` is the
@@ -125,23 +129,45 @@ final class MessageStore(spark: SparkSession, keyspace: String) {
   private def nextSeq(): Long =
     seq.updateAndGet(prev => math.max(prev + 1, System.currentTimeMillis() * 1000))
 
+  /** `rows` sorted by owning token bucket, and the write-task count that
+    * gives each owning bucket one task (at most the default parallelism).
+    * A local frame's partitions are contiguous slices of its rows and
+    * `coalesce` merges adjacent ones, so k owning buckets land in at most
+    * k + tasks - 1 files, and a one-bucket batch in exactly one. Row
+    * order within a batch decides nothing: LWW and newest-first order by
+    * `write_seq` and the row ids. */
+  private def byBucket[T](rows: Seq[T])(bucket: T => Int): (Seq[T], Int) = {
+    val keyed = rows.map(r => bucket(r) -> r).sortBy(_._1)
+    (keyed.map(_._2), math.max(1,
+      math.min(keyed.map(_._1).distinct.size, spark.sparkContext.defaultParallelism)))
+  }
+
   /** BatchStatement analog: one append of (channel, author, text) rows —
     * atomic at read time via the connector's manifest commit; message_id =
-    * uuid, write_seq = the timeuuid's time part. */
+    * uuid, write_seq = the timeuuid's time part. One write task per
+    * owning bucket ([[byBucket]]), so a one-channel batch adds one file.
+    * The `coalesce` comes after the projections, which Catalyst then
+    * folds into the local relation. */
   def insertMessages(rows: Seq[(Long, String, String)]): Unit = {
     import spark.implicits._
     val ws = nextSeq()
-    rows.toDF("channel_id", "author_id", "message")
+    val (sorted, tasks) = byBucket(rows)(r => TokenLayout.bucketOfValue(r._1))
+    sorted.toDF("channel_id", "author_id", "message")
       .withColumn("write_seq", lit(ws))
       .withColumn("message_id", expr("uuid()"))
       .select("channel_id", "write_seq", "message_id", "author_id", "message")
+      .coalesce(tasks)
       .write.mode("append").insertInto(messagesT)
   }
 
+  /** Batch INSERT of users, one write task per owning bucket like
+    * [[insertMessages]]. */
   def insertUsers(rows: Seq[(String, String, String, String)]): Unit = {
     import spark.implicits._
-    rows.toDF("user_id", "username", "email", "password")
+    val (sorted, tasks) = byBucket(rows)(r => TokenLayout.bucketOfStringValue(r._2))
+    sorted.toDF("user_id", "username", "email", "password")
       .withColumn("write_seq", lit(nextSeq()))
+      .coalesce(tasks)
       .write.mode("append").insertInto(usersT)
   }
 

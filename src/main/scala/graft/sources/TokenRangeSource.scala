@@ -1754,6 +1754,51 @@ object TokenRangeSource {
     b.named("keyspace_table")
   }
 
+  /** The connector's one row → parquet encoding, shared by the task
+    * writer and the driver's [[writeParquet]]: each non-null field of
+    * `row` added to `g` in the physical type [[toParquet]] declares for
+    * it (a null field is simply absent). */
+  private[connector] def encodeRow(g: Group, fields: Array[StructField],
+      row: InternalRow): Group = {
+    var i = 0
+    while (i < fields.length) {
+      if (!row.isNullAt(i)) {
+        val f = fields(i)
+        f.dataType match {
+          case LongType => g.add(f.name, row.getLong(i))
+          case IntegerType => g.add(f.name, row.getInt(i))
+          case DoubleType => g.add(f.name, row.getDouble(i))
+          case FloatType => g.add(f.name, row.getFloat(i))
+          case BooleanType => g.add(f.name, row.getBoolean(i))
+          case StringType => g.add(f.name, row.getUTF8String(i).toString)
+          // µs since epoch — the exact INT64 InternalRow already holds
+          case TimestampType => g.add(f.name, row.getLong(i))
+          case dt: DecimalType =>
+            g.add(f.name, row.getDecimal(i, dt.precision, dt.scale).toUnscaledLong)
+          case BinaryType =>
+            g.add(f.name, Binary.fromConstantByteArray(row.getBinary(i)))
+          case other => throw new IllegalArgumentException(s"unsupported $other")
+        }
+      }
+      i += 1
+    }
+    g
+  }
+
+  /** Writes `rows` of `schema` to the new local parquet `file` on the
+    * calling thread, encoded like the task writer's data files
+    * ([[toParquet]], [[encodeRow]]): the driver's writer for sidecars it
+    * already holds in memory. */
+  private[connector] def writeParquet(file: String, schema: StructType,
+      rows: Iterator[InternalRow]): Unit = {
+    val msgType = toParquet(schema)
+    val factory = new SimpleGroupFactory(msgType)
+    val w = ExampleParquetWriter.builder(createParquet(file))
+      .withConf(hadoopConf).withType(msgType).build()
+    try rows.foreach(r => w.write(encodeRow(factory.newGroup(), schema.fields, r)))
+    finally w.close()
+  }
+
   private def toSpark(m: MessageType): StructType =
     StructType(m.getFields.asScala.map { f =>
       val p = f.asPrimitiveType()
@@ -3617,29 +3662,7 @@ private[connector] final class TokenRangeDataWriter(path: String,
         "token-range sink: partition key must be non-null (CQL parity)")
       pi += 1
     }
-    val g = factory.newGroup()
-    var i = 0
-    while (i < writeSchema.fields.length) {
-      if (!row.isNullAt(i)) {
-        val f = writeSchema.fields(i)
-        f.dataType match {
-          case LongType => g.add(f.name, row.getLong(i))
-          case IntegerType => g.add(f.name, row.getInt(i))
-          case DoubleType => g.add(f.name, row.getDouble(i))
-          case FloatType => g.add(f.name, row.getFloat(i))
-          case BooleanType => g.add(f.name, row.getBoolean(i))
-          case StringType => g.add(f.name, row.getUTF8String(i).toString)
-          // µs since epoch — the exact INT64 InternalRow already holds
-          case TimestampType => g.add(f.name, row.getLong(i))
-          case dt: DecimalType =>
-            g.add(f.name, row.getDecimal(i, dt.precision, dt.scale).toUnscaledLong)
-          case BinaryType =>
-            g.add(f.name, Binary.fromConstantByteArray(row.getBinary(i)))
-          case other => throw new IllegalArgumentException(s"unsupported $other")
-        }
-      }
-      i += 1
-    }
+    val g = TokenRangeSource.encodeRow(factory.newGroup(), writeSchema.fields, row)
     val bucket = bucketOfRow(row)
     val bf = writerFor(bucket)
     bf.w.write(g)
@@ -3750,7 +3773,11 @@ object TokenRangeOps {
 
   /** Merge-on-read: one deletion vector (`vector`: key rows, or `_file` +
     * `_pos` rows) bound to `targets`; `append` rows (and the sink key they
-    * route on) are written in the same flip. */
+    * route on) are written in the same flip. [[flip]] collects `vector`
+    * to the driver: it holds at most the table's `dml.fallback_rows`
+    * rows ([[publishesVector]]), and every reader of a bound file holds
+    * the whole vector in memory anyway. A vector over a local relation
+    * collects without a Spark job. */
   private[sources] final case class Bind(vector: DataFrame,
       targets: Seq[String], opKind: String, changes: Option[() => DataFrame],
       retire: Seq[String] = Nil,
@@ -3764,10 +3791,11 @@ object TokenRangeOps {
     * the version its rows were read at (`dvSeenVersion`), so a vector
     * bound after the pin conflicts the publish instead of being dropped.
     * A flip that writes rows commits through the sink, which runs
-    * [[commitTail]]; a metadata-only flip runs it here. A flip whose
-    * publish loses a race deletes the `_dv/` and `_cdf/` sidecars it
-    * wrote (no manifest references them) before the conflict propagates
-    * to [[rewrite]]'s retry. */
+    * [[commitTail]]; a metadata-only flip runs it here. A [[Bind]]'s
+    * vector is written by this driver ([[writeVector]]), not by a Spark
+    * job. A flip whose publish loses a race deletes the `_dv/` and
+    * `_cdf/` sidecars it wrote (no manifest references them) before the
+    * conflict propagates to [[rewrite]]'s retry. */
   private def flip(path: String, pinned: Option[Int], f: Flip): Unit = {
     val cdfRel = f.changes.filter(_ => TokenRangeSource.changeFeedEnabled(path))
       .map(c => writeCdfSidecar(path, c()))
@@ -3780,8 +3808,7 @@ object TokenRangeOps {
         (Some(out -> r.pk), Nil, r.rollRows)
       case b: Bind =>
         val dvRel = newDvRel()
-        withMicros(b.vector).coalesce(1).write.mode("error")
-          .parquet(new java.io.File(path, dvRel).getAbsolutePath)
+        writeVector(new java.io.File(path, dvRel), b.vector)
         (b.append, b.targets.map(_ -> dvRel), None)
       case _: Retire => (None, Nil, None)
     }
@@ -3843,6 +3870,18 @@ object TokenRangeOps {
   private[connector] def publishesVector(path: String, rows: Long): Boolean =
     TokenRangeSource.recordedPk(path).isDefined &&
       rows <= TokenRangeSource.recordedMorFallbackRows(path)
+
+  /** Writes `vector` as the one parquet file of the new sidecar dir
+    * `dir`, on the driver. Timestamps are stored as INT64 µs, as the
+    * task writer stores them, so the reader decodes the sidecar exactly
+    * like the Spark-written ones of earlier versions. */
+  private def writeVector(dir: java.io.File, vector: DataFrame): Unit = {
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(vector.schema)
+    require(dir.mkdirs(), s"cannot create the deletion-vector sidecar dir $dir")
+    TokenRangeSource.writeParquet(new java.io.File(dir, "part-00000.parquet").getPath,
+      vector.schema, vector.collect().iterator.map(toRow(_).asInstanceOf[InternalRow]))
+  }
 
   /** A fresh deletion-vector sidecar name (`_dv/<uuid>`). */
   private[connector] def newDvRel(): String =
@@ -3963,7 +4002,8 @@ object TokenRangeOps {
     * the post-delete version after it, never a mix. Up to the table's
     * `dml.fallback_rows` distinct keys ([[publishesVector]]) the delete
     * writes NO data file, just a key vector bound to the owning buckets'
-    * files; readers suppress the rows until compaction applies it. Past
+    * files, written by this driver: with the change feed off it runs no
+    * Spark job. Readers suppress the rows until compaction applies it. Past
     * the bound those files are rewritten without the matching rows in a
     * distributed Spark job (survivors shuffle nothing — they re-route to
     * the same bucket), so a 100 TB table deletes at the cost of the
@@ -3987,9 +4027,10 @@ object TokenRangeOps {
       val changes = Some(() => deleted(affected.filter(matches)))
       if (affectedRel.isEmpty) None // keys owning no visible files: no-op
       else if (publishesVector(path, keyLits.distinct.size)) {
-        // MERGE-ON-READ: no data file is read or written — a key sidecar
-        // bound to every file currently owning the keys' buckets; readers
-        // suppress, compaction applies
+        // MERGE-ON-READ: no data file is read or written, and no Spark
+        // job runs — a key sidecar the driver writes from a local
+        // relation, bound to every file currently owning the keys'
+        // buckets; readers suppress, compaction applies
         val pkField = TokenRangeSource.storedSchema(path)
           .flatMap(_.fields.find(_.name.equalsIgnoreCase(pk)))
           .getOrElse(throw new IllegalArgumentException(
@@ -4000,7 +4041,7 @@ object TokenRangeOps {
             case (n: java.lang.Number, IntegerType) => n.intValue
             case (other, _) => other
           }))
-        Some(Bind(spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+        Some(Bind(spark.createDataFrame(rows.asJava,
             StructType(Array(StructField(pkField.name, pkField.dataType)))),
           affectedRel, "delete", changes))
       } else
@@ -4047,9 +4088,8 @@ object TokenRangeOps {
     val coerced = keys.map(k => k.zip(dts).map { case (v, dt) => coerce(v, dt) })
     val buckets = coerced
       .map(k => TokenLayout.bucketOfCompositeValues(k, dts)).toSet
-    val keyRows = coerced.map(org.apache.spark.sql.Row.fromSeq)
-    val keyDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(keyRows, 1),
+    val keyRows = coerced.distinct.map(org.apache.spark.sql.Row.fromSeq)
+    val keyDf = spark.createDataFrame(keyRows.asJava,
       StructType(pkFields.map(f => StructField(f.name, f.dataType))))
     val joinCols = pkFields.map(_.name).toSeq
     rewrite(spark, path, "DELETE") { pinned =>
@@ -4062,8 +4102,8 @@ object TokenRangeOps {
       if (affectedRel.isEmpty) None
       // merge-on-read, composite grain: the vector holds the tuples (all
       // pk components, table dtypes) — see deleteKeys
-      else if (publishesVector(path, coerced.distinct.size))
-        Some(Bind(keyDf.distinct(), affectedRel, "delete", changes))
+      else if (publishesVector(path, keyRows.size))
+        Some(Bind(keyDf, affectedRel, "delete", changes))
       else Some(Replace(keyed("left_anti"), affectedRel, pks.mkString(","),
         "delete", changes))
     }
@@ -4546,7 +4586,9 @@ object TokenRangeOps {
     * `#op append`. Otherwise, while [[publishesVector]] takes the
     * statement, the rows append and a key vector over the touched files
     * suppresses the replaced rows in the same flip (Cassandra's blind
-    * write: no stored row is read unless the change feed is on); past
+    * write: no stored row is read unless the change feed is on) — for a
+    * single-column `keys`, the vector is the statement's collected probe
+    * keys, so no Spark job builds it; past
     * it the touched files' survivors — anti-joined on `keys` — and the
     * rows replace the touched files. `pk` is the sink key the rows are
     * written by. */
@@ -4565,8 +4607,14 @@ object TokenRangeOps {
         .select(keys.map(col): _*).distinct()
       lazy val old = readTableFiles(spark, path, touched, pinned, empty = rows.schema)
       val changes = Some(() => upsertChanges(old, rows, keys))
-      if (publishesVector(path, st.rows))
-        Bind(replaced, touched, "upsert", changes, append = Some(rows -> pk))
+      if (publishesVector(path, st.rows)) {
+        val vector = st.probeKeys.filter(_ => keys.size == 1).fold(replaced) { ks =>
+          spark.createDataFrame(
+            ks.values.flatten.map(org.apache.spark.sql.Row(_)).toSeq.asJava,
+            StructType(Array(rows.schema(keys.head))))
+        }
+        Bind(vector, touched, "upsert", changes, append = Some(rows -> pk))
+      }
       else Replace(old.join(replaced, keys, "left_anti")
         .select(rows.columns.map(col).toSeq: _*).unionByName(rows),
         touched, pk, "upsert", changes)
@@ -4670,15 +4718,17 @@ object TokenRangeOps {
   }
 
   /** The post-commit vector sweep hook (the policy's WHEN): every
-    * vector-publishing commit checks its table's binding census and
-    * compacts the files past the recorded bound — best-effort like
+    * vector-publishing commit counts the current version's bindings per
+    * file and, only when some file is at the recorded bound, compacts the
+    * files past it — best-effort like
     * [[retentionSweep]] (a failed sweep never fails the commit that
     * triggered it; the debt stays visible in `describeTable`'s
     * `deletion_vectors` and the next commit retries). */
   private def vectorSweep(spark: SparkSession, path: String): Unit =
     try {
       val thr = dvCompactAfter(path)
-      if (thr > 0 && TokenRangeSource.recordedPk(path).isDefined) {
+      if (thr > 0 && TokenRangeSource.recordedPk(path).isDefined &&
+          TokenRangeSource.dvBindings(path).groupBy(_._1).exists(_._2.size >= thr)) {
         compactVectors(spark, path, thr); ()
       }
     } catch {
@@ -5094,10 +5144,11 @@ object TokenRangeOps {
   }
 
   /** `df` with its timestamp columns as raw INT64 µs (`unix_micros`) —
-    * how change and deletion-vector sidecars store them: the sink's own
-    * physical encoding, so the connector reader's TimestampType branch
-    * (getLong) reads a sidecar exactly like a data file (Spark's writer
-    * would otherwise annotate or INT96-encode per session conf). */
+    * how change sidecars, the only sidecars Spark's writer still writes,
+    * store them: the sink's own physical encoding, so the connector
+    * reader's TimestampType branch (getLong) reads a sidecar exactly like
+    * a data file (Spark's writer would otherwise annotate or INT96-encode
+    * per session conf). */
   private def withMicros(df: DataFrame): DataFrame =
     df.select(df.schema.fields.map { f =>
       if (f.dataType == org.apache.spark.sql.types.TimestampType)

@@ -305,6 +305,28 @@ class MessageStoreSpec extends SparkSpec {
     } finally ms.dropKeyspace()
   }
 
+  test("a batch insert runs one write task per owning bucket") {
+    import graft.sources.connector.{TokenLayout, TokenRangeOps}
+    val ms = new graft.sources.MessageStore(spark, s"ks_buckets_${System.nanoTime()}")
+    ms.createKeyspace(); ms.createTables()
+    try {
+      def live(t: String) = TokenRangeOps.liveFiles(ms.tablePath(t)).size
+      ms.insertMessages((1 to 40).map(i => (7L, s"u$i", s"m$i")))
+      assert(live("messages") == 1, "a one-channel batch adds exactly one file")
+      ms.insertMessages((1 to 40).map(i => (7L, s"u$i", s"n$i")))
+      assert(live("messages") == 2)
+      val users = (1 to 40).map(i => (s"u$i", s"name$i", s"e$i", "pw"))
+      val k = users.map(u => TokenLayout.bucketOfStringValue(u._2)).distinct.size
+      ms.insertUsers(users)
+      assert(live("users") >= k &&
+        live("users") <= k + spark.sparkContext.defaultParallelism - 1,
+        s"${live("users")} files for $k owning buckets")
+      assert(ms.messages(7L).count() == 80L)
+      assert(ms.listUsers().count() == 40L)
+      assert(ms.user("name17").head().getAs[String]("user_id") == "u17")
+    } finally ms.dropKeyspace()
+  }
+
   test("tailMessages: the poll-the-partition pattern as a stream — resume drains only new inserts (r15)") {
     val ks2 = s"ks_tail_${System.nanoTime()}"
     val ms = new MessageStore(spark, ks2)

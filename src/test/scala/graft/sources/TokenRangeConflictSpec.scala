@@ -129,8 +129,6 @@ class TokenRangeConflictSpec extends SparkSpec {
     val dir = freshDir("graft_tr_conflict_sidecars")
     seed(dir, 64)
     TokenRangeOps.enableChangeFeed(dir)
-    // the automatic vector sweep pins a snapshot of its own
-    TokenRangeOps.setVectorCompaction(dir, 0)
     // attempts of `step`, with `racer` committing at its first pin
     def racedBy(racer: => Unit)(step: => Unit): Int = {
       var pins = 0
