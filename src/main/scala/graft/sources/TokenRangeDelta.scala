@@ -1,5 +1,7 @@
 package graft.sources.connector
 
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.write._
@@ -29,24 +31,21 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * BY, server.py:176-183) now takes this path for its hot
   * delete/edit-one-message workload.
   *
-  * BULK statements FALL BACK, not refuse (r17, VERDICT r16 #3): a
-  * statement tombstoning more rows than the table's
-  * `dml.fallback_rows` bound (default 1M) completes through the
-  * copy-on-write rewrite ([[TokenRangeOps.morFallbackRewrite]], a
-  * `flip`) inside the same commit — the statement's size, not a table
-  * property, chooses copy-on-write — identical results,
-  * identical change-feed sidecar — because a huge vector would tax
-  * every read until compaction while the rewrite pays once. Tombstones
-  * stream from each task to a staged parquet sidecar as they arrive
-  * (ADVICE r16: the old in-memory buffers paid the full driver/executor
-  * memory cost before any guard fired), so neither path accumulates
-  * row-sized state in memory.
+  * Tombstones stream from each task to a staged parquet file as they
+  * arrive, so no task holds row-sized state in memory. The commit plans
+  * the statement as one [[TokenRangeOps.flip]], the commit path of every
+  * row-level write: at or below the table's `dml.fallback_rows` bound
+  * (default 1M) it reads the tombstones once on the driver and flips a
+  * `Bind` of them, placing the staged images in the same publish; past
+  * it, the statement completes as the copy-on-write rewrite
+  * [[TokenRangeOps.morFallbackRewrite]] — the statement's size, not a
+  * table property, chooses copy-on-write, with identical results and an
+  * identical change-feed sidecar, because a huge vector would tax every
+  * read until compaction while the rewrite pays once.
   *
-  * Concurrency: the operation pins one snapshot; the vector publish
-  * validates its bindings against the CAS base and the pinned version
-  * ([[TokenRangeSource.publishManifest]] `dvBind`/`dvSeenVersion`), so a
-  * racing rewrite fails the statement like a serializable-txn abort —
-  * the same contract as the fallback's copy-on-write flip. */
+  * Concurrency: the operation pins one snapshot and the flip validates
+  * against it, so a racing rewrite fails the statement like a
+  * serializable-txn abort, and the flip deletes the sidecars it wrote. */
 private[connector] final class TokenRangeDeltaOperation(
     cmd: RowLevelOperation.Command,
     tableSchema: StructType, options: CaseInsensitiveStringMap)
@@ -99,10 +98,18 @@ private[connector] final case class TokenRangeDeltaCommit(
     files: Array[String], tombFile: String, tombRows: Long)
     extends WriterCommitMessage
 
+private[connector] object TokenRangeDeltaBatchWrite {
+  /** A tombstone: the (file rel, stored ordinal) of one removed row. */
+  val TombSchema: StructType = StructType(Array(
+    StructField(TokenRangeSource.FileCol, StringType),
+    StructField(TokenRangeSource.PosCol, LongType)))
+}
+
 private[connector] final class TokenRangeDeltaBatchWrite(path: String,
     tableSchema: StructType, rowSchema: StructType,
     pinned: Option[Int], cmd: RowLevelOperation.Command)
     extends DeltaBatchWrite {
+  import TokenRangeDeltaBatchWrite.TombSchema
 
   private val writeId = java.util.UUID.randomUUID().toString.take(8)
 
@@ -127,10 +134,10 @@ private[connector] final class TokenRangeDeltaBatchWrite(path: String,
     val staged = messages.flatMap {
       case TokenRangeDeltaCommit(fs, _, _) => fs
       case _ => Array.empty[String]
-    }
+    }.toSeq
     val tombFiles = messages.collect {
       case TokenRangeDeltaCommit(_, tf, n) if tf != null && n > 0 => tf
-    }
+    }.toSeq
     val tombRows = messages.collect {
       case TokenRangeDeltaCommit(_, _, n) => n
     }.sum
@@ -140,69 +147,44 @@ private[connector] final class TokenRangeDeltaBatchWrite(path: String,
       case RowLevelOperation.Command.DELETE => "delete"
       case _ => "upsert"
     }
-    // the tombstone frame: (file rel, stored ordinal) of every removed
-    // row — the vector's content AND the CDF pre-image selector
-    val tombSchema = StructType(Array(
-      StructField(TokenRangeSource.FileCol, StringType),
-      StructField(TokenRangeSource.PosCol, LongType)))
-    val tombs: org.apache.spark.sql.DataFrame =
-      if (tombFiles.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tombSchema)
-      else spark.read.schema(tombSchema).parquet(tombFiles.toIndexedSeq: _*)
-    // the files holding removed rows — the vector's binding targets /
-    // the fallback's rewrite set. Driver-side list, bounded by the
-    // statement's FILE fan-in (the same list the manifest flip carries).
-    val touchedRel: Seq[String] =
-      if (tombRows == 0) Nil
-      else tombs.select(TokenRangeSource.FileCol).distinct()
-        .collect().map(_.getString(0)).toSeq.sorted
     // CHANGE DATA FEED: pre-images are the tombstoned positions' rows
     // read VECTOR-MERGED at the pinned version from exactly the touched
     // files; staged rows classify as post-images (identity also removed)
     // or inserts — the same classification every other op records
-    val changes = () => TokenRangeOps.deltaDmlChanges(spark, path, pinned,
-      touchedRel, staged.toSeq, tombs)
+    def changes(touchedRel: Seq[String], tombs: DataFrame) = () =>
+      TokenRangeOps.deltaDmlChanges(spark, path, pinned, touchedRel, staged, tombs)
     try {
-      if (!TokenRangeOps.publishesVector(path, tombRows)) {
+      if (TokenRangeOps.publishesVector(path, tombRows)) {
+        // the tombstones — the vector's content AND the CDF pre-image
+        // selector — are at most the table's vector bound: read once here
+        val tombs = tombFiles.flatMap(readTombs)
+        val touchedRel = tombs.map(_.getString(0)).distinct.sorted
+        val frame = spark.createDataFrame(tombs.asJava, TombSchema)
+        TokenRangeOps.flip(path, pinned, TokenRangeOps.Bind(frame, touchedRel,
+          kind, Some(changes(touchedRel, frame)), staged = staged))
+      } else {
         // COPY-ON-WRITE FALLBACK: same statement, group rewrite — the
         // touched files' survivors (old vectors merged, this statement's
         // tombstoned positions dropped) plus the staged images republish
         // while the touched files retire, in one conflict-validated flip
+        val tombs = spark.read.schema(TombSchema).parquet(tombFiles: _*)
+        val touchedRel = tombs.select(TokenRangeSource.FileCol).distinct()
+          .collect().map(_.getString(0)).toSeq.sorted
         TokenRangeOps.morFallbackRewrite(spark, path, pinned, touchedRel,
-          staged.toSeq, tombs, kind, changes)
-      } else {
-        val cdfRel =
-          if (!TokenRangeSource.changeFeedEnabled(path)) None
-          else Some(TokenRangeOps.writeCdfSidecar(path, changes()))
-        // the vector: the task tomb parquets move VERBATIM into one
-        // `_dv/<uuid>/` sidecar dir (they already hold exactly the
-        // (file, ordinal) rows) — no re-write, no driver-side rows
-        val dvRel: Option[String] =
-          if (tombRows == 0) None
-          else {
-            val rel = TokenRangeOps.newDvRel()
-            val dir = new java.io.File(path, rel)
-            dir.mkdirs()
-            tombFiles.foreach { tf =>
-              val src = new java.io.File(tf)
-              java.nio.file.Files.move(src.toPath,
-                new java.io.File(dir, src.getName).toPath,
-                java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            }
-            Some(rel)
-          }
-        TokenRangeSource.withCommitLock(path) {
-          TokenRangeSource.publishManifest(path,
-            TokenRangeSource.placeStaged(path, staged.toSeq), truncate = false,
-            opKind = kind, cdfRel = cdfRel,
-            dvBind = dvRel.map(dv => touchedRel.map(_ -> dv)).getOrElse(Nil),
-            dvSeenVersion = pinned)
-        }
-        TokenRangeOps.commitTail(spark, path, vectorPublished = dvRel.isDefined)
+          staged, tombs, kind, changes(touchedRel, tombs))
       }
     } finally
       TokenRangeSource.deleteRecursively(TokenRangeSource.stagingDir(path, writeId))
   }
+
+  /** One task's tombstone parquet as (`_file` rel, `_pos`) rows. */
+  private def readTombs(file: String): Seq[Row] =
+    TokenRangeSource.withParquet(file) { rd =>
+      val rows = new GroupRows(rd, rd.getFooter.getFileMetaData.getSchema)
+      Iterator.continually(rows.next()).takeWhile(_ != null).map(g =>
+        Row(g.getString(TokenRangeSource.FileCol, 0),
+          g.getLong(TokenRangeSource.PosCol, 0))).toVector
+    }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     messages.foreach {
@@ -246,9 +228,8 @@ private[connector] final class TokenRangeDeltaWriter(path: String,
     dataOrNull
   }
 
-  private val tombSchema = TokenRangeSource.toParquet(StructType(Array(
-    StructField(TokenRangeSource.FileCol, StringType),
-    StructField(TokenRangeSource.PosCol, LongType))))
+  private val tombSchema =
+    TokenRangeSource.toParquet(TokenRangeDeltaBatchWrite.TombSchema)
   private val tombFactory =
     new org.apache.parquet.example.data.simple.SimpleGroupFactory(tombSchema)
   private var tombWriter: org.apache.parquet.hadoop.ParquetWriter[

@@ -660,10 +660,11 @@ object TokenRangeSource {
     * `compact` is a content-preserving rewrite (the CDC tail SKIPS it —
     * Cassandra's CDC never re-emits compaction either); `delete` /
     * `upsert` / `expire` change content (the tail serves their change
-    * sidecar, or fails loudly without one); `truncate` resets the table;
-    * `rewrite` is the conservative kind stamped for a direct
-    * replaceFiles write that declared nothing. None on pre-r15 manifests
-    * — classified by whether the version retired files. */
+    * sidecar, or fails loudly without one); `truncate` resets the table.
+    * Manifests of older versions may also hold `rewrite`, the kind once
+    * stamped for a file-retiring write that declared none; it reads as
+    * content-changing. None on pre-r15 manifests — classified by whether
+    * the version retired files. */
   private[connector] def opKindAt(path: String, v: Int): Option[String] =
     versionLines(path, v).collectFirst {
       case l if l.startsWith("#op ") => l.stripPrefix("#op ").trim
@@ -871,9 +872,8 @@ object TokenRangeSource {
     * synthesized `insert` change type, compactions are skipped
     * (content-preserving), and content-changing rewrites serve the
     * change SIDECAR their op recorded at publish (`#cdf`). A rewrite
-    * with no sidecar (change feed enabled after the fact, or a direct
-    * replaceFiles writer) fails loudly — the manifest intentionally
-    * records file lists, not row diffs. */
+    * with no sidecar (change feed enabled after the fact) fails loudly —
+    * the manifest intentionally records file lists, not row diffs. */
   /** Whether a classified version is directly servable by a feed read:
     * content-preserving (compact), sidecar-carrying, or a pure append. */
   private[connector] def cdfServable(b: ChangeBatch): Boolean =
@@ -1274,9 +1274,7 @@ object TokenRangeSource {
           s"copy-on-write conflict at $path: ${unseen.size} deletion-" +
             s"vector binding(s) landed on retired files after this " +
             s"rewrite pinned its snapshot (e.g. ${unseen.head}); re-run " +
-            "the rewrite from the current snapshot (direct replaceFiles " +
-            "writers must read through the connector scan, which merges " +
-            "vectors, and declare their pinned version via dvSeenVersion)")
+            "the rewrite from the current snapshot")
       }
       if (!truncate && dvBind.nonEmpty) {
         val visibleTouched = baseTouched.values.flatten.toSet
@@ -1928,8 +1926,12 @@ object TokenLayout {
   }
 }
 
+/** A table handle. `planned` is set only on the handle [[TokenRangeOps]]'
+  * flip writes a planned change through: its write commits that change
+  * instead of a plain append. */
 private[connector] final class TokenRangeTable(tableSchema: StructType,
-    options: CaseInsensitiveStringMap) extends Table with SupportsRead
+    options: CaseInsensitiveStringMap,
+    planned: Option[PlannedCommit] = None) extends Table with SupportsRead
     with SupportsWrite with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
@@ -2013,6 +2015,15 @@ private[connector] final class TokenRangeTable(tableSchema: StructType,
     // table with the metadata columns dropped
     require(!options.getBoolean("changeFeed", false),
       "token-range change-feed relation is read-only; write to the base table")
+    // the write options a planned change once travelled in: appending
+    // with them would retire nothing and duplicate the rows it replaces
+    Seq("replaceFiles", "dvBind", "dvSeenVersion", "cdfRel", "opKind")
+      .find(k => options.containsKey(k) || info.options.containsKey(k))
+      .foreach(k => throw new IllegalArgumentException(
+        s"token-range write option '$k' is not supported: retire files or " +
+          "bind deletion vectors through the TokenRangeOps verbs (upsert, " +
+          "upsertCells, deleteKeys, deleteCkRange, expire, compact, " +
+          "compactVectors)"))
     val pk = Option(options.get("pk")).orElse(Option(info.options.get("pk")))
       .getOrElse(throw new IllegalArgumentException(
         "token-range sink requires the pk option (the bucketing partition key; " +
@@ -2028,11 +2039,6 @@ private[connector] final class TokenRangeTable(tableSchema: StructType,
             s"${info.schema()(i).name} is $other")
       }
     }
-    // copy-on-write rewrites (row-level DELETE, compaction) name the
-    // files their commit retires in the same manifest flip that adds the
-    // rewritten ones — newline-separated relative paths (tb=<k>/<name>)
-    val replace = Option(info.options.get("replaceFiles"))
-      .map(_.split('\n').toSeq.filter(_.nonEmpty).toSet).getOrElse(Set.empty[String])
     val tablePath = TokenRangeSource.pathOf(options)
     // fail FAST on a pk that contradicts the recorded key (ADVICE r13 —
     // wrong-ring routing would silently hide rows from composite pruning);
@@ -2104,33 +2110,8 @@ private[connector] final class TokenRangeTable(tableSchema: StructType,
         }
       }
     }
-    // operation kind for the manifest's `#op` header (set by the
-    // TokenRangeOps rewrites; a direct replaceFiles caller that declares
-    // nothing stamps the conservative `rewrite`), plus the change
-    // sidecar the op staged for the CHANGE DATA FEED, if any
-    val opKind = Option(options.get("opKind"))
-      .orElse(Option(info.options.get("opKind"))).map(_.trim).filter(_.nonEmpty)
-    opKind.foreach(k => require(
-      Set("append", "compact", "delete", "upsert", "expire", "truncate",
-        "rewrite")(k),
-      s"token-range sink: unknown opKind '$k'"))
-    val cdfRel = Option(options.get("cdfRel"))
-      .orElse(Option(info.options.get("cdfRel"))).map(_.trim).filter(_.nonEmpty)
-    // deletion-vector bindings this commit publishes beside its data
-    // files (merge-on-read upsert: new rows append, old keys' rows are
-    // suppressed by a vector bound to the pre-existing files) — newline-
-    // separated "dataRel dvRel" pairs; and the version the op's read
-    // PINNED, for publishManifest's vector conflict validation
-    val dvBind: Seq[(String, String)] = Option(options.get("dvBind"))
-      .orElse(Option(info.options.get("dvBind")))
-      .map(_.split('\n').toSeq.filter(_.nonEmpty).map { l =>
-        val i = l.indexOf(' ')
-        (l.substring(0, i), l.substring(i + 1).trim)
-      }).getOrElse(Nil)
-    val dvSeenVersion: Option[Int] = Option(options.get("dvSeenVersion"))
-      .orElse(Option(info.options.get("dvSeenVersion"))).map(_.trim.toInt)
-    new TokenRangeWriteBuilder(tablePath, info.schema(), pkIdx, replace, ck, rollRows,
-      declaredDdl, opKind, cdfRel, dvBind = dvBind, dvSeenVersion = dvSeenVersion)
+    new TokenRangeWriteBuilder(tablePath, info.schema(), pkIdx, ck, rollRows,
+      declaredDdl, planned)
   }
 
   // ---- row-level DELETE (CQL `DELETE ... WHERE pk = ?` / `pk IN (...)`,
@@ -3354,21 +3335,33 @@ private[connector] final class TokenRangeMicroBatchStream(path: String,
 // and flips the versioned manifest; job abort deletes the staging dir.
 // See the provider scaladoc for the four atomicity guarantees.
 
+/** A planned change as [[TokenRangeOps]]' flip hands it to the sink:
+  * the files its publish `retire`s, the deletion-vector bindings it adds
+  * (`dvBind`: data file → vector sidecar), its change sidecar, its `#op`
+  * kind and the version its rows were read at (`pinned`), against which
+  * [[TokenRangeSource.publishManifest]] validates the retired files'
+  * vectors. */
+private[connector] final case class PlannedCommit(opKind: String,
+    retire: Set[String] = Set.empty, dvBind: Seq[(String, String)] = Nil,
+    cdfRel: Option[String] = None, pinned: Option[Int] = None) {
+  /** Publish the change with `placedRel` added; the caller holds the
+    * table's commit lock. */
+  def publish(path: String, placedRel: Seq[String], truncate: Boolean = false): Int =
+    TokenRangeSource.publishManifest(path, placedRel, truncate, retire, opKind,
+      cdfRel, dvBind, pinned)
+}
+
 private[connector] final class TokenRangeWriteBuilder(path: String,
-    writeSchema: StructType, pkIdx: Seq[Int], replaceRel: Set[String] = Set.empty,
-    ckName: Option[String] = None, rollRows: Long = Long.MaxValue,
-    declaredDdl: Option[String] = None, opKind: Option[String] = None,
-    cdfRel: Option[String] = None,
-    dvBind: Seq[(String, String)] = Nil,
-    dvSeenVersion: Option[Int] = None)
+    writeSchema: StructType, pkIdx: Seq[Int], ckName: Option[String],
+    rollRows: Long, declaredDdl: Option[String], planned: Option[PlannedCommit])
     extends WriteBuilder with SupportsTruncate {
   private var doTruncate = false
   override def truncate(): WriteBuilder = { doTruncate = true; this }
   override def build(): Write = new Write with ClusteredWrite {
     override def ckSpec: Option[String] = ckName
     override def toBatch: BatchWrite =
-      new TokenRangeBatchWrite(path, writeSchema, pkIdx, doTruncate, replaceRel,
-        ckName, rollRows, declaredDdl, opKind, cdfRel, dvBind, dvSeenVersion)
+      new TokenRangeBatchWrite(path, writeSchema, pkIdx, doTruncate,
+        ckName, rollRows, declaredDdl, planned)
   }
 }
 
@@ -3409,11 +3402,8 @@ private[connector] trait ClusteredWrite
 
 private[connector] final class TokenRangeBatchWrite(path: String,
     writeSchema: StructType, pkIdx: Seq[Int], doTruncate: Boolean,
-    replaceRel: Set[String] = Set.empty, ckName: Option[String] = None,
-    rollRows: Long = Long.MaxValue, declaredDdl: Option[String] = None,
-    opKind: Option[String] = None, cdfRel: Option[String] = None,
-    dvBind: Seq[(String, String)] = Nil,
-    dvSeenVersion: Option[Int] = None)
+    ckName: Option[String] = None, rollRows: Long = Long.MaxValue,
+    declaredDdl: Option[String] = None, planned: Option[PlannedCommit] = None)
     extends BatchWrite {
 
   // app-unique token in file names AND the staging dir: partitionId/taskId
@@ -3443,15 +3433,14 @@ private[connector] final class TokenRangeBatchWrite(path: String,
     * INSERT semantic (server.py's whole write path) commits through
     * [[TokenRangeOps.upsertStaged]], which reads the staged rows, keeps
     * one row per (pk, ck) and re-writes them through the one upsert plan
-    * in [[TokenRangeOps.rewrite]]'s flip. Rewrites, truncates and
-    * vector-binding commits are never upserts. */
+    * in [[TokenRangeOps.rewrite]]'s flip. A planned change publishes as
+    * planned; a plain write is a `truncate` or an `append`. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val staged = messages.flatMap {
       case TokenRangeCommit(files) => files
       case _ => Array.empty[String]
     }
-    val plainAppend = !doTruncate && replaceRel.isEmpty && opKind.isEmpty &&
-      dvBind.isEmpty && staged.nonEmpty
+    val plainAppend = !doTruncate && planned.isEmpty && staged.nonEmpty
     val spark = org.apache.spark.sql.SparkSession.active
     try {
       if (plainAppend && TokenRangeSource.recordedInsertMode(path).contains("upsert"))
@@ -3509,27 +3498,20 @@ private[connector] final class TokenRangeBatchWrite(path: String,
           ckNorm.foreach(ck => TokenRangeSource.recordCk(path, ck))
           val placedRel = TokenRangeSource.placeStaged(path, staged.toSeq)
           // CAS publish: rebases on the visible set it observes; the lock
-          // only reduces contention (see publishManifest). replaceRel retires
-          // the files a copy-on-write rewrite (DELETE/compaction) supersedes
-          // in the SAME flip their rewritten successors appear — and FAILS
-          // with ManifestConflictException when a racing committer already
-          // retired any of them (r12 verdict #2). On that failure the moved
-          // files are referenced by NO manifest (invisible; vacuum reaps
-          // them) and TokenRangeOps re-runs the rewrite from the new
+          // only reduces contention (see publishManifest). A planned
+          // change retires the files a copy-on-write rewrite
+          // (DELETE/compaction) supersedes in the SAME flip their
+          // rewritten successors appear — and FAILS with
+          // ManifestConflictException when a racing committer already
+          // retired any of them (r12 verdict #2). On that failure the
+          // moved files are referenced by NO manifest (invisible; vacuum
+          // reaps them) and TokenRangeOps re-runs the rewrite from the new
           // snapshot.
-          TokenRangeSource.publishManifest(path, placedRel, doTruncate,
-            replaceRel,
-            // `#op` kind: the caller's declaration wins; otherwise
-            // classify from shape (vector bind / truncate /
-            // undeclared-rewrite / append)
-            opKind.getOrElse(
-              if (doTruncate) "truncate"
-              else if (replaceRel.nonEmpty) "rewrite"
-              else if (dvBind.nonEmpty) "upsert"
-              else "append"),
-            cdfRel, dvBind, dvSeenVersion)
+          planned.getOrElse(PlannedCommit(if (doTruncate) "truncate" else "append"))
+            .publish(path, placedRel, doTruncate)
         }
-        TokenRangeOps.commitTail(spark, path, vectorPublished = dvBind.nonEmpty)
+        TokenRangeOps.commitTail(spark, path,
+          vectorPublished = planned.exists(_.dvBind.nonEmpty))
       }
       // fragmentation sweep (r18, OPT-IN via compact.files_per_bucket):
       // plain appends only — rewrites/compacts never re-trigger it
@@ -3772,61 +3754,59 @@ object TokenRangeOps {
       rollRows: Option[Long] = None) extends Flip
 
   /** Merge-on-read: one deletion vector (`vector`: key rows, or `_file` +
-    * `_pos` rows) bound to `targets`; `append` rows (and the sink key they
-    * route on) are written in the same flip. [[flip]] collects `vector`
-    * to the driver: it holds at most the table's `dml.fallback_rows`
-    * rows ([[publishesVector]]), and every reader of a bound file holds
-    * the whole vector in memory anyway. A vector over a local relation
-    * collects without a Spark job. */
+    * `_pos` rows) bound to `targets` (none: no vector); `append` rows (and
+    * the sink key they route on) are written in the same flip, or the
+    * already-written `staged` files (a SQL statement's row images) place
+    * in it. [[flip]] collects `vector` to the driver: it holds at most
+    * the table's `dml.fallback_rows` rows ([[publishesVector]]), and every
+    * reader of a bound file holds the whole vector in memory anyway. A
+    * vector over a local relation collects without a Spark job. */
   private[sources] final case class Bind(vector: DataFrame,
       targets: Seq[String], opKind: String, changes: Option[() => DataFrame],
       retire: Seq[String] = Nil,
-      append: Option[(DataFrame, String)] = None) extends Flip
+      append: Option[(DataFrame, String)] = None,
+      staged: Seq[String] = Nil) extends Flip {
+    require(append.isEmpty || staged.isEmpty, "a Bind appends rows or places staged files")
+  }
 
   /** Metadata only: the `retire` files leave the manifest unread. */
   private[sources] final case class Retire(retire: Seq[String],
       opKind: String, changes: Option[() => DataFrame]) extends Flip
 
   /** The one place a planned change becomes a commit. Every flip declares
-    * the version its rows were read at (`dvSeenVersion`), so a vector
-    * bound after the pin conflicts the publish instead of being dropped.
-    * A flip that writes rows commits through the sink, which runs
-    * [[commitTail]]; a metadata-only flip runs it here. A [[Bind]]'s
-    * vector is written by this driver ([[writeVector]]), not by a Spark
-    * job. A flip whose publish loses a race deletes the `_dv/` and
-    * `_cdf/` sidecars it wrote (no manifest references them) before the
-    * conflict propagates to [[rewrite]]'s retry. */
-  private def flip(path: String, pinned: Option[Int], f: Flip): Unit = {
+    * the version its rows were read at, so a vector bound after the pin
+    * conflicts the publish instead of being dropped. A flip that writes
+    * rows appends them through a table handle carrying its
+    * [[PlannedCommit]], and the sink's commit publishes it and runs
+    * [[commitTail]]; any other flip places its staged files and publishes
+    * here. A [[Bind]]'s vector is written by this driver ([[writeVector]]),
+    * not by a Spark job. A flip whose publish loses a race deletes the
+    * `_dv/` and `_cdf/` sidecars it wrote (no manifest references them)
+    * before the conflict propagates to [[rewrite]]'s retry, or fails the
+    * SQL statement whose commit it is. */
+  private[connector] def flip(path: String, pinned: Option[Int], f: Flip): Unit = {
     val cdfRel = f.changes.filter(_ => TokenRangeSource.changeFeedEnabled(path))
       .map(c => writeCdfSidecar(path, c()))
-    val (rows, bind, rollRows) = f match {
+    val (rows, bind, staged, rollRows) = f match {
       case r: Replace =>
         val out =
           if (!r.repartition) r.rows
           else r.rows.repartition(TokenLayout.Buckets,
             ringOf(r.pk.split(',').map(_.trim).toSeq, r.rows.schema))
-        (Some(out -> r.pk), Nil, r.rollRows)
+        (Some(out -> r.pk), Nil, Nil, r.rollRows)
+      case b: Bind if b.targets.isEmpty => (b.append, Nil, b.staged, None)
       case b: Bind =>
         val dvRel = newDvRel()
         writeVector(new java.io.File(path, dvRel), b.vector)
-        (b.append, b.targets.map(_ -> dvRel), None)
-      case _: Retire => (None, Nil, None)
+        (b.append, b.targets.map(_ -> dvRel), b.staged, None)
+      case _: Retire => (None, Nil, Nil, None)
     }
+    val commit = PlannedCommit(f.opKind, f.retire.toSet, bind, cdfRel, pinned)
     try rows match {
-      case Some((df, pk)) =>
-        df.write.format(fmt).option("pk", pk).option("opKind", f.opKind)
-          .options(cdfRel.map("cdfRel" -> _).toMap)
-          .options(pinned.map(v => "dvSeenVersion" -> v.toString).toMap)
-          .options(rollRows.map("rollRows" -> _.toString).toMap)
-          .option("replaceFiles", f.retire.mkString("\n"))
-          .option("dvBind", bind.map { case (d, v) => s"$d $v" }.mkString("\n"))
-          .mode("append").save(path)
+      case Some((df, pk)) => appendPlanned(path, df, pk, rollRows, commit)
       case None =>
-        TokenRangeSource.withCommitLock(path) {
-          TokenRangeSource.publishManifest(path, Nil, truncate = false,
-            removeRel = f.retire.toSet, opKind = f.opKind, cdfRel = cdfRel,
-            dvBind = bind, dvSeenVersion = pinned)
-        }
+        TokenRangeSource.withCommitLock(path)(
+          commit.publish(path, TokenRangeSource.placeStaged(path, staged)))
         commitTail(SparkSession.active, path, vectorPublished = bind.nonEmpty)
     } catch {
       case t: Throwable if isConflict(t) =>
@@ -3834,6 +3814,24 @@ object TokenRangeOps {
           TokenRangeSource.deleteRecursively(new java.io.File(path, rel)))
         throw t
     }
+  }
+
+  /** Append `df` through the sink keyed on `pk`, committing `commit`:
+    * the plan `df.write...save(path)` builds, over a table handle that
+    * carries the change instead of write options a caller could set. */
+  private def appendPlanned(path: String, df: DataFrame, pk: String,
+      rollRows: Option[Long], commit: PlannedCommit): Unit = {
+    import org.apache.spark.sql.catalyst.plans.logical.AppendData
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+    val opts = Map("path" -> path, "pk" -> pk) ++ rollRows.map("rollRows" -> _.toString)
+    val dsOpts = new CaseInsensitiveStringMap(opts.asJava)
+    val table = new TokenRangeTable(StructType(df.schema.map(_.copy(nullable = true))),
+      dsOpts, Some(commit))
+    df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.executePlan(AppendData.byName(
+        DataSourceV2Relation.create(table, None, None, dsOpts),
+        df.queryExecution.logical, opts))
+      .assertCommandExecuted()
   }
 
   /** The optimistic rewrite loop every verb shares: pin a legacy table's
@@ -4366,7 +4364,7 @@ object TokenRangeOps {
     * bucket (Cassandra's compaction / OPTIMIZE analog): pin the current
     * version, read exactly its files, and publish the compacted files
     * while RETIRING exactly the pinned snapshot's files — one atomic
-    * flip via the same append+replaceFiles primitive DELETE uses, so an
+    * flip through the same [[flip]] DELETE uses, so an
     * append that commits while the compaction runs REBASES in intact
     * (the r11 review caught the first cut's mode("overwrite"), whose
     * truncate-at-flip silently dropped any concurrently-committed
@@ -5135,7 +5133,7 @@ object TokenRangeOps {
     * [[flip]] that loses its race deletes the dir, and [[vacuum]] reaps
     * other orphans age-gated (a sidecar younger than the staging TTL may
     * belong to an in-flight rewrite). */
-  private[connector] def writeCdfSidecar(path: String,
+  private def writeCdfSidecar(path: String,
       changes: DataFrame): String = {
     val rel = s"_cdf/${java.util.UUID.randomUUID().toString.take(12)}"
     withMicros(changes).write.mode("error")
@@ -5248,7 +5246,7 @@ object TokenRangeOps {
     }
 
   /** What every commit runs once after its manifest flip: the sink's
-    * commit, the SQL delta commit and [[flip]]'s metadata-only branch.
+    * commit, and [[flip]] for a change it publishes itself.
     * The retention sweep always runs; the vector sweep runs when the
     * commit published a deletion vector. Both are best-effort: a sweep
     * failure is logged and never fails a statement that already

@@ -161,6 +161,68 @@ class TokenRangeConflictSpec extends SparkSpec {
       s"sidecars no manifest references: ${sidecars.filterNot(referenced)}")
   }
 
+  test("a SQL DELETE or UPDATE that loses its race fails and deletes the _dv/ and _cdf/ sidecars it wrote") {
+    val wh = freshDir("graft_tr_conflict_sql")
+    val cat = "graft_conflict_sql"
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[TokenRangeCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ks")
+    spark.sql(s"CREATE TABLE $cat.ks.t (pk BIGINT, v STRING) TBLPROPERTIES('pk'='pk')")
+    spark.sql(s"INSERT INTO $cat.ks.t SELECT id, concat('a', id) FROM range(0, 64)")
+    val dir = new java.io.File(new java.io.File(wh, "ks"), "t").getAbsolutePath
+    TokenRangeOps.enableChangeFeed(dir)
+    // the statement's commit runs a compaction when it first claims the
+    // commit lock: the compaction retires every file the statement's
+    // vector binds, after the statement wrote its vector and change
+    // sidecars
+    def racedAtCommit(stmt: String): Throwable = {
+      val io = TokenRangeSource.manifestIO
+      var armed = true
+      TokenRangeSource.manifestIO = new ManifestIO {
+        override def createExclusive(p: String, c: String): Boolean = {
+          if (armed && new java.io.File(p).getName == "commit.lock") {
+            armed = false
+            TokenRangeOps.compact(spark, dir, "pk")
+          }
+          io.createExclusive(p, c)
+        }
+        override def listNames(d: String): Seq[String] = io.listNames(d)
+        override def read(p: String): String = io.read(p)
+        override def write(p: String, c: String): Unit = io.write(p, c)
+        override def moveAtomic(s: String, d: String): Unit = io.moveAtomic(s, d)
+        override def delete(p: String): Boolean = io.delete(p)
+        override def exists(p: String): Boolean = io.exists(p)
+        override def lastModified(p: String): Long = io.lastModified(p)
+        override def touch(p: String): Unit = io.touch(p)
+      }
+      try intercept[Exception](spark.sql(stmt))
+      finally TokenRangeSource.manifestIO = io
+    }
+    def sidecars = Seq("_dv", "_cdf").flatMap(d =>
+      Option(new java.io.File(dir, d).list()).toSeq.flatten.map(n => s"$d/$n"))
+    def unreferenced = {
+      val referenced = TokenRangeSource.versions(dir).flatMap(v =>
+        TokenRangeSource.dvBindings(dir, Some(v)).map(_._2) ++
+          TokenRangeSource.cdfRelAt(dir, v)).toSet
+      sidecars.filterNot(referenced)
+    }
+    Seq(s"DELETE FROM $cat.ks.t WHERE v = 'a3'",
+      s"UPDATE $cat.ks.t SET v = 'n5' WHERE v = 'a5'").foreach { stmt =>
+      val ex = racedAtCommit(stmt)
+      assert(Iterator.iterate(ex)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ManifestConflictException]), s"$stmt failed with $ex")
+      assert(unreferenced.isEmpty, s"after $stmt, sidecars no manifest references: $unreferenced")
+    }
+    def rows = spark.sql(s"SELECT pk, v FROM $cat.ks.t").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(rows.size == 64 && rows(3L) == "a3" && rows(5L) == "a5")
+    // unraced, the same statement publishes both sidecars
+    spark.sql(s"DELETE FROM $cat.ks.t WHERE v = 'a3'")
+    assert(rows.size == 63 && !rows.contains(3L))
+    assert(sidecars.exists(_.startsWith("_dv/")) && sidecars.exists(_.startsWith("_cdf/")))
+    assert(unreferenced.isEmpty)
+  }
+
   test("a rewrite losing every retry errors loudly after MaxRewriteAttempts (never silent)") {
     val dir = freshDir("graft_tr_conflict_exhaust")
     seed(dir, 200)

@@ -189,22 +189,16 @@ class TokenRangeDeleteSpec extends SparkSpec {
   test("compact racing an append: the committed append survives the flip (no lost update)") {
     val dir = freshDir()
     seed(dir, 0L until 100L)
-    val v1 = TokenRangeSource.currentVersion(dir).get
-    val snapshotRel = TokenRangeSource.visibleRelFiles(dir, Some(v1)).map(_._2)
-    // an append COMMITS while the compaction job is mid-flight (after its
-    // snapshot read, before its flip)
-    seed(dir, 1000L until 1010L)
-    // the compaction finishes from its v1 snapshot: publish the rewritten
-    // files while retiring exactly v1's files — the commit TokenRangeOps
-    // .compact issues when it loses the race (r11 review: the old
+    // an append COMMITS while the compaction is mid-flight (after its
+    // snapshot pin, before its flip); the compaction's flip retires
+    // exactly the pinned snapshot's files (r11 review: the old
     // mode("overwrite") truncate-at-flip dropped the append here)
-    spark.read.format(fmt).option("pk", "pk")
-      .option("version", v1.toString).load(dir)
-      .repartition(TokenLayout.Buckets,
-        TokenLayout.bucketOf(org.apache.spark.sql.functions.col("pk")))
-      .write.format(fmt).option("pk", "pk")
-      .option("replaceFiles", snapshotRel.mkString("\n"))
-      .mode("append").save(dir)
+    TokenRangeOps.onSnapshotPinned = () => {
+      TokenRangeOps.onSnapshotPinned = () => ()
+      seed(dir, 1000L until 1010L)
+    }
+    try TokenRangeOps.compact(spark, dir, "pk")
+    finally TokenRangeOps.onSnapshotPinned = () => ()
     assert(load(dir).count() == 110,
       "a committed concurrent append must survive the compaction flip")
     assert(load(dir).filter(col("pk") >= 1000L).count() == 10)

@@ -144,6 +144,37 @@ class TokenRangeDvSpec extends SparkSpec {
     assert(readAll(dir).count() == 126L)
   }
 
+  test("a one-row SQL DELETE and UPDATE on the vector path run one Spark job each") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_dv_sqljobs").toString
+    val cat = "graft_dv_sqljobs"
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[TokenRangeCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ks")
+    spark.sql(s"CREATE TABLE $cat.ks.t (pk BIGINT, v STRING, n BIGINT) TBLPROPERTIES('pk'='pk')")
+    (0 until 4).foreach(r => spark.sql(s"INSERT INTO $cat.ks.t SELECT id, " +
+      s"concat('a', id), id * 10 FROM range(${r * 32}, ${(r + 1) * 32})"))
+    val path = new java.io.File(new java.io.File(wh, "ks"), "t").getAbsolutePath
+    val before = liveRel(path)
+    val del = jobsOf(spark.sql(s"DELETE FROM $cat.ks.t WHERE v = 'a7'"))
+    val upd = jobsOf(spark.sql(s"UPDATE $cat.ks.t SET n = -1 WHERE v = 'a9'"))
+    // the statement's own scan-and-write; the commit reads its tombstones
+    // and writes its vector on the driver
+    assert(del <= 1, s"SQL DELETE ran $del Spark jobs")
+    assert(upd <= 1, s"SQL UPDATE ran $upd Spark jobs")
+    assert(before.subsetOf(liveRel(path)) && TokenRangeSource.dvBindings(path).nonEmpty,
+      "one-row statements are under the bound: vectors")
+    val t = readAll(path).collect().map(r => r.getAs[Long]("pk") -> r.getAs[Long]("n")).toMap
+    assert(t.size == 127 && !t.contains(7L) && t(9L) == -1L)
+  }
+
+  test("compact of a vector-bearing table runs at most 2 Spark jobs") {
+    val dir = freshTable("compactjobs")
+    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L, 40L))
+    val jobs = jobsOf(TokenRangeOps.compact(spark, dir, "pk"))
+    assert(jobs <= 2, s"compact ran $jobs Spark jobs")
+    assert(TokenRangeSource.dvBindings(dir).isEmpty && readAll(dir).count() == 126L)
+  }
+
   test("driver-written key vectors store BIGINT, INT and TEXT pks as the data files do") {
     Seq[(String, Column, Long => Any)](
       ("BIGINT", col("id"), k => k),

@@ -60,6 +60,28 @@ class TokenRangeMaintenanceSpec extends SparkSpec {
     assert(n == 65)
   }
 
+  test("a direct write setting a planned-change option is refused and names the TokenRangeOps verbs") {
+    val s2 = spark; import s2.implicits._
+    val dir = freshDir("graft_tr_retired_opts")
+    seedComposite(dir)
+    val live = TokenRangeSource.visibleRelFiles(dir, None).map(_._2)
+    // these once carried a rewrite's plan into the sink; appending with
+    // them set would retire nothing and duplicate the rows they replace
+    Seq("replaceFiles" -> live.mkString("\n"), "dvBind" -> s"${live.head} _dv/x",
+      "dvSeenVersion" -> "1", "cdfRel" -> "_cdf/x", "opKind" -> "compact").foreach {
+      case (k, v) =>
+        val ex = intercept[IllegalArgumentException] {
+          Seq((0L, 0, "dup")).toDF("a", "b", "v")
+            .write.format(fmt).option("pk", "a,b").option(k, v)
+            .mode("append").save(dir)
+        }
+        assert(ex.getMessage.contains(s"'$k'") && ex.getMessage.contains("TokenRangeOps")
+          && ex.getMessage.contains("compact"), ex.getMessage)
+    }
+    assert(TokenRangeSource.visibleRelFiles(dir, None).map(_._2) == live)
+    assert(spark.read.format(fmt).option("pk", "a,b").load(dir).count() == 64)
+  }
+
   test("a scan with a wrong or reordered pk is refused instead of pruning to the wrong bucket") {
     val dir = freshDir("graft_tr_pks")
     seedComposite(dir)
